@@ -69,8 +69,6 @@ class GraphParams:
     # crossover ~10^5 edges (union-find ~26 us/edge vs ~6 s fixed for the
     # distributed job — BENCH.md round-5 star section); the 65536 used by
     # the jobs/bench stays an order of magnitude under it
-    # shuffles in adjacency/degree construction — at 10^12 edges those are
-    # two of the three biggest one-time shuffles in the job
 
 
 # Dataset presets: scenario = gid / 100 (reference io.cpp:97, main.cpp:128-146)

@@ -36,6 +36,15 @@ def streamhash_similarity_bits(bits1: np.ndarray, bits2: np.ndarray, L: int) -> 
     return 1.0 - (bits1 != bits2).sum(axis=1) / float(L)
 
 
+def sketch_similarity_series(a, b, *, L):
+    """Scalar pandas-UDF kernel: ``streamhash_similarity_bits`` of two
+    packed-sketch columns."""
+    import pandas as pd
+    return pd.Series(streamhash_similarity_bits(
+        sketch_bytes_to_bits(a.tolist(), L),
+        sketch_bytes_to_bits(b.tolist(), L), L))
+
+
 def band_values(bits: np.ndarray, B: int, R: int) -> np.ndarray:
     """(n, L) {0,1} -> (n, B) int64 band bucket values.
 
@@ -46,8 +55,3 @@ def band_values(bits: np.ndarray, B: int, R: int) -> np.ndarray:
     reshaped = bits[:, : B * R].reshape(n, B, R).astype(np.int64)
     weights = (1 << np.arange(R, dtype=np.int64))
     return reshaped @ weights
-
-
-def sign_bits(projection: np.ndarray) -> np.ndarray:
-    """sketch[l] = projection[l] >= 0 (streamhash.cpp:36-38)."""
-    return (projection >= 0).astype(np.uint8)

@@ -41,13 +41,14 @@ def extract_text_bytes(html_bytes: bytes) -> str:
     return _WS_RE.sub(" ", decoded).strip()
 
 
+def _extract_text_series(html: pd.Series) -> pd.Series:
+    return html.map(extract_text_bytes)
+
+
 def extract_text_udf(html_col):
     """Arrow-batched text extraction; lazy UDF construction (no session
     needed at import)."""
-    @F.pandas_udf("string")
-    def _udf(html: pd.Series) -> pd.Series:
-        return html.map(extract_text_bytes)
-    return _udf(html_col)
+    return F.pandas_udf(_extract_text_series, "string")(html_col)
 
 
 def extract_hrefs_bytes(html_bytes: bytes, base_url: str) -> list[str]:
@@ -62,12 +63,13 @@ def extract_hrefs_bytes(html_bytes: bytes, base_url: str) -> list[str]:
     return out
 
 
+def _extract_hrefs_series(html: pd.Series, url: pd.Series) -> pd.Series:
+    return pd.Series([extract_hrefs_bytes(h, u) for h, u in zip(html, url)])
+
+
 def extract_hrefs_udf(html_col, url_col):
-    @F.pandas_udf("array<string>")
-    def _udf(html: pd.Series, url: pd.Series) -> pd.Series:
-        return pd.Series(
-            [extract_hrefs_bytes(h, u) for h, u in zip(html, url)])
-    return _udf(html_col, url_col)
+    return F.pandas_udf(_extract_hrefs_series, "array<string>")(
+        html_col, url_col)
 
 
 # ---------------------------------------------------------------- analysis
@@ -229,13 +231,14 @@ def rolling_fingerprint_bytes(data: bytes) -> int:
     return h
 
 
+def _fingerprint_series(text: pd.Series) -> pd.Series:
+    return text.map(lambda t: rolling_fingerprint_bytes(
+        t.encode("utf-8") if t else b""))
+
+
 def fingerprint_udf(text_col):
     """Rolling polynomial document fingerprint (deterministic 61-bit) as an
     Arrow-batched UDF; see ``rolling_fingerprint_bytes``.  Prefer
     ``fingerprint_expr`` (JVM md5) unless the rolling-hash algebra is needed
     (e.g. content-defined chunking extensions)."""
-    @F.pandas_udf("long")
-    def _udf(text: pd.Series) -> pd.Series:
-        return text.map(lambda t: rolling_fingerprint_bytes(
-            t.encode("utf-8") if t else b""))
-    return _udf(text_col)
+    return F.pandas_udf(_fingerprint_series, "long")(text_col)

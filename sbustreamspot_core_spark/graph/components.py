@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import GraphParams
+from ..session import local_table
 from .superstep import SuperstepDriver, iterative_conf
 
 
@@ -88,7 +89,7 @@ def _small_graph_components(spark: SparkSession, raw_edges: DataFrame,
             parent[max(ra, rb)] = min(ra, rb)
     members = set(parent) | {r.a for r in rows} | {r.b for r in rows}
     mapping = [(int(v), int(find(v))) for v in members]
-    map_df = spark.createDataFrame(mapping, "id long, component long")
+    map_df = local_table(spark, mapping, "id long, component long")
     comps = (
         node_ids.distinct()
         .join(F.broadcast(map_df), "id", "left")

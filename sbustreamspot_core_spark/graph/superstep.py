@@ -28,6 +28,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 
 @contextmanager
 def iterative_conf(spark: SparkSession):
@@ -152,7 +154,8 @@ class SuperstepDriver:
                and s["summary"].get("run_id") == self._run_id
                for s in t.snapshots()):
             return
-        df = self.spark.createDataFrame(
+        df = local_table(
+            self.spark,
             [(k, p["partition_id"], p["rows"]) for p in parts],
             "superstep int, partition_id int, rows long")
         summary = {m: v for m, v in metrics.items()

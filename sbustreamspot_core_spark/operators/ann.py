@@ -11,6 +11,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -58,6 +60,22 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
+def _plane_bucket_series(batch, *, planes, weights):
+    """``hyperplane_signatures`` kernel: vectors -> packed sign pattern."""
+    M = np.array(batch.tolist(), dtype=np.float64)     # (n, dim)
+    signs = (M @ planes >= 0).astype(np.int64)          # (n, planes)
+    return pd.Series(signs @ weights)
+
+
+def _plane_buckets_multi_series(batch, *, planes, weights, n_planes):
+    """``hyperplane_signatures_multi`` kernel: vectors -> one packed sign
+    pattern per table."""
+    M = np.array(batch.tolist(), dtype=np.float64)
+    signs = (M @ planes >= 0).astype(np.int64)   # (n, planes*tables)
+    per_table = signs.reshape(len(M), -1, n_planes) @ weights  # (n, tables)
+    return pd.Series([row.tolist() for row in per_table])
+
+
 def hyperplane_signatures(vectors: DataFrame, n_planes: int = 16, seed: int = 23,
                           id_col: str = "vec_id", vec_col: str = "embedding",
                           dim: int = 64) -> DataFrame:
@@ -67,12 +85,8 @@ def hyperplane_signatures(vectors: DataFrame, n_planes: int = 16, seed: int = 23
     planes = rng.standard_normal((dim, n_planes))
     weights = (1 << np.arange(n_planes, dtype=np.int64))
 
-    def sig(batch: pd.Series) -> pd.Series:
-        M = np.array(batch.tolist(), dtype=np.float64)     # (n, dim)
-        signs = (M @ planes >= 0).astype(np.int64)          # (n, planes)
-        return pd.Series(signs @ weights)
-
-    sig_udf = F.pandas_udf(sig, "long")
+    sig_udf = F.pandas_udf(
+        partial(_plane_bucket_series, planes=planes, weights=weights), "long")
     return vectors.select(F.col(id_col).alias("id"),
                           sig_udf(F.col(vec_col)).alias("bucket"))
 
@@ -93,13 +107,10 @@ def hyperplane_signatures_multi(vectors: DataFrame, n_planes: int = 12,
     planes = np.concatenate(blocks, axis=1)          # (dim, planes*tables)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
 
-    def sig(batch: pd.Series) -> pd.Series:
-        M = np.array(batch.tolist(), dtype=np.float64)
-        signs = (M @ planes >= 0).astype(np.int64)   # (n, planes*tables)
-        per_table = signs.reshape(len(M), -1, n_planes) @ weights  # (n, tables)
-        return pd.Series([row.tolist() for row in per_table])
-
-    sig_udf = F.pandas_udf(sig, "array<long>")
+    sig_udf = F.pandas_udf(
+        partial(_plane_buckets_multi_series, planes=planes, weights=weights,
+                n_planes=n_planes),
+        "array<long>")
     return vectors.select(
         F.col(id_col).alias("id"),
         F.posexplode(sig_udf(F.col(vec_col))).alias("table", "bucket"))
@@ -246,6 +257,23 @@ def recommended_n_planes(n_vectors: int, target_bucket: int = 1024) -> int:
     return max(planes, 4)
 
 
+def _cell_distances(batch, centroids):
+    M = np.array(batch.tolist(), dtype=np.float64)
+    return ((M[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
+
+
+def _nearest_cell_series(batch, *, centroids):
+    """``ivf_topk`` corpus kernel: vectors -> nearest cell."""
+    return pd.Series(_cell_distances(batch, centroids).argmin(axis=1)
+                     .astype(np.int32))
+
+
+def _probe_cells_series(batch, *, centroids, n_probe):
+    """``ivf_topk`` query kernel: vectors -> the ``n_probe`` nearest cells."""
+    order = np.argsort(_cell_distances(batch, centroids), axis=1)[:, :n_probe]
+    return pd.Series([row.astype("int32").tolist() for row in order])
+
+
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
              n_cells: int = 8, n_probe: int = 2, seed: int = 23,
              id_col: str = "vec_id", vec_col: str = "embedding",
@@ -293,19 +321,11 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
             if len(members):
                 centroids[c] = members.mean(axis=0)
 
-    def cell_of(batch: pd.Series) -> pd.Series:
-        M = np.array(batch.tolist(), dtype=np.float64)
-        d = ((M[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    def probe_cells(batch: pd.Series) -> pd.Series:
-        M = np.array(batch.tolist(), dtype=np.float64)
-        d = ((M[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        order = np.argsort(d, axis=1)[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    cell_udf = F.pandas_udf(cell_of, "int")
-    probe_udf = F.pandas_udf(probe_cells, "array<int>")
+    cell_udf = F.pandas_udf(partial(_nearest_cell_series, centroids=centroids),
+                            "int")
+    probe_udf = F.pandas_udf(
+        partial(_probe_cells_series, centroids=centroids, n_probe=n_probe),
+        "array<int>")
 
     v = vectors.select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).cast("array<double>").alias("nv"),

@@ -15,13 +15,15 @@ deterministic (distance, cluster_id) tie-break.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ANOMALY, StreamSpotParams
-from ..functions.sketches import pack_sketch, sketch_bytes_to_bits
+from ..functions.sketches import pack_sketch, sketch_similarity_series
 
 PI = 3.1415926535897  # param.h:22
 
@@ -30,27 +32,28 @@ CENTROID_SCHEMA = (
 )
 
 
+def _centroid_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``build_centroids`` kernel: one cluster's member projections -> its
+    (cluster_id, projection, sketch, size) row."""
+    proj = np.array(pdf["projection"].tolist(), dtype=np.float64)
+    mean = proj.mean(axis=0)
+    bits = (mean >= 0).astype(np.uint8)[None, :]
+    return pd.DataFrame({
+        "cluster_id": [int(pdf["cluster_id"].iloc[0])],
+        "projection": [mean.tolist()],
+        "sketch": [pack_sketch(bits)[0].tobytes()],
+        "size": [len(pdf)],
+    })
+
+
 def build_centroids(sketches: DataFrame, membership: DataFrame,
                     params: StreamSpotParams) -> DataFrame:
     """(cluster_id, projection, sketch, size) from member projections.
 
     membership: (cluster_id int, gid long).  Mean + sign per cluster.cpp:76-101.
     """
-    L = params.L
     joined = sketches.join(membership.select("cluster_id", "gid"), "gid")
-
-    def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        proj = np.array(pdf["projection"].tolist(), dtype=np.float64)
-        mean = proj.mean(axis=0)
-        bits = (mean >= 0).astype(np.uint8)[None, :]
-        return pd.DataFrame({
-            "cluster_id": [int(pdf["cluster_id"].iloc[0])],
-            "projection": [mean.tolist()],
-            "sketch": [pack_sketch(bits)[0].tobytes()],
-            "size": [len(pdf)],
-        })
-
-    return joined.groupBy("cluster_id").applyInPandas(per_cluster, CENTROID_SCHEMA)
+    return joined.groupBy("cluster_id").applyInPandas(_centroid_group, CENTROID_SCHEMA)
 
 
 def graph_centroid_distances(sketches: DataFrame, centroids: DataFrame,
@@ -60,13 +63,8 @@ def graph_centroid_distances(sketches: DataFrame, centroids: DataFrame,
     Centroids are broadcast (J3: O(#clusters) rows); the per-pair similarity
     is one Arrow-batched popcount kernel.
     """
-    L = params.L
-
-    @F.pandas_udf("double")
-    def sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        bits_a = sketch_bytes_to_bits(a.tolist(), L)
-        bits_b = sketch_bytes_to_bits(b.tolist(), L)
-        return pd.Series(1.0 - (bits_a != bits_b).sum(axis=1) / float(L))
+    sim_udf = F.pandas_udf(partial(sketch_similarity_series, L=params.L),
+                           "double")
 
     pairs = sketches.select("gid", F.col("sketch").alias("g_sketch")).crossJoin(
         F.broadcast(centroids.select("cluster_id", F.col("sketch").alias("c_sketch")))

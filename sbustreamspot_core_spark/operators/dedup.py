@@ -22,11 +22,15 @@ multiplication wraps p ~2^31 times — a genuinely scrambling permutation
 family (small-coefficient variants wrap only once or twice and are badly
 min-wise biased).
 
-All heavy paths are pure JVM column expressions (explode / groupBy-min /
-join) — zero Python in the hot loop.
+The set-similarity paths are JVM column expressions (explode / groupBy /
+join), except two Arrow Python kernels: the minhash signatures and the
+pair-restricted exact Jaccard verifier (``_minhash_batches``,
+``_jaccard_batches``), which measured faster than their JVM plans.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -181,6 +185,27 @@ def stop_shingle_stats(docs: DataFrame, n: int = 5,
          / F.sum("df")).alias("dropped_frac"))
 
 
+def _minhash_batches(batches, *, k, c, Ac, Bc):
+    """``minhash_signatures`` kernel: (id, text) batches -> (id, sig)."""
+    from hashlib import md5
+    p = MINHASH_MOD
+    for pdf in batches:
+        ids, sigs = [], []
+        for did, text in zip(pdf["id"], pdf["text"]):
+            ids.append(did)
+            if not isinstance(text, str):
+                sigs.append([None] * k)
+                continue
+            ng = max(len(text) - c + 1, 1)
+            xs = np.array(
+                [(int.from_bytes(
+                    md5(text[i:i + c].encode("utf-8")).digest()[:8],
+                    "big") >> 4) % p for i in range(ng)],
+                dtype=np.int64)
+            sigs.append(((Ac * xs[None, :] + Bc) % p).min(axis=1).tolist())
+        yield pd.DataFrame({"id": ids, "sig": sigs})
+
+
 def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 5,
                        seed: int = 23, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
@@ -213,60 +238,16 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 5,
     before the kernel (the sf inputs are one parquet split: without this
     the whole hash pass runs on ONE core — guide §2.5 input skew)."""
     A, Bv = minhash_coeffs(num_hashes, seed)
-    k = int(num_hashes)
-    c = int(n)
-    p = MINHASH_MOD
-    Ac = A.astype(np.int64)[:, None]
-    Bc = Bv.astype(np.int64)[:, None]
-
-    def gen(batches):
-        from hashlib import md5
-        for pdf in batches:
-            ids, sigs = [], []
-            for did, text in zip(pdf["id"], pdf["text"]):
-                ids.append(did)
-                if not isinstance(text, str):
-                    sigs.append([None] * k)
-                    continue
-                ng = max(len(text) - c + 1, 1)
-                xs = np.array(
-                    [(int.from_bytes(
-                        md5(text[i:i + c].encode("utf-8")).digest()[:8],
-                        "big") >> 4) % p for i in range(ng)],
-                    dtype=np.int64)
-                sigs.append(((Ac * xs[None, :] + Bc) % p).min(axis=1).tolist())
-            yield pd.DataFrame({"id": ids, "sig": sigs})
-
+    kernel = partial(_minhash_batches, k=int(num_hashes), c=int(n),
+                     Ac=A.astype(np.int64)[:, None],
+                     Bc=Bv.astype(np.int64)[:, None])
     sel = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     target = docs.sparkSession.sparkContext.defaultParallelism
     if sel.rdd.getNumPartitions() < target:
         # scale-adaptive: a 100 TB corpus already has >> target splits and
         # skips this; a single-file bench input gets its map work spread
         sel = sel.repartition(target)
-    return sel.mapInPandas(gen, schema="id long, sig array<long>")
-
-
-def cap_hot_buckets(banded: DataFrame, bucket_cols: list,
-                    max_bucket_size: int | None) -> DataFrame:
-    """Drop bucket groups larger than ``max_bucket_size`` before a bucket
-    self-join.
-
-    A bucket of size B emits B^2/2 pairs through ONE task (a same-key
-    self-join cannot be split by AQE skew handling — equal keys must meet),
-    so a degenerate bucket is the one LSH shape that does not scale.  At
-    10^12 docs such buckets are exact-duplicate mass or an all-identical
-    signature pathology; both belong to exact_dedup upstream, not to the
-    pair join.  The hot set is O(#degenerate buckets) rows — broadcast.
-
-    NOTE: prefer ``banded_self_join_pairs`` — dropping rows loses the hot
-    bucket's duplicate structure entirely; the star reduction keeps it."""
-    if max_bucket_size is None:
-        return banded
-    hot = (banded.groupBy(*bucket_cols)
-           .agg(F.count("*").alias("n"))
-           .filter(F.col("n") > max_bucket_size)
-           .select(*bucket_cols))
-    return banded.join(F.broadcast(hot), bucket_cols, "left_anti")
+    return sel.mapInPandas(kernel, schema="id long, sig array<long>")
 
 
 def banded_self_join_pairs(banded: DataFrame, bucket_cols: list,
@@ -515,6 +496,33 @@ def incremental_dedup_batch(spark, index_path: str, new_docs: DataFrame,
     return cands
 
 
+def _gram_set(t, present, c):
+    """(size, set) of ``t``'s c-grams: absent doc -> 0 grams; null text ->
+    the old null-shingle row: size 1, matches nothing."""
+    if present is not True:
+        return 0, frozenset()
+    if not isinstance(t, str):
+        return 1, frozenset()
+    ng = max(len(t) - c + 1, 1)
+    s = {t[i:i + c] for i in range(ng)}
+    return len(s), s
+
+
+def _jaccard_batches(batches, *, c):
+    """``exact_jaccard_for_pairs`` kernel: (id_a, id_b, ta, pa, tb, pb)
+    batches -> (id_a, id_b, jaccard)."""
+    for pdf in batches:
+        out = []
+        for ta, pa, tb, pb in zip(pdf["ta"], pdf["pa"], pdf["tb"], pdf["pb"]):
+            sa, seta = _gram_set(ta, pa, c)
+            sb, setb = _gram_set(tb, pb, c)
+            inter = len(seta & setb) if sa and sb else 0
+            denom = sa + sb - inter
+            out.append(inter / denom if denom > 0 else 0.0)
+        yield pd.DataFrame({"id_a": pdf["id_a"], "id_b": pdf["id_b"],
+                            "jaccard": out})
+
+
 def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame, n: int = 5,
                             id_col: str = "doc_id",
                             text_col: str = "text") -> DataFrame:
@@ -544,7 +552,6 @@ def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame, n: int = 5,
     the old plan pooled duplicate-id shingles, this one would emit one
     output row per duplicate.
     """
-    c = int(n)
     ids = (pairs.select(F.col("id_a").alias("id"))
            .unionByName(pairs.select(F.col("id_b").alias("id")))
            .distinct())
@@ -556,31 +563,7 @@ def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame, n: int = 5,
                   F.lit(True).alias("pb"))
     j = pairs.join(a, "id_a", "left").join(b, "id_b", "left")
 
-    def compute(batches):
-        def gramset(t, present):
-            # (size, set): absent doc -> 0 grams; null text -> the old
-            # null-shingle row: size 1, matches nothing
-            if present is not True:
-                return 0, frozenset()
-            if not isinstance(t, str):
-                return 1, frozenset()
-            ng = max(len(t) - c + 1, 1)
-            s = {t[i:i + c] for i in range(ng)}
-            return len(s), s
-
-        for pdf in batches:
-            out = []
-            for ta, pa, tb, pb in zip(pdf["ta"], pdf["pa"],
-                                      pdf["tb"], pdf["pb"]):
-                sa, seta = gramset(ta, pa)
-                sb, setb = gramset(tb, pb)
-                inter = len(seta & setb) if sa and sb else 0
-                denom = sa + sb - inter
-                out.append(inter / denom if denom > 0 else 0.0)
-            yield pd.DataFrame({"id_a": pdf["id_a"], "id_b": pdf["id_b"],
-                                "jaccard": out})
-
-    return j.mapInPandas(compute,
+    return j.mapInPandas(partial(_jaccard_batches, c=int(n)),
                          schema="id_a long, id_b long, jaccard double")
 
 

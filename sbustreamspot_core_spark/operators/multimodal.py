@@ -28,7 +28,7 @@ formats a pure-stdlib implementation can cover (functions/codecs.py):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -62,40 +62,79 @@ def sniff_format(b: bytes) -> str:
     return "unknown"
 
 
+def _sniff_series(col: pd.Series) -> pd.Series:
+    """``sniff_metadata`` kernel."""
+    return col.map(lambda b: sniff_format(b or b""))
+
+
 def sniff_metadata(df: DataFrame, bin_col: str = "payload") -> DataFrame:
     """Adds (format string, n_bytes long) metadata columns."""
-
-    @F.pandas_udf("string")
-    def fmt(col: pd.Series) -> pd.Series:
-        return col.map(lambda b: sniff_format(b or b""))
-
+    fmt = F.pandas_udf(_sniff_series, "string")
     return df.withColumn("format", fmt(F.col(bin_col))).withColumn(
         "n_bytes", F.octet_length(F.col(bin_col)).cast("long"))
+
+
+def _byte_histogram_series(col, *, buckets):
+    """``byte_histogram_features`` kernel."""
+    out = []
+    for b in col:
+        if not b:
+            out.append([0.0] * buckets)
+            continue
+        arr = np.frombuffer(b, dtype=np.uint8)
+        h = np.bincount(arr >> int(np.log2(256 // buckets)),
+                        minlength=buckets).astype(np.float64)
+        out.append((h / h.sum()).astype(np.float32).tolist())
+    return pd.Series(out)
 
 
 def byte_histogram_features(df: DataFrame, bin_col: str = "payload",
                             buckets: int = 16) -> DataFrame:
     """Adds ``features array<float>`` — normalized byte histogram (numpy,
     Arrow-batched); deterministic stand-in for a learned feature extractor."""
-
-    @F.pandas_udf("array<float>")
-    def hist(col: pd.Series) -> pd.Series:
-        out = []
-        for b in col:
-            if not b:
-                out.append([0.0] * buckets)
-                continue
-            arr = np.frombuffer(b, dtype=np.uint8)
-            h = np.bincount(arr >> int(np.log2(256 // buckets)),
-                            minlength=buckets).astype(np.float64)
-            out.append((h / h.sum()).astype(np.float32).tolist())
-        return pd.Series(out)
-
+    hist = F.pandas_udf(partial(_byte_histogram_series, buckets=buckets),
+                        "array<float>")
     return df.withColumn("features", hist(F.col(bin_col)))
 
 
 DECODE_SCHEMA = ("id long, width int, height int, channels int, "
                  "pixels binary")
+
+
+def _decode_image_batches(batches, *, id_col, bin_col, fake):
+    """``decode_image`` kernel."""
+    for pdf in batches:
+        rows = {"id": [], "width": [], "height": [], "channels": [],
+                "pixels": []}
+        for i, b in zip(pdf[id_col], pdf[bin_col]):
+            if fake:
+                seed = np.frombuffer((b or b"\0")[:8].ljust(8, b"\0"),
+                                     dtype=np.uint64)[0]
+                rng = np.random.default_rng(int(seed))
+                px = rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)
+            elif sniff_format(b or b"") == "png":
+                px = png_decode(bytes(b))
+            elif sniff_format(b or b"") == "jpeg":
+                px = jpeg_decode(bytes(b))
+            elif sniff_format(b or b"") == "gif":
+                from ..functions.gif import gif_decode
+                px = gif_decode(bytes(b))[0]   # first composited frame
+            elif sniff_format(b or b"") == "avi":
+                # MJPEG frames are intra-only: pull ONLY the first
+                # frame's chunk, decode one JPEG
+                from ..functions.avi import avi_frame_chunks
+                px = jpeg_decode(avi_frame_chunks(bytes(b))[0][0])
+            else:
+                raise NotImplementedError(
+                    f"no codec for format {sniff_format(b or b'')!r} "
+                    "(PNG/JPEG/GIF/MJPEG-AVI are the real paths; pass "
+                    "fake=True for plumbing tests)")
+            rows["id"].append(int(i))
+            rows["width"].append(px.shape[1])
+            rows["height"].append(px.shape[0])
+            rows["channels"].append(px.shape[2] if px.ndim == 3 else 1)
+            rows["pixels"].append(px.tobytes())
+        yield pd.DataFrame(rows)
 
 
 def decode_image(df: DataFrame, id_col: str = "id", bin_col: str = "payload",
@@ -112,43 +151,31 @@ def decode_image(df: DataFrame, id_col: str = "id", bin_col: str = "payload",
     image derived from the payload bytes, for plumbing tests that don't
     need real pixels.
     """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"id": [], "width": [], "height": [], "channels": [],
-                    "pixels": []}
-            for i, b in zip(pdf[id_col], pdf[bin_col]):
-                if fake:
-                    seed = np.frombuffer((b or b"\0")[:8].ljust(8, b"\0"),
-                                         dtype=np.uint64)[0]
-                    rng = np.random.default_rng(int(seed))
-                    px = rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)
-                elif sniff_format(b or b"") == "png":
-                    px = png_decode(bytes(b))
-                elif sniff_format(b or b"") == "jpeg":
-                    px = jpeg_decode(bytes(b))
-                elif sniff_format(b or b"") == "gif":
-                    from ..functions.gif import gif_decode
-                    px = gif_decode(bytes(b))[0]   # first composited frame
-                elif sniff_format(b or b"") == "avi":
-                    # MJPEG frames are intra-only: pull ONLY the first
-                    # frame's chunk, decode one JPEG
-                    from ..functions.avi import avi_frame_chunks
-                    px = jpeg_decode(avi_frame_chunks(bytes(b))[0][0])
-                else:
-                    raise NotImplementedError(
-                        f"no codec for format {sniff_format(b or b'')!r} "
-                        "(PNG/JPEG/GIF/MJPEG-AVI are the real paths; pass "
-                        "fake=True for plumbing tests)")
-                rows["id"].append(int(i))
-                rows["width"].append(px.shape[1])
-                rows["height"].append(px.shape[0])
-                rows["channels"].append(px.shape[2] if px.ndim == 3 else 1)
-                rows["pixels"].append(px.tobytes())
-            yield pd.DataFrame(rows)
-
     return df.select(F.col(id_col).alias(id_col), F.col(bin_col)).mapInPandas(
-        decode, schema=DECODE_SCHEMA)
+        partial(_decode_image_batches, id_col=id_col, bin_col=bin_col,
+                fake=fake),
+        schema=DECODE_SCHEMA)
+
+
+def _resize_batches(batches, *, out_w, out_h, id_col):
+    """``resize_images`` kernel."""
+    for pdf in batches:
+        rows = {"id": [], "width": [], "height": [], "channels": [],
+                "pixels": []}
+        for i, w, h, c, px in zip(pdf[id_col], pdf["width"],
+                                  pdf["height"], pdf["channels"],
+                                  pdf["pixels"]):
+            arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(
+                int(h), int(w), int(c))
+            ys = (np.arange(out_h) * int(h)) // out_h
+            xs = (np.arange(out_w) * int(w)) // out_w
+            out = arr[np.ix_(ys, xs)]
+            rows["id"].append(int(i))
+            rows["width"].append(out_w)
+            rows["height"].append(out_h)
+            rows["channels"].append(int(c))
+            rows["pixels"].append(out.tobytes())
+        yield pd.DataFrame(rows)
 
 
 def resize_images(df: DataFrame, out_w: int, out_h: int,
@@ -162,28 +189,10 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
     and platforms.  Sample grid: src_i = floor(i * in / out) (the
     half-open-interval convention).
     """
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"id": [], "width": [], "height": [], "channels": [],
-                    "pixels": []}
-            for i, w, h, c, px in zip(pdf[id_col], pdf["width"],
-                                      pdf["height"], pdf["channels"],
-                                      pdf["pixels"]):
-                arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(
-                    int(h), int(w), int(c))
-                ys = (np.arange(out_h) * int(h)) // out_h
-                xs = (np.arange(out_w) * int(w)) // out_w
-                out = arr[np.ix_(ys, xs)]
-                rows["id"].append(int(i))
-                rows["width"].append(out_w)
-                rows["height"].append(out_h)
-                rows["channels"].append(int(c))
-                rows["pixels"].append(out.tobytes())
-            yield pd.DataFrame(rows)
-
     return df.select(id_col, "width", "height", "channels", "pixels") \
-        .mapInPandas(resize, schema=DECODE_SCHEMA)
+        .mapInPandas(partial(_resize_batches, out_w=out_w, out_h=out_h,
+                             id_col=id_col),
+                     schema=DECODE_SCHEMA)
 
 
 AUDIO_SCHEMA = ("id long, sample_rate int, n_frames long, channels int, "
@@ -196,6 +205,26 @@ def _is_wav(b: bytes) -> bool:
     return len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE"
 
 
+def _decode_audio_batches(batches, *, id_col, bin_col):
+    """``decode_audio`` kernel."""
+    for pdf in batches:
+        rows = {"id": [], "sample_rate": [], "n_frames": [],
+                "channels": [], "pcm": []}
+        for i, b in zip(pdf[id_col], pdf[bin_col]):
+            b = bytes(b or b"")
+            if not _is_wav(b):
+                raise NotImplementedError(
+                    f"no codec for format {sniff_format(b)!r} "
+                    "(16-bit PCM WAV is the real audio path)")
+            rate, pcm = wav_decode(b)
+            rows["id"].append(int(i))
+            rows["sample_rate"].append(rate)
+            rows["n_frames"].append(pcm.shape[0])
+            rows["channels"].append(pcm.shape[1])
+            rows["pcm"].append(pcm.tobytes())
+        yield pd.DataFrame(rows)
+
+
 def decode_audio(df: DataFrame, id_col: str = "id",
                  bin_col: str = "payload") -> DataFrame:
     """Audio decode: 16-bit PCM WAV -> (sample_rate, n_frames, channels,
@@ -203,27 +232,58 @@ def decode_audio(df: DataFrame, id_col: str = "id",
     Non-WAV payloads raise NotImplementedError (same contract as
     decode_image); a RIFF container that is not WAVE (e.g. WebP/AVI) is
     rejected by the WAVE magic check, not a deep wave.Error."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"id": [], "sample_rate": [], "n_frames": [],
-                    "channels": [], "pcm": []}
-            for i, b in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(b or b"")
-                if not _is_wav(b):
-                    raise NotImplementedError(
-                        f"no codec for format {sniff_format(b)!r} "
-                        "(16-bit PCM WAV is the real audio path)")
-                rate, pcm = wav_decode(b)
-                rows["id"].append(int(i))
-                rows["sample_rate"].append(rate)
-                rows["n_frames"].append(pcm.shape[0])
-                rows["channels"].append(pcm.shape[1])
-                rows["pcm"].append(pcm.tobytes())
-            yield pd.DataFrame(rows)
-
     return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        decode, schema=AUDIO_SCHEMA)
+        partial(_decode_audio_batches, id_col=id_col, bin_col=bin_col),
+        schema=AUDIO_SCHEMA)
+
+
+def _sample_frames_batches(batches, *, every_n, id_col, bin_col, fake):
+    """``sample_frames`` kernel."""
+    for pdf in batches:
+        rows = {"id": [], "frame_idx": [], "frame": []}
+        for i, b in zip(pdf[id_col], pdf[bin_col]):
+            b = bytes(b or b"")
+            if fake:
+                n_frames = max(1, len(b) // 1024)
+                for f_idx in range(0, n_frames, every_n):
+                    rows["id"].append(int(i))
+                    rows["frame_idx"].append(f_idx)
+                    rows["frame"].append(b[f_idx * 1024:(f_idx + 1) * 1024])
+                continue
+            if sniff_format(b) == "gif":
+                from ..functions.gif import gif_decode
+                for f_idx, frame in enumerate(gif_decode(b)):
+                    if f_idx % every_n:
+                        continue
+                    rows["id"].append(int(i))
+                    rows["frame_idx"].append(f_idx)
+                    rows["frame"].append(frame.tobytes())
+                continue
+            if sniff_format(b) == "avi":
+                from ..functions.avi import avi_frame_chunks
+                chunks, _, _ = avi_frame_chunks(b)
+                for f_idx in range(0, len(chunks), every_n):
+                    px = jpeg_decode(chunks[f_idx])
+                    if px.ndim == 2:
+                        px = np.repeat(px[:, :, None], 3, axis=2)
+                    rows["id"].append(int(i))
+                    rows["frame_idx"].append(f_idx)
+                    rows["frame"].append(px.tobytes())
+                continue
+            if not _is_wav(b):
+                raise NotImplementedError(
+                    f"no codec for format {sniff_format(b)!r} "
+                    "(16-bit PCM WAV, animated GIF and MJPEG AVI are "
+                    "the real paths; pass fake=True for plumbing "
+                    "tests)")
+            _, pcm = wav_decode(b)
+            n_blocks = max(1, -(-pcm.shape[0] // 1024))
+            for f_idx in range(0, n_blocks, every_n):
+                rows["id"].append(int(i))
+                rows["frame_idx"].append(f_idx)
+                rows["frame"].append(
+                    pcm[f_idx * 1024:(f_idx + 1) * 1024].tobytes())
+        yield pd.DataFrame(rows)
 
 
 def sample_frames(df: DataFrame, every_n: int = 10, id_col: str = "id",
@@ -242,53 +302,7 @@ def sample_frames(df: DataFrame, every_n: int = 10, id_col: str = "id",
     NotImplementedError (no codec libs ship here).  ``fake=True`` keeps
     the old plumbing mode: every 1 KiB of raw payload is one "frame".
     """
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"id": [], "frame_idx": [], "frame": []}
-            for i, b in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(b or b"")
-                if fake:
-                    n_frames = max(1, len(b) // 1024)
-                    for f_idx in range(0, n_frames, every_n):
-                        rows["id"].append(int(i))
-                        rows["frame_idx"].append(f_idx)
-                        rows["frame"].append(b[f_idx * 1024:(f_idx + 1) * 1024])
-                    continue
-                if sniff_format(b) == "gif":
-                    from ..functions.gif import gif_decode
-                    for f_idx, frame in enumerate(gif_decode(b)):
-                        if f_idx % every_n:
-                            continue
-                        rows["id"].append(int(i))
-                        rows["frame_idx"].append(f_idx)
-                        rows["frame"].append(frame.tobytes())
-                    continue
-                if sniff_format(b) == "avi":
-                    from ..functions.avi import avi_frame_chunks
-                    chunks, _, _ = avi_frame_chunks(b)
-                    for f_idx in range(0, len(chunks), every_n):
-                        px = jpeg_decode(chunks[f_idx])
-                        if px.ndim == 2:
-                            px = np.repeat(px[:, :, None], 3, axis=2)
-                        rows["id"].append(int(i))
-                        rows["frame_idx"].append(f_idx)
-                        rows["frame"].append(px.tobytes())
-                    continue
-                if not _is_wav(b):
-                    raise NotImplementedError(
-                        f"no codec for format {sniff_format(b)!r} "
-                        "(16-bit PCM WAV, animated GIF and MJPEG AVI are "
-                        "the real paths; pass fake=True for plumbing "
-                        "tests)")
-                _, pcm = wav_decode(b)
-                n_blocks = max(1, -(-pcm.shape[0] // 1024))
-                for f_idx in range(0, n_blocks, every_n):
-                    rows["id"].append(int(i))
-                    rows["frame_idx"].append(f_idx)
-                    rows["frame"].append(
-                        pcm[f_idx * 1024:(f_idx + 1) * 1024].tobytes())
-            yield pd.DataFrame(rows)
-
     return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        sample, schema="id long, frame_idx int, frame binary")
+        partial(_sample_frames_batches, every_n=every_n, id_col=id_col,
+                bin_col=bin_col, fake=fake),
+        schema="id long, frame_idx int, frame binary")

@@ -84,8 +84,3 @@ def build_chunk_counts(shingles: DataFrame, chunk_length: int) -> DataFrame:
         .groupBy("gid", "chunk")
         .agg(F.count("*").alias("cnt"))
     )
-
-
-def graph_sizes(edges: DataFrame) -> DataFrame:
-    """Per-graph edge counts (main.cpp:468-476)."""
-    return edges.groupBy("gid").agg(F.count("*").alias("num_edges"))

@@ -15,14 +15,13 @@ join-based rewrite of the reference's dense vector scan.
 
 from __future__ import annotations
 
-import math
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import StreamSpotParams
-from ..functions.sketches import sketch_bytes_to_bits
+from ..functions.sketches import sketch_similarity_series
 
 PI = 3.1415926535897  # param.h:22
 
@@ -65,14 +64,8 @@ def all_pairs_sketch_similarity(sketches: DataFrame, params: StreamSpotParams,
     ``lsh_prune`` = candidate-pair table from ``lsh.candidate_pairs`` to
     restrict to bucket-sharing pairs.
     """
-    L = params.L
-
-    @F.pandas_udf("double")
-    def sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        bits_a = sketch_bytes_to_bits(a.tolist(), L)
-        bits_b = sketch_bytes_to_bits(b.tolist(), L)
-        return pd.Series(1.0 - (bits_a != bits_b).sum(axis=1) / float(L))
-
+    sim_udf = F.pandas_udf(partial(sketch_similarity_series, L=params.L),
+                           "double")
     left = sketches.select(F.col("gid").alias("gid_a"), F.col("sketch").alias("sk_a"))
     right = sketches.select(F.col("gid").alias("gid_b"), F.col("sketch").alias("sk_b"))
     if lsh_prune is not None:

@@ -17,7 +17,7 @@ requires the dense global shingle dictionary (graph.cpp:204-209).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -26,34 +26,73 @@ from pyspark.sql import functions as F
 
 from ..config import StreamSpotParams
 from ..functions.hashing import hashmulti_batch
-from ..functions.sketches import band_values, pack_sketch, sketch_bytes_to_bits
+from ..functions.sketches import band_values, pack_sketch
 from ..rng import allocate_random_bits, construct_random_vectors
 
 SKETCH_SCHEMA = "gid long, projection array<long>, sketch binary, bands array<long>"
+
+
+def _hash_chunk_batches(batches, *, H):
+    """``hash_chunk_vocabulary`` kernel: (chunk) batches -> (chunk, bits)."""
+    for pdf in batches:
+        chunks = pdf["chunk"].tolist()
+        bits = hashmulti_batch(chunks, H)  # (n, L) int8 of +/-1
+        yield pd.DataFrame({
+            "chunk": chunks,
+            "bits": [bits[i].tobytes() for i in range(len(chunks))],
+        })
 
 
 def hash_chunk_vocabulary(chunk_counts: DataFrame, params: StreamSpotParams) -> DataFrame:
     """(chunk, bits binary) — each distinct chunk hashed to L signs of +/-1,
     serialized as L int8 bytes."""
     H = allocate_random_bits(params.L, params.chunk_length, params.seed)
-
-    def hash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            chunks = pdf["chunk"].tolist()
-            bits = hashmulti_batch(chunks, H)  # (n, L) int8 of +/-1
-            yield pd.DataFrame({
-                "chunk": chunks,
-                "bits": [bits[i].tobytes() for i in range(len(chunks))],
-            })
-
     vocab = chunk_counts.select("chunk").distinct()
-    return vocab.mapInPandas(hash_batches, schema="chunk string, bits binary")
+    return vocab.mapInPandas(partial(_hash_chunk_batches, H=H),
+                             schema="chunk string, bits binary")
 
 
-# per-executor-process memo for inline hashing: chunk -> (L,) int8 signs.
-# Safe: pure function of (chunk, H) and H is fixed per job via closure capture.
-_HASH_MEMO: dict[str, "np.ndarray"] = {}
+# inline-hashing memo cap: chunk -> (L,) int8 signs.  The memo dict is bound
+# into the kernel empty, so every task unpickles its own — one memo per
+# task, never shared between jobs with different hash functions.
 _HASH_MEMO_CAP = 1_000_000
+
+
+def _sketch_row(pdf: pd.DataFrame, projection: np.ndarray, extra: tuple,
+                B: int, R: int) -> pd.DataFrame:
+    """One output row of the per-graph sketch kernels."""
+    sketch_bits = (projection >= 0).astype(np.uint8)[None, :]
+    return pd.DataFrame({
+        **{k: [pdf[k].iloc[0]] for k in extra},
+        "gid": [int(pdf["gid"].iloc[0])],
+        "projection": [projection.tolist()],
+        "sketch": [pack_sketch(sketch_bits)[0].tobytes()],
+        "bands": [band_values(sketch_bits, B, R)[0].tolist()],
+    })
+
+
+def _sketch_group_joined(pdf, *, L, B, R, extra):
+    """``build_sketches(mode="join")`` kernel: one graph's (chunk, cnt,
+    bits) rows -> its sketch row."""
+    bits = np.frombuffer(b"".join(pdf["bits"]), dtype=np.int8).reshape(len(pdf), L)
+    counts = pdf["cnt"].to_numpy(dtype=np.int64)
+    return _sketch_row(pdf, counts @ bits.astype(np.int64), extra, B, R)
+
+
+def _sketch_group_inline(pdf, *, H, B, R, extra, memo):
+    """``build_sketches(mode="inline")`` kernel: one graph's (chunk, cnt)
+    rows -> its sketch row, hashing chunks through the task's ``memo``."""
+    chunks = pdf["chunk"].tolist()
+    missing = [c for c in chunks if c not in memo]
+    if missing:
+        fresh = hashmulti_batch(missing, H)
+        if len(memo) + len(missing) > _HASH_MEMO_CAP:
+            memo.clear()
+        for i, c in enumerate(missing):
+            memo[c] = fresh[i]
+    bits = np.stack([memo[c] for c in chunks])
+    counts = pdf["cnt"].to_numpy(dtype=np.int64)
+    return _sketch_row(pdf, counts @ bits.astype(np.int64), extra, B, R)
 
 
 def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
@@ -62,8 +101,8 @@ def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
                    extra_group_cols: dict[str, str] | None = None) -> DataFrame:
     """(gid, projection, sketch, bands) from the (gid, chunk, cnt) table.
 
-    mode="inline" (default): one applyInPandas pass; each worker hashes the
-    chunks it sees with a per-process memo.  Fewest stages — right when the
+    mode="inline" (default): one applyInPandas pass; each task hashes the
+    chunks it sees with a per-task memo.  Fewest stages — right when the
     chunk vocabulary is small (type-alphabet bounded) or the input pipeline
     is expensive to recompute.
 
@@ -76,61 +115,26 @@ def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
     window start for the streaming pipeline) — one distributed pass for
     all windows instead of a driver loop per window.
     """
-    L, B, R = params.L, params.B, params.R
+    B, R = params.B, params.R
     extra = dict(extra_group_cols or {})
     group_keys = [*extra.keys(), "gid"]
     out_schema = "".join(f"{k} {v}, " for k, v in extra.items()) + SKETCH_SCHEMA
-
-    def _passthrough(pdf: pd.DataFrame) -> dict:
-        return {k: [pdf[k].iloc[0]] for k in extra}
 
     if mode == "join":
         vocab = hash_chunk_vocabulary(chunk_counts, params)
         if broadcast_vocab:
             vocab = F.broadcast(vocab)
         joined = chunk_counts.join(vocab, "chunk")
-
-        def per_graph(pdf: pd.DataFrame) -> pd.DataFrame:
-            bits = np.frombuffer(b"".join(pdf["bits"]), dtype=np.int8).reshape(len(pdf), L)
-            counts = pdf["cnt"].to_numpy(dtype=np.int64)
-            projection = counts @ bits.astype(np.int64)          # (L,)
-            sketch_bits = (projection >= 0).astype(np.uint8)[None, :]
-            return pd.DataFrame({
-                **_passthrough(pdf),
-                "gid": [int(pdf["gid"].iloc[0])],
-                "projection": [projection.tolist()],
-                "sketch": [pack_sketch(sketch_bits)[0].tobytes()],
-                "bands": [band_values(sketch_bits, B, R)[0].tolist()],
-            })
-
+        kernel = partial(_sketch_group_joined, L=params.L, B=B, R=R,
+                         extra=tuple(extra))
         return joined.groupBy(*group_keys).applyInPandas(
-            per_graph, schema=out_schema)
+            kernel, schema=out_schema)
 
     H = allocate_random_bits(params.L, params.chunk_length, params.seed)
-
-    def per_graph_inline(pdf: pd.DataFrame) -> pd.DataFrame:
-        chunks = pdf["chunk"].tolist()
-        missing = [c for c in chunks if c not in _HASH_MEMO]
-        if missing:
-            fresh = hashmulti_batch(missing, H)
-            if len(_HASH_MEMO) + len(missing) > _HASH_MEMO_CAP:
-                _HASH_MEMO.clear()
-            for i, c in enumerate(missing):
-                _HASH_MEMO[c] = fresh[i]
-        bits = np.stack([_HASH_MEMO[c] for c in chunks])
-        counts = pdf["cnt"].to_numpy(dtype=np.int64)
-        projection = counts @ bits.astype(np.int64)
-        sketch_bits = (projection >= 0).astype(np.uint8)[None, :]
-        return pd.DataFrame({
-            **_passthrough(pdf),
-            "gid": [int(pdf["gid"].iloc[0])],
-            "projection": [projection.tolist()],
-            "sketch": [pack_sketch(sketch_bits)[0].tobytes()],
-            "bands": [band_values(sketch_bits, B, R)[0].tolist()],
-        })
-
+    kernel = partial(_sketch_group_inline, H=H, B=B, R=R, extra=tuple(extra),
+                     memo={})
     return chunk_counts.groupBy(*group_keys).applyInPandas(
-        per_graph_inline, schema=out_schema)
+        kernel, schema=out_schema)
 
 
 def sketch_bands(sketches: DataFrame, params: StreamSpotParams) -> DataFrame:
@@ -138,6 +142,16 @@ def sketch_bands(sketches: DataFrame, params: StreamSpotParams) -> DataFrame:
     return sketches.select(
         "gid", F.posexplode("bands").alias("band_idx", "band_val")
     )
+
+
+def _simhash_group(pdf, *, b_idx, b_rv, B, R):
+    """``build_simhash_sketches`` kernel: one graph's (chunk, cnt) rows ->
+    its sketch row over the broadcast dictionary and random vectors."""
+    idx = b_idx.value
+    sv = np.zeros(len(idx), dtype=np.int64)
+    for chunk, cnt in zip(pdf["chunk"], pdf["cnt"]):
+        sv[idx[chunk]] = cnt
+    return _sketch_row(pdf, b_rv.value.astype(np.int64) @ sv, (), B, R)
 
 
 def build_simhash_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
@@ -167,35 +181,8 @@ def build_simhash_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
     vocab_idx = {c: i for i, c in enumerate(vocab)}
     rv = construct_random_vectors(L, len(vocab), params.seed)  # (L, |S|) +/-1
     spark = chunk_counts.sparkSession
-    b_idx = spark.sparkContext.broadcast(vocab_idx)
-    b_rv = spark.sparkContext.broadcast(rv)
-
-    def per_graph(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = b_idx.value
-        rvs = b_rv.value
-        sv = np.zeros(len(idx), dtype=np.int64)
-        for chunk, cnt in zip(pdf["chunk"], pdf["cnt"]):
-            sv[idx[chunk]] = cnt
-        projection = rvs.astype(np.int64) @ sv               # (L,)
-        bits = (projection >= 0).astype(np.uint8)[None, :]
-        return pd.DataFrame({
-            "gid": [int(pdf["gid"].iloc[0])],
-            "projection": [projection.tolist()],
-            "sketch": [pack_sketch(bits)[0].tobytes()],
-            "bands": [band_values(bits, B, R)[0].tolist()],
-        })
-
-    return chunk_counts.groupBy("gid").applyInPandas(per_graph, schema=SKETCH_SCHEMA)
-
-
-def sketch_similarity_udf(L: int):
-    """pandas UDF: StreamHash similarity between two packed-sketch columns
-    (streamhash.cpp:17-20): fraction of equal bits."""
-
-    @F.pandas_udf("double")
-    def sim(a: pd.Series, b: pd.Series) -> pd.Series:
-        bits_a = sketch_bytes_to_bits(a.tolist(), L)
-        bits_b = sketch_bytes_to_bits(b.tolist(), L)
-        return pd.Series(1.0 - (bits_a != bits_b).sum(axis=1) / float(L))
-
-    return sim
+    kernel = partial(_simhash_group,
+                     b_idx=spark.sparkContext.broadcast(vocab_idx),
+                     b_rv=spark.sparkContext.broadcast(rv),
+                     B=B, R=R)
+    return chunk_counts.groupBy("gid").applyInPandas(kernel, schema=SKETCH_SCHEMA)

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _local_dir() -> str:
@@ -42,6 +42,41 @@ def _submit_conf_value(key: str) -> str | None:
         return None
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of physical memory (``MemTotal``), in MiB, at least 1 GiB — the
+    driver heap when ``SPARK_DRIVER_MEMORY`` is unset.  A fixed default
+    sized for a large host gets the local-mode JVM OOM-killed on a small
+    one.  Hosts without ``meminfo`` fall back to 4g."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{max(1024, kb // 1024 // 2)}m"
+
+
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` a DDL string or StructType), built as an Arrow table.
+
+    Same schema and nulls as ``spark.createDataFrame(rows, schema)``, but
+    the plan is a ``LocalTableScan``: the list path plans a Python-RDD
+    scan (``Scan ExistingRDD``) that runs an identity map in Python
+    workers every time the frame is scanned."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) \
+        else _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
+
+
 def get_spark(
     app_name: str = "sbustreamspot-core-spark",
     cpus: int | None = None,
@@ -64,7 +99,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # local-mode shuffles are disk-bound through /tmp; tmpfs keeps the

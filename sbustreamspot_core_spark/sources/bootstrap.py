@@ -12,6 +12,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_table
+
 
 @dataclass(frozen=True)
 class BootstrapClusters:
@@ -33,7 +35,7 @@ class BootstrapClusters:
             for c, members in enumerate(self.clusters)
             for g in members
         ]
-        return spark.createDataFrame(rows, "cluster_id int, threshold double, gid long")
+        return local_table(spark, rows, "cluster_id int, threshold double, gid long")
 
 
 def read_bootstrap_clusters(path: str) -> BootstrapClusters:

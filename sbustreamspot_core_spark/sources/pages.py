@@ -16,8 +16,8 @@ materialization) — the 100 TB-scale pattern for synthetic inputs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from datetime import datetime, timedelta, timezone
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -85,30 +85,33 @@ def render_html(idx: int, n_hosts: int, pages_per_host: int, seed: int) -> bytes
     ).encode("utf-8")
 
 
+def _page_batches(batches, *, n_hosts, pages_per_host, seed):
+    """``generate_pages`` kernel: page-index batches -> page rows."""
+    from ..functions.text import extract_text_bytes
+    for pdf in batches:
+        idxs = pdf["id"].tolist()
+        urls, tss, htmls, texts, langs = [], [], [], [], []
+        for idx in idxs:
+            host, page = divmod(int(idx), pages_per_host)
+            html = render_html(int(idx), n_hosts, pages_per_host, seed)
+            urls.append(page_url(host, page))
+            tss.append(_EPOCH + timedelta(seconds=int(idx)))
+            htmls.append(html)
+            texts.append(extract_text_bytes(html))
+            langs.append(_LANGS[_mix64(seed ^ idx) % len(_LANGS)])
+        yield pd.DataFrame({
+            "url": urls, "warc_ts": tss, "html": htmls,
+            "text": texts, "lang": langs,
+        })
+
+
 def generate_pages(spark: SparkSession, n_hosts: int = 10,
                    pages_per_host: int = 20, seed: int = 42,
                    num_partitions: int = 8) -> DataFrame:
     """Distributed deterministic pages DataFrame."""
     n = n_hosts * pages_per_host
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.text import extract_text_bytes
-        for pdf in batches:
-            idxs = pdf["id"].tolist()
-            urls, tss, htmls, texts, langs = [], [], [], [], []
-            for idx in idxs:
-                host, page = divmod(int(idx), pages_per_host)
-                html = render_html(int(idx), n_hosts, pages_per_host, seed)
-                urls.append(page_url(host, page))
-                tss.append(_EPOCH + timedelta(seconds=int(idx)))
-                htmls.append(html)
-                texts.append(extract_text_bytes(html))
-                langs.append(_LANGS[_mix64(seed ^ idx) % len(_LANGS)])
-            yield pd.DataFrame({
-                "url": urls, "warc_ts": tss, "html": htmls,
-                "text": texts, "lang": langs,
-            })
-
+    gen = partial(_page_batches, n_hosts=n_hosts,
+                  pages_per_host=pages_per_host, seed=seed)
     return (
         spark.range(0, n, 1, num_partitions)
         .mapInPandas(gen, schema="url string, warc_ts timestamp, html binary, "

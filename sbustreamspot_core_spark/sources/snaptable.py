@@ -88,6 +88,8 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_table
+
 
 class SnapTableError(ValueError):
     """Structurally invalid table directory or bad arguments."""
@@ -543,7 +545,7 @@ class SnapTable:
             raise SnapTableError("empty table has no schema yet")
         if not manifest:
             from pyspark.sql.types import StructType
-            return spark.createDataFrame([], StructType.fromJson(schema))
+            return local_table(spark, [], StructType.fromJson(schema))
         df = self._scan(
             spark, schema,
             [os.path.join(self.path, f["path"]) for f in manifest])
@@ -611,9 +613,9 @@ class SnapTable:
         rows = [(s["snapshot_id"], s["parent_id"], s["operation"],
                  float(s["ts"]), json.dumps(s["summary"], sort_keys=True))
                 for s in self.snapshots()]
-        return spark.createDataFrame(
-            rows, "snapshot_id long, parent_id long, operation string, "
-                  "ts double, summary string")
+        return local_table(
+            spark, rows, "snapshot_id long, parent_id long, operation string, "
+                         "ts double, summary string")
 
     def files_df(self, spark: SparkSession,
                  snapshot_id: int | None = None) -> DataFrame:
@@ -628,8 +630,8 @@ class SnapTable:
                 nbytes = None       # expired by a concurrent vacuum
             rows.append((f["path"], f["rows"], nbytes,
                          json.dumps(f.get("partition"), sort_keys=True)))
-        return spark.createDataFrame(
-            rows, "path string, rows long, bytes long, partition string")
+        return local_table(
+            spark, rows, "path string, rows long, bytes long, partition string")
 
     # ---- maintenance --------------------------------------------------
 

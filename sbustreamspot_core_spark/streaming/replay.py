@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..config import ANOMALY, UNSEEN, StreamSpotParams
 from ..operators.shingles import build_adjacency, build_chunk_counts, build_shingles
 from ..operators.sketch import build_sketches
+from ..session import local_table
 from ..sources.bootstrap import BootstrapClusters
 
 PI = 3.1415926535897
@@ -232,7 +233,8 @@ class MicroBatchReplay:
                 self._update_clusters(int(g), delta)
 
             if self.checkpoint_dir:
-                snap = self.spark.createDataFrame(
+                snap = local_table(
+                    self.spark,
                     [(int(g), int(self.cluster_map.get(g, UNSEEN)),
                       float(self.anomaly_scores.get(g, float(UNSEEN))))
                      for g in sorted(self.projections)],

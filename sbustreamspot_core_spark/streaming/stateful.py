@@ -22,6 +22,7 @@ semantics), so sketches can be maintained without re-reading history.
 from __future__ import annotations
 
 from collections import Counter
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -55,35 +56,31 @@ def chunk_delta(shingle: str, appended: str, chunk_length: int) -> Counter:
     return Counter({c: d for c, d in new.items() if d != 0})
 
 
-def make_delta_fn(params: StreamSpotParams):
-    """Returns the applyInPandasWithState function."""
-    C = params.chunk_length
-
-    def fn(key, pdf_iter, state):
-        gid, src_id, src_type = key
-        if state.exists:
-            (shingle,) = state.get
-            appended_parts = []
-        else:
-            shingle = ""
-            # first sight of this source: the OkBFT prefix (graph.cpp:93)
-            # counts as appended so its chunks are emitted as +1 once
-            appended_parts = [" " + src_type]
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("seq")
-            for e_type, dst_type in zip(pdf["e_type"], pdf["dst_type"]):
-                appended_parts.append(e_type + dst_type)
-        appended = "".join(appended_parts)
-        delta = chunk_delta(shingle, appended, C)
-        state.update((shingle + appended,))
-        if delta:
-            yield pd.DataFrame({
-                "gid": [int(gid)] * len(delta),
-                "chunk": list(delta.keys()),
-                "delta": [int(v) for v in delta.values()],
-            })
-
-    return fn
+def _delta_group(key, pdf_iter, state, *, chunk_length):
+    """The applyInPandasWithState kernel: one source's new edges -> its
+    chunk-count deltas, carrying the shingle in the group state."""
+    gid, src_id, src_type = key
+    if state.exists:
+        (shingle,) = state.get
+        appended_parts = []
+    else:
+        shingle = ""
+        # first sight of this source: the OkBFT prefix (graph.cpp:93)
+        # counts as appended so its chunks are emitted as +1 once
+        appended_parts = [" " + src_type]
+    for pdf in pdf_iter:
+        pdf = pdf.sort_values("seq")
+        for e_type, dst_type in zip(pdf["e_type"], pdf["dst_type"]):
+            appended_parts.append(e_type + dst_type)
+    appended = "".join(appended_parts)
+    delta = chunk_delta(shingle, appended, chunk_length)
+    state.update((shingle + appended,))
+    if delta:
+        yield pd.DataFrame({
+            "gid": [int(gid)] * len(delta),
+            "chunk": list(delta.keys()),
+            "delta": [int(v) for v in delta.values()],
+        })
 
 
 def incremental_chunk_deltas(edges: DataFrame,
@@ -96,7 +93,7 @@ def incremental_chunk_deltas(edges: DataFrame,
     return (
         edges.groupBy("gid", "src_id", "src_type")
         .applyInPandasWithState(
-            make_delta_fn(params),
+            partial(_delta_group, chunk_length=params.chunk_length),
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",

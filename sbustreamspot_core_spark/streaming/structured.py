@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import StreamSpotParams
+from ..session import local_table
 from ..sources.bootstrap import BootstrapClusters
 from .replay import MicroBatchReplay
 
@@ -63,7 +64,8 @@ class StructuredStreamSpot(MicroBatchReplay):
             delta = proj - old
             self.projections[g] = proj
             self._update_clusters(int(g), delta)
-        snap = self.spark.createDataFrame(
+        snap = local_table(
+            self.spark,
             [(int(g), int(self.cluster_map.get(g, -2)),
               float(self.anomaly_scores.get(g, -2.0)))
              for g in sorted(self.projections)],
