@@ -250,6 +250,18 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 5,
     return sel.mapInPandas(kernel, schema="id long, sig array<long>")
 
 
+def _split_hot(banded: DataFrame, cols: list, cap: int | None):
+    """(normal, hot): ``banded`` rows in buckets of at most / more than
+    ``cap`` members; hot is None when there is no cap.  The hot-key table
+    is tiny, so both sides broadcast it instead of shuffling ``banded``."""
+    if cap is None:
+        return banded, None
+    hot_keys = (banded.groupBy(*cols).agg(F.count("*").alias("_n"))
+                .filter(F.col("_n") > cap).select(*cols))
+    return (banded.join(F.broadcast(hot_keys), cols, "left_anti"),
+            banded.join(F.broadcast(hot_keys), cols, "left_semi"))
+
+
 def banded_self_join_pairs(banded: DataFrame, bucket_cols: list,
                            id_col: str = "id",
                            max_bucket_size: int | None = 10_000,
@@ -285,15 +297,7 @@ def banded_self_join_pairs(banded: DataFrame, bucket_cols: list,
     exchanges AQE reuses (ReusedExchange), so an uncached upstream costs
     ~one extra aggregation pass — an eager hot-key collect() was measured
     SLOWER (splits into two jobs; exchange reuse does not span jobs)."""
-    if max_bucket_size is None:
-        normal, hot = banded, None
-    else:
-        sizes = (banded.groupBy(*bucket_cols)
-                 .agg(F.count("*").alias("_n")))
-        hot_keys = (sizes.filter(F.col("_n") > max_bucket_size)
-                    .select(*bucket_cols))
-        normal = banded.join(F.broadcast(hot_keys), bucket_cols, "left_anti")
-        hot = banded.join(F.broadcast(hot_keys), bucket_cols, "left_semi")
+    normal, hot = _split_hot(banded, bucket_cols, max_bucket_size)
     a = normal.select(F.col(id_col).alias(out_a), *bucket_cols)
     b = normal.select(F.col(id_col).alias(out_b), *bucket_cols)
     # shuffle_hash: skips the sort-merge sorts of both band-table sides;
@@ -364,19 +368,25 @@ def minhash_bands(signatures: DataFrame, bands: int = 16) -> DataFrame:
     ``transform`` lambda was a codegen fallback that took the Generate off
     whole-stage codegen, and this table is re-derived several times per
     candidate job (sizes / anti / semi / join sides); measured 2x on the
-    50k-doc corpus with byte-identical output."""
+    50k-doc corpus with byte-identical output.
+
+    A null signature (null text: ``minhash_signatures`` emits k nulls)
+    keeps its one row per band with a NULL ``band_key``, so every bucket
+    equi-join drops it and null-text docs never pair with each other."""
+    key = F.expr(f"array_join(slice(sig, band_idx * int(size(sig) / {bands})"
+                 f" + 1, int(size(sig) / {bands})), '_')")
     return signatures.select(
         "id", "sig",
         F.explode(F.sequence(F.lit(0), F.lit(int(bands) - 1)))
         .alias("band_idx"),
     ).select(
         "id", "band_idx",
-        F.expr(f"array_join(slice(sig, band_idx * int(size(sig) / {bands})"
-               f" + 1, int(size(sig) / {bands})), '_')").alias("band_key"),
+        F.when(F.get("sig", 0).isNotNull(), key).alias("band_key"),
     )
 
 
-def incremental_lsh_candidates(index_bands: DataFrame, new_bands: DataFrame,
+def incremental_lsh_candidates(index_bands: DataFrame | None,
+                               new_bands: DataFrame,
                                max_bucket_size: int | None = None
                                ) -> DataFrame:
     """Candidate pairs INVOLVING at least one new doc: new-new pairs via
@@ -389,7 +399,8 @@ def incremental_lsh_candidates(index_bands: DataFrame, new_bands: DataFrame,
     Cumulative-equivalence contract (pytest-pinned): the union of every
     batch's incremental candidates equals ``minhash_lsh_candidates`` over
     the full corpus, because a pair shares a band bucket independently of
-    which batch each side arrived in.
+    which batch each side arrived in.  ``index_bands=None`` is the empty
+    index: the result is the new batch's banded self-join alone.
 
     ``max_bucket_size`` star-reduces hot buckets on BOTH legs: the new-new
     self-join uses ``banded_self_join_pairs``'s star contract, and a hot
@@ -400,17 +411,13 @@ def incremental_lsh_candidates(index_bands: DataFrame, new_bands: DataFrame,
     pair-level consumers: default None, see ``banded_self_join_pairs``.
     """
     cols = ["band_idx", "band_key"]
+    if index_bands is None:
+        return banded_self_join_pairs(new_bands, cols,
+                                      max_bucket_size=max_bucket_size)
     nn = banded_self_join_pairs(new_bands, cols,
                                 max_bucket_size=max_bucket_size,
                                 distinct=False)
-    if max_bucket_size is None:
-        normal_idx, hot_idx = index_bands, None
-    else:
-        sizes = index_bands.groupBy(*cols).agg(F.count("*").alias("_n"))
-        hot_keys = (sizes.filter(F.col("_n") > max_bucket_size)
-                    .select(*cols))
-        normal_idx = index_bands.join(F.broadcast(hot_keys), cols, "left_anti")
-        hot_idx = index_bands.join(F.broadcast(hot_keys), cols, "left_semi")
+    normal_idx, hot_idx = _split_hot(index_bands, cols, max_bucket_size)
     nw = new_bands.select(F.col("id").alias("id_n"), *cols)
     o = normal_idx.select(F.col("id").alias("id_o"), *cols)
     cross = (nw.join(o, cols)
@@ -472,7 +479,6 @@ def incremental_dedup_batch(spark, index_path: str, new_docs: DataFrame,
                                   text_col=text_col).cache()
     try:
         index_bands = spark.read.parquet(index_path)
-        have_index = True
     except Exception as e:  # noqa: BLE001 — re-raised unless missing-path
         # ONLY a missing path means "no index yet".  Any other read
         # failure (transient FS error, permissions, corrupt footer) must
@@ -481,14 +487,9 @@ def incremental_dedup_batch(spark, index_path: str, new_docs: DataFrame,
         # permanently losing every new-vs-corpus candidate for this batch
         if not is_path_not_found(e):
             raise
-        have_index = False
-    if have_index:
-        cands = incremental_lsh_candidates(index_bands, new_bands,
-                                           max_bucket_size=max_bucket_size)
-    else:
-        cands = banded_self_join_pairs(new_bands, ["band_idx", "band_key"],
-                                       max_bucket_size=max_bucket_size)
-    cands = cands.cache()
+        index_bands = None
+    cands = incremental_lsh_candidates(
+        index_bands, new_bands, max_bucket_size=max_bucket_size).cache()
     cands.count()
     if append:
         new_bands.write.mode("append").parquet(index_path)

@@ -705,19 +705,38 @@ def test_minhash_bands_rows_pinned(spark):
 
     sig_a = list(range(1, 9))           # 8 hashes, 4 bands -> slices of 2
     sig_b = list(range(1, 5)) + [9, 10, 11, 12]   # shares bands 0 and 1
-    rows = [(1, sig_a), (2, sig_b), (3, [None] * 8)]
+    rows = [(1, sig_a), (2, sig_b), (3, [None] * 8), (4, [None] * 8)]
     sigs = spark.createDataFrame(rows, "id long, sig array<long>")
 
     got = {(r.id, r.band_idx): r.band_key
            for r in minhash_bands(sigs, bands=4).collect()}
-    assert len(got) == 3 * 4
+    assert len(got) == 4 * 4
     assert got[(1, 0)] == "1_2" and got[(1, 3)] == "7_8"
     assert got[(2, 0)] == "1_2" and got[(2, 2)] == "9_10"
-    # array_join skips nulls entirely -> empty-string keys for a null sig
-    # on BOTH the old transform path and the new projection (verified
-    # byte-identical in the round-7 A/B); pin that so a future rewrite
-    # that turns them into NULLs (or real keys) fails loudly here
-    assert all(got[(3, b)] == "" for b in range(4))
+    # a null sig keeps its rows with NULL keys (an empty-string key would
+    # equi-join, pairing every null-text doc with every other one)
+    assert all(got[(d, b)] is None for d in (3, 4) for b in range(4))
     pairs = sorted(map(tuple, minhash_lsh_candidates(
         sigs, bands=4, max_bucket_size=None).collect()))
     assert pairs == [(1, 2)]
+
+
+def test_incremental_dedup_null_text_never_pairs(spark, tmp_ckpt):
+    """A null-text doc in the index and another in the new batch share
+    only NULL band keys, so the incremental join must not pair them."""
+    from sbustreamspot_core_spark.operators.dedup import (
+        incremental_dedup_batch,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog"
+    index_path = f"{tmp_ckpt}/null_index"
+    got = []
+    for rows in ([(1, text), (2, None)], [(3, None), (4, text + "!")]):
+        b = spark.createDataFrame(rows, "doc_id long, text string")
+        cands = incremental_dedup_batch(spark, index_path, b,
+                                        num_hashes=32, bands=8)
+        got += [(r.id_a, r.id_b) for r in cands.collect()]
+        cands.unpersist()
+    assert (2, 3) not in got
+    assert not any({2, 3} & set(p) for p in got)
+    assert spark.read.parquet(index_path).count() == 4 * 8
