@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..config import GraphParams
 from ..session import local_table
-from .superstep import SuperstepDriver, iterative_conf
+from .superstep import SuperstepDriver
 
 
 @dataclass
@@ -138,9 +138,9 @@ def connected_components(spark: SparkSession, edges: DataFrame,
         .distinct()          # rides the repartition exchange (subset rule)
         .select("id", F.col("id").alias("label"),
                 F.lit(1).alias("changed"))
-    ).cache()
+    )
 
-    def step(state: DataFrame, k: int):
+    def step(state: DataFrame, k: int, prev: dict | None):
         # frontier optimization (exact): a vertex's label can only drop via a
         # neighbor whose label dropped last round, so only changed labels are
         # propagated — message volume collapses as components converge.
@@ -159,16 +159,14 @@ def connected_components(spark: SparkSession, edges: DataFrame,
                 (F.coalesce("msg", "label") < F.col("label"))
                 .cast("int").alias("changed"),
             )
-        ).cache()
-        n_changed = new_state.agg(F.sum("changed").alias("c")).collect()[0].c
-        return new_state, {"changed": n_changed, "converged": n_changed == 0}
+        )
+        return new_state, {"changed": F.sum("changed"),
+                           "converged": F.sum("changed") == 0}
 
     driver = SuperstepDriver(spark, checkpoint_dir, params.checkpoint_interval,
                              lineage_table=lineage_table)
-    with iterative_conf(spark):
-        result = driver.run(labels0, step, params.max_iters, resume)
+    result = driver.run(labels0, step, params.max_iters, resume)
     sym.unpersist()
-    labels0.unpersist()
     return ComponentsResult(
         result.state.select("id", F.col("label").alias("component")),
         result.supersteps, result.converged, result.metrics)

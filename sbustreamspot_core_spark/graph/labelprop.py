@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..config import GraphParams
 from .components import symmetrize
-from .superstep import SuperstepDriver, iterative_conf
+from .superstep import SuperstepDriver
 
 
 @dataclass
@@ -42,9 +42,9 @@ def label_propagation(spark: SparkSession, edges: DataFrame,
         # adds NO exchange at all (round 7)
         sym.select(F.col("a").alias("id")).distinct()
         .select("id", F.col("id").alias("label"))
-    ).cache()
+    )
 
-    def step(state: DataFrame, k: int):
+    def step(state: DataFrame, k: int, prev: dict | None):
         nbr_labels = (
             state.join(sym.hint("shuffle_hash"), state["id"] == sym["a"])
             .select(F.col("b").alias("id"), "label")
@@ -61,18 +61,16 @@ def label_propagation(spark: SparkSession, edges: DataFrame,
                     F.coalesce("new_label", "label").alias("label"),
                     (F.coalesce("new_label", "label") != F.col("label"))
                     .cast("int").alias("changed"))
-        ).cache()
-        changes = new_state.agg(F.sum("changed").alias("c")).collect()[0].c
-        # the spare `changed` column rides along in the state; steps only
-        # read (id, label), and keeping it preserves unpersist bookkeeping
-        return new_state, {"changed": changes, "converged": changes == 0}
+        )
+        # the `changed` column rides along in the state for the metrics;
+        # steps only read (id, label)
+        return new_state, {"changed": F.sum("changed"),
+                           "converged": F.sum("changed") == 0}
 
     driver = SuperstepDriver(spark, checkpoint_dir,
                              params.checkpoint_interval,
                              lineage_table=lineage_table)
-    with iterative_conf(spark):
-        result = driver.run(labels0, step, params.lpa_max_iters, resume)
+    result = driver.run(labels0, step, params.lpa_max_iters, resume)
     sym.unpersist()
-    labels0.unpersist()
     return LabelPropResult(result.state.select("id", "label"),
                            result.supersteps, result.converged, result.metrics)

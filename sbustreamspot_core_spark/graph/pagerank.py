@@ -16,9 +16,10 @@ Scale design (100 TB / 10^12-edge mindset, tested at local scale):
   with the same partition count), and the contribution aggregation is a
   partial+final hash agg, so in-degree skew (mega-hub *inbound* links) is
   absorbed by map-side combine before the shuffle.
-- Dangling mass and the convergence delta are computed in the SAME single
-  action per superstep (one driver barrier), with the dangling sum for
-  superstep k+1 taken from superstep k's output.
+- Dangling mass and the convergence delta are aggregates of the SAME single
+  metrics action per superstep (one driver barrier, run by the
+  SuperstepDriver); superstep k+1 reads its dangling sum from superstep k's
+  metrics, so only the first superstep of a run seeds it with an action.
 - Lineage-plan blowup is cut by the SuperstepDriver's parquet checkpoints,
   which double as the resume point.
 """
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import GraphParams
-from .superstep import SuperstepDriver, SuperstepResult, iterative_conf
+from .superstep import SuperstepDriver
 
 
 @dataclass
@@ -50,7 +51,7 @@ def prepared_edges(edges: DataFrame, params: GraphParams) -> DataFrame:
     aggregation on (src, blk)), so ordering the repartition FIRST lets
     Catalyst elide their exchanges and leaves the adjacency already
     co-partitioned for the superstep joins.  The former shape deduped and
-    degree-counted twice (build_links + init_ranks each), costing four
+    degree-counted twice (adjacency and initial ranks each), costing four
     full-width exchanges plus a final repartition."""
     e = edges.select("src", "dst").repartition(params.num_partitions, "src")
     return e if params.edges_distinct else e.distinct()
@@ -90,32 +91,6 @@ def build_links(edges: DataFrame, params: GraphParams,
         "targets")
 
 
-def init_ranks(edges: DataFrame, params: GraphParams,
-               prepared: DataFrame | None = None) -> tuple[DataFrame, int]:
-    """(id, rank, deg) for every vertex; deg = out-degree (0 => dangling).
-
-    One exchange (the vertex-set repartition; distinct and the degree join
-    ride the established partitionings — the degree table inherits the
-    ``prepared_edges`` src partitioning, so the left join is co-partitioned
-    hash, no sort, no broadcast of the O(V) degree table)."""
-    e = prepared if prepared is not None else prepared_edges(edges, params)
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .repartition(params.num_partitions, "id")
-        .distinct()
-    )
-    degs = e.groupBy(
-        F.col("src").alias("id")).agg(F.count("*").alias("deg"))
-    n = nodes.count()
-    ranks = (
-        nodes.join(degs.hint("shuffle_hash"), "id", "left")
-        .select("id", F.lit(1.0 / n).alias("rank"),
-                F.coalesce("deg", F.lit(0)).alias("deg"))
-    )
-    return ranks, n
-
-
 def pagerank(spark: SparkSession, edges: DataFrame,
              params: GraphParams = GraphParams(),
              checkpoint_dir: str | None = None,
@@ -148,27 +123,24 @@ def pagerank(spark: SparkSession, edges: DataFrame,
     degs = links.groupBy(F.col("src").alias("id")).agg(
         F.first("deg").alias("deg"))
     n = nodes.count()          # also materializes the links cache
+    # state schema: (id, rank, deg); deg = out-degree (0 => dangling)
     ranks0 = (
         nodes.join(degs.hint("shuffle_hash"), "id", "left")
         .select("id", F.lit(1.0 / n).alias("rank"),
                 F.coalesce("deg", F.lit(0)).alias("deg"))
-    ).cache()   # early supersteps reference the state 2-3x;
-    # without this the distinct/join init pipeline is re-derived each time
+    )
     d = params.damping
+    targets_only = links.select("src", "targets")  # deg already in state
 
-    # state schema: (id, rank, deg); dangling sum for the NEXT superstep is
-    # carried on the driver, seeded from the initial state.
-    dangling_holder = {"value": None}
-
-    def seed_dangling(state: DataFrame) -> float:
-        return state.filter("deg = 0").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0))).collect()[0][0]
-
-    def step(state: DataFrame, k: int):
-        if dangling_holder["value"] is None:
-            dangling_holder["value"] = seed_dangling(state)
-        dangling = dangling_holder["value"]
-        targets_only = links.select("src", "targets")  # deg already in state
+    def step(state: DataFrame, k: int, prev: dict | None):
+        if prev is None:
+            # first superstep of a fresh or resumed run: seed the dangling
+            # mass from the starting state; later supersteps read the sum
+            # the previous superstep's metrics action produced
+            dangling = state.filter("deg = 0").agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0))).first()[0]
+        else:
+            dangling = prev["dangling"]
         # shuffle_hash hints: both joins are co-partitioned on the vertex
         # key, so a hash join per partition needs no exchange and no sort
         contribs = (
@@ -180,6 +152,7 @@ def pagerank(spark: SparkSession, edges: DataFrame,
             .groupBy("id")
             .agg(F.sum("w").alias("contrib"))
         )
+        # prev_rank stays in the state: the delta metric reads it
         new_state = (
             state.join(contribs.hint("shuffle_hash"), "id", "left")
             .select(
@@ -190,31 +163,20 @@ def pagerank(spark: SparkSession, edges: DataFrame,
                 "deg",
                 F.col("rank").alias("prev_rank"),
             )
-        ).cache()
-        stats = new_state.agg(
-            F.max(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
-            F.sum(F.when(F.col("deg") == 0, F.col("rank"))
-                  .otherwise(F.lit(0.0))).alias("dangling"),
-            F.sum("rank").alias("total"),
-        ).collect()[0]
-        dangling_holder["value"] = stats.dangling
-        metrics = {
-            "delta": stats.delta,
-            "total_rank": stats.total,
-            "converged": stats.delta < params.tol,
+        )
+        delta = F.max(F.abs(F.col("rank") - F.col("prev_rank")))
+        return new_state, {
+            "delta": delta,
+            "total_rank": F.sum("rank"),
+            "dangling": F.sum(F.when(F.col("deg") == 0, F.col("rank"))
+                              .otherwise(F.lit(0.0))),
+            "converged": delta < params.tol,
         }
-        # keep prev_rank in the state (dropping would derive a new uncached
-        # plan and break the driver's unpersist bookkeeping)
-        return new_state, metrics
 
     driver = SuperstepDriver(spark, checkpoint_dir, params.checkpoint_interval,
                              lineage_table=lineage_table)
-    if resume and checkpoint_dir and driver.last_complete_superstep() is not None:
-        dangling_holder["value"] = None  # recomputed from the checkpointed state
-    with iterative_conf(spark):
-        result: SuperstepResult = driver.run(ranks0, step, params.max_iters, resume)
+    result = driver.run(ranks0, step, params.max_iters, resume)
     links.unpersist()
-    ranks0.unpersist()
     e.unpersist()
     return PageRankResult(
         result.state.select("id", "rank"),

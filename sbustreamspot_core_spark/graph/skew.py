@@ -35,7 +35,7 @@ def degree_table(edges: DataFrame, direction: str = "out") -> DataFrame:
 
 def degree_histogram(edges: DataFrame, direction: str = "out") -> DataFrame:
     """(log2_bucket, n_vertices) degree histogram — the skew diagnostic used
-    to pick ``heavy_degree_threshold``."""
+    to pick a ``heavy_vertices`` threshold."""
     deg = degree_table(edges, direction)
     return (
         deg.select(F.floor(F.log2("deg")).cast("int").alias("log2_bucket"))

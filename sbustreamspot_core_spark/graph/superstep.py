@@ -12,6 +12,14 @@ Layout under ``checkpoint_dir``:
     superstep=<k>/_COMPLETE       commit marker (written last)
 
 Resume scans for the highest complete superstep and restarts the loop there.
+
+The driver owns the whole state lifecycle, so the algorithms only describe a
+superstep: ``step_fn(state, k, prev_metrics)`` returns the new state's
+(uncached) plan plus named aggregate Columns over it, one of them a boolean
+``converged``.  The driver caches the starting state and every new state,
+computes all the metrics in ONE ``agg`` action (which also fills the cache),
+checkpoints, releases the state it replaced, and runs the loop under
+``iterative_conf``.
 """
 
 from __future__ import annotations
@@ -21,11 +29,10 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from contextlib import contextmanager
 from typing import Callable
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_table
@@ -74,22 +81,19 @@ def _partition_lineage(df: DataFrame) -> list[dict]:
 class SuperstepDriver:
     """Runs ``step_fn`` until convergence with checkpoint/resume.
 
-    step_fn(state_df, superstep) -> (new_state_df, metrics_dict).
-    ``metrics_dict`` must contain ``converged: bool``; everything else is
-    recorded into the lineage file (e.g. ``delta`` for PageRank).
-
-    Contract: step_fn must return ``new_state_df`` already cached and
-    materialized (its metrics computation is an action, which populates the
-    cache), so the driver can safely unpersist the previous state.
+    step_fn(state_df, superstep, prev_metrics) -> (plan, aggs): ``plan`` is
+    the new state, ``aggs`` maps metric names to aggregate Columns over it
+    and must include a boolean ``converged``.  ``prev_metrics`` is the
+    previous superstep's metrics dict, ``None`` on the first superstep of a
+    fresh or resumed run.  Every metric is recorded into the lineage file.
     """
 
     def __init__(self, spark: SparkSession, checkpoint_dir: str | None = None,
-                 checkpoint_interval: int = 5, write_lineage: bool = True,
+                 checkpoint_interval: int = 5,
                  lineage_table: str | None = None):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_interval = max(1, checkpoint_interval)
-        self.write_lineage = write_lineage
         # optional Iceberg-style lineage sink (sources/snaptable.py): one
         # snapshot COMMIT per checkpointed superstep carrying the
         # per-partition rows, with the superstep's delta metrics in the
@@ -123,18 +127,17 @@ class SuperstepDriver:
         data_dir = os.path.join(d, "data")
         state.write.mode("overwrite").parquet(data_dir)
         reread = self.spark.read.parquet(data_dir)
-        if self.write_lineage:
-            parts = _partition_lineage(reread)
-            lineage = {
-                "superstep": k,
-                "wall_time": time.time(),
-                "metrics": {m: v for m, v in metrics.items()},
-                "partitions": parts,
-            }
-            with open(os.path.join(d, "lineage.json"), "w") as f:
-                json.dump(lineage, f)
-            if self.lineage_table is not None:
-                self._commit_lineage(k, metrics, parts)
+        parts = _partition_lineage(reread)
+        lineage = {
+            "superstep": k,
+            "wall_time": time.time(),
+            "metrics": dict(metrics),
+            "partitions": parts,
+        }
+        with open(os.path.join(d, "lineage.json"), "w") as f:
+            json.dump(lineage, f)
+        if self.lineage_table is not None:
+            self._commit_lineage(k, metrics, parts)
         with open(os.path.join(d, "_COMPLETE"), "w") as f:
             f.write("")
         return reread
@@ -168,11 +171,11 @@ class SuperstepDriver:
 
     # -- main loop ---------------------------------------------------------
     def run(self, initial_state: DataFrame,
-            step_fn: Callable[[DataFrame, int], tuple[DataFrame, dict]],
+            step_fn: Callable[[DataFrame, int, dict | None],
+                              tuple[DataFrame, dict[str, Column]]],
             max_iters: int, resume: bool = True) -> SuperstepResult:
         resumed_from = None
         start_k = 0
-        state = initial_state
         if self.checkpoint_dir:
             # run identity for lineage idempotence: a resumed run reuses
             # the crashed run's id (so a replayed superstep's lineage
@@ -188,39 +191,54 @@ class SuperstepDriver:
                 os.makedirs(self.checkpoint_dir, exist_ok=True)
                 with open(run_id_file, "w") as f:
                     f.write(self._run_id)
-        if resume and self.checkpoint_dir:
-            last = self.last_complete_superstep()
-            if last is not None:
-                state = self.load_checkpoint(last)
-                start_k = last + 1
-                resumed_from = last
+        last = self.last_complete_superstep() if resume else None
+        if last is not None:
+            state = self.load_checkpoint(last)
+            start_k = last + 1
+            resumed_from = last
+        else:
+            # early supersteps reference the state 2-3x; cached (under the
+            # caller's conf, before iterative_conf) so the init pipeline is
+            # not re-derived each time
+            state = initial_state.cache()
 
         all_metrics: list[dict] = []
+        prev_metrics = None
         converged = False
         k = start_k - 1
-        for k in range(start_k, max_iters):
-            t0 = time.time()
-            new_state, metrics = step_fn(state, k)
-            metrics["step_sec"] = round(time.time() - t0, 3)
-            is_ckpt = (k + 1) % self.checkpoint_interval == 0 or metrics.get("converged")
-            t0 = time.time()
-            if is_ckpt and self.checkpoint_dir is not None:
-                # write from the (cached) state, reread to truncate lineage
-                reread = self._checkpoint(new_state, k, metrics)
-                new_state.unpersist()
-                new_state = reread.cache()
-                new_state.count()
-            elif is_ckpt:
-                # no storage checkpoint configured: still truncate the
-                # logical plan (it grows per superstep and Catalyst analysis
-                # cost explodes without this) — not resumable, but fast
-                new_state = new_state.localCheckpoint(eager=True)
-            metrics["ckpt_sec"] = round(time.time() - t0, 3)
-            if state is not initial_state:
+        with iterative_conf(self.spark):
+            for k in range(start_k, max_iters):
+                t0 = time.time()
+                plan, aggs = step_fn(state, k, prev_metrics)
+                new_state = plan.cache()
+                # one action: every metric, and it materializes the cache
+                metrics = new_state.agg(
+                    *[c.alias(m) for m, c in aggs.items()]).first().asDict()
+                metrics["step_sec"] = round(time.time() - t0, 3)
+                is_ckpt = ((k + 1) % self.checkpoint_interval == 0
+                           or metrics["converged"])
+                t0 = time.time()
+                if is_ckpt and self.checkpoint_dir is not None:
+                    # write from the cached state, reread to truncate lineage
+                    reread = self._checkpoint(new_state, k, metrics)
+                    new_state.unpersist()
+                    new_state = reread.cache()
+                    new_state.count()
+                elif is_ckpt:
+                    # no storage checkpoint configured: still truncate the
+                    # logical plan (it grows per superstep and Catalyst
+                    # analysis cost explodes without this) — not resumable,
+                    # but fast
+                    truncated = new_state.localCheckpoint(eager=True)
+                    new_state.unpersist()
+                    new_state = truncated
+                metrics["ckpt_sec"] = round(time.time() - t0, 3)
                 state.unpersist()
-            state = new_state
-            all_metrics.append({"superstep": k, **metrics})
-            if metrics.get("converged"):
-                converged = True
-                break
-        return SuperstepResult(state, k + 1, converged, all_metrics, resumed_from)
+                state = new_state
+                prev_metrics = {"superstep": k, **metrics}
+                all_metrics.append(prev_metrics)
+                if metrics["converged"]:
+                    converged = True
+                    break
+        return SuperstepResult(state, k + 1, converged, all_metrics,
+                               resumed_from)

@@ -1,15 +1,12 @@
-"""StreamHash sketch construction — Arrow-vectorized, two-stage.
+"""StreamHash sketch construction — one Arrow-vectorized pass per graph.
 
-Stage 1 hashes each *distinct* chunk string once with all L hash functions
-(mapInPandas, numpy batch matmul) — the reference hashes every (chunk, graph)
-occurrence (streamhash.cpp:28-34); hashing the distinct vocabulary and joining
-is algebraically identical and removes the dominant redundant work at scale
-(the chunk vocabulary is tiny relative to the edge count: it is bounded by the
-type-alphabet combinatorics, not by |E|).
-
-Stage 2 aggregates per graph: projection = sum(count * chunk_bits) via
-applyInPandas (grouped numpy dot), then sketch = sign(projection)
-(streamhash.cpp:36-38) and LSH band values (cluster.cpp:23-42).
+``build_sketches`` groups the (gid, chunk, cnt) table by graph and runs one
+applyInPandas kernel per group: it hashes the group's chunks with all L hash
+functions (numpy batch matmul, streamhash.cpp:28-34) through a per-task memo,
+so each task hashes each distinct chunk once (the chunk vocabulary is bounded
+by the type-alphabet combinatorics, not by |E|), then takes projection =
+sum(count * chunk_bits), sketch = sign(projection) (streamhash.cpp:36-38) and
+the LSH band values (cluster.cpp:23-42).
 
 SimHash (simhash.cpp:16-32, main.cpp:607-646) is provided for parity; it
 requires the dense global shingle dictionary (graph.cpp:204-209).
@@ -32,26 +29,6 @@ from ..rng import allocate_random_bits, construct_random_vectors
 SKETCH_SCHEMA = "gid long, projection array<long>, sketch binary, bands array<long>"
 
 
-def _hash_chunk_batches(batches, *, H):
-    """``hash_chunk_vocabulary`` kernel: (chunk) batches -> (chunk, bits)."""
-    for pdf in batches:
-        chunks = pdf["chunk"].tolist()
-        bits = hashmulti_batch(chunks, H)  # (n, L) int8 of +/-1
-        yield pd.DataFrame({
-            "chunk": chunks,
-            "bits": [bits[i].tobytes() for i in range(len(chunks))],
-        })
-
-
-def hash_chunk_vocabulary(chunk_counts: DataFrame, params: StreamSpotParams) -> DataFrame:
-    """(chunk, bits binary) — each distinct chunk hashed to L signs of +/-1,
-    serialized as L int8 bytes."""
-    H = allocate_random_bits(params.L, params.chunk_length, params.seed)
-    vocab = chunk_counts.select("chunk").distinct()
-    return vocab.mapInPandas(partial(_hash_chunk_batches, H=H),
-                             schema="chunk string, bits binary")
-
-
 # inline-hashing memo cap: chunk -> (L,) int8 signs.  The memo dict is bound
 # into the kernel empty, so every task unpickles its own — one memo per
 # task, never shared between jobs with different hash functions.
@@ -71,17 +48,9 @@ def _sketch_row(pdf: pd.DataFrame, projection: np.ndarray, extra: tuple,
     })
 
 
-def _sketch_group_joined(pdf, *, L, B, R, extra):
-    """``build_sketches(mode="join")`` kernel: one graph's (chunk, cnt,
-    bits) rows -> its sketch row."""
-    bits = np.frombuffer(b"".join(pdf["bits"]), dtype=np.int8).reshape(len(pdf), L)
-    counts = pdf["cnt"].to_numpy(dtype=np.int64)
-    return _sketch_row(pdf, counts @ bits.astype(np.int64), extra, B, R)
-
-
 def _sketch_group_inline(pdf, *, H, B, R, extra, memo):
-    """``build_sketches(mode="inline")`` kernel: one graph's (chunk, cnt)
-    rows -> its sketch row, hashing chunks through the task's ``memo``."""
+    """``build_sketches`` kernel: one graph's (chunk, cnt) rows -> its
+    sketch row, hashing chunks through the task's ``memo``."""
     chunks = pdf["chunk"].tolist()
     missing = [c for c in chunks if c not in memo]
     if missing:
@@ -96,19 +65,12 @@ def _sketch_group_inline(pdf, *, H, B, R, extra, memo):
 
 
 def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
-                   broadcast_vocab: bool = True,
-                   mode: str = "inline",
                    extra_group_cols: dict[str, str] | None = None) -> DataFrame:
     """(gid, projection, sketch, bands) from the (gid, chunk, cnt) table.
 
-    mode="inline" (default): one applyInPandas pass; each task hashes the
-    chunks it sees with a per-task memo.  Fewest stages — right when the
-    chunk vocabulary is small (type-alphabet bounded) or the input pipeline
-    is expensive to recompute.
-
-    mode="join": hash the distinct vocabulary once and broadcast-join
-    (streamhash.cpp:28-34 done once per distinct chunk) — right when the
-    vocabulary is huge relative to worker memo capacity.
+    One applyInPandas pass; each task hashes the chunks it sees with a
+    per-task memo, so the input pipeline is never re-run for a separate
+    vocabulary stage.
 
     extra_group_cols: {name: spark_ddl_type} columns that extend the group
     key beyond gid and pass through to the output (e.g. an event-time
@@ -119,16 +81,6 @@ def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
     extra = dict(extra_group_cols or {})
     group_keys = [*extra.keys(), "gid"]
     out_schema = "".join(f"{k} {v}, " for k, v in extra.items()) + SKETCH_SCHEMA
-
-    if mode == "join":
-        vocab = hash_chunk_vocabulary(chunk_counts, params)
-        if broadcast_vocab:
-            vocab = F.broadcast(vocab)
-        joined = chunk_counts.join(vocab, "chunk")
-        kernel = partial(_sketch_group_joined, L=params.L, B=B, R=R,
-                         extra=tuple(extra))
-        return joined.groupBy(*group_keys).applyInPandas(
-            kernel, schema=out_schema)
 
     H = allocate_random_bits(params.L, params.chunk_length, params.seed)
     kernel = partial(_sketch_group_inline, H=H, B=B, R=R, extra=tuple(extra),

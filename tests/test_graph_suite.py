@@ -98,6 +98,34 @@ def test_pagerank_checkpoint_resume(spark, edges, tmp_ckpt):
         assert got[node] == pytest.approx(r, abs=1e-9), node
 
 
+@pytest.mark.parametrize("algo", ["components", "labels"])
+def test_cc_and_lpa_checkpoint_resume(spark, edges, tmp_ckpt, algo):
+    """Drop the highest checkpoint and resume: the first resumed superstep
+    runs with no previous metrics, and labels and superstep count match
+    the uninterrupted run."""
+    import os
+    import shutil
+    _, df = edges
+    params = GraphParams(num_partitions=8, checkpoint_interval=2,
+                         max_iters=15, lpa_max_iters=6)
+    fn = connected_components if algo == "components" else label_propagation
+
+    def run(resume):
+        res = fn(spark, df, params=params, checkpoint_dir=tmp_ckpt,
+                 resume=resume)
+        return res, {tuple(r) for r in getattr(res, algo).collect()}
+
+    full, expect = run(resume=False)
+    steps = sorted(int(d.split("=")[1]) for d in os.listdir(tmp_ckpt)
+                   if d.startswith("superstep="))
+    assert len(steps) >= 2
+    shutil.rmtree(os.path.join(tmp_ckpt, f"superstep={steps[-1]}"))
+    resumed, got = run(resume=True)
+    assert resumed.metrics[0]["superstep"] == steps[-2] + 1
+    assert resumed.supersteps == full.supersteps
+    assert got == expect
+
+
 def test_connected_components_exact(spark, edges):
     e, df = edges
     expect = connected_components_oracle(e)

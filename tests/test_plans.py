@@ -6,8 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
-from sbustreamspot_core_spark.graph.pagerank import build_links, init_ranks
-from sbustreamspot_core_spark.graph.superstep import iterative_conf
+from sbustreamspot_core_spark.graph.pagerank import pagerank
+from sbustreamspot_core_spark.graph.superstep import SuperstepDriver
 from sbustreamspot_core_spark.operators.clustering import (
     graph_centroid_distances,
 )
@@ -24,6 +24,19 @@ def plan_str(df) -> str:
     jvm = df.sparkSession._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return df._jdf.queryExecution().explainString(mode)
+
+
+def operators_above_cache(df) -> list[str]:
+    """Physical operator names of ``df``'s plan down to its cached inputs:
+    an InMemoryTableScan is a leaf, so a cache's stored plan (built once,
+    not re-executed by readers) is left out."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names
 
 
 def test_parquet_filter_pushdown_and_pruning(spark):
@@ -47,33 +60,34 @@ def test_centroid_distance_join_is_broadcast(spark):
     assert "Broadcast" in p  # J3: centroids broadcast, no shuffle
 
 
-def test_pagerank_superstep_uses_shuffled_hash_join(spark):
+def test_pagerank_superstep_uses_shuffled_hash_join(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(i % 50, (i * 7) % 50) for i in range(500)], "src long, dst long")
-    params = GraphParams(num_partitions=4)
-    # as in pagerank(): the adjacency (whose build uses a one-time broadcast
-    # of heavy-degree sources) is cached once; supersteps must not rebuild it
-    links = build_links(edges, params).cache()
-    links.count()
-    ranks, n = init_ranks(edges, params)
-    with iterative_conf(spark):
-        targets_only = links.select("src", "targets")
-        contribs = (
-            ranks.filter("deg > 0")
-            .join(targets_only.hint("shuffle_hash"),
-                  ranks["id"] == targets_only["src"])
-            .select(F.explode("targets").alias("id"),
-                    (F.col("rank") / F.col("deg")).alias("w"))
-            .groupBy("id").agg(F.sum("w").alias("contrib")))
-        new_state = ranks.join(contribs.hint("shuffle_hash"), "id", "left")
-        p = plan_str(new_state)
+    # pagerank()'s own step: format the first plan it returns inside
+    # SuperstepDriver.run, i.e. under iterative_conf with the caches live (the
+    # adjacency, whose build uses a one-time broadcast of heavy-degree
+    # sources, must not be rebuilt per superstep)
+    plans = []
+    run = SuperstepDriver.run
+
+    def spy_run(self, initial_state, step_fn, max_iters, resume=True):
+        def step(state, k, prev):
+            plan, aggs = step_fn(state, k, prev)
+            if not plans:
+                plans.append((plan_str(plan), operators_above_cache(plan)))
+            return plan, aggs
+        return run(self, initial_state, step, max_iters, resume)
+
+    monkeypatch.setattr(SuperstepDriver, "run", spy_run)
+    pagerank(spark, edges, GraphParams(num_partitions=4, max_iters=1))
+    p, above_cache = plans[0]
     assert "ShuffledHashJoin" in p
     # no per-superstep broadcast rebuilds: everything above the cached
-    # adjacency (InMemoryRelation holds build_links' one-time heavy-hub
-    # broadcast in its *stored* plan, which is not re-executed) must be
-    # broadcast-free
-    above_cache = p[:p.find("InMemoryRelation")]
+    # state and adjacency (InMemoryRelation holds build_links' one-time
+    # heavy-hub broadcast in its *stored* plan, which is not re-executed)
+    # must be broadcast-free
     assert "InMemoryRelation" in p  # the adjacency really is cached
+    assert above_cache.count("InMemoryTableScan") == 3  # state x2, adjacency
     assert "BroadcastHashJoin" not in above_cache
 
 

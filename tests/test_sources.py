@@ -13,7 +13,7 @@ from sbustreamspot_core_spark.sources.edges import (
     train_test_split,
 )
 
-from .conftest import REFERENCE_EDGES
+from .conftest import REFERENCE_EDGES, needs_reference
 
 
 def test_scenario_presets_match_reference():
@@ -36,6 +36,7 @@ def test_scenario_filter_routes_by_gid_div_100(spark):
     assert gfc == {100, 250, 399, 550}
 
 
+@needs_reference
 def test_train_test_split_partitions_everything(spark):
     edges = read_streamspot_edges(spark, REFERENCE_EDGES)
     train, test = train_test_split(edges, {0, 1})

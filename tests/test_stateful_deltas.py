@@ -22,7 +22,7 @@ from sbustreamspot_core_spark.streaming.stateful import (
     incremental_chunk_deltas,
 )
 
-from .conftest import REFERENCE_EDGES
+from .conftest import REFERENCE_EDGES, needs_reference
 
 PARAMS = StreamSpotParams(chunk_length=4, L=100, B=5, R=20)
 
@@ -43,6 +43,7 @@ def test_chunk_delta_unit():
         assert +acc == Counter(get_string_chunks(full, 4))
 
 
+@needs_reference
 def test_streaming_deltas_reproduce_bulk_counts(spark, tmp_ckpt):
     """Drop the reference's 12 edges as two files; the stateful operator's
     cumulative deltas must equal the bulk chunk counts (incremental == bulk)."""

@@ -16,7 +16,12 @@ from sbustreamspot_core_spark.streaming.replay import (
     assign_replay_seq,
 )
 
-from .conftest import REFERENCE_BOOTSTRAP, REFERENCE_EDGES, load_reference_edge_tuples
+from .conftest import (
+    REFERENCE_BOOTSTRAP,
+    REFERENCE_EDGES,
+    load_reference_edge_tuples,
+    needs_reference,
+)
 
 PARAMS_SEQ = StreamSpotParams(chunk_length=10, L=100, B=5, R=20,
                               cluster_update_interval=1, max_num_edges=5)
@@ -57,6 +62,7 @@ def replay_inputs(spark):
     return boot, train.cache(), test_seq
 
 
+@needs_reference
 def test_replay_seq_is_round_robin(spark, replay_inputs):
     boot, _, test_seq = replay_inputs
     got = [(r.gid, r.src_id, r.dst_id) for r in
@@ -66,6 +72,7 @@ def test_replay_seq_is_round_robin(spark, replay_inputs):
     assert got == expect
 
 
+@needs_reference
 def test_per_edge_replay_matches_sequential_oracle(spark, replay_inputs):
     boot, train, test_seq = replay_inputs
     engine = MicroBatchReplay(spark, PARAMS_SEQ, boot, train)
@@ -79,6 +86,7 @@ def test_per_edge_replay_matches_sequential_oracle(spark, replay_inputs):
         assert out["anomaly_scores"][gid] == pytest.approx(score), gid
 
 
+@needs_reference
 def test_batched_replay_self_consistent(spark, replay_inputs):
     """interval=4 (multi-edge batches) runs end-to-end and produces sane
     state; exact equality with interval=1 is not implied (documented batch
@@ -94,6 +102,7 @@ def test_batched_replay_self_consistent(spark, replay_inputs):
     assert set(out["anomaly_scores"]) >= {0, 1, 2, 3}
 
 
+@needs_reference
 def test_replay_checkpoint_resume(spark, replay_inputs, tmp_ckpt):
     boot, train, test_seq = replay_inputs
     params = StreamSpotParams(chunk_length=10, L=100, B=5, R=20,
@@ -116,6 +125,7 @@ def test_replay_checkpoint_resume(spark, replay_inputs, tmp_ckpt):
         assert got["anomaly_scores"][gid] == pytest.approx(s), gid
 
 
+@needs_reference
 def test_replay_kill_between_snapshot_and_complete(spark, replay_inputs,
                                                    tmp_ckpt):
     """Fault injection in the commit gap: the process dies AFTER batch k's

@@ -32,7 +32,12 @@ from sbustreamspot_core_spark.rng import allocate_random_bits
 from sbustreamspot_core_spark.sources.bootstrap import read_bootstrap_clusters
 from sbustreamspot_core_spark.sources.edges import read_streamspot_edges
 
-from .conftest import REFERENCE_BOOTSTRAP, REFERENCE_EDGES, load_reference_edge_tuples
+from .conftest import (
+    REFERENCE_BOOTSTRAP,
+    REFERENCE_EDGES,
+    load_reference_edge_tuples,
+    needs_reference,
+)
 
 PARAMS = StreamSpotParams(chunk_length=10, L=200, B=10, R=20)
 
@@ -48,6 +53,7 @@ def oracle_graphs():
     return {gid: oracle.build_graph(edges) for gid, edges in by_gid.items()}
 
 
+@needs_reference
 def test_edge_scan_roundtrip(spark, edge_df):
     rows = edge_df.orderBy("gid", "seq").collect()
     assert len(rows) == 12
@@ -60,6 +66,7 @@ def test_edge_scan_roundtrip(spark, edge_df):
         assert seqs == list(range(len(seqs)))
 
 
+@needs_reference
 def test_shingles_match_oracle(spark, edge_df, oracle_graphs):
     shingles = build_shingles(build_adjacency(edge_df))
     got = {
@@ -73,6 +80,7 @@ def test_shingles_match_oracle(spark, edge_df, oracle_graphs):
     assert got == expect
 
 
+@needs_reference
 def test_chunk_counts_match_oracle(spark, edge_df, oracle_graphs):
     cc = build_chunk_counts(
         build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
@@ -84,6 +92,7 @@ def test_chunk_counts_match_oracle(spark, edge_df, oracle_graphs):
         assert got[gid] == dict(sv), gid
 
 
+@needs_reference
 def test_sketches_match_oracle(spark, edge_df, oracle_graphs):
     cc = build_chunk_counts(
         build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
@@ -99,6 +108,7 @@ def test_sketches_match_oracle(spark, edge_df, oracle_graphs):
         assert rows[gid].bands == oracle.lsh_bands(bits, PARAMS.B, PARAMS.R), gid
 
 
+@needs_reference
 def test_all_pairs_similarity_matches_oracle(spark, edge_df, oracle_graphs):
     cc = build_chunk_counts(
         build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
@@ -118,6 +128,7 @@ def test_all_pairs_similarity_matches_oracle(spark, edge_df, oracle_graphs):
     assert sims[(1, 2)] == pytest.approx(1.0)
 
 
+@needs_reference
 def test_exact_cosine_matches_oracle(spark, edge_df, oracle_graphs):
     cc = build_chunk_counts(
         build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
@@ -134,6 +145,7 @@ def test_exact_cosine_matches_oracle(spark, edge_df, oracle_graphs):
     assert got[(1, 2)] == pytest.approx(1.0)
 
 
+@needs_reference
 def test_bootstrap_clustering_matches_oracle(spark, edge_df, oracle_graphs):
     boot = read_bootstrap_clusters(REFERENCE_BOOTSTRAP)
     assert boot.clusters == [[0], [1]]
@@ -170,6 +182,7 @@ def test_bootstrap_clustering_matches_oracle(spark, edge_df, oracle_graphs):
         assert got[gid][1] == pytest.approx(min_d), gid
 
 
+@needs_reference
 def test_lsh_candidates_and_isolation(spark, edge_df, oracle_graphs):
     cc = build_chunk_counts(
         build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
@@ -242,6 +255,7 @@ def test_bucket_star_edges_connectivity_equals_full_pairs(spark):
         assert partitions(star, nodes) == partitions(full, nodes), trial
 
 
+@needs_reference
 def test_simhash_sketches_match_oracle(spark, edge_df, oracle_graphs):
     """X7: SimHash over the dense shingle vector with seeded +/-1 random
     vectors (simhash.cpp:16-27, main.cpp:607-629); dictionary ids by sorted

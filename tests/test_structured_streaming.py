@@ -17,7 +17,7 @@ from sbustreamspot_core_spark.streaming.replay import (
 )
 from sbustreamspot_core_spark.streaming.structured import StructuredStreamSpot
 
-from .conftest import REFERENCE_BOOTSTRAP, REFERENCE_EDGES
+from .conftest import REFERENCE_BOOTSTRAP, REFERENCE_EDGES, needs_reference
 
 PARAMS = StreamSpotParams(chunk_length=10, L=100, B=5, R=20,
                           cluster_update_interval=100)
@@ -26,6 +26,7 @@ STREAM_SCHEMA = T.StructType(
     EDGE_SCHEMA.fields + [T.StructField("seq", T.LongType(), True)])
 
 
+@needs_reference
 def test_structured_streaming_matches_batch(spark, tmp_ckpt):
     boot = read_bootstrap_clusters(REFERENCE_BOOTSTRAP)
     edges = read_streamspot_edges(spark, REFERENCE_EDGES)

@@ -10,9 +10,6 @@ python bench.py > "$OUT/bench.json" 2> "$OUT/bench.err"
 echo "incdedup start $(date)" >> "$OUT/progress"
 python tools/incremental_dedup_demo.py 50000 32 50000,80000,125000 \
   > "$OUT/incdedup.jsonl" 2> "$OUT/incdedup.err"
-echo "skew start $(date)" >> "$OUT/progress"
-python tools/skew_demo.py 64000000 10000000 32 64 \
-  > "$OUT/skew.jsonl" 2> "$OUT/skew.err"
 echo "dedup10m start $(date)" >> "$OUT/progress"
 python tools/dedup_scale_demo.py 1000000 32 1 \
   > "$OUT/dedup10m.jsonl" 2> "$OUT/dedup10m.err"
