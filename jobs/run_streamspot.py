@@ -21,7 +21,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from sbustreamspot_core_spark.config import StreamSpotParams
+from sbustreamspot_core_spark.config import ANOMALY, StreamSpotParams
 from sbustreamspot_core_spark.session import get_spark
 from sbustreamspot_core_spark.sources.bootstrap import read_bootstrap_clusters
 from sbustreamspot_core_spark.sources.edges import (
@@ -40,7 +40,9 @@ def main() -> None:
     ap.add_argument("--edges", required=True)
     ap.add_argument("--bootstrap", required=True)
     ap.add_argument("--chunk-length", type=int, default=10)
-    ap.add_argument("--num-parallel-graphs", type=int, default=10)
+    ap.add_argument("--num-parallel-graphs", type=int, default=10,
+                    help="accepted for reference-CLI parity and ignored: the "
+                         "replay interleave is fixed round-robin (DEVIATIONS 3)")
     ap.add_argument("--max-num-edges", type=int, default=None)
     ap.add_argument("--dataset", choices=["all", "ydc", "gfc"], default="all")
     ap.add_argument("--interval", type=int, default=10000,
@@ -59,7 +61,6 @@ def main() -> None:
         L=args.sketch_bits, B=args.sketch_bits // 20, R=20,
         cluster_update_interval=args.interval,
         max_num_edges=args.max_num_edges,
-        par=args.num_parallel_graphs,
     )
     spark = get_spark("streamspot")
     boot = read_bootstrap_clusters(args.bootstrap)
@@ -70,14 +71,10 @@ def main() -> None:
                               checkpoint_dir=args.checkpoint_dir)
     out = engine.run(assign_replay_seq(test), resume=not args.no_resume)
     if args.output:
-        rows = [(int(g), int(out["cluster_map"].get(g, -2)),
-                 float(out["anomaly_scores"].get(g, -2.0)))
-                for g in sorted(out["anomaly_scores"])]
-        spark.createDataFrame(
-            rows, "gid long, cluster_id int, anomaly_score double"
-        ).write.mode("overwrite").parquet(args.output)
-        n_anom = sum(1 for _, c, _ in rows if c == -1)
-        print(json.dumps({"batches": out["batches"], "graphs": len(rows),
+        engine.state_table().write.mode("overwrite").parquet(args.output)
+        n_anom = sum(1 for c in out["cluster_map"].values() if c == ANOMALY)
+        print(json.dumps({"batches": out["batches"],
+                          "graphs": len(out["anomaly_scores"]),
                           "anomalies": n_anom, "output": args.output}))
     else:
         print(json.dumps({

@@ -15,7 +15,8 @@ class StreamSpotParams:
     """StreamSpot sketch/cluster parameters.
 
     Reference: param.h:13-20 (K, B, R, L, SEED, CLUSTER_UPDATE_INTERVAL),
-    main.cpp:96-111 (chunk_length, par, max_num_edges CLI args).
+    main.cpp:96-111 (chunk_length, max_num_edges CLI args; the reference's
+    ``par`` has no counterpart, the replay interleave is fixed, DEVIATIONS 3).
     ``L`` must equal ``B * R`` (param.h:18 comment).
 
     Note: the reference's compiled constants are B=100, R=20, L=1000, which
@@ -33,7 +34,6 @@ class StreamSpotParams:
     seed: int = 23                  # SEED for the hash family PRNG
     cluster_update_interval: int = 10000  # snapshot cadence (edges per micro-batch)
     max_num_edges: int | None = None      # count-based edge window; None = unbounded
-    par: int = 10                   # parallel-flowing graphs during replay
 
     def __post_init__(self) -> None:
         if self.L != self.B * self.R:

@@ -25,6 +25,12 @@ semantically-consistent batch formulation, and it equals the reference
 whenever no eviction has touched the graph (the invariant the reference
 asserts in DEBUG builds, graph.cpp:346-363).
 
+One step: ``MicroBatchReplay.apply_batch`` is the whole per-batch body
+(touched-graph sketch recompute, driver-side cluster updates in seq order,
+checkpoint).  ``run`` slices a pre-seq'd edge table into batches and calls it
+once per batch; ``structured.StructuredStreamSpot`` calls it once per
+Structured Streaming epoch.
+
 Checkpointing: each batch writes a snapshot parquet (scores + assignments,
 mirroring main.cpp:394-398) plus a driver-state npz and a _COMPLETE marker;
 resume restarts after the last complete batch.
@@ -48,14 +54,14 @@ from ..sources.bootstrap import BootstrapClusters
 PI = 3.1415926535897
 
 
-def assign_replay_seq(test_edges: DataFrame, par: int | None = None) -> DataFrame:
+def assign_replay_seq(test_edges: DataFrame) -> DataFrame:
     """Deterministic interleaved replay order (W4).
 
     Round-robin across graphs: global seq orders by (per-gid offset, gid).
     The reference interleaves with a seeded PRNG over groups of ``par``
     graphs (main.cpp:201-219,336-343) — implementation-defined shuffle
     internals make that order non-portable, so we fix an equally-valid
-    deterministic interleave.
+    deterministic interleave over all test graphs (DEVIATIONS 3).
 
     Scale note: the global row_number is a single-partition sort — fine for
     fidelity replay; at 10^12-edge scale batch boundaries come from the
@@ -115,16 +121,35 @@ class MicroBatchReplay:
     def _batch_dir(self, k: int) -> str:
         return os.path.join(self.checkpoint_dir, f"batch={k}")
 
-    def last_complete_batch(self) -> int | None:
+    def complete_batches(self) -> list[int]:
+        """Batch ids with a ``_COMPLETE`` marker, ascending."""
         if not self.checkpoint_dir or not os.path.isdir(self.checkpoint_dir):
-            return None
-        best = None
-        for name in os.listdir(self.checkpoint_dir):
+            return []
+        return sorted(
+            int(name.split("=", 1)[1]) for name in os.listdir(self.checkpoint_dir)
             if name.startswith("batch=") and os.path.exists(
-                    os.path.join(self.checkpoint_dir, name, "_COMPLETE")):
-                k = int(name.split("=", 1)[1])
-                best = k if best is None else max(best, k)
-        return best
+                os.path.join(self.checkpoint_dir, name, "_COMPLETE")))
+
+    def last_complete_batch(self) -> int | None:
+        done = self.complete_batches()
+        return done[-1] if done else None
+
+    def _resume(self) -> int:
+        """Load the last complete batch's state; returns the next batch id."""
+        last = self.last_complete_batch()
+        if last is None:
+            return 0
+        self._load_state(last)
+        return last + 1
+
+    def state_table(self) -> DataFrame:
+        """(gid, cluster_id, anomaly_score) of every graph seen so far."""
+        return local_table(
+            self.spark,
+            [(int(g), int(self.cluster_map.get(g, UNSEEN)),
+              float(self.anomaly_scores.get(g, float(UNSEEN))))
+             for g in sorted(self.projections)],
+            "gid long, cluster_id int, anomaly_score double")
 
     def _save_state(self, k: int, snapshot: DataFrame, n_edges: int) -> None:
         d = self._batch_dir(k)
@@ -170,13 +195,7 @@ class MicroBatchReplay:
         interval = p.cluster_update_interval
         n_batches = max(1, -(-n_test // interval))
 
-        start = 0
-        if resume and self.checkpoint_dir:
-            last = self.last_complete_batch()
-            if last is not None:
-                self._load_state(last)
-                start = last + 1
-
+        start = self._resume() if resume else 0
         for k in range(start, n_batches):
             lo, hi = k * interval, (k + 1) * interval
             batch = edges.filter(
@@ -185,61 +204,14 @@ class MicroBatchReplay:
             win_lo = hi - p.max_num_edges if p.max_num_edges else 0
             active = edges.filter(
                 (F.col("replay_seq") < hi) & (F.col("replay_seq") >= win_lo))
-
-            batch_rows = batch.select("gid", "replay_seq").collect()
-            new_gids = {r.gid for r in batch_rows}
-            evicted_gids = set()
+            evicted_gids = frozenset()
             if p.max_num_edges:
                 prev_lo = max(0, lo - p.max_num_edges) if k > 0 else 0
                 evicted = edges.filter(
                     (F.col("replay_seq") >= prev_lo) & (F.col("replay_seq") < win_lo))
-                evicted_gids = {r.gid for r in evicted.select("gid").distinct().collect()}
-            touched = sorted(new_gids | evicted_gids)
-
-            # distributed: recompute sketches of touched graphs from the window
-            touched_edges = active.filter(F.col("gid").isin(touched))
-            sk_rows = self._sketch_table(touched_edges).collect()
-            new_proj = {r.gid: np.array(r.projection, dtype=np.float64)
-                        for r in sk_rows}
-            for g in touched:
-                if g not in new_proj:       # fully evicted graph
-                    new_proj[g] = np.zeros(p.L)
-
-            # gids both evicted-from and appended-to this batch: refresh their
-            # pre-batch baseline to the post-eviction state, so the update
-            # delta covers only the appended edges (matches the sequential
-            # semantics where eviction precedes the append, main.cpp:355-365)
-            both = sorted(evicted_gids & new_gids)
-            if both:
-                pre = self._sketch_table(
-                    active.filter(F.col("replay_seq") < lo)
-                    .filter(F.col("gid").isin(both))).collect()
-                pre_proj = {r.gid: np.array(r.projection, dtype=np.float64)
-                            for r in pre}
-                for g in both:
-                    self.projections[g] = pre_proj.get(g, np.zeros(p.L))
-
-            # driver state machine, seq order: eviction-only gids get their
-            # projection refreshed without a cluster update (see deviation
-            # note); gids with new edges run the reference update equations
-            order = sorted(new_gids, key=lambda g: max(
-                r.replay_seq for r in batch_rows if r.gid == g))
-            for g in sorted(evicted_gids - new_gids):
-                self.projections[g] = new_proj[g]
-            for g in order:
-                old = self.projections.get(g, np.zeros(p.L))
-                delta = new_proj[g] - old
-                self.projections[g] = new_proj[g]
-                self._update_clusters(int(g), delta)
-
-            if self.checkpoint_dir:
-                snap = local_table(
-                    self.spark,
-                    [(int(g), int(self.cluster_map.get(g, UNSEEN)),
-                      float(self.anomaly_scores.get(g, float(UNSEEN))))
-                     for g in sorted(self.projections)],
-                    "gid long, cluster_id int, anomaly_score double")
-                self._save_state(k, snap, len(batch_rows))
+                evicted_gids = frozenset(
+                    r.gid for r in evicted.select("gid").distinct().collect())
+            self.apply_batch(k, batch, active, evicted_gids)
 
         edges.unpersist()
         return {
@@ -247,6 +219,51 @@ class MicroBatchReplay:
             "anomaly_scores": dict(self.anomaly_scores),
             "batches": n_batches,
         }
+
+    def _projections(self, edges: DataFrame, gids: list[int]) -> dict:
+        """Projections of ``gids`` over ``edges``; zeros for a graph with no
+        edges there (fully evicted)."""
+        rows = self._sketch_table(edges.filter(F.col("gid").isin(gids))).collect()
+        got = {r.gid: np.array(r.projection, dtype=np.float64) for r in rows}
+        return {g: got.get(g, np.zeros(self.p.L)) for g in gids}
+
+    def apply_batch(self, k: int, batch: DataFrame, window: DataFrame,
+                    evicted_gids: frozenset = frozenset()) -> None:
+        """The one micro-batch step.  ``batch``: this batch's edges (EDGE_SCHEMA
+        + replay_seq); ``window``: every live edge up to the batch end;
+        ``evicted_gids``: graphs that lost edges to the window since the
+        previous batch.  Writes the ``batch=<k>`` checkpoint if enabled."""
+        rows = batch.select("gid", "replay_seq").collect()
+        last_seq: dict[int, int] = {}
+        for r in rows:
+            last_seq[r.gid] = max(r.replay_seq, last_seq.get(r.gid, -1))
+        new_gids = set(last_seq)
+
+        # distributed: recompute sketches of touched graphs from the window
+        new_proj = self._projections(window, sorted(new_gids | evicted_gids))
+
+        # gids both evicted-from and appended-to this batch: refresh their
+        # pre-batch baseline to the post-eviction state, so the update
+        # delta covers only the appended edges (matches the sequential
+        # semantics where eviction precedes the append, main.cpp:355-365)
+        both = sorted(evicted_gids & new_gids)
+        if both:
+            lo = min(r.replay_seq for r in rows)
+            self.projections.update(self._projections(
+                window.filter(F.col("replay_seq") < lo), both))
+
+        # driver state machine, seq order: eviction-only gids get their
+        # projection refreshed without a cluster update (see deviation
+        # note); gids with new edges run the reference update equations
+        for g in sorted(evicted_gids - new_gids):
+            self.projections[g] = new_proj[g]
+        for g in sorted(new_gids, key=last_seq.__getitem__):
+            delta = new_proj[g] - self.projections.get(g, np.zeros(self.p.L))
+            self.projections[g] = new_proj[g]
+            self._update_clusters(int(g), delta)
+
+        if self.checkpoint_dir:
+            self._save_state(k, self.state_table(), len(rows))
 
     # ---------------------------------------------------- cluster updates
     def _update_clusters(self, gid: int, delta: np.ndarray) -> None:

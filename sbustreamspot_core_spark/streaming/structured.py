@@ -1,41 +1,41 @@
 """Structured Streaming front end for the StreamSpot pipeline.
 
-SURVEY.md §2.9: the replay engine's micro-batch body doubles as a
-``foreachBatch`` sink — this module wires it to ``spark.readStream`` so the
-edge stream can come from a real source (file drop directory here; Kafka on
-a production cluster) instead of a pre-seq'd batch table.
+SURVEY.md §2.9: a ``foreachBatch`` shell over ``MicroBatchReplay.apply_batch``
+that wires the replay engine to ``spark.readStream``, so the edge stream can
+come from a real source (file drop directory here; Kafka on a production
+cluster) instead of a pre-seq'd batch table.  Stream rows carry EDGE_SCHEMA
+plus ``seq``, the stream order, which also serves as ``replay_seq``.
 
-Semantics per micro-batch (same math as ``MicroBatchReplay``):
-1. append the batch's edges to an accumulated edge-state parquet
-   (exactly-once via foreachBatch epoch dedup),
-2. recompute sketches of the touched graphs from the accumulated state
-   (distributed),
-3. fold assignment/centroid updates into the driver state machine in
-   event order,
-4. write a snapshot.
+Epoch ``e`` is replay batch ``e``, in replay's own checkpoint layout under
+``<state_dir>/snapshots``:
+- the epoch's edges are written to ``batch=<e>/edges`` (overwritten when a
+  failed epoch is redelivered);
+- the step's window is those edges plus the edges of every ``_COMPLETE``
+  batch, and ``apply_batch`` writes ``batch=<e>``'s snapshot, state and
+  ``_COMPLETE`` marker;
+- a new engine on the same ``state_dir`` resumes from the last complete
+  batch, and an epoch that already has ``_COMPLETE`` (committed before the
+  stream's own commit log recorded it) is skipped, never applied twice.
 
 The count-based eviction window is not applied in this mode (a count-based
 global window is inherently total-order; event-time watermark eviction is
-the streaming-native analog and can be layered on the state filter).
+the streaming-native analog and can be layered on the window).
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import StreamSpotParams
-from ..session import local_table
 from ..sources.bootstrap import BootstrapClusters
 from .replay import MicroBatchReplay
 
 
 class StructuredStreamSpot(MicroBatchReplay):
-    """foreachBatch-driven StreamSpot; inherits the driver state machine and
-    distributed sketch recompute from MicroBatchReplay."""
+    """foreachBatch-driven StreamSpot: one ``apply_batch`` per epoch."""
 
     def __init__(self, spark: SparkSession, params: StreamSpotParams,
                  bootstrap: BootstrapClusters, train_edges: DataFrame,
@@ -43,35 +43,18 @@ class StructuredStreamSpot(MicroBatchReplay):
         super().__init__(spark, params, bootstrap, train_edges,
                          checkpoint_dir=os.path.join(state_dir, "snapshots"))
         self.state_dir = state_dir
-        self.edges_dir = os.path.join(state_dir, "edge_state")
-        self._batch_no = 0
+        self._resume()
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        rows = batch_df.select("gid", "seq").collect()
-        if not rows:
+        done = self.complete_batches()
+        if epoch_id in done:
             return
-        batch_df.write.mode("append").parquet(self.edges_dir)
-        accumulated = self.spark.read.parquet(self.edges_dir)
-        touched = sorted({r.gid for r in rows})
-        sk = self._sketch_table(
-            accumulated.filter(F.col("gid").isin(touched))).collect()
-        new_proj = {r.gid: np.array(r.projection, dtype=np.float64) for r in sk}
-        order = sorted(touched, key=lambda g: max(
-            r.seq for r in rows if r.gid == g))
-        for g in order:
-            old = self.projections.get(g, np.zeros(self.p.L))
-            proj = new_proj.get(g, np.zeros(self.p.L))
-            delta = proj - old
-            self.projections[g] = proj
-            self._update_clusters(int(g), delta)
-        snap = local_table(
-            self.spark,
-            [(int(g), int(self.cluster_map.get(g, -2)),
-              float(self.anomaly_scores.get(g, -2.0)))
-             for g in sorted(self.projections)],
-            "gid long, cluster_id int, anomaly_score double")
-        self._save_state(self._batch_no, snap, len(rows))
-        self._batch_no += 1
+        path = os.path.join(self._batch_dir(epoch_id), "edges")
+        batch_df.withColumn("replay_seq", F.col("seq")).write.mode(
+            "overwrite").parquet(path)
+        window = [path] + [os.path.join(self._batch_dir(k), "edges") for k in done]
+        self.apply_batch(epoch_id, self.spark.read.parquet(path),
+                         self.spark.read.parquet(*window))
 
     def start(self, source_dir: str, schema, trigger_seconds: int | None = None):
         """Start the streaming query reading edge files dropped into

@@ -43,11 +43,11 @@ def test_chunk_delta_unit():
         assert +acc == Counter(get_string_chunks(full, 4))
 
 
-@needs_reference
-def test_streaming_deltas_reproduce_bulk_counts(spark, tmp_ckpt):
-    """Drop the reference's 12 edges as two files; the stateful operator's
-    cumulative deltas must equal the bulk chunk counts (incremental == bulk)."""
-    edges = read_streamspot_edges(spark, REFERENCE_EDGES).cache()
+def _assert_deltas_reproduce_bulk_counts(spark, edges_path, tmp_ckpt):
+    """Drop the edges as two files (each gid's first 2 edges, then the rest);
+    the stateful operator's cumulative deltas must equal the bulk chunk
+    counts (incremental == bulk)."""
+    edges = read_streamspot_edges(spark, edges_path).cache()
     src_dir = os.path.join(tmp_ckpt, "in")
     os.makedirs(src_dir)
     first = edges.filter("seq < 2")   # first 2 edges of each gid
@@ -83,3 +83,16 @@ def test_streaming_deltas_reproduce_bulk_counts(spark, tmp_ckpt):
         ).collect()
     })
     assert got == bulk
+
+
+@needs_reference
+def test_streaming_deltas_reproduce_bulk_counts(spark, tmp_ckpt):
+    """The reference's 12 edges through the stateful operator."""
+    _assert_deltas_reproduce_bulk_counts(spark, REFERENCE_EDGES, tmp_ckpt)
+
+
+def test_streaming_deltas_reproduce_bulk_counts_synthetic(
+        spark, synthetic_sample, tmp_ckpt):
+    """The synthetic sample (tests/conftest.py) through the stateful
+    operator: runs where the reference sample is absent."""
+    _assert_deltas_reproduce_bulk_counts(spark, synthetic_sample[0], tmp_ckpt)
