@@ -1,7 +1,19 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode defaults are sized for the sandbox (local[N] threads, single JVM);
-on a real cluster the same settings apply per-executor via spark-submit conf.
+Local-mode defaults come from the host: ``local[N]`` over the CPUs this
+process may run on, and a driver heap of half of physical memory.  On a
+real cluster the same settings apply per-executor via spark-submit conf.
+
+When ``get_spark`` launches the driver JVM itself (plain ``python``,
+tests, perfbench), that JVM runs with ``-XX:TieredStopAtLevel=1``: C1
+only, no C2.  A short job's C2 time goes to compiling Spark's own
+planning code (JDK, Janino, Catalyst, Scala), not the query, and costs
+more CPU than the executor tasks.  A long job that wants C2 back passes
+its own ``spark.driver.defaultJavaOptions`` (``extra_conf`` or
+``--conf``), which replaces this default; flags in
+``spark.driver.extraJavaOptions`` come after it and still apply.  Under
+``spark-submit`` the JVM is already running, so its ``--master``,
+``--conf`` and JIT settings are the ones that hold.
 """
 
 from __future__ import annotations
@@ -9,6 +21,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+# C1 only.  Measured with perfbench on 4 vCPUs: graph_suite cpu_s 91 -> 50 s
+# (medians of 11 interleaved pairs), because the C2 compiler threads' CPU
+# went to 0.  The trade: C1 code runs long work slower, e.g. graph_suite at
+# 20x lost 15-25% wall time while its cpu_s was still lower (README "JVM
+# costs").
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
 def _local_dir() -> str:
@@ -40,6 +59,13 @@ def _submit_conf_value(key: str) -> str | None:
         return SparkConf(loadDefaults=True).get(key, None)
     except Exception:
         return None
+
+
+def default_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    core count): the ``local[N]`` size and shuffle partition count when
+    neither ``cpus`` nor ``SPARK_GRAFT_CPUS`` is given."""
+    return len(os.sched_getaffinity(0))
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -84,13 +110,20 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     ext_broadcast = _submit_conf_value("spark.sql.autoBroadcastJoinThreshold")
+    builder = SparkSession.builder
+    if _submit_conf_value("spark.master") is None:
+        builder = builder.master(f"local[{cpus}]")
+    if not os.environ.get("PYSPARK_GATEWAY_PORT"):
+        # outside spark-submit the driver JVM starts in getOrCreate below,
+        # so JVM options set here still reach it
+        builder = builder.config("spark.driver.defaultJavaOptions",
+                                 DRIVER_JAVA_OPTIONS)
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
+        builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
