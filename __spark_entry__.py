@@ -340,7 +340,7 @@ def q_quality(spark, sf_dir):
 
 def q_fingerprint(spark, sf_dir):
     # document fingerprinting: JVM md5-60bit portable hash (functions/text.py
-    # fingerprint_expr; rolling-hash variant is rolling_fingerprint_bytes)
+    # fingerprint_expr)
     docs = _t(spark, sf_dir, "documents")
     return docs.select("doc_id", fingerprint_expr(F.col("text")).alias("fp"))
 
@@ -807,7 +807,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _lang_id_sql() -> str:
-    """SQL replay of lang_id_udf: per-language stopword-hit counts, argmax
+    """SQL replay of lang_id_expr: per-language stopword-hit counts, argmax
     with alphabetical tie-break (strict > scan over sorted languages), zero
     hits -> 'und'."""
     langs = sorted(_STOPWORDS)

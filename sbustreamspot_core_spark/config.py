@@ -55,8 +55,6 @@ class GraphParams:
     # depth, so chain-y graphs (many supersteps) need this small
     num_partitions: int = 32        # shuffle/join partitioning for iterative state
     csr_block_size: int = 4096      # max out-edges per adjacency block row (skew cap)
-    edges_distinct: bool = False    # input edge table is already deduplicated
-    # (e.g. by an upstream exact-dedup pass): skip the defensive distinct()
     small_graph_threshold: int = 0  # undirected-edge count at or below which
     # connected_components switches to a single-action driver union-find
     # (identical min-id labels, equality pytest-pinned).  0 = always

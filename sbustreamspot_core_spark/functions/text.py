@@ -7,7 +7,7 @@ UDFs (no per-row Python UDFs) built on pandas vectorized string ops where
 possible.
 
 Text analysis ops (training-data pipeline): language-ID (stopword n-gram
-heuristic), quality scoring, token counting, rolling-hash fingerprinting.
+heuristic), quality scoring, token counting, md5 fingerprinting.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ import html as _html
 import re
 from urllib.parse import urljoin
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -128,12 +127,6 @@ def lang_id_py(t: str) -> str:
     return best
 
 
-def lang_id_udf(text_col):
-    """Back-compat alias: language ID is now a JVM expression (no Python in
-    the per-document path) — see ``lang_id_expr``."""
-    return lang_id_expr(text_col)
-
-
 def token_count_expr(text_col):
     """BPE-ish token count as a pure JVM column expression:
     ``size(regexp_extract_all(text, TOKEN_PATTERN))`` — codegen'd, zero
@@ -148,12 +141,6 @@ def token_count_py(t: str) -> int:
     """Reference-fidelity Python tokenizer; pins ``token_count_expr`` in
     tests."""
     return len(_TOKEN_RE.findall(t)) if t else 0
-
-
-def token_count_udf(text_col):
-    """Back-compat alias: token counting is now a JVM expression — see
-    ``token_count_expr``."""
-    return token_count_expr(text_col)
 
 
 def quality_score_cols(text_col: str = "text"):
@@ -188,57 +175,5 @@ def quality_score_cols(text_col: str = "text"):
 def fingerprint_expr(text_col):
     """Document fingerprint as a pure JVM column expression: first 60 bits of
     md5(text) — codegen'd, zero Python, exact ANSI-SQL oracle
-    (CAST('0x' || substring(md5(text),1,15) AS BIGINT)).  The default
-    fingerprint for 100 TB-scale pipelines."""
+    (CAST('0x' || substring(md5(text),1,15) AS BIGINT))."""
     return F.conv(F.substring(F.md5(text_col), 1, 15), 16, 10).cast("long")
-
-
-_FP_MOD = (1 << 61) - 1
-_FP_P = 1315423911
-_FP_CHUNK = 4096
-# P^k mod M power table split into 31/30-bit limbs: byte*limb products stay
-# < 2^39 and 4096-term limb sums stay < 2^51, all exact in uint64.
-_fp_pows = np.empty(_FP_CHUNK, dtype=np.uint64)
-_x = 1
-for _k in range(_FP_CHUNK):
-    _fp_pows[_k] = _x
-    _x = (_x * _FP_P) % _FP_MOD
-_FP_PBLOCK = _x  # P^4096 mod M
-_fp_hi = _fp_pows >> np.uint64(30)
-_fp_lo = _fp_pows & np.uint64((1 << 30) - 1)
-
-
-def rolling_fingerprint_bytes(data: bytes) -> int:
-    """Rolling polynomial fingerprint of a byte string:
-    sum_i byte_i * P^(n-1-i) mod 2^61-1, P=1315423911.
-
-    Vectorized Horner: each 4096-byte block is two numpy dot products against
-    the precomputed split-limb power table (~3 array ops per block instead of
-    one Python-level multiply-add per byte), folded exactly in Python ints.
-    """
-    if not data:
-        return 0
-    b = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    h = 0
-    for start in range(0, len(b), _FP_CHUNK):
-        seg = b[start:start + _FP_CHUNK]
-        m = len(seg)
-        s_hi = int(np.dot(seg, _fp_hi[:m][::-1]))
-        s_lo = int(np.dot(seg, _fp_lo[:m][::-1]))
-        v = ((s_hi << 30) + s_lo) % _FP_MOD
-        pm = _FP_PBLOCK if m == _FP_CHUNK else pow(_FP_P, m, _FP_MOD)
-        h = (h * pm + v) % _FP_MOD
-    return h
-
-
-def _fingerprint_series(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: rolling_fingerprint_bytes(
-        t.encode("utf-8") if t else b""))
-
-
-def fingerprint_udf(text_col):
-    """Rolling polynomial document fingerprint (deterministic 61-bit) as an
-    Arrow-batched UDF; see ``rolling_fingerprint_bytes``.  Prefer
-    ``fingerprint_expr`` (JVM md5) unless the rolling-hash algebra is needed
-    (e.g. content-defined chunking extensions)."""
-    return F.pandas_udf(_fingerprint_series, "long")(text_col)

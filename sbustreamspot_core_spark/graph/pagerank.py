@@ -53,8 +53,8 @@ def prepared_edges(edges: DataFrame, params: GraphParams) -> DataFrame:
     co-partitioned for the superstep joins.  The former shape deduped and
     degree-counted twice (adjacency and initial ranks each), costing four
     full-width exchanges plus a final repartition."""
-    e = edges.select("src", "dst").repartition(params.num_partitions, "src")
-    return e if params.edges_distinct else e.distinct()
+    return (edges.select("src", "dst")
+            .repartition(params.num_partitions, "src").distinct())
 
 
 def build_links(edges: DataFrame, params: GraphParams,

@@ -34,7 +34,7 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MINHASH_MOD = (1 << 31) - 1  # Mersenne prime 2^31-1
@@ -67,12 +67,6 @@ def is_path_not_found(e: Exception) -> bool:
             if cond is not None:
                 return cond == "PATH_NOT_FOUND"
     return "PATH_NOT_FOUND" in str(e)
-
-
-def portable_hash60(col) -> Column:
-    """First 60 bits of md5 as a non-negative long — identical in Spark and
-    ANSI SQL (see module docstring)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def minhash_coeffs(num_hashes: int, seed: int) -> tuple:

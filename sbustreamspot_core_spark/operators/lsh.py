@@ -66,26 +66,10 @@ def bucket_star_edges(bands: DataFrame,
             .distinct())
 
 
-def isolated_gids(query_bands: DataFrame, table_bands: DataFrame) -> DataFrame:
-    """gids from ``query_bands`` whose every band misses every bucket built
-    from ``table_bands`` (left_anti per band; isolated iff zero hits)."""
-    buckets = table_bands.select("band_idx", "band_val").distinct()
-    hits = (
-        query_bands.join(buckets, ["band_idx", "band_val"], "left_semi")
-        .select("gid").distinct()
-    )
-    return query_bands.select("gid").distinct().join(hits, "gid", "left_anti")
-
-
-def isolated_vs_others(bands: DataFrame,
-                       extra_key_cols: tuple = ()) -> DataFrame:
+def isolated_vs_others(bands: DataFrame) -> DataFrame:
     """gids sharing NO bucket with any *other* gid (cluster.cpp:44-57 applied
     with each graph queried against tables built from all other graphs).
     A gid is isolated iff every one of its buckets holds only itself.
-
-    ``extra_key_cols`` scopes the bucket key AND the output grain (e.g.
-    ``("win_start",)`` for the event-time streaming pipeline, where
-    isolation is judged within each window independently).
 
     Round-7 shape (guide §2.4): isolated(gid) <=> the LARGEST bucket the
     gid occupies holds only itself, so one bucket-size aggregation, one
@@ -93,15 +77,14 @@ def isolated_vs_others(bands: DataFrame,
     table when it is small, shuffles when not) and one max-per-gid
     aggregation replace the former semi-join + two distincts + anti-join
     chain (5 exchanges -> 2-3, and no anti-join pass)."""
-    keys = [*extra_key_cols, "band_idx", "band_val"]
-    grain = [*extra_key_cols, "gid"]
+    keys = ["band_idx", "band_val"]
     bucket_sizes = bands.groupBy(*keys).agg(
         F.countDistinct("gid").alias("n_gids"))
     return (
         bands.join(bucket_sizes, keys)
-        .groupBy(*grain).agg(F.max("n_gids").alias("_mx"))
+        .groupBy("gid").agg(F.max("n_gids").alias("_mx"))
         .filter("_mx = 1")
-        .select(*grain)
+        .select("gid")
     )
 
 

@@ -35,12 +35,11 @@ SKETCH_SCHEMA = "gid long, projection array<long>, sketch binary, bands array<lo
 _HASH_MEMO_CAP = 1_000_000
 
 
-def _sketch_row(pdf: pd.DataFrame, projection: np.ndarray, extra: tuple,
+def _sketch_row(pdf: pd.DataFrame, projection: np.ndarray,
                 B: int, R: int) -> pd.DataFrame:
     """One output row of the per-graph sketch kernels."""
     sketch_bits = (projection >= 0).astype(np.uint8)[None, :]
     return pd.DataFrame({
-        **{k: [pdf[k].iloc[0]] for k in extra},
         "gid": [int(pdf["gid"].iloc[0])],
         "projection": [projection.tolist()],
         "sketch": [pack_sketch(sketch_bits)[0].tobytes()],
@@ -48,7 +47,7 @@ def _sketch_row(pdf: pd.DataFrame, projection: np.ndarray, extra: tuple,
     })
 
 
-def _sketch_group_inline(pdf, *, H, B, R, extra, memo):
+def _sketch_group_inline(pdf, *, H, B, R, memo):
     """``build_sketches`` kernel: one graph's (chunk, cnt) rows -> its
     sketch row, hashing chunks through the task's ``memo``."""
     chunks = pdf["chunk"].tolist()
@@ -61,32 +60,20 @@ def _sketch_group_inline(pdf, *, H, B, R, extra, memo):
             memo[c] = fresh[i]
     bits = np.stack([memo[c] for c in chunks])
     counts = pdf["cnt"].to_numpy(dtype=np.int64)
-    return _sketch_row(pdf, counts @ bits.astype(np.int64), extra, B, R)
+    return _sketch_row(pdf, counts @ bits.astype(np.int64), B, R)
 
 
-def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
-                   extra_group_cols: dict[str, str] | None = None) -> DataFrame:
+def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams) -> DataFrame:
     """(gid, projection, sketch, bands) from the (gid, chunk, cnt) table.
 
     One applyInPandas pass; each task hashes the chunks it sees with a
     per-task memo, so the input pipeline is never re-run for a separate
     vocabulary stage.
-
-    extra_group_cols: {name: spark_ddl_type} columns that extend the group
-    key beyond gid and pass through to the output (e.g. an event-time
-    window start for the streaming pipeline) — one distributed pass for
-    all windows instead of a driver loop per window.
     """
-    B, R = params.B, params.R
-    extra = dict(extra_group_cols or {})
-    group_keys = [*extra.keys(), "gid"]
-    out_schema = "".join(f"{k} {v}, " for k, v in extra.items()) + SKETCH_SCHEMA
-
     H = allocate_random_bits(params.L, params.chunk_length, params.seed)
-    kernel = partial(_sketch_group_inline, H=H, B=B, R=R, extra=tuple(extra),
+    kernel = partial(_sketch_group_inline, H=H, B=params.B, R=params.R,
                      memo={})
-    return chunk_counts.groupBy(*group_keys).applyInPandas(
-        kernel, schema=out_schema)
+    return chunk_counts.groupBy("gid").applyInPandas(kernel, schema=SKETCH_SCHEMA)
 
 
 def sketch_bands(sketches: DataFrame, params: StreamSpotParams) -> DataFrame:
@@ -103,7 +90,7 @@ def _simhash_group(pdf, *, b_idx, b_rv, B, R):
     sv = np.zeros(len(idx), dtype=np.int64)
     for chunk, cnt in zip(pdf["chunk"], pdf["cnt"]):
         sv[idx[chunk]] = cnt
-    return _sketch_row(pdf, b_rv.value.astype(np.int64) @ sv, (), B, R)
+    return _sketch_row(pdf, b_rv.value.astype(np.int64) @ sv, B, R)
 
 
 def build_simhash_sketches(chunk_counts: DataFrame, params: StreamSpotParams,

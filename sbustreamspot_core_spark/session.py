@@ -12,8 +12,9 @@ more CPU than the executor tasks.  A long job that wants C2 back passes
 its own ``spark.driver.defaultJavaOptions`` (``extra_conf`` or
 ``--conf``), which replaces this default; flags in
 ``spark.driver.extraJavaOptions`` come after it and still apply.  Under
-``spark-submit`` the JVM is already running, so its ``--master``,
-``--conf`` and JIT settings are the ones that hold.
+``spark-submit`` the JVM is already running, so its JIT settings are the
+ones that hold, and its ``--master`` and ``--conf`` values win over every
+default ``get_spark`` sets.
 """
 
 from __future__ import annotations
@@ -40,14 +41,14 @@ def _local_dir() -> str:
     return d
 
 
-def _submit_conf_value(key: str) -> str | None:
-    """Value of ``key`` set externally via ``spark-submit --conf`` /
-    spark-defaults, if any.  Under spark-submit the gateway JVM already
-    exists (PYSPARK_GATEWAY_PORT) and carries those properties; reading
-    them here lets the builder defaults yield to explicit external conf
-    instead of silently overriding it."""
+def _submitted_conf() -> dict[str, str]:
+    """Spark properties set externally via ``spark-submit`` (``--master``,
+    ``--conf``, spark-defaults); empty outside spark-submit.  Under
+    spark-submit the gateway JVM already exists (PYSPARK_GATEWAY_PORT) and
+    carries those properties; reading them here lets the builder defaults
+    yield to explicit external conf instead of silently overriding it."""
     if not os.environ.get("PYSPARK_GATEWAY_PORT"):
-        return None
+        return {}
     try:
         # SparkConf(loadDefaults=True) only sees JVM system properties once
         # the Python side is attached to the gateway; _ensure_initialized
@@ -56,9 +57,9 @@ def _submit_conf_value(key: str) -> str | None:
         from pyspark import SparkConf
         from pyspark.context import SparkContext
         SparkContext._ensure_initialized()
-        return SparkConf(loadDefaults=True).get(key, None)
+        return dict(SparkConf(loadDefaults=True).getAll())
     except Exception:
-        return None
+        return {}
 
 
 def default_cpus() -> int:
@@ -109,47 +110,40 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    if cpus is None:
+    """The engine's session.  Every key below is a default: a value in
+    ``extra_conf`` wins, and so does one spark-submit set (``--master``,
+    ``--conf``, spark-defaults).  Under a submitted master, ``local[N]``'s
+    N, the default parallelism and the shuffle partition count come from
+    that master unless ``cpus``/``shuffle_partitions`` are passed."""
+    submitted = _submitted_conf()
+    own = dict(extra_conf or {})
+    if cpus is None and "spark.master" not in submitted:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    ext_broadcast = _submit_conf_value("spark.sql.autoBroadcastJoinThreshold")
-    builder = SparkSession.builder
-    if _submit_conf_value("spark.master") is None:
-        builder = builder.master(f"local[{cpus}]")
-    if not os.environ.get("PYSPARK_GATEWAY_PORT"):
-        # outside spark-submit the driver JVM starts in getOrCreate below,
-        # so JVM options set here still reach it
-        builder = builder.config("spark.driver.defaultJavaOptions",
-                                 DRIVER_JAVA_OPTIONS)
-    builder = (
-        builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
+    conf = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.driver.memory":
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
         # local-mode shuffles are disk-bound through /tmp; tmpfs keeps the
         # shuffle at memory speed so wall-time scales with cores (on a real
         # cluster this is the network/SSD shuffle service instead)
-        .config("spark.local.dir", _local_dir())
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                ext_broadcast or str(64 * 1024 * 1024))
+        "spark.local.dir": _local_dir(),
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # measured (BENCH.md round 4): zstd beats lz4 only when the shuffle
         # volume saturates the memory/IO channel (64M-edge supersteps at 32
         # cores: fastest config measured); at bench-scale shuffles (2M
         # edges) its CPU cost LOSES 37.2 -> 44.8 s suite-wide.  Volume-
         # dependent, not core-count-dependent — so lz4 stays the default
-        # and large-shuffle jobs opt in via SPARK_GRAFT_CODEC=zstd
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_CODEC", "lz4"))
+        # and large-shuffle jobs pass spark.io.compression.codec=zstd
+        "spark.io.compression.codec": "lz4",
         # collect_list/collect_set aggregations (CSR adjacency build,
         # triangle out-neighbor sets, chunk tables) run through
         # ObjectHashAggregate, whose default sort-based fallback after 128
@@ -160,18 +154,33 @@ def get_spark(
         # MBs.  Measured r7 (interleaved, tools/r7 notes): triangles
         # 12.5->9.8 s cold / 8.8->7.1 s warm, pagerank 20.6->10.4 s cold /
         # 9.1->8.0 s warm.  Deployments with unbounded per-group buffers
-        # (no block cap) should lower it via the env knob.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", str(128 * 1024)))
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
+        # (no block cap) should pass a lower value for this key.
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold":
+            str(128 * 1024),
+    }
+    if cpus is not None:
+        conf["spark.master"] = f"local[{cpus}]"
+        conf["spark.default.parallelism"] = str(cpus)
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if not os.environ.get("PYSPARK_GATEWAY_PORT"):
+        # outside spark-submit the driver JVM starts in getOrCreate below,
+        # so JVM options set here still reach it
+        conf["spark.driver.defaultJavaOptions"] = DRIVER_JAVA_OPTIONS
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in {**conf, **own}.items():
+        if k in own or k not in submitted:
+            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if "spark.sql.shuffle.partitions" not in {*conf, *own, *submitted}:
+        # a submitted master without a cpus argument: Spark has sized the
+        # default parallelism from that master
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(spark.sparkContext.defaultParallelism))
     # an explicitly-set threshold — extra_conf OR spark-submit --conf /
     # spark-defaults — wins over the hardening
-    if ("spark.sql.autoBroadcastJoinThreshold" not in (extra_conf or {})
-            and ext_broadcast is None):
+    if "spark.sql.autoBroadcastJoinThreshold" not in {*own, *submitted}:
         _harden_for_small_heap(spark)
     return spark
 

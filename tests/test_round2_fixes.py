@@ -1,12 +1,10 @@
 """Round-2 scale-fix regression tests: hub-safe CSR blocking, SimHash vocab
-guard, multi-table ANN recall, vectorized rolling fingerprint."""
+guard, multi-table ANN recall."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
-from sbustreamspot_core_spark.functions.text import rolling_fingerprint_bytes
 from sbustreamspot_core_spark.graph.pagerank import build_links, pagerank
 from sbustreamspot_core_spark.operators.ann import brute_force_topk, lsh_topk_multi
 from sbustreamspot_core_spark.operators.sketch import build_simhash_sketches
@@ -79,33 +77,3 @@ def test_multi_table_lsh_recall(spark):
     hits = sum(len(exact[q] & multi.get(q, set())) for q in exact)
     total = sum(len(s) for s in exact.values())
     assert hits / total >= 0.9, f"recall@10 {hits / total:.2f} < 0.9"
-
-
-def _fp_scalar_oracle(data: bytes) -> int:
-    M, P = (1 << 61) - 1, 1315423911
-    h = 0
-    for x in data:
-        h = (h * P + x) % M
-    return h
-
-
-def test_rolling_fingerprint_matches_scalar_horner():
-    rng = np.random.default_rng(7)
-    for n in (0, 1, 100, 4096, 4097, 10000, 1 << 17):
-        data = bytes(rng.integers(0, 256, size=n, dtype=np.uint8))
-        assert rolling_fingerprint_bytes(data) == _fp_scalar_oracle(data)
-
-
-def test_rolling_fingerprint_speed_1mb():
-    """>100x per-doc speedup requirement: 1 MB must fingerprint in well under
-    the old per-byte-Python budget (~5+ s); allow generous CI noise."""
-    import time
-    data = bytes(np.random.default_rng(0).integers(
-        0, 256, size=1 << 20, dtype=np.uint8))
-    rolling_fingerprint_bytes(data[:8192])          # warm the path
-    t0 = time.time()
-    rolling_fingerprint_bytes(data)
-    elapsed = time.time() - t0
-    # ~7 ms standalone; 2 s budget absorbs shared-host noise while still
-    # catching any return of the per-byte loop (~10+ s per MB)
-    assert elapsed < 2.0, elapsed

@@ -1,7 +1,10 @@
 """Session defaults.
 
 - ``local[N]`` is sized from the CPUs this process may use, not a constant.
-- ``spark-submit --master`` is honoured, not overridden by ``get_spark``.
+- ``spark-submit --master`` is honoured, not overridden by ``get_spark``,
+  and sizes the default parallelism and shuffle partitions.
+- A ``spark-submit --conf`` value wins over ``get_spark``'s default for
+  the same key.
 - A driver JVM that ``get_spark`` launches runs C1 only
   (``-XX:TieredStopAtLevel=1``); a caller's ``extraJavaOptions`` still
   apply after it, and a caller's ``defaultJavaOptions`` replace it.
@@ -31,6 +34,10 @@ PROBE = textwrap.dedent("""
     print("PROBE " + json.dumps({
         "master": spark.sparkContext.master,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "codec": spark.sparkContext.getConf().get("spark.io.compression.codec"),
+        "obj_agg_fallback": spark.conf.get(
+            "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"),
         "jvm_args": list(mx.getRuntimeMXBean().getInputArguments())}))
     spark.stop()
 """)
@@ -98,6 +105,22 @@ def test_caller_default_java_options_replace_c1_only(tmp_path):
 def test_spark_submit_master_and_jit_are_honoured(tmp_path, conf):
     got = _probe(tmp_path, [_spark_submit(), "--master", "local[2]", *conf], {})
     assert got["master"] == "local[2]"
+    # sized from the submitted master, not from this host's CPUs
+    assert got["shuffle_partitions"] == "2"
+    assert got["default_parallelism"] == 2
     # the JVM was running before get_spark: only spark-submit's own
     # options reach it
     assert (C1_ONLY in got["jvm_args"]) == bool(conf)
+
+
+def test_spark_submit_conf_wins_over_defaults(tmp_path):
+    got = _probe(tmp_path, [
+        _spark_submit(), "--master", "local[2]",
+        "--conf", "spark.io.compression.codec=zstd",
+        "--conf", "spark.sql.shuffle.partitions=7",
+        "--conf", "spark.sql.objectHashAggregate.sortBased.fallbackThreshold=64",
+    ], {})
+    assert got["codec"] == "zstd"
+    assert got["shuffle_partitions"] == "7"
+    assert got["obj_agg_fallback"] == "64"
+    assert got["default_parallelism"] == 2

@@ -15,7 +15,7 @@ from sbustreamspot_core_spark.operators.clustering import (
 from sbustreamspot_core_spark.operators.lsh import (
     bucket_star_edges,
     candidate_pairs,
-    isolated_gids,
+    isolated_vs_others,
 )
 from sbustreamspot_core_spark.operators.shingles import (
     build_adjacency,
@@ -40,6 +40,7 @@ from .conftest import (
 )
 
 PARAMS = StreamSpotParams(chunk_length=10, L=200, B=10, R=20)
+SYN_PARAMS = StreamSpotParams(chunk_length=4, L=100, B=5, R=20)
 
 
 @pytest.fixture(scope="module")
@@ -206,15 +207,39 @@ def test_lsh_candidates_and_isolation(spark, edge_df, oracle_graphs):
                 expect_pairs.add((a, b))
     assert pairs == expect_pairs
 
-    # isolation: query each gid against tables built from the *other* gids
-    for gid in gids:
-        table = bands.filter(f"gid != {gid}")
-        query = bands.filter(f"gid = {gid}")
-        got_isolated = isolated_gids(query, table).count() == 1
-        expect = oracle.is_isolated(
-            obits[gid], {g: obits[g] for g in gids if g != gid},
-            PARAMS.B, PARAMS.R)
-        assert got_isolated == expect, gid
+    _assert_isolation_matches_oracle(bands, obits, PARAMS)
+
+
+def _assert_isolation_matches_oracle(bands, obits, params):
+    """``isolated_vs_others`` vs the oracle's per-gid test: each gid's
+    sketch queried against tables built from the *other* gids' sketches.
+    Returns the oracle's verdicts."""
+    isolated = {r.gid for r in isolated_vs_others(bands).collect()}
+    expect = {}
+    for gid in sorted(obits):
+        expect[gid] = oracle.is_isolated(
+            obits[gid], {g: b for g, b in obits.items() if g != gid},
+            params.B, params.R)
+        assert (gid in isolated) == expect[gid], gid
+    return expect
+
+
+def test_isolation_matches_oracle_on_synthetic_sample(spark, synthetic_sample):
+    edges_path, _ = synthetic_sample
+    cc = build_chunk_counts(
+        build_shingles(build_adjacency(read_streamspot_edges(spark, edges_path))),
+        SYN_PARAMS.chunk_length)
+    bands = sketch_bands(build_sketches(cc, SYN_PARAMS), SYN_PARAMS)
+    H = allocate_random_bits(SYN_PARAMS.L, SYN_PARAMS.chunk_length,
+                             SYN_PARAMS.seed)
+    obits = {}
+    for gid, edges in load_reference_edge_tuples(edges_path).items():
+        sv = oracle.shingle_vector(oracle.build_graph(edges),
+                                   SYN_PARAMS.chunk_length)
+        obits[gid], _ = oracle.construct_sketch(sv, H)
+    expect = _assert_isolation_matches_oracle(bands, obits, SYN_PARAMS)
+    # the sample exercises both verdicts
+    assert set(expect.values()) == {True, False}
 
 
 def test_bucket_star_edges_connectivity_equals_full_pairs(spark):

@@ -7,10 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.functions.text import (
-    fingerprint_udf,
-    lang_id_udf,
+    fingerprint_expr,
+    lang_id_expr,
     quality_score_cols,
-    token_count_udf,
+    token_count_expr,
 )
 from sbustreamspot_core_spark.operators.ann import (
     brute_force_topk,
@@ -151,9 +151,9 @@ def test_lsh_and_ivf_topk_recall(spark, embeddings):
 def test_text_analysis_columns(spark, docs):
     out = docs.select(
         "doc_id", "text",
-        lang_id_udf(F.col("text")).alias("lang_guess"),
-        token_count_udf(F.col("text")).alias("tokens"),
-        fingerprint_udf(F.col("text")).alias("fp"),
+        lang_id_expr(F.col("text")).alias("lang_guess"),
+        token_count_expr(F.col("text")).alias("tokens"),
+        fingerprint_expr(F.col("text")).alias("fp"),
         *[v.alias(k) for k, v in quality_score_cols("text").items()],
     ).collect()
     by_text = {}
@@ -167,7 +167,7 @@ def test_text_analysis_columns(spark, docs):
         assert len(fps) == 1
     # determinism across runs
     again = {r.doc_id: r.fp for r in docs.select(
-        "doc_id", fingerprint_udf(F.col("text")).alias("fp")).collect()}
+        "doc_id", fingerprint_expr(F.col("text")).alias("fp")).collect()}
     for r in out:
         assert again[r.doc_id] == r.fp
 
@@ -209,7 +209,7 @@ def test_text_exprs_match_python_reference(spark):
     # JVM lang_id_expr / token_count_expr vs the reference-fidelity Python
     # rules (lang_id_py / token_count_py), incl. nulls, ties, apostrophes
     from sbustreamspot_core_spark.functions.text import (
-        lang_id_expr, lang_id_py, token_count_expr, token_count_py)
+        lang_id_py, token_count_py)
     texts = [
         "", None, "the and of to is in", "le la les et de", "   ",
         "don't stop-believing!! 42x", "el que y en un es the and",
@@ -613,10 +613,10 @@ def _minhash_expression_reference(docs, num_hashes=64, n=5, seed=23,
     for the Arrow kernel: explode n-grams, portable 60-bit md5 hash, k
     parallel min() aggregates."""
     from sbustreamspot_core_spark.operators.dedup import (
-        MINHASH_MOD, char_shingles, minhash_coeffs, portable_hash60)
+        MINHASH_MOD, char_shingles, minhash_coeffs)
     A, Bv = minhash_coeffs(num_hashes, seed)
     sh = char_shingles(docs, n, id_col, text_col, distinct=False).select(
-        "id", (portable_hash60(F.col("shingle")) % MINHASH_MOD).alias("x"))
+        "id", (fingerprint_expr(F.col("shingle")) % MINHASH_MOD).alias("x"))
     aggs = [
         F.min((F.lit(int(A[i])) * F.col("x") + F.lit(int(Bv[i])))
               % F.lit(MINHASH_MOD)).alias(f"h{i}")
