@@ -50,10 +50,10 @@ class GraphParams:
     tol: float = 1e-7               # PageRank max|delta| convergence threshold
     max_iters: int = 100
     lpa_max_iters: int = 20
-    checkpoint_interval: int = 4    # supersteps between plan truncations /
-    # storage checkpoints; Catalyst analysis cost grows superlinearly in plan
-    # depth, so chain-y graphs (many supersteps) need this small
-    num_partitions: int = 32        # shuffle/join partitioning for iterative state
+    checkpoint_interval: int = 4    # supersteps between parquet storage
+    # checkpoints (the resume points); plan size does not depend on it
+    num_partitions: int = 32        # partitions of the iterative state,
+    # adjacency and every superstep shuffle
     csr_block_size: int = 4096      # max out-edges per adjacency block row (skew cap)
     small_graph_threshold: int = 0  # undirected-edge count at or below which
     # connected_components switches to a single-action driver union-find

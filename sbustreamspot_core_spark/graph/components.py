@@ -13,7 +13,8 @@ Scale notes:
 - convergence without a join: hash-min labels are non-increasing, so the
   label sum strictly decreases until fixpoint; equal sum <=> converged.
 - supersteps ~ graph diameter; web graphs have small effective diameter.
-  Parquet checkpoints every few supersteps truncate the plan and give resume.
+  Plans stay the size of the first superstep's (state and ``sym`` are
+  ``local_leaf`` scans); parquet checkpoints every few give resume.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..config import GraphParams
 from ..session import local_table
-from .superstep import SuperstepDriver
+from .superstep import SuperstepDriver, local_leaf, release
 
 
 @dataclass
@@ -109,7 +110,7 @@ def connected_components(spark: SparkSession, edges: DataFrame,
     """edges: (src long, dst long); nodes: optional (id long) to include
     isolated vertices (they become singleton components).
 
-    ``edges`` is scanned more than once during init (symmetrize cache build
+    ``edges`` is scanned more than once during init (symmetrize leaf fill
     + vertex set): cache/materialize it first when it is a derived UDF plan
     (see graph/pagerank.py's note — measured 3.4x end-to-end there).
 
@@ -132,12 +133,13 @@ def connected_components(spark: SparkSession, edges: DataFrame,
         n_raw = edges.count()
         if n_raw <= params.small_graph_threshold:
             return _small_graph_components(spark, edges, node_ids, n_raw)
-    sym = symmetrize(edges, params.num_partitions).cache()
+    sym = local_leaf(symmetrize(edges, params.num_partitions),
+                     params.num_partitions)
     labels0 = (
         node_ids.repartition(params.num_partitions, "id")
-        .distinct()          # rides the repartition exchange (subset rule)
-        .select("id", F.col("id").alias("label"),
-                F.lit(1).alias("changed"))
+        .groupBy("id")       # rides the repartition exchange
+        # label = id as an aggregate, not an alias (labelprop.py)
+        .agg(F.min("id").alias("label"), F.lit(1).alias("changed"))
     )
 
     def step(state: DataFrame, k: int, prev: dict | None):
@@ -163,10 +165,10 @@ def connected_components(spark: SparkSession, edges: DataFrame,
         return new_state, {"changed": F.sum("changed"),
                            "converged": F.sum("changed") == 0}
 
-    driver = SuperstepDriver(spark, checkpoint_dir, params.checkpoint_interval,
+    driver = SuperstepDriver(spark, params, checkpoint_dir,
                              lineage_table=lineage_table)
     result = driver.run(labels0, step, params.max_iters, resume)
-    sym.unpersist()
+    release(sym)
     return ComponentsResult(
         result.state.select("id", F.col("label").alias("component")),
         result.supersteps, result.converged, result.metrics)

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..config import GraphParams
 from .components import symmetrize
-from .superstep import SuperstepDriver
+from .superstep import SuperstepDriver, local_leaf, release
 
 
 @dataclass
@@ -34,14 +34,16 @@ def label_propagation(spark: SparkSession, edges: DataFrame,
                       lineage_table: str | None = None) -> LabelPropResult:
     """edges: (src long, dst long).  Pass a cached/materialized ``edges``
     when it is a derived UDF plan — init scans it during the symmetrize
-    cache build (see graph/pagerank.py's note)."""
-    sym = symmetrize(edges, params.num_partitions).cache()
+    leaf fill (see graph/pagerank.py's note)."""
+    sym = local_leaf(symmetrize(edges, params.num_partitions),
+                     params.num_partitions)
     labels0 = (
-        # sym is partitioned by a, so the distinct on id = a and the
+        # sym is partitioned by a, so the grouping on id = a and the
         # superstep joins on id both ride that partitioning — label init
-        # adds NO exchange at all (round 7)
-        sym.select(F.col("a").alias("id")).distinct()
-        .select("id", F.col("id").alias("label"))
+        # adds NO exchange at all (round 7).  label = min(a) = id, an
+        # aggregate: a second alias of the key would be the partitioning
+        # the state leaf keeps (it keeps one of a plan's partitionings)
+        sym.groupBy(F.col("a").alias("id")).agg(F.min("a").alias("label"))
     )
 
     def step(state: DataFrame, k: int, prev: dict | None):
@@ -67,10 +69,9 @@ def label_propagation(spark: SparkSession, edges: DataFrame,
         return new_state, {"changed": F.sum("changed"),
                            "converged": F.sum("changed") == 0}
 
-    driver = SuperstepDriver(spark, checkpoint_dir,
-                             params.checkpoint_interval,
+    driver = SuperstepDriver(spark, params, checkpoint_dir,
                              lineage_table=lineage_table)
     result = driver.run(labels0, step, params.lpa_max_iters, resume)
-    sym.unpersist()
+    release(sym)
     return LabelPropResult(result.state.select("id", "label"),
                            result.supersteps, result.converged, result.metrics)

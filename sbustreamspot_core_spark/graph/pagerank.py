@@ -20,8 +20,9 @@ Scale design (100 TB / 10^12-edge mindset, tested at local scale):
   metrics action per superstep (one driver barrier, run by the
   SuperstepDriver); superstep k+1 reads its dangling sum from superstep k's
   metrics, so only the first superstep of a run seeds it with an action.
-- Lineage-plan blowup is cut by the SuperstepDriver's parquet checkpoints,
-  which double as the resume point.
+- Every superstep's plan has the size of the first: state and adjacency
+  are partition-keeping ``local_leaf`` scans (graph/superstep.py); the
+  SuperstepDriver's parquet checkpoints are write-only resume points.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import GraphParams
-from .superstep import SuperstepDriver
+from .superstep import SuperstepDriver, local_leaf, release
 
 
 @dataclass
@@ -101,16 +102,17 @@ def pagerank(spark: SparkSession, edges: DataFrame,
     Round-7 init: raw ``edges`` is scanned ONCE (one repartition exchange,
     then the dedup/degree/block aggregations all ride that partitioning —
     see ``prepared_edges``); the vertex set and out-degrees are then derived
-    from the CACHED adjacency (src + exploded targets) instead of
+    from the adjacency leaf (src + exploded targets) instead of
     re-scanning the edge table, which removes init's other two full-width
     scans/exchanges.  Still pass a cached DataFrame when ``edges`` is an
     expensive derived plan (e.g. the href-extraction pipeline) — the one
     init scan plus any superstep resume re-executes it otherwise."""
-    e = prepared_edges(edges, params).cache()
-    # cached so the heavy-hub broadcast build inside build_links reads the
+    # a leaf, so the heavy-hub broadcast build inside build_links reads the
     # same materialized table instead of re-running the repartition+distinct
     # chain (the executed init plan otherwise carries two copies of it)
-    links = build_links(edges, params, prepared=e).cache()
+    e = local_leaf(prepared_edges(edges, params), params.num_partitions)
+    links = local_leaf(build_links(edges, params, prepared=e),
+                       params.num_partitions)
     nodes = (
         links.select(F.col("src").alias("id"))
         .unionByName(links.select(F.explode("targets").alias("id")))
@@ -122,7 +124,8 @@ def pagerank(spark: SparkSession, edges: DataFrame,
     # groupBy rides the adjacency's src partitioning (no exchange)
     degs = links.groupBy(F.col("src").alias("id")).agg(
         F.first("deg").alias("deg"))
-    n = nodes.count()          # also materializes the links cache
+    n = nodes.count()          # also fills the links leaf
+    release(e)
     # state schema: (id, rank, deg); deg = out-degree (0 => dangling)
     ranks0 = (
         nodes.join(degs.hint("shuffle_hash"), "id", "left")
@@ -173,11 +176,10 @@ def pagerank(spark: SparkSession, edges: DataFrame,
             "converged": delta < params.tol,
         }
 
-    driver = SuperstepDriver(spark, checkpoint_dir, params.checkpoint_interval,
+    driver = SuperstepDriver(spark, params, checkpoint_dir,
                              lineage_table=lineage_table)
     result = driver.run(ranks0, step, params.max_iters, resume)
-    links.unpersist()
-    e.unpersist()
+    release(links)
     return PageRankResult(
         result.state.select("id", "rank"),
         result.supersteps, result.converged, result.metrics)

@@ -1,23 +1,25 @@
-"""Iterative superstep driver: checkpoints, per-partition lineage, resume.
+"""Iterative superstep driver: constant-size plans, checkpoints, resume.
 
-Iterative DataFrame jobs explode their logical plans; the fix is a storage-
-backed checkpoint that truncates lineage AND doubles as the resume point
-(north rule: "every superstep checkpoints per-partition lineage and delta
-metrics ... so runs resume mid-iteration").  ``localCheckpoint`` is not
-resumable, so checkpoints are parquet writes.
-
+Every DataFrame a superstep loop reads (state, adjacency) is a
+``local_leaf``: one scan node that keeps its hash partitioning, so every
+superstep's plan has the size of the first.  Parquet checkpoints are
+write-only resume points (north rule: "every superstep checkpoints
+per-partition lineage and delta metrics ... so runs resume mid-iteration").
 Layout under ``checkpoint_dir``:
     superstep=<k>/data/           parquet state snapshot
     superstep=<k>/lineage.json    per-partition rows + superstep metrics
     superstep=<k>/_COMPLETE       commit marker (written last)
 
 Resume scans for the highest complete superstep and restarts the loop there.
+Trade-off: a leaf's blocks cannot be recomputed, so a job that loses an
+executor fails; rerun with ``resume=True`` to restart from the last parquet
+checkpoint (superstep 0 without a checkpoint dir).
 
 The driver owns the whole state lifecycle, so the algorithms only describe a
-superstep: ``step_fn(state, k, prev_metrics)`` returns the new state's
-(uncached) plan plus named aggregate Columns over it, one of them a boolean
-``converged``.  The driver caches the starting state and every new state,
-computes all the metrics in ONE ``agg`` action (which also fills the cache),
+superstep: ``step_fn(state, k, prev_metrics)`` returns the new state's plan
+plus named aggregate Columns over it, one of them a boolean ``converged``.
+The driver makes the starting state and every new state a leaf, computes all
+the metrics in ONE ``agg`` action (which also fills the new leaf), writes
 checkpoints, releases the state it replaced, and runs the loop under
 ``iterative_conf``.
 """
@@ -35,29 +37,51 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import GraphParams
 from ..session import local_table
 
 
 @contextmanager
-def iterative_conf(spark: SparkSession):
+def iterative_conf(spark: SparkSession, num_partitions: int):
     """Per-superstep stages are short and co-partitioned; AQE's runtime
     re-planning adds latency to every stage and its partition coalescing
     breaks co-partition reuse between supersteps, and per-superstep broadcast
     rebuilds (collect to driver) dwarf the join they replace.  Disable both
-    for the duration of an iterative job, restore after."""
+    for the duration of an iterative job, restore after.  So are runtime
+    bloom filters: a leaf's size estimate comes from the plan it stores, so
+    the optimizer would add a filter-building job (and a 1 MB task binary)
+    to every superstep.  Shuffles use the state's ``num_partitions``, or
+    every message aggregation re-shuffles the state to
+    ``spark.sql.shuffle.partitions``."""
     conf = spark.conf
-    saved = {
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled", "true"),
-        "spark.sql.autoBroadcastJoinThreshold":
-            conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"),
-    }
+    loop = {"spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
+            "spark.sql.shuffle.partitions": str(num_partitions)}
+    saved = {k: conf.get(k) for k in loop}
     try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        for k, v in loop.items():
+            conf.set(k, v)
         yield
     finally:
         for k, v in saved.items():
             conf.set(k, v)
+
+
+def local_leaf(df: DataFrame, num_partitions: int) -> DataFrame:
+    """``df`` as a lazy local checkpoint planned under ``iterative_conf``
+    (no adaptive stage runs now; the scan keeps ``df``'s partitioning).  The
+    first action over it fills its blocks; ``release`` drops them."""
+    with iterative_conf(df.sparkSession, num_partitions):
+        return df.localCheckpoint(eager=False)
+
+
+def release(leaf: DataFrame) -> None:
+    """Drop the blocks of a ``local_leaf``; nothing may read it after.
+    ``RDD.unpersist`` would log a WARN for every locally checkpointed RDD,
+    i.e. every superstep."""
+    rdd = leaf._jdf.queryExecution().analyzed().rdd()
+    rdd.context().unpersistRDD(rdd.id(), False)
 
 
 @dataclass
@@ -86,14 +110,17 @@ class SuperstepDriver:
     and must include a boolean ``converged``.  ``prev_metrics`` is the
     previous superstep's metrics dict, ``None`` on the first superstep of a
     fresh or resumed run.  Every metric is recorded into the lineage file.
+    A resumed state has lost its hash partitioning (parquet), so the first
+    resumed superstep re-shuffles it.
     """
 
-    def __init__(self, spark: SparkSession, checkpoint_dir: str | None = None,
-                 checkpoint_interval: int = 5,
+    def __init__(self, spark: SparkSession, params: GraphParams,
+                 checkpoint_dir: str | None = None,
                  lineage_table: str | None = None):
         self.spark = spark
+        self.num_partitions = params.num_partitions
         self.checkpoint_dir = checkpoint_dir
-        self.checkpoint_interval = max(1, checkpoint_interval)
+        self.checkpoint_interval = max(1, params.checkpoint_interval)
         # optional Iceberg-style lineage sink (sources/snaptable.py): one
         # snapshot COMMIT per checkpointed superstep carrying the
         # per-partition rows, with the superstep's delta metrics in the
@@ -122,12 +149,10 @@ class SuperstepDriver:
                     best = k if best is None else max(best, k)
         return best
 
-    def _checkpoint(self, state: DataFrame, k: int, metrics: dict) -> DataFrame:
+    def _checkpoint(self, state: DataFrame, k: int, metrics: dict) -> None:
         d = self._step_dir(k)
-        data_dir = os.path.join(d, "data")
-        state.write.mode("overwrite").parquet(data_dir)
-        reread = self.spark.read.parquet(data_dir)
-        parts = _partition_lineage(reread)
+        state.write.mode("overwrite").parquet(os.path.join(d, "data"))
+        parts = _partition_lineage(state)
         lineage = {
             "superstep": k,
             "wall_time": time.time(),
@@ -140,7 +165,6 @@ class SuperstepDriver:
             self._commit_lineage(k, metrics, parts)
         with open(os.path.join(d, "_COMPLETE"), "w") as f:
             f.write("")
-        return reread
 
     def _commit_lineage(self, k: int, metrics: dict, parts: list[dict]) -> None:
         from ..sources.snaptable import SnapTable, is_snaptable
@@ -166,9 +190,6 @@ class SuperstepDriver:
         t.append(df, summary={"superstep": k, "run_id": self._run_id,
                               **summary})
 
-    def load_checkpoint(self, k: int) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._step_dir(k), "data"))
-
     # -- main loop ---------------------------------------------------------
     def run(self, initial_state: DataFrame,
             step_fn: Callable[[DataFrame, int, dict | None],
@@ -193,47 +214,32 @@ class SuperstepDriver:
                     f.write(self._run_id)
         last = self.last_complete_superstep() if resume else None
         if last is not None:
-            state = self.load_checkpoint(last)
+            initial_state = self.spark.read.parquet(
+                os.path.join(self._step_dir(last), "data"))
             start_k = last + 1
             resumed_from = last
-        else:
-            # early supersteps reference the state 2-3x; cached (under the
-            # caller's conf, before iterative_conf) so the init pipeline is
-            # not re-derived each time
-            state = initial_state.cache()
+        state = local_leaf(initial_state, self.num_partitions)
 
         all_metrics: list[dict] = []
         prev_metrics = None
         converged = False
         k = start_k - 1
-        with iterative_conf(self.spark):
+        with iterative_conf(self.spark, self.num_partitions):
             for k in range(start_k, max_iters):
                 t0 = time.time()
                 plan, aggs = step_fn(state, k, prev_metrics)
-                new_state = plan.cache()
-                # one action: every metric, and it materializes the cache
+                new_state = local_leaf(plan, self.num_partitions)
+                # one action: every metric, and it fills the new leaf
                 metrics = new_state.agg(
                     *[c.alias(m) for m, c in aggs.items()]).first().asDict()
                 metrics["step_sec"] = round(time.time() - t0, 3)
-                is_ckpt = ((k + 1) % self.checkpoint_interval == 0
-                           or metrics["converged"])
                 t0 = time.time()
-                if is_ckpt and self.checkpoint_dir is not None:
-                    # write from the cached state, reread to truncate lineage
-                    reread = self._checkpoint(new_state, k, metrics)
-                    new_state.unpersist()
-                    new_state = reread.cache()
-                    new_state.count()
-                elif is_ckpt:
-                    # no storage checkpoint configured: still truncate the
-                    # logical plan (it grows per superstep and Catalyst
-                    # analysis cost explodes without this) — not resumable,
-                    # but fast
-                    truncated = new_state.localCheckpoint(eager=True)
-                    new_state.unpersist()
-                    new_state = truncated
+                if self.checkpoint_dir is not None and (
+                        (k + 1) % self.checkpoint_interval == 0
+                        or metrics["converged"]):
+                    self._checkpoint(new_state, k, metrics)
                 metrics["ckpt_sec"] = round(time.time() - t0, 3)
-                state.unpersist()
+                release(state)
                 state = new_state
                 prev_metrics = {"superstep": k, **metrics}
                 all_metrics.append(prev_metrics)

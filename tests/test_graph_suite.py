@@ -215,3 +215,37 @@ def test_determinism_across_partitionings(spark, edges):
     pr8 = {r.id: r.rank for r in pagerank(spark, df, p8).ranks.collect()}
     for node in pr2:
         assert pr2[node] == pytest.approx(pr8[node], abs=1e-9)
+
+
+def test_superstep_releases_replaced_states(spark):
+    """After 12 supersteps without a checkpoint dir, Spark's storage holds
+    at most the run's final state and adjacency: every state a superstep
+    replaced was released, and no release logged a warning."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "src long, dst long")
+    params = GraphParams(num_partitions=4, max_iters=12)
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    log4j = spark._jvm.org.apache.logging.log4j
+    warnings = spark._jvm.java.io.StringWriter()
+    appender = (log4j.core.appender.WriterAppender.newBuilder()
+                .setName("superstep-release-probe").setTarget(warnings)
+                .build())
+    root = log4j.LogManager.getRootLogger()
+    appender.start()
+    root.addAppender(appender)
+    try:
+        before = stored()
+        res = connected_components(spark, edges, params=params)
+        after = stored()
+    finally:
+        root.removeAppender(appender)
+        appender.stop()
+    assert res.supersteps == 12 and not res.converged
+    final = res.components._jdf.queryExecution().analyzed().child().rdd()
+    assert final.id() in after
+    assert len(after - before) <= 2
+    assert str(warnings.toString()) == ""

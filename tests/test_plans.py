@@ -2,10 +2,14 @@
 in the executed plans (pushdown, pruning, broadcast, shuffle-hash joins,
 whole-stage codegen)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
+from sbustreamspot_core_spark.graph.components import connected_components
+from sbustreamspot_core_spark.graph.labelprop import label_propagation
 from sbustreamspot_core_spark.graph.pagerank import pagerank
 from sbustreamspot_core_spark.graph.superstep import SuperstepDriver
 from sbustreamspot_core_spark.operators.clustering import (
@@ -26,17 +30,31 @@ def plan_str(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def operators_above_cache(df) -> list[str]:
-    """Physical operator names of ``df``'s plan down to its cached inputs:
-    an InMemoryTableScan is a leaf, so a cache's stored plan (built once,
-    not re-executed by readers) is left out."""
-    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+def plan_nodes(plan) -> list:
+    """Every node of a JVM Catalyst plan (logical or physical)."""
+    nodes, todo = [], [plan]
     while todo:
         node = todo.pop()
-        names.append(node.nodeName())
+        nodes.append(node)
         children = node.children()
         todo.extend(children.apply(i) for i in range(children.size()))
-    return names
+    return nodes
+
+
+def spy_steps(monkeypatch, record):
+    """Calls ``record(state, plan)`` for every superstep plan a graph
+    algorithm's own step returns, inside ``SuperstepDriver.run`` (under
+    ``iterative_conf``, with the state and adjacency leaves live)."""
+    run = SuperstepDriver.run
+
+    def spy_run(self, initial_state, step_fn, max_iters, resume=True):
+        def step(state, k, prev):
+            plan, aggs = step_fn(state, k, prev)
+            record(state, plan)
+            return plan, aggs
+        return run(self, initial_state, step, max_iters, resume)
+
+    monkeypatch.setattr(SuperstepDriver, "run", spy_run)
 
 
 def test_parquet_filter_pushdown_and_pruning(spark):
@@ -63,32 +81,81 @@ def test_centroid_distance_join_is_broadcast(spark):
 def test_pagerank_superstep_uses_shuffled_hash_join(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(i % 50, (i * 7) % 50) for i in range(500)], "src long, dst long")
-    # pagerank()'s own step: format the first plan it returns inside
-    # SuperstepDriver.run, i.e. under iterative_conf with the caches live (the
-    # adjacency, whose build uses a one-time broadcast of heavy-degree
-    # sources, must not be rebuilt per superstep)
     plans = []
-    run = SuperstepDriver.run
 
-    def spy_run(self, initial_state, step_fn, max_iters, resume=True):
-        def step(state, k, prev):
-            plan, aggs = step_fn(state, k, prev)
-            if not plans:
-                plans.append((plan_str(plan), operators_above_cache(plan)))
-            return plan, aggs
-        return run(self, initial_state, step, max_iters, resume)
+    def record(state, plan):
+        nodes = plan_nodes(plan._jdf.queryExecution().executedPlan())
+        leaves = [n.rdd() for n in nodes if n.children().size() == 0]
+        plans.append((state._jdf.queryExecution().analyzed().rdd().id(),
+                      [n.nodeName() for n in nodes],
+                      [(r.id(), r.getStorageLevel().useMemory())
+                       for r in leaves]))
 
-    monkeypatch.setattr(SuperstepDriver, "run", spy_run)
+    spy_steps(monkeypatch, record)
+    # num_partitions differs from the session's 8 shuffle partitions
     pagerank(spark, edges, GraphParams(num_partitions=4, max_iters=1))
-    p, above_cache = plans[0]
-    assert "ShuffledHashJoin" in p
-    # no per-superstep broadcast rebuilds: everything above the cached
-    # state and adjacency (InMemoryRelation holds build_links' one-time
-    # heavy-hub broadcast in its *stored* plan, which is not re-executed)
-    # must be broadcast-free
-    assert "InMemoryRelation" in p  # the adjacency really is cached
-    assert above_cache.count("InMemoryTableScan") == 3  # state x2, adjacency
-    assert "BroadcastHashJoin" not in above_cache
+    state_rdd, names, leaves = plans[0]
+    assert "ShuffledHashJoin" in names
+    # no per-superstep broadcast rebuilds: build_links' one-time heavy-hub
+    # broadcast lives in the adjacency leaf's stored plan
+    assert "BroadcastHashJoin" not in names
+    # the step reads the state twice and the adjacency once, each an
+    # in-memory leaf (a local checkpoint, not a re-derived plan)
+    assert len(leaves) == 3
+    assert [rdd for rdd, _ in leaves].count(state_rdd) == 2
+    assert all(in_memory for _, in_memory in leaves)
+    # the contribution aggregation is the one exchange: the state and the
+    # adjacency keep their hash partitioning at num_partitions
+    assert names.count("Exchange") == 1
+
+
+@pytest.mark.parametrize("with_ckpt", [False, True])
+def test_superstep_plans_are_constant_size(spark, monkeypatch, tmp_ckpt,
+                                           with_ckpt):
+    """Six supersteps of PageRank, CC and LPA, with no checkpoint dir and
+    with parquet checkpoints every 2 supersteps: every step's analyzed plan
+    has the node count of superstep 1, and every executed step (the first
+    one and the ones after a checkpoint too) has the steady-state Exchange
+    count, the message aggregation's only (LPA: its two), and no runtime
+    filter."""
+    # a 20-vertex path: Hash-Min needs 20 supersteps and LPA keeps shifting
+    # labels, so 6 supersteps never converge.  Cached, as callers pass edges:
+    # the leaves' size estimates then start small and compound per step,
+    # which is what makes the optimizer want a runtime filter
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "src long, dst long").cache()
+    edges.count()
+    params = GraphParams(num_partitions=4, max_iters=6, lpa_max_iters=6,
+                         tol=0.0, checkpoint_interval=2)
+    steps = []
+
+    def record(state, plan):
+        qe = plan._jdf.queryExecution()
+        executed = plan_nodes(qe.executedPlan())
+        steps.append((len(plan_nodes(qe.analyzed())),
+                      [n.nodeName() for n in executed].count("Exchange"),
+                      # a runtime bloom filter is one more job per step
+                      any("might_contain" in n.verboseString(1000)
+                          for n in executed)))
+
+    spy_steps(monkeypatch, record)
+
+    def ckpt(name):
+        return os.path.join(tmp_ckpt, name) if with_ckpt else None
+
+    for exchanges, run in (
+            (1, lambda: pagerank(spark, edges, params,
+                                 checkpoint_dir=ckpt("pr"))),
+            (1, lambda: connected_components(spark, edges, params=params,
+                                             checkpoint_dir=ckpt("cc"))),
+            (2, lambda: label_propagation(spark, edges, params,
+                                          checkpoint_dir=ckpt("lp")))):
+        steps.clear()
+        assert run().supersteps == 6
+        assert steps == [(steps[0][0], exchanges, False)] * 6
+    if with_ckpt:
+        assert os.path.exists(os.path.join(tmp_ckpt, "cc", "superstep=5",
+                                           "_COMPLETE"))
 
 
 def test_shingle_pipeline_is_codegen(spark):
