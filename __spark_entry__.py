@@ -553,9 +553,8 @@ def q_simhash_cands(spark, sf_dir):
 
 
 def q_embed_neardup(spark, sf_dir):
-    # exact embedding-cosine near-dup pairs (the verifier baseline; the LSH
-    # variant's recall against it is pytest-gated): plant near-parallel
-    # copies (vec_id + 1000, 2x + 1/64) of the first 250 vectors
+    # exact embedding-cosine near-dup pairs: plant near-parallel copies
+    # (vec_id + 1000, 2x + 1/64) of the first 250 vectors
     from sbustreamspot_core_spark.operators.ann import cosine_neardup_pairs
     emb = _t(spark, sf_dir, "embeddings").filter("vec_id < 250")
     v = emb.select("vec_id",

@@ -14,9 +14,9 @@ LLM-pipeline multimodal surface, SURVEY.md §2).
 
 The intra-only property is the scale lever: unlike GIF (whose frames
 composite over the previous canvas, forcing a sequential decode of the
-whole animation), every MJPEG frame decodes independently — so the
-frame-sampling operator (operators/multimodal.py:sample_frames) slices
-the chunk list FIRST and runs the JPEG decoder only on every n-th frame.
+whole animation), every MJPEG frame decodes independently — so
+operators/multimodal.py:decode_image walks the chunk list FIRST and runs
+the JPEG decoder on the first frame only.
 
 Decoder subset:
 - single 'vids' stream whose handler or biCompression reads MJPG/mjpg/

@@ -15,8 +15,8 @@ Decoder subset:
   2 (restore to background) and 3 (restore to previous).  Anything
   malformed raises GifFormatError.
 - animations decode to a (n_frames, height, width, 3) uint8 array of
-  fully-composited RGB canvases — this is the container behind the
-  engine's frame-sampling path (operators/multimodal.py:sample_frames).
+  fully-composited RGB canvases; operators/multimodal.py:decode_image
+  keeps the first.
 
 Encoder subset (fixture/test writer): full-frame images over one global
 color table built from the frames' distinct colors (<= 256), optional

@@ -10,7 +10,8 @@ Layout under ``checkpoint_dir``:
     superstep=<k>/lineage.json    per-partition rows + superstep metrics
     superstep=<k>/_COMPLETE       commit marker (written last)
 
-Resume scans for the highest complete superstep and restarts the loop there.
+Resume scans for the highest complete superstep and restarts the loop there;
+a run whose last checkpoint converged returns that state without a superstep.
 Trade-off: a leaf's blocks cannot be recomputed, so a job that loses an
 executor fails; rerun with ``resume=True`` to restart from the last parquet
 checkpoint (superstep 0 without a checkpoint dir).
@@ -110,8 +111,9 @@ class SuperstepDriver:
     and must include a boolean ``converged``.  ``prev_metrics`` is the
     previous superstep's metrics dict, ``None`` on the first superstep of a
     fresh or resumed run.  Every metric is recorded into the lineage file.
-    A resumed state has lost its hash partitioning (parquet), so the first
-    resumed superstep re-shuffles it.
+    States are keyed by ``id`` (PageRank, CC and LPA all are): a resumed
+    parquet snapshot is hash-partitioned on ``id`` at ``num_partitions``
+    before the loop, as a straight run's state is.
     """
 
     def __init__(self, spark: SparkSession, params: GraphParams,
@@ -213,12 +215,18 @@ class SuperstepDriver:
                 with open(run_id_file, "w") as f:
                     f.write(self._run_id)
         last = self.last_complete_superstep() if resume else None
+        done = False
         if last is not None:
+            with open(os.path.join(self._step_dir(last), "lineage.json")) as f:
+                done = json.load(f)["metrics"]["converged"]
             initial_state = self.spark.read.parquet(
-                os.path.join(self._step_dir(last), "data"))
+                os.path.join(self._step_dir(last), "data")
+            ).repartition(self.num_partitions, "id")
             start_k = last + 1
             resumed_from = last
         state = local_leaf(initial_state, self.num_partitions)
+        if done:
+            return SuperstepResult(state, start_k, True, [], resumed_from)
 
         all_metrics: list[dict] = []
         prev_metrics = None

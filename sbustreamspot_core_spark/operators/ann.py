@@ -3,10 +3,9 @@
 - brute-force cosine top-k: exact baseline; column-expression dot products
   (F.aggregate over zip_with — JVM-side, no Python) against a broadcast query
   set, then windowed top-k with deterministic tie-break.
-- LSH-bucketed (random hyperplane signs) variant: the scale path — candidate
-  generation via sign-bucket equality, exact re-rank of candidates only.
 - IVF-style variant: numpy k-means-lite centroids (driver, deterministic),
   route each vector to nearest centroid, search only matching cells.
+- exact embedding-cosine near-duplicate pairs (all-pairs, small corpora).
 """
 
 from __future__ import annotations
@@ -60,134 +59,13 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
-def _plane_bucket_series(batch, *, planes, weights):
-    """``hyperplane_signatures`` kernel: vectors -> packed sign pattern."""
-    M = np.array(batch.tolist(), dtype=np.float64)     # (n, dim)
-    signs = (M @ planes >= 0).astype(np.int64)          # (n, planes)
-    return pd.Series(signs @ weights)
-
-
-def _plane_buckets_multi_series(batch, *, planes, weights, n_planes):
-    """``hyperplane_signatures_multi`` kernel: vectors -> one packed sign
-    pattern per table."""
-    M = np.array(batch.tolist(), dtype=np.float64)
-    signs = (M @ planes >= 0).astype(np.int64)   # (n, planes*tables)
-    per_table = signs.reshape(len(M), -1, n_planes) @ weights  # (n, tables)
-    return pd.Series([row.tolist() for row in per_table])
-
-
-def hyperplane_signatures(vectors: DataFrame, n_planes: int = 16, seed: int = 23,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          dim: int = 64) -> DataFrame:
-    """(id, bucket) — sign pattern under ``n_planes`` random hyperplanes,
-    packed into one long.  Vectorized pandas kernel (numpy matmul)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_planes))
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    sig_udf = F.pandas_udf(
-        partial(_plane_bucket_series, planes=planes, weights=weights), "long")
-    return vectors.select(F.col(id_col).alias("id"),
-                          sig_udf(F.col(vec_col)).alias("bucket"))
-
-
-def hyperplane_signatures_multi(vectors: DataFrame, n_planes: int = 12,
-                                n_tables: int = 4, seed: int = 23,
-                                id_col: str = "vec_id",
-                                vec_col: str = "embedding",
-                                dim: int = 64) -> DataFrame:
-    """(id, table, bucket) — ``n_tables`` independent sign-bucket tables in
-    ONE Arrow pass: a single (dim, n_planes*n_tables) matmul per batch
-    instead of one corpus scan per table.  Plane t's block uses the same
-    seed stream as ``hyperplane_signatures(seed + 7919*t)`` so results are
-    interchangeable with the per-table path.
-    """
-    blocks = [np.random.default_rng(seed + 7919 * t)
-              .standard_normal((dim, n_planes)) for t in range(n_tables)]
-    planes = np.concatenate(blocks, axis=1)          # (dim, planes*tables)
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    sig_udf = F.pandas_udf(
-        partial(_plane_buckets_multi_series, planes=planes, weights=weights,
-                n_planes=n_planes),
-        "array<long>")
-    return vectors.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(sig_udf(F.col(vec_col))).alias("table", "bucket"))
-
-
-def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-             n_planes: int = 12, seed: int = 23, id_col: str = "vec_id",
-             vec_col: str = "embedding", dim: int = 64) -> DataFrame:
-    """Approximate top-k: hyperplane-bucket equality join for candidates,
-    exact cosine re-rank of candidates only.  Recall rises as n_planes falls."""
-    vs = hyperplane_signatures(vectors, n_planes, seed, id_col, vec_col, dim)
-    qs = hyperplane_signatures(queries, n_planes, seed, id_col, vec_col, dim)
-    cand = (
-        vs.select(F.col("id").alias("neighbor_id"), "bucket")
-        .join(F.broadcast(qs.select(F.col("id").alias("query_id"), "bucket")),
-              "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    v = vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).cast("array<double>").alias("nv"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    scored = (
-        cand.join(v, "neighbor_id").join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", _cosine_expr("qv", "nv").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def lsh_topk_multi(vectors: DataFrame, queries: DataFrame, k: int = 5,
-                   n_planes: int = 12, n_tables: int = 4, seed: int = 23,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   dim: int = 64) -> DataFrame:
-    """Multi-table hyperplane LSH: ``n_tables`` independent sign-bucket
-    tables, candidates = union of per-table bucket matches, exact cosine
-    re-rank of the distinct union.
-
-    A single table's recall is capped by the chance that a true neighbor
-    agrees on all ``n_planes`` signs; L independent tables raise recall to
-    1-(1-p)^L while the candidate join stays bucket-equality (no all-pairs).
-    All L signatures come from ONE corpus pass (hyperplane_signatures_multi).
-    """
-    vs = hyperplane_signatures_multi(vectors, n_planes, n_tables, seed,
-                                     id_col, vec_col, dim)
-    qs = hyperplane_signatures_multi(queries, n_planes, n_tables, seed,
-                                     id_col, vec_col, dim)
-    cand = (
-        vs.select(F.col("id").alias("neighbor_id"), "table", "bucket")
-        .join(F.broadcast(qs.select(F.col("id").alias("query_id"),
-                                    "table", "bucket")),
-              ["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    v = vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).cast("array<double>").alias("nv"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    scored = (
-        cand.join(v, "neighbor_id").join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", _cosine_expr("qv", "nv").alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def cosine_neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding") -> DataFrame:
     """(id_a < id_b, cosine) — EXACT embedding-cosine near-duplicate pairs.
 
-    All-pairs O(n^2): this is the oracle/verifier baseline, positioned like
-    ``brute_force_topk`` — use ``cosine_neardup_pairs_lsh`` as the scale
-    path and this to measure its recall on samples.
+    All-pairs O(n^2), like ``brute_force_topk``: an exact baseline for
+    small corpora.
     """
     a = vectors.select(F.col(id_col).alias("id_a"),
                        F.col(vec_col).cast("array<double>").alias("va"))
@@ -199,62 +77,6 @@ def cosine_neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
         .select("id_a", "id_b", _cosine_expr("va", "vb").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
-
-
-def cosine_neardup_pairs_lsh(vectors: DataFrame, threshold: float = 0.9,
-                             n_planes: int = 8, n_tables: int = 4,
-                             seed: int = 23, id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             dim: int = 64,
-                             max_bucket_size: int | None = 10_000
-                             ) -> DataFrame:
-    """Scale path for embedding-cosine near-dup: multi-table hyperplane
-    bucket SELF-join for candidates, exact cosine on candidates only.
-
-    Near-parallel pairs (angle theta) collide per table with
-    (1 - theta/pi)^n_planes; ``n_tables`` independent tables raise recall
-    to 1-(1-p)^L while every join stays bucket-equality — candidate volume
-    scales with bucket occupancy, not the quadratic pair space.  All L
-    signatures come from ONE corpus pass (hyperplane_signatures_multi).
-
-    ``n_planes`` is a REQUIRED tuning knob, not a constant: the default 8
-    gives only 256 buckets per table, so beyond ~a few million vectors
-    nearly every bucket exceeds ``max_bucket_size`` and the operator
-    degenerates to hub-star pairs (recall collapses exactly at scale).
-    Size it as n_planes >= log2(n_vectors / target_bucket) — see
-    ``recommended_n_planes`` — and check
-    ``dedup.star_reduction_stats(hyperplane_signatures_multi(...),
-    ["table", "bucket"], max_bucket_size)``: hot_frac should be ~0.
-    Raising n_planes trades per-table recall (recovered via ``n_tables``)
-    for bounded buckets; capping does NOT recover it — a hot hyperplane
-    bucket only means sign agreement, not near-identity, so its star pairs
-    mostly fail the cosine filter.
-    """
-    from .dedup import banded_self_join_pairs
-    s = hyperplane_signatures_multi(vectors, n_planes, n_tables, seed,
-                                    id_col, vec_col, dim)
-    cand = banded_self_join_pairs(s, ["table", "bucket"],
-                                  max_bucket_size=max_bucket_size)
-    va = vectors.select(F.col(id_col).alias("id_a"),
-                        F.col(vec_col).cast("array<double>").alias("va"))
-    vb = vectors.select(F.col(id_col).alias("id_b"),
-                        F.col(vec_col).cast("array<double>").alias("vb"))
-    return (
-        cand.join(va, "id_a").join(vb, "id_b")
-        .select("id_a", "id_b", _cosine_expr("va", "vb").alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def recommended_n_planes(n_vectors: int, target_bucket: int = 1024) -> int:
-    """Smallest n_planes keeping the EXPECTED hyperplane bucket under
-    ``target_bucket`` members (uniform-occupancy estimate: n / 2^planes).
-    Clustered corpora concentrate mass — verify with
-    ``dedup.star_reduction_stats`` and add planes if hot_frac > 0."""
-    planes = 1
-    while n_vectors / (1 << planes) > target_bucket and planes < 62:
-        planes += 1
-    return max(planes, 4)
 
 
 def _cell_distances(batch, centroids):

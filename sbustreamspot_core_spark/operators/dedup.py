@@ -9,7 +9,7 @@
   — the classic shingle->minhash->band->bucket-join pipeline.
 - SimHash near-dup: 64-bit sign-projection over the same portable base hash;
   near-dups = sketches within a Hamming radius via band-join candidates.
-- embedding cosine near-dup: see operators.ann (brute-force + LSH-bucketed).
+- embedding cosine near-dup: see operators.ann (exact all-pairs).
 
 Portability: the base hash is the first 60 bits of md5(shingle) parsed as an
 integer — computable bit-identically by Spark JVM expressions
@@ -151,34 +151,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 5, threshold: float = 0.0,
     return out
 
 
-def stop_shingle_stats(docs: DataFrame, n: int = 5,
-                       max_shingle_freq: int | None = None,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """One-row DataFrame measuring how much shingle mass a
-    ``max_shingle_freq`` stop-shingle cut drops from
-    ``ngram_jaccard_pairs``' intersection side: (total_rows, dropped_rows,
-    stop_shingles, dropped_frac).
-
-    Same visibility philosophy as ``star_reduction_stats``: the cut makes
-    the Jaccard an UNDERESTIMATE for pairs whose only overlap is
-    stop-shingles, and a dropped_frac near 1.0 means the corpus is
-    dominated by ubiquitous n-grams (the cut would gut the intersection
-    counts, not trim them).  Run this before enabling the cap so the
-    silent-underestimate mode is measurable, never assumed."""
-    sh = char_shingles(docs, n, id_col, text_col)
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    cap = max_shingle_freq if max_shingle_freq is not None else (1 << 62)
-    return dfreq.agg(
-        F.sum("df").cast("long").alias("total_rows"),
-        F.coalesce(F.sum(F.when(F.col("df") > cap, F.col("df"))), F.lit(0))
-        .cast("long").alias("dropped_rows"),
-        F.count(F.when(F.col("df") > cap, 1)).cast("long")
-        .alias("stop_shingles"),
-        (F.coalesce(F.sum(F.when(F.col("df") > cap, F.col("df"))), F.lit(0))
-         / F.sum("df")).alias("dropped_frac"))
-
-
 def _minhash_batches(batches, *, k, c, Ac, Bc):
     """``minhash_signatures`` kernel: (id, text) batches -> (id, sig)."""
     from hashlib import md5
@@ -215,7 +187,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 5,
     are one (k, n_grams) numpy matmul-min — a_i*x < 2^62 stays exact in
     int64, same bound as the JVM expression.
 
-    Round-7 rewrite rationale (measured, tools/r7_*): the former pure-JVM
+    Round-7 rewrite rationale (measured, BENCH.md round 7): the former pure-JVM
     explode + 64 parallel min() aggregates was dominated by interpreted
     per-shingle expression evaluation (the n-gram ``transform`` lambda is a
     codegen-fallback, which takes the whole Generate/HashAggregate stage
@@ -536,7 +508,7 @@ def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame, n: int = 5,
     kernel.  The former shingle-explode + three-way join shuffled the full
     O(|candidate docs| * |doc shingles|) gram table several times and was
     measured 25-75 s on the 50k-doc cadence vs 2.7-3.5 s for this plan
-    (tools/r7_*); per pair the kernel is two Python set builds + one
+    (BENCH.md round 7); per pair the kernel is two Python set builds + one
     intersection, bit-identical math (integer counts, one IEEE division).
 
     Null/absent semantics (pytest-pinned vs the old plan): a doc row with

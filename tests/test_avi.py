@@ -1,4 +1,4 @@
-"""MJPEG-AVI codec (functions/avi.py) + Spark frame-sampling wiring.
+"""MJPEG-AVI codec (functions/avi.py) + Spark decode wiring.
 
 Oracle pattern matches the JPEG tests: JPEG is lossy, so roundtrips pin
 exact dims / frame counts / fps plus an a-priori MAE bound against the
@@ -19,7 +19,6 @@ from sbustreamspot_core_spark.functions.avi import (
 from sbustreamspot_core_spark.functions.jpeg import jpeg_encode
 from sbustreamspot_core_spark.operators.multimodal import (
     decode_image,
-    sample_frames,
     sniff_format,
 )
 
@@ -115,8 +114,8 @@ def test_avi_sniff():
 
 
 def test_avi_spark_decode_and_frame_sampling(spark):
-    """decode_image pulls ONLY the first frame chunk; sample_frames
-    decodes every n-th chunk (intra-only skip) over the Arrow path."""
+    """decode_image pulls ONLY the first frame chunk, over the Arrow
+    path."""
     frames = _smooth_frames(7, 16, 16, seed=29)
     df = spark.createDataFrame(
         [(0, bytearray(avi_encode(frames, fps=10, quality=95)))],
@@ -125,10 +124,3 @@ def test_avi_spark_decode_and_frame_sampling(spark):
     assert (dec.width, dec.height, dec.channels) == (16, 16, 3)
     first = np.frombuffer(bytes(dec.pixels), dtype=np.uint8).astype(float)
     assert np.abs(first - frames[0].reshape(-1).astype(float)).mean() <= 5.0
-
-    sampled = sample_frames(df, every_n=3).collect()
-    assert [r.frame_idx for r in sampled] == [0, 3, 6]
-    for r in sampled:
-        got = np.frombuffer(bytes(r.frame), dtype=np.uint8).astype(float)
-        src = frames[r.frame_idx].reshape(-1).astype(float)
-        assert np.abs(got - src).mean() <= 5.0

@@ -1,5 +1,5 @@
 """Pure-stdlib codec layer (functions/codecs.py): PNG decode/encode and
-WAV/PCM, plus the real (non-fake) multimodal operator paths."""
+WAV/PCM, plus the multimodal decode operators over them."""
 
 import hashlib
 import struct
@@ -20,7 +20,6 @@ from sbustreamspot_core_spark.functions.codecs import (
 from sbustreamspot_core_spark.operators.multimodal import (
     decode_audio,
     decode_image,
-    sample_frames,
 )
 
 
@@ -145,20 +144,6 @@ def test_decode_audio_and_sample_frames_spark(spark):
     for r in joined.values():
         assert (r.sample_rate, r.n_frames, r.channels) == (r.er, r.en, r.ec)
         assert r.got_md5 == r.pcm_md5
-
-    # real frame sampling: every 2nd 1024-sample block, local replica oracle
-    frames = sample_frames(wavs.select("id", "payload"), every_n=2).collect()
-    local = {r.id: wav_decode(bytes(r.payload))
-             for r in wavs.select("id", "payload").collect()}
-    seen = set()
-    for fr in frames:
-        rate_pcm = local[fr.id][1]
-        expect = rate_pcm[fr.frame_idx * 1024:(fr.frame_idx + 1) * 1024]
-        assert bytes(fr.frame) == expect.tobytes()
-        seen.add((fr.id, fr.frame_idx))
-    for i, (_, pcm) in local.items():
-        n_blocks = max(1, -(-pcm.shape[0] // 1024))
-        assert {(i, b) for b in range(0, n_blocks, 2)} <= seen
 
 
 def test_fixture_md5_is_of_source_arrays():
@@ -320,8 +305,8 @@ def test_gif_errors():
 
 
 def test_gif_spark_decode_and_frame_sampling(spark):
-    """decode_image returns the first composited frame; sample_frames emits
-    every-n-th animation canvas — both over the Arrow batch path."""
+    """decode_image returns the first composited frame over the Arrow batch
+    path."""
     from sbustreamspot_core_spark.functions.gif import gif_encode
 
     rng = np.random.default_rng(29)
@@ -337,7 +322,3 @@ def test_gif_spark_decode_and_frame_sampling(spark):
     assert (dec[0].width, dec[0].height, dec[0].channels) == (11, 9, 3)
     assert bytes(dec[0].pixels) == frames[0].tobytes()
     assert bytes(dec[1].pixels) == still.tobytes()
-    sampled = sample_frames(df.filter("id = 0"), every_n=3).collect()
-    assert [r.frame_idx for r in sampled] == [0, 3, 6]
-    for r in sampled:
-        assert bytes(r.frame) == frames[r.frame_idx].tobytes()

@@ -126,6 +126,38 @@ def test_cc_and_lpa_checkpoint_resume(spark, edges, tmp_ckpt, algo):
     assert got == expect
 
 
+@pytest.mark.parametrize("algo", ["ranks", "components"])
+def test_resume_after_converged_checkpoint_runs_no_superstep(
+        spark, edges, tmp_ckpt, algo):
+    """The last checkpoint of a converged run is the answer: resuming from
+    it returns the same state and superstep count and writes nothing."""
+    import os
+    _, df = edges
+    if algo == "ranks":
+        def run(resume):
+            return pagerank(spark, df, FAST_CONVERGE,
+                            checkpoint_dir=tmp_ckpt, resume=resume)
+    else:
+        def run(resume):
+            return connected_components(spark, df, params=FAST_CONVERGE,
+                                        checkpoint_dir=tmp_ckpt,
+                                        resume=resume)
+
+    def listing():
+        return sorted(d for d in os.listdir(tmp_ckpt)
+                      if d.startswith("superstep="))
+
+    full = run(resume=False)
+    assert full.converged
+    written = listing()
+    assert written[-1] == f"superstep={full.supersteps - 1}"
+    expect = {tuple(r) for r in getattr(full, algo).collect()}
+    again = run(resume=True)
+    assert (again.supersteps, again.converged) == (full.supersteps, True)
+    assert {tuple(r) for r in getattr(again, algo).collect()} == expect
+    assert listing() == written
+
+
 def test_connected_components_exact(spark, edges):
     e, df = edges
     expect = connected_components_oracle(e)

@@ -3,6 +3,7 @@ in the executed plans (pushdown, pruning, broadcast, shuffle-hash joins,
 whole-stage codegen)."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -117,7 +118,9 @@ def test_superstep_plans_are_constant_size(spark, monkeypatch, tmp_ckpt,
     has the node count of superstep 1, and every executed step (the first
     one and the ones after a checkpoint too) has the steady-state Exchange
     count, the message aggregation's only (LPA: its two), and no runtime
-    filter."""
+    filter.  With checkpoints, dropping the last one and resuming from
+    superstep 3 gives the same plans: the resumed state keeps the hash
+    partitioning of a straight run."""
     # a 20-vertex path: Hash-Min needs 20 supersteps and LPA keeps shifting
     # labels, so 6 supersteps never converge.  Cached, as callers pass edges:
     # the leaves' size estimates then start small and compound per step,
@@ -143,19 +146,24 @@ def test_superstep_plans_are_constant_size(spark, monkeypatch, tmp_ckpt,
     def ckpt(name):
         return os.path.join(tmp_ckpt, name) if with_ckpt else None
 
-    for exchanges, run in (
-            (1, lambda: pagerank(spark, edges, params,
-                                 checkpoint_dir=ckpt("pr"))),
-            (1, lambda: connected_components(spark, edges, params=params,
-                                             checkpoint_dir=ckpt("cc"))),
-            (2, lambda: label_propagation(spark, edges, params,
-                                          checkpoint_dir=ckpt("lp")))):
+    for name, exchanges, run in (
+            ("pr", 1, lambda: pagerank(spark, edges, params,
+                                       checkpoint_dir=ckpt("pr"))),
+            ("cc", 1, lambda: connected_components(
+                spark, edges, params=params, checkpoint_dir=ckpt("cc"))),
+            ("lp", 2, lambda: label_propagation(spark, edges, params,
+                                                checkpoint_dir=ckpt("lp")))):
         steps.clear()
         assert run().supersteps == 6
-        assert steps == [(steps[0][0], exchanges, False)] * 6
-    if with_ckpt:
-        assert os.path.exists(os.path.join(tmp_ckpt, "cc", "superstep=5",
-                                           "_COMPLETE"))
+        steady = (steps[0][0], exchanges, False)
+        assert steps == [steady] * 6
+        if with_ckpt:
+            last = os.path.join(tmp_ckpt, name, "superstep=5")
+            assert os.path.exists(os.path.join(last, "_COMPLETE"))
+            shutil.rmtree(last)
+            steps.clear()
+            assert run().supersteps == 6
+            assert steps == [steady] * 2       # supersteps 4 and 5
 
 
 def test_shingle_pipeline_is_codegen(spark):

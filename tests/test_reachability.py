@@ -1,0 +1,203 @@
+"""Every public operator has a consumer outside the tests.
+
+An AST walk, no Spark. The roots are the code the engine ships for: the
+driver-contract queries (``__spark_entry__.py``), the ``jobs/`` CLIs,
+perfbench's non-test modules and the tools that stay. A top-level name of
+the package is reached when a root names it, or when reached package code
+names it (a class brings its whole body; importing a module runs its
+module-level statements). Every public top-level function and class must
+be reached, or be listed in ``ALLOWED`` with the reason it stays.
+"""
+
+import ast
+import pathlib
+
+import sbustreamspot_core_spark as pkg
+
+PKG_DIR = pathlib.Path(pkg.__file__).parent
+REPO = PKG_DIR.parent
+PKG = PKG_DIR.name
+
+KEPT_TOOLS = ["make_fixtures.py", "validate_entry.py", "scaling.py",
+              "scaling_probe.py", "scaling_hash_probe.py",
+              "scaling_sketch_probe.py", "gen_scaling_graph.py"]
+
+# module -> reason; every public name in it is exempt
+ALLOWED_MODULES = {
+    "oracles.graph_oracle": "test reference for the graph algorithms",
+    "oracles.streamspot_oracle": "test reference for the StreamSpot operators",
+    "graph.skew": "salted repartitioning, named by the ROADMAP's north rule",
+}
+# (module, name) -> reason
+ALLOWED = {
+    ("functions.avi", "avi_decode"):
+        "all-frames reference decoder the AVI codec tests compare against",
+    ("functions.text", "lang_id_py"):
+        "Python reference for lang_id_expr",
+    ("functions.text", "token_count_py"):
+        "Python reference for token_count_expr",
+    ("sources.docs", "planted_near_dup_pairs"):
+        "test data: the planted truth of generate_variant_docs",
+    ("sources.pages", "expected_link_edges"):
+        "test data: the planted truth of generate_pages",
+    ("operators.sketch", "build_simhash_sketches"):
+        "the reference's SimHash sketch mode",
+    ("streaming.structured", "StructuredStreamSpot"):
+        "Structured Streaming shell over MicroBatchReplay",
+    ("streaming.table_dedup", "SnapTableDedupStream"):
+        "Structured Streaming shell over the SnapTable dedup step",
+    ("sources.iceberg", "write_table"): "write side of the table source",
+}
+
+
+def _module_name(path):
+    return ".".join(path.relative_to(PKG_DIR).with_suffix("").parts) \
+        .removesuffix("__init__").rstrip(".")
+
+
+def _is_package(module):
+    return (PKG_DIR / module.replace(".", "/") / "__init__.py").exists()
+
+
+def _absolute(module, node):
+    """The package-relative module an ImportFrom names, or None."""
+    if node.level:
+        parts = module.split(".") if module else []
+        if not _is_package(module):
+            parts = parts[:-1]
+        parts = parts[:len(parts) - node.level + 1]
+        return ".".join(parts + ([node.module] if node.module else []))
+    if node.module == PKG:
+        return ""
+    if node.module and node.module.startswith(PKG + "."):
+        return node.module[len(PKG) + 1:]
+    return None
+
+
+def _bindings(module, tree, modules):
+    """name -> ("mod", m) for a module alias, ("def", m, name) for a
+    package top-level name, from every import in ``tree``."""
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            base = _absolute(module, node)
+            if base is None:
+                continue
+            for a in node.names:
+                sub = f"{base}.{a.name}".lstrip(".")
+                key = a.asname or a.name
+                out[key] = ("mod", sub) if sub in modules \
+                    else ("def", base, a.name)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name == PKG or a.name.startswith(PKG + "."):
+                    sub = a.name[len(PKG) + 1:]
+                    if a.asname:
+                        out[a.asname] = ("mod", sub)
+    return out
+
+
+def _refs(node, module, bindings, own):
+    """(module, name) pairs ``node`` names."""
+    refs = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            b = bindings.get(n.id)
+            if b and b[0] == "def":
+                refs.add((b[1], b[2]))
+            elif b and b[0] == "mod":
+                refs.add((b[1], None))
+            elif n.id in own:
+                refs.add((module, n.id))
+        elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+            b = bindings.get(n.value.id)
+            if b and b[0] == "mod":
+                refs.add((b[1], n.attr))
+    return refs
+
+
+def _package():
+    """module -> (tree, bindings, {top-level name: node})."""
+    paths = sorted(PKG_DIR.rglob("*.py"))
+    modules = {_module_name(p) for p in paths}
+    out = {}
+    for p in paths:
+        m = _module_name(p)
+        tree = ast.parse(p.read_text())
+        defs = {n.name: n for n in tree.body if isinstance(
+            n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))}
+        for n in tree.body:
+            if isinstance(n, ast.Assign):
+                defs.update({t.id: n for t in n.targets
+                             if isinstance(t, ast.Name)})
+        out[m] = (tree, _bindings(m, tree, modules), defs)
+    return out
+
+
+def _roots():
+    paths = [REPO / "__spark_entry__.py"]
+    paths += sorted((REPO / "jobs").glob("*.py"))
+    paths += [p for p in sorted((REPO / "perfbench").glob("*.py"))
+              if not p.name.startswith("test_")]
+    paths += [REPO / "tools" / name for name in KEPT_TOOLS]
+    return paths
+
+
+def reached(extra=()):
+    """(module, name) pairs reached from the roots and from ``extra``."""
+    pkg_mods = _package()
+    modules = set(pkg_mods)
+    todo = set(extra)
+    for path in _roots():
+        tree = ast.parse(path.read_text())
+        todo |= _refs(tree, None, _bindings("", tree, modules), set())
+    seen, loaded = set(), set()
+    while todo:
+        m, name = todo.pop()
+        if m not in pkg_mods or (m, name) in seen:
+            continue
+        seen.add((m, name))
+        tree, bindings, defs = pkg_mods[m]
+        if m not in loaded:
+            # importing a module runs its module-level statements
+            loaded.add(m)
+            top = [n for n in tree.body if not isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
+            for n in top:
+                todo |= _refs(n, m, bindings, defs)
+            parent = m.rpartition(".")[0]
+            todo.add((parent, None))
+        if name in defs:
+            todo |= _refs(defs[name], m, bindings, defs)
+    return seen
+
+
+def _public():
+    return {(m, name) for m, (_, _, defs) in _package().items()
+            for name, node in defs.items()
+            if not name.startswith("_") and isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))}
+
+
+def _allowed(public):
+    return {(m, name) for m, name in public
+            if m in ALLOWED_MODULES or (m, name) in ALLOWED}
+
+
+def test_every_public_operator_has_a_consumer():
+    """What the allowlisted code uses stays too."""
+    public = _public()
+    allowed = _allowed(public)
+    unreached = sorted(f"{m}.{name}"
+                       for m, name in public - allowed - reached(allowed))
+    assert not unreached, unreached
+
+
+def test_allowlist_is_current():
+    """An allowlist entry names code that exists and no root reaches."""
+    public, seen = _public(), reached()
+    for key in ALLOWED:
+        assert key in public, key
+        assert key not in seen, f"{key} is reached; drop it from ALLOWED"
+    for m in ALLOWED_MODULES:
+        assert any(pm == m for pm, _ in public), m

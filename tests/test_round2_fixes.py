@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
 from sbustreamspot_core_spark.graph.pagerank import build_links, pagerank
-from sbustreamspot_core_spark.operators.ann import brute_force_topk, lsh_topk_multi
 from sbustreamspot_core_spark.operators.sketch import build_simhash_sketches
 from sbustreamspot_core_spark.oracles.graph_oracle import pagerank_oracle
 
@@ -57,23 +56,3 @@ def test_simhash_vocab_guard(spark):
     # under the cap it still works
     out = build_simhash_sketches(cc, params, max_vocab=1000).collect()
     assert len(out) == 1
-
-
-def test_multi_table_lsh_recall(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
-    queries = emb.filter("vec_id < 10")
-    exact = {}
-    for r in brute_force_topk(emb, queries, k=10).collect():
-        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-    # the synthetic embeddings are near-uniform (top-10 cosine ~0.3, so each
-    # hyperplane agrees w.p. ~0.59): recall >= 0.9 needs coarse buckets,
-    # 1-(1-0.59^2)^8 ~ 0.97.  On clustered real embeddings the same recall
-    # holds with far finer buckets (stronger pruning); the planes/tables
-    # trade-off is data-dependent by nature of hyperplane LSH.
-    multi = {}
-    for r in lsh_topk_multi(emb, queries, k=10, n_planes=2,
-                            n_tables=8).collect():
-        multi.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(len(exact[q] & multi.get(q, set())) for q in exact)
-    total = sum(len(s) for s in exact.values())
-    assert hits / total >= 0.9, f"recall@10 {hits / total:.2f} < 0.9"

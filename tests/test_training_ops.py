@@ -12,11 +12,7 @@ from sbustreamspot_core_spark.functions.text import (
     quality_score_cols,
     token_count_expr,
 )
-from sbustreamspot_core_spark.operators.ann import (
-    brute_force_topk,
-    ivf_topk,
-    lsh_topk,
-)
+from sbustreamspot_core_spark.operators.ann import brute_force_topk, ivf_topk
 from sbustreamspot_core_spark.operators.dedup import (
     exact_dedup,
     minhash_jaccard_estimate,
@@ -25,12 +21,7 @@ from sbustreamspot_core_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from sbustreamspot_core_spark.operators.multimodal import (
-    byte_histogram_features,
-    decode_image,
-    sample_frames,
-    sniff_metadata,
-)
+from sbustreamspot_core_spark.operators.multimodal import decode_image
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -132,18 +123,12 @@ def test_lsh_and_ivf_topk_recall(spark, embeddings):
     exact = {}
     for r in brute_force_topk(embeddings, queries, k=3).collect():
         exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-    lsh = {}
-    for r in lsh_topk(embeddings, queries, k=3, n_planes=4).collect():
-        lsh.setdefault(r.query_id, set()).add(r.neighbor_id)
     ivf = {}
     for r in ivf_topk(embeddings, queries, k=3, n_cells=4, n_probe=2).collect():
         ivf.setdefault(r.query_id, set()).add(r.neighbor_id)
-    # approximate methods: sane shape + nonzero recall overall
-    lsh_hits = sum(len(exact[q] & lsh.get(q, set())) for q in exact)
+    # approximate method: sane shape + nonzero recall overall
     ivf_hits = sum(len(exact[q] & ivf.get(q, set())) for q in exact)
-    assert lsh_hits > 0 and ivf_hits > 0
-    for q, s in lsh.items():
-        assert len(s) <= 3
+    assert ivf_hits > 0
     for q, s in ivf.items():
         assert len(s) <= 3
 
@@ -176,33 +161,9 @@ def test_multimodal_plumbing(spark, docs):
     payloads = docs.select(
         F.col("doc_id").alias("id"),
         F.encode("text", "utf-8").alias("payload"))
-    meta = sniff_metadata(payloads).collect()
-    for r in meta:
-        assert r.n_bytes > 0
-        assert r.format in {"png", "jpeg", "gif", "riff", "mp3", "mp4ish",
-                            "unknown", "empty"}
-    feats = byte_histogram_features(payloads).collect()
-    for r in feats:
-        assert len(r.features) == 16
-        assert abs(sum(r.features) - 1.0) < 1e-3
-
-    decoded = decode_image(payloads.limit(10), fake=True).collect()
-    assert len(decoded) == 10
-    for r in decoded:
-        assert (r.width, r.height, r.channels) == (4, 4, 3)
-        assert len(bytes(r.pixels)) == 48
-    # determinism of the fake decode
-    again = {r.id: bytes(r.pixels)
-             for r in decode_image(payloads.limit(10), fake=True).collect()}
-    for r in decoded:
-        assert again[r.id] == bytes(r.pixels)
-
-    frames = sample_frames(payloads.limit(5), every_n=1, fake=True).collect()
-    assert len(frames) >= 5
-
-    # real path on a non-image payload raises cleanly (only PNG has a codec)
+    # a non-image payload raises cleanly
     with pytest.raises(Exception, match="no codec for format"):
-        decode_image(payloads.limit(1), fake=False).collect()
+        decode_image(payloads.limit(1)).collect()
 
 
 def test_text_exprs_match_python_reference(spark):
@@ -313,32 +274,7 @@ def test_simhash_hamming_candidates_match_brute_force(spark):
     sh.unpersist()
 
 
-def test_cosine_neardup_lsh_recall(spark, embeddings):
-    # LSH near-dup pairs vs the exact verifier on planted near-parallel
-    # copies: multi-table hyperplane banding must recover >= 90% of them
-    from sbustreamspot_core_spark.operators.ann import (
-        cosine_neardup_pairs,
-        cosine_neardup_pairs_lsh,
-    )
-    v = embeddings.filter("vec_id < 200").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    planted = v.select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.expr("transform(embedding, x -> x * 2 + 0.015625)").alias("embedding"))
-    u = v.unionByName(planted).cache()
-    exact = {(r.id_a, r.id_b)
-             for r in cosine_neardup_pairs(u, threshold=0.9).collect()}
-    assert len(exact) == 200          # exactly the planted pairs
-    approx = {(r.id_a, r.id_b)
-              for r in cosine_neardup_pairs_lsh(
-                  u, threshold=0.9, n_planes=8, n_tables=4).collect()}
-    assert approx <= exact            # same threshold -> no false positives
-    assert len(approx & exact) / len(exact) >= 0.9
-    u.unpersist()
-
-
 def test_star_reduction_stats_and_plane_sizing(spark):
-    from sbustreamspot_core_spark.operators.ann import recommended_n_planes
     from sbustreamspot_core_spark.operators.dedup import star_reduction_stats
     rows = ([(i, 0, 7) for i in range(30)]               # one bucket of 30
             + [(100 + i, 0, 100 + i) for i in range(10)])  # 10 singletons
@@ -348,10 +284,6 @@ def test_star_reduction_stats_and_plane_sizing(spark):
     assert abs(s.hot_frac - 0.75) < 1e-9
     s2 = star_reduction_stats(banded, ["band_idx", "band_val"], None).first()
     assert (s2.hot_rows, s2.hot_buckets) == (0, 0)
-    # sizing: expected occupancy n / 2^planes <= target, floor of 4 planes
-    assert recommended_n_planes(1_000_000, target_bucket=1024) == 10
-    assert recommended_n_planes(100, target_bucket=1024) == 4
-    assert recommended_n_planes(1 << 40, target_bucket=1) == 40
 
 
 def test_hot_bucket_star_reduction_preserves_clusters(spark):
@@ -458,36 +390,6 @@ def test_hot_bucket_over_default_cap_pair_and_cluster_contract(spark):
     verified.unpersist()
 
 
-def test_resize_images_exact(spark):
-    # nearest-neighbor resize: exact integer sample grid, pinned by hand
-    from sbustreamspot_core_spark.functions.codecs import png_encode
-    from sbustreamspot_core_spark.operators.multimodal import (
-        decode_image,
-        resize_images,
-    )
-    # 4x4 RGB ramp: pixel (y, x) = (y*40, x*40, y*10+x)
-    arr = np.zeros((4, 4, 3), dtype=np.uint8)
-    for y in range(4):
-        for x in range(4):
-            arr[y, x] = (y * 40, x * 40, y * 10 + x)
-    payloads = spark.createDataFrame(
-        [(1, bytearray(png_encode(arr)))], "id long, payload binary")
-    decoded = decode_image(payloads, fake=False)
-    out = resize_images(decoded, out_w=2, out_h=2).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.width, r.height, r.channels) == (2, 2, 3)
-    got = np.frombuffer(bytes(r.pixels), dtype=np.uint8).reshape(2, 2, 3)
-    # src index floor(i * 4 / 2) -> rows/cols [0, 2]
-    assert np.array_equal(got, arr[np.ix_([0, 2], [0, 2])])
-    # upscale roundtrip: 2x2 -> 4x4 repeats each pixel 2x2
-    up = resize_images(
-        resize_images(decoded, out_w=2, out_h=2), out_w=4, out_h=4).collect()[0]
-    gup = np.frombuffer(bytes(up.pixels), dtype=np.uint8).reshape(4, 4, 3)
-    assert np.array_equal(gup, np.kron(got, np.ones((2, 2, 1), dtype=np.uint8))
-                          .astype(np.uint8))
-
-
 def test_incremental_dedup_equals_full_recompute(spark, tmp_ckpt):
     """Cumulative union of per-batch incremental candidates == one full
     minhash_lsh_candidates pass over the whole corpus (batch boundaries
@@ -546,23 +448,6 @@ def test_incremental_dedup_hot_index_bucket_star(spark, tmp_ckpt):
     exact = {(r.id_a, r.id_b) for r in incremental_lsh_candidates(
         idx, new, max_bucket_size=None).collect()}
     assert exact == {(10, 11)} | {(i, n) for i in range(6) for n in (10, 11)}
-
-
-def test_stop_shingle_stats(spark):
-    from sbustreamspot_core_spark.operators.dedup import stop_shingle_stats
-
-    # 5 docs share the prefix "commonx" (its 5-grams hit df=5); each has a
-    # distinct tail
-    docs = spark.createDataFrame(
-        [(i, "commonx" + chr(97 + i) * 6) for i in range(5)],
-        "doc_id long, text string")
-    r = stop_shingle_stats(docs, n=5, max_shingle_freq=3).first()
-    assert r.stop_shingles == 3          # "commo", "ommon", "mmonx" at df=5
-    assert r.dropped_rows == 15
-    assert r.total_rows > r.dropped_rows
-    assert 0 < r.dropped_frac < 1
-    r_off = stop_shingle_stats(docs, n=5, max_shingle_freq=None).first()
-    assert r_off.dropped_rows == 0 and r_off.dropped_frac == 0.0
 
 
 def test_ivf_short_hash_sample_guard(spark):
