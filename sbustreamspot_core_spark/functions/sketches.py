@@ -13,18 +13,21 @@ import numpy as np
 
 
 def pack_sketch(bits: np.ndarray) -> np.ndarray:
-    """(n, L) {0,1} -> (n, L/8) uint8 packed rows."""
+    """(n, L) {0,1} -> (n, ceil(L/8)) uint8 packed rows (the last byte's
+    high bits are 0 when L is not a multiple of 8)."""
     return np.packbits(bits.astype(np.uint8), axis=1, bitorder="little")
 
 
 def unpack_sketch(packed: np.ndarray, L: int) -> np.ndarray:
-    """(n, L/8) uint8 -> (n, L) {0,1}."""
+    """(n, ceil(L/8)) uint8 -> (n, L) {0,1}."""
     return np.unpackbits(packed, axis=1, bitorder="little")[:, :L]
 
 
 def sketch_bytes_to_bits(col, L: int) -> np.ndarray:
-    """Column of Python ``bytes`` (length L/8) -> (n, L) uint8 bit matrix."""
-    arr = np.frombuffer(b"".join(col), dtype=np.uint8).reshape(len(col), L // 8)
+    """Column of Python ``bytes`` (length ceil(L/8)) -> (n, L) uint8 bit
+    matrix."""
+    arr = np.frombuffer(b"".join(col), dtype=np.uint8).reshape(
+        len(col), -(-L // 8))
     return unpack_sketch(arr, L)
 
 

@@ -19,7 +19,12 @@ Scale design (100 TB / 10^12-edge mindset, tested at local scale):
 - Dangling mass and the convergence delta are aggregates of the SAME single
   metrics action per superstep (one driver barrier, run by the
   SuperstepDriver); superstep k+1 reads its dangling sum from superstep k's
-  metrics, so only the first superstep of a run seeds it with an action.
+  metrics.  A fresh run's first superstep takes it from init's one action,
+  which counts the vertices and the dangling ones together (every starting
+  rank is 1/N); a resumed run's from the checkpoint's recorded metrics.
+- Init's action runs under ``iterative_conf`` like the supersteps, so a
+  fresh run is 2 + k + c Spark jobs: the heavy-hub broadcast, the init
+  action, k supersteps and c checkpoint writes.
 - Every superstep's plan has the size of the first: state and adjacency
   are partition-keeping ``local_leaf`` scans (graph/superstep.py); the
   SuperstepDriver's parquet checkpoints are write-only resume points.
@@ -33,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import GraphParams
-from .superstep import SuperstepDriver, local_leaf, release
+from .superstep import SuperstepDriver, iterative_conf, local_leaf, release
 
 
 @dataclass
@@ -124,26 +129,23 @@ def pagerank(spark: SparkSession, edges: DataFrame,
     # groupBy rides the adjacency's src partitioning (no exchange)
     degs = links.groupBy(F.col("src").alias("id")).agg(
         F.first("deg").alias("deg"))
-    n = nodes.count()          # also fills the links leaf
+    with_deg = nodes.join(degs.hint("shuffle_hash"), "id", "left")
+    # one action, also fills the links leaf: the vertices, and the dangling
+    # ones (no out-degree), whose mass seeds a fresh run's first superstep
+    with iterative_conf(spark, params.num_partitions):
+        n, n_dangling = with_deg.agg(
+            F.count("*"), F.count_if(F.col("deg").isNull())).first()
     release(e)
     # state schema: (id, rank, deg); deg = out-degree (0 => dangling)
-    ranks0 = (
-        nodes.join(degs.hint("shuffle_hash"), "id", "left")
-        .select("id", F.lit(1.0 / n).alias("rank"),
-                F.coalesce("deg", F.lit(0)).alias("deg"))
-    )
+    ranks0 = with_deg.select("id", F.lit(1.0 / n).alias("rank"),
+                             F.coalesce("deg", F.lit(0)).alias("deg"))
     d = params.damping
     targets_only = links.select("src", "targets")  # deg already in state
 
     def step(state: DataFrame, k: int, prev: dict | None):
-        if prev is None:
-            # first superstep of a fresh or resumed run: seed the dangling
-            # mass from the starting state; later supersteps read the sum
-            # the previous superstep's metrics action produced
-            dangling = state.filter("deg = 0").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0))).first()[0]
-        else:
-            dangling = prev["dangling"]
+        # the previous superstep's dangling sum; on a resumed run the
+        # checkpoint's, so prev is None only on a fresh run's first step
+        dangling = n_dangling / n if prev is None else prev["dangling"]
         # shuffle_hash hints: both joins are co-partitioned on the vertex
         # key, so a hash join per partition needs no exchange and no sort
         contribs = (

@@ -7,11 +7,21 @@ write-only resume points (north rule: "every superstep checkpoints
 per-partition lineage and delta metrics ... so runs resume mid-iteration").
 Layout under ``checkpoint_dir``:
     superstep=<k>/data/           parquet state snapshot
-    superstep=<k>/lineage.json    per-partition rows + superstep metrics
+    superstep=<k>/lineage.json    per-partition rows, superstep metrics and
+                                  the snapshot's schema
     superstep=<k>/_COMPLETE       commit marker (written last)
+
+The per-partition rows come from the files just written, not from another
+Spark job: the state leaf is written without a shuffle, so ``part-<p>`` holds
+the rows of the state's partition ``p``, and its parquet footer has their
+count.  A checkpoint costs exactly one Spark job, the write.
 
 Resume scans for the highest complete superstep and restarts the loop there;
 a run whose last checkpoint converged returns that state without a superstep.
+The snapshot is read with the schema ``lineage.json`` recorded (no
+schema-inference job), and the checkpoint's recorded metrics are the
+resumed loop's ``prev_metrics``, so a resumed superstep sees what the
+straight run's did.
 Trade-off: a leaf's blocks cannot be recomputed, so a job that loses an
 executor fails; rerun with ``resume=True`` to restart from the last parquet
 checkpoint (superstep 0 without a checkpoint dir).
@@ -29,14 +39,16 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
 from contextlib import contextmanager
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import GraphParams
 from ..session import local_table
@@ -44,16 +56,20 @@ from ..session import local_table
 
 @contextmanager
 def iterative_conf(spark: SparkSession, num_partitions: int):
-    """Per-superstep stages are short and co-partitioned; AQE's runtime
-    re-planning adds latency to every stage and its partition coalescing
-    breaks co-partition reuse between supersteps, and per-superstep broadcast
-    rebuilds (collect to driver) dwarf the join they replace.  Disable both
-    for the duration of an iterative job, restore after.  So are runtime
-    bloom filters: a leaf's size estimate comes from the plan it stores, so
-    the optimizer would add a filter-building job (and a 1 MB task binary)
-    to every superstep.  Shuffles use the state's ``num_partitions``, or
-    every message aggregation re-shuffles the state to
-    ``spark.sql.shuffle.partitions``."""
+    """Static plans for a graph algorithm's actions: the superstep loop,
+    PageRank's init action and ``triangle_count``'s one ``collect``.
+
+    Their stages are short and co-partitioned; AQE's runtime re-planning
+    adds latency to every stage and runs every query stage as a Spark job
+    of its own (an 18-job ``triangle_count``), its partition coalescing
+    breaks co-partition reuse between supersteps, and per-superstep
+    broadcast rebuilds (collect to driver) dwarf the join they replace.
+    Disable both for the duration of the action(s), restore after, so each
+    action is one job.  So are runtime bloom filters: a leaf's size
+    estimate comes from the plan it stores, so the optimizer would add a
+    filter-building job (and a 1 MB task binary) to every superstep.
+    Shuffles use the state's ``num_partitions``, or every message
+    aggregation re-shuffles the state to ``spark.sql.shuffle.partitions``."""
     conf = spark.conf
     loop = {"spark.sql.adaptive.enabled": "false",
             "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -94,13 +110,24 @@ class SuperstepResult:
     resumed_from: int | None = None
 
 
-def _partition_lineage(df: DataFrame) -> list[dict]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    )
-    return [{"partition_id": r.partition_id, "rows": r.rows} for r in rows]
+_PART_FILE = re.compile(r"part-(\d+)-")
+
+
+def _partition_lineage(data_dir: str) -> list[dict]:
+    """Rows per state partition of a snapshot just written from the state
+    leaf with no shuffle: the row counts of the ``part-<partition>`` files'
+    parquet footers (read on the driver, no Spark job).  Empty partitions
+    are omitted, as Spark writes no file for them (or an empty one for
+    partition 0)."""
+    rows: dict[int, int] = {}
+    for name in os.listdir(data_dir):
+        m = _PART_FILE.match(name)
+        if m:
+            p = int(m.group(1))
+            rows[p] = rows.get(p, 0) + pq.ParquetFile(
+                os.path.join(data_dir, name)).metadata.num_rows
+    return [{"partition_id": p, "rows": n}
+            for p, n in sorted(rows.items()) if n]
 
 
 class SuperstepDriver:
@@ -109,8 +136,11 @@ class SuperstepDriver:
     step_fn(state_df, superstep, prev_metrics) -> (plan, aggs): ``plan`` is
     the new state, ``aggs`` maps metric names to aggregate Columns over it
     and must include a boolean ``converged``.  ``prev_metrics`` is the
-    previous superstep's metrics dict, ``None`` on the first superstep of a
-    fresh or resumed run.  Every metric is recorded into the lineage file.
+    previous superstep's metrics dict (``superstep`` plus every metric);
+    on the first superstep of a resumed run it is the one the checkpoint
+    recorded in ``lineage.json``, so it is ``None`` only on the first
+    superstep of a fresh run.  Every metric is recorded into the lineage
+    file.
     States are keyed by ``id`` (PageRank, CC and LPA all are): a resumed
     parquet snapshot is hash-partitioned on ``id`` at ``num_partitions``
     before the loop, as a straight run's state is.
@@ -153,13 +183,15 @@ class SuperstepDriver:
 
     def _checkpoint(self, state: DataFrame, k: int, metrics: dict) -> None:
         d = self._step_dir(k)
-        state.write.mode("overwrite").parquet(os.path.join(d, "data"))
-        parts = _partition_lineage(state)
+        data = os.path.join(d, "data")
+        state.write.mode("overwrite").parquet(data)
+        parts = _partition_lineage(data)
         lineage = {
             "superstep": k,
             "wall_time": time.time(),
             "metrics": dict(metrics),
             "partitions": parts,
+            "schema": state.schema.json(),
         }
         with open(os.path.join(d, "lineage.json"), "w") as f:
             json.dump(lineage, f)
@@ -215,21 +247,25 @@ class SuperstepDriver:
                 with open(run_id_file, "w") as f:
                     f.write(self._run_id)
         last = self.last_complete_superstep() if resume else None
-        done = False
+        prev_metrics = None
         if last is not None:
             with open(os.path.join(self._step_dir(last), "lineage.json")) as f:
-                done = json.load(f)["metrics"]["converged"]
-            initial_state = self.spark.read.parquet(
+                lineage = json.load(f)
+            prev_metrics = {"superstep": last, **lineage["metrics"]}
+            reader = self.spark.read
+            if "schema" in lineage:   # older checkpoints: inferred
+                reader = reader.schema(
+                    StructType.fromJson(json.loads(lineage["schema"])))
+            initial_state = reader.parquet(
                 os.path.join(self._step_dir(last), "data")
             ).repartition(self.num_partitions, "id")
             start_k = last + 1
             resumed_from = last
         state = local_leaf(initial_state, self.num_partitions)
-        if done:
+        if prev_metrics is not None and prev_metrics["converged"]:
             return SuperstepResult(state, start_k, True, [], resumed_from)
 
         all_metrics: list[dict] = []
-        prev_metrics = None
         converged = False
         k = start_k - 1
         with iterative_conf(self.spark, self.num_partitions):

@@ -18,6 +18,12 @@ only decides WHERE each triangle is found — and duplicate edges perturb
 degrees roughly uniformly, preserving the sqrt(E) fan-out bound while
 skipping a full dedup shuffle.  Edge dedup itself happens inside the
 adjacency aggregation (collect_set), not as a separate exchange.
+
+``triangle_count``'s one ``collect`` is planned statically under
+``graph/superstep.py:iterative_conf`` (AQE and auto-broadcast off, shuffles
+at ``num_partitions``): one Spark job, where AQE ran each of its query
+stages as a job of its own.  ``triangle_count_per_vertex`` returns a lazy
+DataFrame and is planned by whatever conf its caller's action runs under.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import GraphParams
+from .superstep import iterative_conf
 
 
 def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
@@ -37,8 +44,9 @@ def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
     (edge (a,c) sees no common target since c's out-set misses b, and edge
     (b,c) would need b->w AND c->w).
 
-    Exchange budget (the former plan paid five): one skinny degree
-    aggregation (map-side combined, broadcast onto the edge stream), ONE
+    Exchanges: one skinny degree aggregation (map-side combined), joined
+    onto the edge stream (under ``triangle_count``'s static plan by two
+    shuffle joins, which re-key the edge stream by u and then by v), ONE
     exchange of the oriented multiset building the deduped adjacency sets,
     and one exchange re-keying the edge stream for the second adjacency
     probe.  The edge side is re-derived by exploding the adjacency —
@@ -58,11 +66,10 @@ def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
     )
     d_u = deg.select(F.col("id").alias("u"), F.col("deg").alias("deg_u"))
     d_v = deg.select(F.col("id").alias("v"), F.col("deg").alias("deg_v"))
-    # plain equi-joins on purpose: AQE picks broadcast at runtime from the
-    # MEASURED size of the degree aggregate (~3 MB at bench scale) and falls
-    # back to shuffle joins when the vertex set is genuinely large — an
-    # explicit broadcast of an O(V) table would not survive 100 TB, and
-    # explicit shuffle_hash hints measured slower here (exp9, r7 notes)
+    # plain equi-joins, no broadcast hint: the degree table is O(V), which
+    # an explicit broadcast would not survive at 100 TB.  triangle_count
+    # plans them as shuffle joins; a triangle_count_per_vertex caller with
+    # AQE on may still get a runtime broadcast of the measured aggregate
     with_deg = und.join(d_u, "u").join(d_v, "v")
     lo_first = (F.col("deg_u") < F.col("deg_v")) | (
         (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v")))
@@ -70,8 +77,8 @@ def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
         F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("lo"),
         F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("hi"),
     )
-    # collect_set dedups duplicate input edges inside the aggregation (the
-    # only full-width exchange), and exploding it back yields the distinct
+    # collect_set dedups duplicate input edges inside the aggregation (no
+    # separate dedup exchange), and exploding it back yields the distinct
     # oriented edge list already partitioned by u for the first probe
     adj = oriented.groupBy("lo").agg(F.collect_set("hi").alias("nbrs"))
     e = adj.select(F.col("lo").alias("u"), F.explode("nbrs").alias("v"))
@@ -92,10 +99,12 @@ def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
 
 def triangle_count(spark: SparkSession, edges: DataFrame,
                    params: GraphParams = GraphParams()) -> int:
-    """Global triangle count of the simple undirected graph."""
-    n = (_edge_common_out_neighbors(edges)
-         .agg(F.coalesce(F.sum(F.size("w")), F.lit(0)).cast("long"))
-         .collect()[0][0])
+    """Global triangle count of the simple undirected graph, in one
+    statically planned Spark job."""
+    with iterative_conf(spark, params.num_partitions):
+        n = (_edge_common_out_neighbors(edges)
+             .agg(F.coalesce(F.sum(F.size("w")), F.lit(0)).cast("long"))
+             .collect()[0][0])
     return int(n)
 
 

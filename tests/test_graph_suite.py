@@ -4,8 +4,14 @@ North-rule criteria: PageRank per-vertex allclose(1e-6); CC / LPA / triangles
 exact; resumable checkpoints; deterministic across parallelism.
 """
 
+import json
+import os
+import shutil
+import uuid
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.config import GraphParams
 from sbustreamspot_core_spark.graph.components import connected_components
@@ -85,8 +91,6 @@ def test_pagerank_checkpoint_resume(spark, edges, tmp_ckpt):
 
     # simulate a crash: delete every checkpoint after the first complete one,
     # then resume — final ranks must be identical
-    import os
-    import shutil
     steps = sorted(
         int(d.split("=")[1]) for d in os.listdir(tmp_ckpt) if d.startswith("superstep="))
     assert len(steps) >= 2
@@ -101,10 +105,8 @@ def test_pagerank_checkpoint_resume(spark, edges, tmp_ckpt):
 @pytest.mark.parametrize("algo", ["components", "labels"])
 def test_cc_and_lpa_checkpoint_resume(spark, edges, tmp_ckpt, algo):
     """Drop the highest checkpoint and resume: the first resumed superstep
-    runs with no previous metrics, and labels and superstep count match
-    the uninterrupted run."""
-    import os
-    import shutil
+    runs with the checkpoint's recorded metrics as its previous metrics,
+    and labels and superstep count match the uninterrupted run."""
     _, df = edges
     params = GraphParams(num_partitions=8, checkpoint_interval=2,
                          max_iters=15, lpa_max_iters=6)
@@ -131,7 +133,6 @@ def test_resume_after_converged_checkpoint_runs_no_superstep(
         spark, edges, tmp_ckpt, algo):
     """The last checkpoint of a converged run is the answer: resuming from
     it returns the same state and superstep count and writes nothing."""
-    import os
     _, df = edges
     if algo == "ranks":
         def run(resume):
@@ -281,3 +282,89 @@ def test_superstep_releases_replaced_states(spark):
     assert final.id() in after
     assert len(after - before) <= 2
     assert str(warnings.toString()) == ""
+
+
+def jobs_of(spark, fn):
+    """``(fn(), the number of Spark jobs fn ran)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_triangle_count_runs_one_job(spark, edges):
+    e, df = edges
+    df.count()
+    tri, jobs = jobs_of(spark, lambda: triangle_count(spark, df, PARAMS))
+    assert (tri, jobs) == (triangle_count_oracle(e), 1)
+
+
+def test_pagerank_runs_one_job_per_action(spark, edges, tmp_ckpt):
+    """A fresh PageRank of k supersteps and c checkpoints is 2 + k + c
+    jobs (heavy-hub broadcast, init action, supersteps, checkpoint
+    writes): no dangling-seed action and no lineage job.  A resume adds no
+    schema-inference job, unless the checkpoint predates the recorded
+    schema."""
+    _, df = edges
+    df.count()
+    params = GraphParams(num_partitions=8, checkpoint_interval=2,
+                         max_iters=4, tol=0.0)
+
+    def run(resume):
+        return pagerank(spark, df, params, checkpoint_dir=tmp_ckpt,
+                        resume=resume)
+
+    full, jobs = jobs_of(spark, lambda: run(False))
+    assert (full.supersteps, jobs) == (4, 2 + 4 + 2)
+    expect = {r.id: r.rank for r in full.ranks.collect()}
+
+    last = os.path.join(tmp_ckpt, "superstep=3")
+    lineage_file = os.path.join(tmp_ckpt, "superstep=1", "lineage.json")
+    for schema_recorded, extra_jobs in ((True, 0), (False, 1)):
+        if not schema_recorded:
+            with open(lineage_file) as f:
+                lineage = json.load(f)
+            del lineage["schema"]
+            with open(lineage_file, "w") as f:
+                json.dump(lineage, f)
+        shutil.rmtree(last)
+        resumed, jobs = jobs_of(spark, lambda: run(True))
+        # supersteps 2 and 3, one checkpoint (superstep=3)
+        assert (resumed.metrics[0]["superstep"], resumed.supersteps) == (2, 4)
+        assert jobs == 2 + 2 + 1 + extra_jobs
+        got = {r.id: r.rank for r in resumed.ranks.collect()}
+        assert got.keys() == expect.keys()
+        for node, r in expect.items():
+            assert got[node] == pytest.approx(r, abs=1e-12), node
+
+
+@pytest.mark.parametrize("graph", ["hub", "tiny"])
+def test_checkpoint_lineage_matches_state_partitions(spark, edges, tmp_ckpt,
+                                                     graph):
+    """The lineage of a checkpoint is the returned state's rows per
+    partition, empty partitions omitted, summing to the snapshot's rows;
+    the tiny graph leaves most of the 8 partitions empty."""
+    df = (edges[1] if graph == "hub" else
+          spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long"))
+    params = GraphParams(num_partitions=8, checkpoint_interval=3,
+                         max_iters=6, tol=0.0)
+    res = pagerank(spark, df, params, checkpoint_dir=tmp_ckpt)
+    assert res.supersteps == 6
+    last = os.path.join(tmp_ckpt, "superstep=5")
+    with open(os.path.join(last, "lineage.json")) as f:
+        lineage = json.load(f)
+    counted = (res.ranks
+               .groupBy(F.spark_partition_id().alias("partition_id"))
+               .agg(F.count("*").alias("rows")).collect())
+    assert (sorted((p["partition_id"], p["rows"])
+                   for p in lineage["partitions"])
+            == sorted((r.partition_id, r.rows) for r in counted))
+    assert all(p["rows"] > 0 for p in lineage["partitions"])
+    assert (sum(p["rows"] for p in lineage["partitions"])
+            == spark.read.parquet(os.path.join(last, "data")).count())

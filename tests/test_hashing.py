@@ -15,6 +15,7 @@ from sbustreamspot_core_spark.functions.sketches import (
     band_values,
     pack_sketch,
     sketch_bytes_to_bits,
+    sketch_similarity_series,
     streamhash_similarity_bits,
     unpack_sketch,
 )
@@ -95,6 +96,25 @@ def test_pack_unpack_roundtrip():
     assert np.array_equal(unpack_sketch(packed, 1000), bits)
     raw = [bytes(packed[i]) for i in range(5)]
     assert np.array_equal(sketch_bytes_to_bits(raw, 1000), bits)
+
+
+def test_pack_unpack_roundtrip_when_L_is_not_a_multiple_of_8():
+    """L=100 packs into 13 bytes; unpacking and the pairwise similarity
+    kernel read all 13."""
+    import pandas as pd
+    rng = np.random.default_rng(11)
+    bits = rng.integers(0, 2, size=(4, 100)).astype(np.uint8)
+    packed = pack_sketch(bits)
+    assert packed.shape == (4, 13)
+    assert np.array_equal(unpack_sketch(packed, 100), bits)
+    raw = [bytes(packed[i]) for i in range(4)]
+    assert np.array_equal(sketch_bytes_to_bits(raw, 100), bits)
+    sim = sketch_similarity_series(pd.Series(raw[:2]), pd.Series(raw[2:]),
+                                   L=100)
+    assert sim.tolist() == pytest.approx(
+        streamhash_similarity_bits(bits[:2], bits[2:], 100).tolist())
+    assert sim.tolist() == pytest.approx(
+        [1 - (bits[i] != bits[i + 2]).sum() / 100 for i in range(2)])
 
 
 def test_band_values_match_bit_slices():

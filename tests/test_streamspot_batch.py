@@ -9,7 +9,6 @@ import pytest
 from sbustreamspot_core_spark.config import ANOMALY, StreamSpotParams
 from sbustreamspot_core_spark.functions.sketches import (
     sketch_bytes_to_bits,
-    unpack_sketch,
 )
 from sbustreamspot_core_spark.operators.clustering import (
     assign_clusters,
@@ -303,8 +302,7 @@ def _assert_simhash_matches_oracle(cc, graphs, params):
             dense[idx[c]] = cnt
         proj = rv.astype(np.int64) @ dense
         assert sk[gid].projection == proj.tolist(), gid
-        packed = np.frombuffer(bytes(sk[gid].sketch), dtype=np.uint8)
-        bits = unpack_sketch(packed[None, :], params.L)[0]
+        bits = sketch_bytes_to_bits([bytes(sk[gid].sketch)], params.L)[0]
         assert bits.tolist() == [(1 if p >= 0 else 0) for p in proj], gid
     return sk
 
