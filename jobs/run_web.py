@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
 from sbustreamspot_core_spark.graph.pagerank import pagerank
 from sbustreamspot_core_spark.pipeline import (
+    SIMILARITY_PRUNE_CAP,
     encode_url_ids,
     extract_link_edges,
     host_anomaly_pipeline,
@@ -72,7 +73,7 @@ def main() -> None:
     # (raise --sketch-bits / --bands before trusting pair-level output)
     from sbustreamspot_core_spark.operators.dedup import star_reduction_stats
     stats = star_reduction_stats(res["bands"], ["band_idx", "band_val"],
-                                 res["similarity_prune_cap"]).first()
+                                 SIMILARITY_PRUNE_CAP).first()
     summary["band_rows"] = stats["total_rows"]
     summary["star_hot_buckets"] = stats["hot_buckets"]
     summary["star_hot_frac"] = round(stats["hot_frac"] or 0.0, 6)

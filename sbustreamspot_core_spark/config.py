@@ -17,7 +17,9 @@ class StreamSpotParams:
     Reference: param.h:13-20 (K, B, R, L, SEED, CLUSTER_UPDATE_INTERVAL),
     main.cpp:96-111 (chunk_length, max_num_edges CLI args; the reference's
     ``par`` has no counterpart, the replay interleave is fixed, DEVIATIONS 3).
-    ``L`` must equal ``B * R`` (param.h:18 comment).
+    ``L`` must equal ``B * R`` (param.h:18 comment).  K has no field: the
+    shingle is fixed at K=1 (operators/shingles.py), as the reference
+    asserts (main.cpp:149).
 
     Note: the reference's compiled constants are B=100, R=20, L=1000, which
     violates its own L == B*R comment — ``hash_bands`` (cluster.cpp:29-34)
@@ -27,7 +29,6 @@ class StreamSpotParams:
     """
 
     chunk_length: int = 10          # C; README.md quickstart uses C=10
-    k_hops: int = 1                 # K; reference asserts K==1 (main.cpp:149)
     L: int = 1000                   # sketch bits
     B: int = 50                     # LSH bands (see note above)
     R: int = 20                     # bits per band
@@ -38,8 +39,6 @@ class StreamSpotParams:
     def __post_init__(self) -> None:
         if self.L != self.B * self.R:
             raise ValueError(f"L ({self.L}) must equal B*R ({self.B * self.R})")
-        if self.k_hops != 1:
-            raise ValueError("only K=1 is supported (reference main.cpp:149)")
 
 
 @dataclass(frozen=True)
@@ -54,7 +53,6 @@ class GraphParams:
     # checkpoints (the resume points); plan size does not depend on it
     num_partitions: int = 32        # partitions of the iterative state,
     # adjacency and every superstep shuffle
-    csr_block_size: int = 4096      # max out-edges per adjacency block row (skew cap)
     small_graph_threshold: int = 0  # undirected-edge count at or below which
     # connected_components switches to a single-action driver union-find
     # (identical min-id labels, equality pytest-pinned).  0 = always

@@ -7,7 +7,7 @@ power iteration with damping ``d`` and dangling-mass redistribution:
 
 Scale design (100 TB / 10^12-edge mindset, tested at local scale):
 - Adjacency is built ONCE into CSR-style blocks: (src, deg, targets[]) rows,
-  with heavy out-degree vertices split into blocks of ``csr_block_size``
+  with heavy out-degree vertices split into blocks of ``CSR_BLOCK_SIZE``
   targets (out-degree skew cap: one mega-hub's fan-out is spread over many
   rows/partitions instead of one giant task).
 - Per superstep there is exactly ONE shuffle: explode contributions and
@@ -38,7 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import GraphParams
+from ..session import local_table
 from .superstep import SuperstepDriver, iterative_conf, local_leaf, release
+
+# max out-edges per adjacency block row (the out-degree skew cap)
+CSR_BLOCK_SIZE = 4096
 
 
 @dataclass
@@ -63,10 +67,10 @@ def prepared_edges(edges: DataFrame, params: GraphParams) -> DataFrame:
             .repartition(params.num_partitions, "src").distinct())
 
 
-def build_links(edges: DataFrame, params: GraphParams,
-                prepared: DataFrame | None = None) -> DataFrame:
-    """CSR-blocked adjacency: (src, deg, targets array<long>) with ~
-    ``csr_block_size`` targets per block; ``deg`` is the full out-degree.
+def build_links(e: DataFrame) -> DataFrame:
+    """CSR-blocked adjacency of the ``prepared_edges`` table ``e``:
+    (src, deg, targets array<long>) with ~``CSR_BLOCK_SIZE`` targets per
+    block; ``deg`` is the full out-degree.
 
     Blocking happens BEFORE the list aggregation: heavy sources (out-degree >
     block size — a tiny, broadcastable set even on power-law web graphs) get a
@@ -74,13 +78,10 @@ def build_links(edges: DataFrame, params: GraphParams,
     holds more than ~one block of targets and a 10^8-out-degree mega-hub is
     spread across many groups/partitions instead of one giant task buffer.
     Light sources skip the join entirely (one block, deg = size(targets)).
-
-    ``prepared`` (optional): the ``prepared_edges`` table, when the caller
-    shares it across init steps (pagerank caches it); everything below it
-    is exchange-free and the output stays partitioned by src.
+    Everything here is exchange-free, so the output stays partitioned by
+    src.
     """
-    bs = params.csr_block_size
-    e = prepared if prepared is not None else prepared_edges(edges, params)
+    bs = CSR_BLOCK_SIZE
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     heavy = deg.filter(F.col("deg") > bs)          # O(#hubs) rows: broadcast
     e2 = e.join(F.broadcast(heavy), "src", "left")
@@ -102,7 +103,8 @@ def pagerank(spark: SparkSession, edges: DataFrame,
              checkpoint_dir: str | None = None,
              resume: bool = True,
              lineage_table: str | None = None) -> PageRankResult:
-    """edges: (src long, dst long).  Returns per-vertex ranks summing to 1.
+    """edges: (src long, dst long).  Returns per-vertex ranks summing to 1
+    (no ranks and 0 supersteps when there are no edges).
 
     Round-7 init: raw ``edges`` is scanned ONCE (one repartition exchange,
     then the dedup/degree/block aggregations all ride that partitioning —
@@ -116,8 +118,7 @@ def pagerank(spark: SparkSession, edges: DataFrame,
     # same materialized table instead of re-running the repartition+distinct
     # chain (the executed init plan otherwise carries two copies of it)
     e = local_leaf(prepared_edges(edges, params), params.num_partitions)
-    links = local_leaf(build_links(edges, params, prepared=e),
-                       params.num_partitions)
+    links = local_leaf(build_links(e), params.num_partitions)
     nodes = (
         links.select(F.col("src").alias("id"))
         .unionByName(links.select(F.explode("targets").alias("id")))
@@ -136,6 +137,10 @@ def pagerank(spark: SparkSession, edges: DataFrame,
         n, n_dangling = with_deg.agg(
             F.count("*"), F.count_if(F.col("deg").isNull())).first()
     release(e)
+    if n == 0:                  # no vertices: nothing to rank, no 1/N
+        release(links)
+        return PageRankResult(
+            local_table(spark, [], "id long, rank double"), 0, True, [])
     # state schema: (id, rank, deg); deg = out-degree (0 => dangling)
     ranks0 = with_deg.select("id", F.lit(1.0 / n).alias("rank"),
                              F.coalesce("deg", F.lit(0)).alias("deg"))

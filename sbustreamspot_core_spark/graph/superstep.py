@@ -140,7 +140,8 @@ class SuperstepDriver:
     on the first superstep of a resumed run it is the one the checkpoint
     recorded in ``lineage.json``, so it is ``None`` only on the first
     superstep of a fresh run.  Every metric is recorded into the lineage
-    file.
+    file.  An empty state has converged: its ``converged`` aggregate is
+    NULL, as every aggregate over zero rows is, and reads as True.
     States are keyed by ``id`` (PageRank, CC and LPA all are): a resumed
     parquet snapshot is hash-partitioned on ``id`` at ``num_partitions``
     before the loop, as a straight run's state is.
@@ -276,6 +277,9 @@ class SuperstepDriver:
                 # one action: every metric, and it fills the new leaf
                 metrics = new_state.agg(
                     *[c.alias(m) for m, c in aggs.items()]).first().asDict()
+                # NULL over zero rows: an empty state has converged
+                if metrics["converged"] is None:
+                    metrics["converged"] = True
                 metrics["step_sec"] = round(time.time() - t0, 3)
                 t0 = time.time()
                 if self.checkpoint_dir is not None and (

@@ -107,37 +107,29 @@ def char_shingles(docs: DataFrame, n: int = 5, id_col: str = "doc_id",
     return out.distinct() if distinct else out
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 5, threshold: float = 0.0,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        max_shingle_freq: int | None = None) -> DataFrame:
-    """(id_a < id_b, jaccard) for pairs sharing >= 1 n-gram, above threshold.
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 5,
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
+    """(id_a < id_b, jaccard) for every pair sharing >= 1 n-gram (exact).
 
     Sparse set-similarity join: sizes via groupBy, intersections via
     self-equi-join on the shingle key.
 
     Scale note: a shingle occurring in f docs contributes f^2/2 join rows, so
-    ubiquitous n-grams blow up quadratically.  ``max_shingle_freq`` drops
-    shingles above that document frequency from the *intersection* side (the
-    standard stop-shingle cut; sizes stay exact, so the result is a slight
-    underestimate for pairs whose only overlap is stop-shingles — exact when
-    None, which is the tested/oracled default).
+    ubiquitous n-grams blow up quadratically; the banded MinHash path
+    (``minhash_lsh_candidates``) is the one for large corpora.
     """
     sh = char_shingles(docs, n, id_col, text_col)
-    join_sh = sh
-    if max_shingle_freq is not None:
-        hot = (sh.groupBy("shingle").agg(F.count("*").alias("df"))
-               .filter(F.col("df") > max_shingle_freq).select("shingle"))
-        join_sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a = join_sh.select(F.col("id").alias("id_a"), "shingle")
-    b = join_sh.select(F.col("id").alias("id_b"), "shingle")
+    a = sh.select(F.col("id").alias("id_a"), "shingle")
+    b = sh.select(F.col("id").alias("id_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
-    out = (
+    return (
         inter
         .join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
         .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
@@ -146,9 +138,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 5, threshold: float = 0.0,
             (F.col("inter") /
              (F.col("sz_a") + F.col("sz_b") - F.col("inter"))).alias("jaccard"))
     )
-    if threshold > 0:
-        out = out.filter(F.col("jaccard") >= threshold)
-    return out
 
 
 def _minhash_batches(batches, *, k, c, Ac, Bc):

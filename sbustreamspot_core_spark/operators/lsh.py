@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 
 
 def candidate_pairs(bands: DataFrame,
-                    max_bucket_size: int | None = None,
-                    distinct: bool = True) -> DataFrame:
+                    max_bucket_size: int | None = None) -> DataFrame:
     """Distinct (gid_a < gid_b) pairs sharing any (band_idx, band_val) bucket.
 
     Default max_bucket_size=None: this is the reference-parity relation
@@ -37,13 +36,10 @@ def candidate_pairs(bands: DataFrame,
     from .dedup import banded_self_join_pairs
     return banded_self_join_pairs(bands, ["band_idx", "band_val"],
                                   id_col="gid", max_bucket_size=max_bucket_size,
-                                  out_a="gid_a", out_b="gid_b",
-                                  distinct=distinct)
+                                  out_a="gid_a", out_b="gid_b")
 
 
-def bucket_star_edges(bands: DataFrame,
-                      bucket_cols: list | None = None,
-                      id_col: str = "gid") -> DataFrame:
+def bucket_star_edges(bands: DataFrame) -> DataFrame:
     """(src, dst) star edges per bucket: every member linked to its
     bucket's min id — the connectivity-exact O(rows) pair graph for CC.
 
@@ -58,11 +54,11 @@ def bucket_star_edges(bands: DataFrame,
     unlike the capped self-join, whose hot-key broadcast assumes hot
     buckets are rare.  This is also Hash-Min's own first superstep
     collapsed into the graph construction."""
-    cols = bucket_cols or ["band_idx", "band_val"]
-    hub = bands.groupBy(*cols).agg(F.min(id_col).alias("src"))
+    cols = ["band_idx", "band_val"]
+    hub = bands.groupBy(*cols).agg(F.min("gid").alias("src"))
     return (bands.join(hub, cols)
-            .filter(F.col(id_col) != F.col("src"))
-            .select("src", F.col(id_col).alias("dst"))
+            .filter(F.col("gid") != F.col("src"))
+            .select("src", F.col("gid").alias("dst"))
             .distinct())
 
 

@@ -19,6 +19,14 @@ from .operators.shingles import build_adjacency, build_chunk_counts, build_shing
 from .operators.similarity import all_pairs_sketch_similarity
 from .operators.sketch import build_sketches, sketch_bands
 
+# Cap of the similarity prune's bucket self-join.  It is load-bearing at
+# scale: a band bucket holding B near-identical hosts would otherwise force
+# one task to emit B^2/2 pairs (a same-key self-join AQE cannot split).
+# Above the cap, the similarities table contains the star-reduced pair
+# subset — every member appears, but member-member pairs of a hot bucket
+# surface only through lsh_clusters (which is cluster-exact).
+SIMILARITY_PRUNE_CAP = 10_000
+
 
 def extract_link_edges(pages: DataFrame) -> DataFrame:
     """(src_url, dst_url, warc_ts, link_pos) href edge table (S6)."""
@@ -39,24 +47,20 @@ def host_of(col):
     return F.parse_url(col, F.lit("HOST"))
 
 
-def encode_url_ids(edges: DataFrame, deterministic: bool = False,
+def encode_url_ids(edges: DataFrame,
                    assume_non_null: bool = False) -> DataFrame:
     """Encode urls to long ids (src, dst, src_url, dst_url).
 
-    The default (deterministic=False) uses xxhash64(url): a pure column
-    expression — NO url dictionary, NO distinct, NO joins, zero shuffles —
-    run-to-run stable, and the only sane choice at 10^9+ urls (a 64-bit
-    collision is acceptable, p ~ n^2/2^65; building a distinct-url id table
-    just to join it back would add three full-corpus shuffles).
-    deterministic=True assigns contiguous ids by sorted url (row_number
-    over a single-partition global sort — a deliberate scale-killer kept
-    ONLY for exact-match tests that need dense ids).
+    Ids are xxhash64(url): a pure column expression — NO url dictionary,
+    NO distinct, NO joins, zero shuffles — run-to-run stable, and the only
+    sane choice at 10^9+ urls (a 64-bit collision is acceptable,
+    p ~ n^2/2^65; building a distinct-url id table just to join it back
+    would add three full-corpus shuffles).
 
-    Null urls are dropped in BOTH paths: the dictionary path drops them
-    via its inner joins, and without the explicit filter the hash path
-    would map every null to xxhash64(NULL) = the seed constant — one
-    phantom mega-hub absorbing all null rows in downstream graphs.
-    ``assume_non_null=True`` skips the hash path's filter when the CALLER
+    Null urls are dropped: without the explicit filter every null would
+    map to xxhash64(NULL) = the seed constant — one phantom mega-hub
+    absorbing all null rows in downstream graphs.
+    ``assume_non_null=True`` skips the filter when the CALLER
     guarantees non-null urls (e.g. urls built by concat of non-null parts,
     as in the href-extraction pipeline).  The guarantee matters for more
     than the predicate's own cost: constraint inference propagates
@@ -64,52 +68,29 @@ def encode_url_ids(edges: DataFrame, deterministic: bool = False,
     Filter stages below the Arrow-UDF extraction and after the href
     explode — measured ~8% on the 20k-page web pipeline benchmark.
     """
-    if not deterministic:
-        if not assume_non_null:
-            edges = edges.filter(F.col("src_url").isNotNull()
-                                 & F.col("dst_url").isNotNull())
-        return (edges
-                .withColumn("src", F.xxhash64("src_url"))
-                .withColumn("dst", F.xxhash64("dst_url")))
-    urls = (
-        edges.select(F.col("src_url").alias("url"))
-        .unionByName(edges.select(F.col("dst_url").alias("url")))
-        .distinct()
-    )
-    ids = urls.select(
-        "url",
-        (F.row_number().over(Window.orderBy("url")) - 1).cast("long").alias("id"))
-    src_ids = ids.select(F.col("url").alias("src_url"), F.col("id").alias("src"))
-    dst_ids = ids.select(F.col("url").alias("dst_url"), F.col("id").alias("dst"))
-    return edges.join(src_ids, "src_url").join(dst_ids, "dst_url")
+    if not assume_non_null:
+        edges = edges.filter(F.col("src_url").isNotNull()
+                             & F.col("dst_url").isNotNull())
+    return (edges
+            .withColumn("src", F.xxhash64("src_url"))
+            .withColumn("dst", F.xxhash64("dst_url")))
 
 
-def host_subgraph_edges(link_edges: DataFrame,
-                        deterministic: bool = False) -> DataFrame:
+def host_subgraph_edges(link_edges: DataFrame) -> DataFrame:
     """StreamSpot-format edge table with gid := src host id.
 
     Node "types" are 1-char codes from url structure: 'r' for a host root
     page (path p0), 'p' otherwise; edge type 'i' for intra-host links,
     'x' for cross-host (deterministic, derived purely from the urls).
 
-    Host/url ids default to xxhash64 (shuffle-free, no global sort);
-    deterministic=True switches to dense sorted ids for exact-match tests.
+    Host and url ids are xxhash64 (shuffle-free, no global sort).
     """
     e = (
         link_edges
         .withColumn("src_host", host_of(F.col("src_url")))
         .withColumn("dst_host", host_of(F.col("dst_url")))
+        .withColumn("gid", F.xxhash64("src_host"))
     )
-    if deterministic:
-        hosts = (
-            e.select(F.col("src_host").alias("host")).distinct()
-            .select("host",
-                    (F.row_number().over(Window.orderBy("host")) - 1)
-                    .cast("long").alias("gid"))
-        )
-        e = e.join(hosts.withColumnRenamed("host", "src_host"), "src_host")
-    else:
-        e = e.withColumn("gid", F.xxhash64("src_host"))
     typ = lambda c: F.when(c.endswith("/p0.html"), F.lit("r")).otherwise(F.lit("p"))
     # non-null vouched: dst_url elements are urljoin results of non-empty
     # href targets (extract_hrefs_bytes never emits null), and src_url is
@@ -119,7 +100,7 @@ def host_subgraph_edges(link_edges: DataFrame,
     with_ids = encode_url_ids(
         e.select("src_url", "dst_url", "warc_ts", "link_pos", "src_host",
                  "dst_host", "gid"),
-        deterministic=deterministic, assume_non_null=True)
+        assume_non_null=True)
     seq = F.row_number().over(
         Window.partitionBy("gid").orderBy("warc_ts", "src_url", "link_pos")) - 1
     return with_ids.select(
@@ -136,32 +117,17 @@ def host_subgraph_edges(link_edges: DataFrame,
 
 def host_anomaly_pipeline(spark: SparkSession, pages: DataFrame,
                           params: StreamSpotParams,
-                          graph_params: GraphParams = GraphParams(),
-                          deterministic: bool = False,
-                          similarity_prune_cap: int | None | str = "auto"
-                          ) -> dict:
+                          graph_params: GraphParams = GraphParams()) -> dict:
     """Full north-star flow.  Returns dict of result DataFrames:
     sketches, lsh_clusters (host-level), anomalies (isolated hosts),
     similarities (LSH-pruned pairs).
 
-    deterministic=False (default) uses hash-based host/url ids — no global
-    sort anywhere in the hot path (scale-safe); =True gives dense sorted ids
-    for exact-match tests.
-
-    similarity_prune_cap caps the similarity prune's bucket self-join
-    ("auto" = 10_000 in the hash-id scale mode, None in deterministic
-    reference-parity mode).  The cap is load-bearing at scale: a band
-    bucket holding B near-identical hosts would otherwise force one task
-    to emit B^2/2 pairs (a same-key self-join AQE cannot split).  Above
-    the cap, the similarities table contains the star-reduced pair subset
-    — every member appears, but member-member pairs of a hot bucket
-    surface only through lsh_clusters (which is cluster-exact); pass None
-    to reproduce the reference's full pair relation (main.cpp:584-605)
-    when the corpus is known to be bucket-bounded."""
-    if similarity_prune_cap == "auto":
-        similarity_prune_cap = None if deterministic else 10_000
+    Host/url ids are hash-based — no global sort anywhere in the hot path.
+    The similarity prune's bucket self-join is capped at
+    ``SIMILARITY_PRUNE_CAP``, above which the similarities table holds the
+    star-reduced pair subset."""
     link_edges = extract_link_edges(pages)
-    ss_edges = host_subgraph_edges(link_edges, deterministic=deterministic).cache()
+    ss_edges = host_subgraph_edges(link_edges).cache()
     chunk_counts = build_chunk_counts(
         build_shingles(build_adjacency(ss_edges)), params.chunk_length)
     sketches = build_sketches(chunk_counts, params).cache()
@@ -171,7 +137,7 @@ def host_anomaly_pipeline(spark: SparkSession, pages: DataFrame,
     sims = all_pairs_sketch_similarity(
         sketches, params,
         lsh_prune=candidate_pairs(bands,
-                                  max_bucket_size=similarity_prune_cap))
+                                  max_bucket_size=SIMILARITY_PRUNE_CAP))
     return {
         "edges": ss_edges,
         "sketches": sketches,
@@ -179,7 +145,4 @@ def host_anomaly_pipeline(spark: SparkSession, pages: DataFrame,
         "lsh_clusters": clusters,
         "anomalies": anomalies,
         "similarities": sims,
-        # the RESOLVED cap ("auto" mapped to a number or None), so callers
-        # reporting occupancy stats describe the cap actually applied
-        "similarity_prune_cap": similarity_prune_cap,
     }

@@ -113,7 +113,7 @@ def test_avi_sniff():
     assert sniff_format(b"RIFF\x04\x00\x00\x00ACON") == "riff"
 
 
-def test_avi_spark_decode_and_frame_sampling(spark):
+def test_avi_spark_decode_first_frame(spark):
     """decode_image pulls ONLY the first frame chunk, over the Arrow
     path."""
     frames = _smooth_frames(7, 16, 16, seed=29)

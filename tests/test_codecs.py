@@ -131,7 +131,7 @@ def test_decode_image_spark_real_path(spark):
         decode_image(badgif).collect()
 
 
-def test_decode_audio_and_sample_frames_spark(spark):
+def test_decode_audio_spark(spark):
     wavs = spark.read.parquet("/root/repo/fixtures/wav_expected.parquet")
     got = decode_audio(wavs.select("id", "payload")).withColumn(
         "got_md5", F.md5("pcm"))
@@ -304,7 +304,7 @@ def test_gif_errors():
         gif_encode(many)
 
 
-def test_gif_spark_decode_and_frame_sampling(spark):
+def test_gif_spark_decode_first_frame(spark):
     """decode_image returns the first composited frame over the Arrow batch
     path."""
     from sbustreamspot_core_spark.functions.gif import gif_encode

@@ -205,6 +205,42 @@ def test_small_graph_fast_path_identical(spark, edges):
         connected_components_oracle(e)
 
 
+@pytest.mark.parametrize("seed", [11, 29, 47])
+def test_cc_property_random_graphs(spark, seed):
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(50, 150))
+    m = int(rng.integers(n, 4 * n))
+    e = sorted({(int(a), int(b)) for a, b in
+                zip(rng.integers(0, n, m), rng.integers(0, n, m)) if a != b})
+    df = spark.createDataFrame(e, "src long, dst long")
+    params = GraphParams(num_partitions=4, max_iters=60, checkpoint_interval=6)
+    got = {r.id: r.component for r in
+           connected_components(spark, df, params=params).components.collect()}
+    assert got == connected_components_oracle(e)
+    assert triangle_count(spark, df, params) == triangle_count_oracle(e)
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "components", "labels"])
+def test_empty_edge_table_converges_at_once(spark, algo):
+    """An empty state has converged: each metric aggregate is NULL over
+    zero rows, which must not read as "not converged" (CC would run
+    max_iters supersteps over no rows), and PageRank over zero vertices
+    returns no ranks instead of dividing by N = 0."""
+    empty = spark.createDataFrame([], "src long, dst long")
+    params = GraphParams(num_partitions=2, max_iters=6, lpa_max_iters=6)
+    run, out = {
+        "pagerank": (pagerank, "ranks"),
+        "components": (connected_components, "components"),
+        "labels": (label_propagation, "labels"),
+    }[algo]
+    res = run(spark, empty, params=params)
+    assert res.converged
+    assert res.supersteps == (0 if algo == "pagerank" else 1)
+    assert all(m["converged"] for m in res.metrics)
+    assert getattr(res, out).count() == 0
+    assert triangle_count(spark, empty, params) == 0
+
+
 def test_label_propagation_exact(spark, edges):
     e, df = edges
     expect, _ = label_propagation_oracle(e, max_iters=PARAMS.lpa_max_iters)

@@ -7,6 +7,8 @@ the package is reached when a root names it, or when reached package code
 names it (a class brings its whole body; importing a module runs its
 module-level statements). Every public top-level function and class must
 be reached, or be listed in ``ALLOWED`` with the reason it stays.
+Likewise every field of the config dataclasses must be passed by keyword
+from a root, or be listed in ``ALLOWED_FIELDS`` with the reason it stays.
 """
 
 import ast
@@ -26,7 +28,6 @@ KEPT_TOOLS = ["make_fixtures.py", "validate_entry.py", "scaling.py",
 ALLOWED_MODULES = {
     "oracles.graph_oracle": "test reference for the graph algorithms",
     "oracles.streamspot_oracle": "test reference for the StreamSpot operators",
-    "graph.skew": "salted repartitioning, named by the ROADMAP's north rule",
 }
 # (module, name) -> reason
 ALLOWED = {
@@ -47,6 +48,12 @@ ALLOWED = {
     ("streaming.table_dedup", "SnapTableDedupStream"):
         "Structured Streaming shell over the SnapTable dedup step",
     ("sources.iceberg", "write_table"): "write side of the table source",
+}
+CONFIG_CLASSES = ("GraphParams", "StreamSpotParams")
+# (config class, field) -> reason; fields no root passes
+ALLOWED_FIELDS = {
+    ("StreamSpotParams", "seed"):
+        "the reference's SEED (param.h), the seed of the hash family",
 }
 
 
@@ -184,6 +191,26 @@ def _allowed(public):
             if m in ALLOWED_MODULES or (m, name) in ALLOWED}
 
 
+def _config_fields():
+    defs = _package()["config"][2]
+    return {(c, n.target.id) for c in CONFIG_CLASSES
+            for n in defs[c].body if isinstance(n, ast.AnnAssign)}
+
+
+def _passed_fields():
+    """(config class, field) pairs some root passes by keyword."""
+    out = set()
+    for path in _roots():
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in CONFIG_CLASSES:
+                out |= {(name, k.arg) for k in n.keywords if k.arg}
+    return out
+
+
 def test_every_public_operator_has_a_consumer():
     """What the allowlisted code uses stays too."""
     public = _public()
@@ -201,3 +228,14 @@ def test_allowlist_is_current():
         assert key not in seen, f"{key} is reached; drop it from ALLOWED"
     for m in ALLOWED_MODULES:
         assert any(pm == m for pm, _ in public), m
+    fields, passed = _config_fields(), _passed_fields()
+    for key in ALLOWED_FIELDS:
+        assert key in fields, key
+        assert key not in passed, f"{key} is passed; drop it from ALLOWED_FIELDS"
+
+
+def test_every_config_field_has_a_caller():
+    """A config field no root sets is an option only tests use."""
+    unset = sorted(f"{c}.{f}" for c, f in
+                   _config_fields() - _passed_fields() - set(ALLOWED_FIELDS))
+    assert not unset, unset

@@ -5,21 +5,27 @@ import pytest
 from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
-from sbustreamspot_core_spark.graph.pagerank import build_links, pagerank
+from sbustreamspot_core_spark.graph import pagerank as pagerank_mod
+from sbustreamspot_core_spark.graph.pagerank import (
+    build_links,
+    pagerank,
+    prepared_edges,
+)
 from sbustreamspot_core_spark.operators.sketch import build_simhash_sketches
 from sbustreamspot_core_spark.oracles.graph_oracle import pagerank_oracle
 
 
-def test_build_links_blocks_mega_hub_before_aggregation(spark):
-    """A hub with out-degree >> csr_block_size must never put more than ~one
+def test_build_links_blocks_mega_hub_before_aggregation(spark, monkeypatch):
+    """A hub with out-degree >> CSR_BLOCK_SIZE must never put more than ~one
     block of targets into a single aggregation buffer / output row."""
     bs = 64
+    monkeypatch.setattr(pagerank_mod, "CSR_BLOCK_SIZE", bs)
     hub_deg = 5000
     edges = spark.range(hub_deg).select(
         F.lit(0).alias("src"), (F.col("id") + 1).alias("dst"))
     edges = edges.unionByName(spark.createDataFrame(
         [(1, 2), (2, 3)], "src long, dst long"))
-    links = build_links(edges, GraphParams(num_partitions=4, csr_block_size=bs))
+    links = build_links(prepared_edges(edges, GraphParams(num_partitions=4)))
     rows = links.collect()
     hub_rows = [r for r in rows if r.src == 0]
     # full out-degree carried on every block row
@@ -33,12 +39,13 @@ def test_build_links_blocks_mega_hub_before_aggregation(spark):
     assert light[1].deg == 1 and list(light[1].targets) == [2]
 
 
-def test_pagerank_unchanged_with_hub_blocking(spark):
+def test_pagerank_unchanged_with_hub_blocking(spark, monkeypatch):
     """Blocked adjacency must not change PageRank values (hub graph)."""
+    monkeypatch.setattr(pagerank_mod, "CSR_BLOCK_SIZE", 8)
     e = [(0, i) for i in range(1, 40)] + [(i, (i % 7) + 1) for i in range(1, 40)]
     edges = spark.createDataFrame(e, "src long, dst long")
     params = GraphParams(num_partitions=4, max_iters=25, tol=1e-10,
-                         checkpoint_interval=10, csr_block_size=8)
+                         checkpoint_interval=10)
     expect, _ = pagerank_oracle(e, damping=0.85, tol=1e-10, max_iters=25)
     got = {r.id: r.rank for r in pagerank(spark, edges, params).ranks.collect()}
     for node, r in expect.items():

@@ -118,7 +118,7 @@ def test_brute_force_topk_matches_numpy(spark, embeddings):
             assert cos == pytest.approx(ecos)
 
 
-def test_lsh_and_ivf_topk_recall(spark, embeddings):
+def test_ivf_topk_recall(spark, embeddings):
     queries = embeddings.filter("vec_id < 5")
     exact = {}
     for r in brute_force_topk(embeddings, queries, k=3).collect():
@@ -274,7 +274,7 @@ def test_simhash_hamming_candidates_match_brute_force(spark):
     sh.unpersist()
 
 
-def test_star_reduction_stats_and_plane_sizing(spark):
+def test_star_reduction_stats(spark):
     from sbustreamspot_core_spark.operators.dedup import star_reduction_stats
     rows = ([(i, 0, 7) for i in range(30)]               # one bucket of 30
             + [(100 + i, 0, 100 + i) for i in range(10)])  # 10 singletons
