@@ -76,7 +76,7 @@ from sbustreamspot_core_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from sbustreamspot_core_spark.operators.shingles import chunk_expr
+from sbustreamspot_core_spark.operators.shingles import build_chunk_counts
 from sbustreamspot_core_spark.operators.similarity import shingle_cosine_pairs
 from sbustreamspot_core_spark.operators.sketch import build_sketches
 
@@ -95,8 +95,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # event_type's first char, arrival order (ts, event_id).
 # --------------------------------------------------------------------------
 
-def _event_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+def _event_shingles(ev: DataFrame) -> DataFrame:
+    """(user_id, shingle): ' u' + the first chars of ``ev``'s event types in
+    (ts, event_id) order."""
     ordered = (
         ev.groupBy("user_id")
         .agg(F.sort_array(F.collect_list(F.struct(
@@ -105,9 +106,7 @@ def _event_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ordered.select(
         "user_id",
-        F.concat(F.lit(" u"),
-                 F.array_join(F.transform("seq", lambda x: x.c), "")
-                 ).alias("shingle"),
+        F.concat(F.lit(" u"), F.array_join("seq.c", "")).alias("shingle"),
     )
 
 
@@ -168,16 +167,14 @@ def q_train_test_split(spark, sf_dir):
 
 def q_adjacency_shingle(spark, sf_dir):
     # A1/W1/X1: arrival-ordered adjacency -> K=1 shingle string
-    return _event_shingles(spark, sf_dir)
+    return _event_shingles(_t(spark, sf_dir, "events"))
 
 
 def q_chunk_counts(spark, sf_dir):
     # X2/A3 (graph.cpp:432-438, 119-122): chunking + frequency count
-    sh = _event_shingles(spark, sf_dir)
-    return (
-        sh.select("user_id", F.explode(chunk_expr("shingle", CHUNK)).alias("chunk"))
-        .groupBy("user_id", "chunk").agg(F.count("*").alias("cnt"))
-    )
+    sh = _event_shingles(_t(spark, sf_dir, "events"))
+    cc = build_chunk_counts(sh.withColumnRenamed("user_id", "gid"), CHUNK)
+    return cc.withColumnRenamed("gid", "user_id")
 
 
 def q_graph_sizes(spark, sf_dir):
@@ -655,22 +652,13 @@ def q_windowed_sketches(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     per = Window.partitionBy("user_id").orderBy("ts", "event_id")
     edges = ev.select(
-        F.col("user_id").alias("gid"), "ts", "event_id",
-        F.substring("event_type", 1, 1).alias("c"),
+        F.col("user_id").alias("gid"), "ts", "event_id", "event_type",
         (F.row_number().over(per) - 1).cast("long").alias("seq"))
     rs = assign_replay_seq(edges)
     n = rs.count()
     win = rs.filter(F.col("replay_seq") >= n - WINDOW_EDGES)
-    shingles = (
-        win.groupBy("gid")
-        .agg(F.sort_array(F.collect_list(F.struct(
-            "ts", "event_id", "c"))).alias("s"))
-        .select("gid", F.concat(
-            F.lit(" u"),
-            F.array_join(F.transform("s", lambda x: x.c), "")).alias("shingle"))
-    )
-    cc = (shingles.select("gid", F.explode(chunk_expr("shingle", CHUNK)).alias("chunk"))
-          .groupBy("gid", "chunk").agg(F.count("*").alias("cnt")))
+    shingles = _event_shingles(win.withColumnRenamed("gid", "user_id"))
+    cc = build_chunk_counts(shingles.withColumnRenamed("user_id", "gid"), CHUNK)
     sk = build_sketches(cc, SS_PARAMS)
     return sk.select("gid", F.col("projection").getItem(0).alias("proj0"),
                      F.col("bands").getItem(0).alias("band0"))

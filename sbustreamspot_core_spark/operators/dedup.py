@@ -88,23 +88,24 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _gram_expr(n: int, text_col: str):
-    """The one n-gram generation rule every dedup operator shares."""
-    c = int(n)
-    return F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {c} + 1, 1)), "
-        f"i -> substring({text_col}, i, {c}))"
-    )
-
-
 def char_shingles(docs: DataFrame, n: int = 5, id_col: str = "doc_id",
-                  text_col: str = "text", distinct: bool = True) -> DataFrame:
-    """Character n-grams per doc: (id, shingle); ``distinct=False`` keeps
-    the raw multiset (skips a full shuffle — right when downstream is
-    multiset-invariant, e.g. min-aggregation)."""
-    out = docs.select(F.col(id_col).alias("id"),
-                      F.explode(_gram_expr(n, text_col)).alias("shingle"))
-    return out.distinct() if distinct else out
+                  text_col: str = "text") -> DataFrame:
+    """Distinct character n-grams per doc: (id, shingle).
+
+    The n-gram rule: ``max(len - n + 1, 1)`` windows of ``n`` chars, so a
+    text shorter than ``n`` (or empty) is one whole-text gram and a null
+    text one null gram.  The window index is a plain int-sequence explode
+    with the ``substring`` in the projection (a ``transform`` lambda inside
+    the Generate would take the stage off whole-stage codegen)."""
+    c = int(n)
+    n_grams = F.greatest(F.length(text_col) - c + 1, F.lit(1))
+    return (
+        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"),
+                    F.explode(F.sequence(F.lit(0), n_grams - 1)).alias("i"))
+        .select("id", F.col("t").substr(F.col("i") + 1, F.lit(c))
+                .alias("shingle"))
+        .distinct()
+    )
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 5,
@@ -140,6 +141,12 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 5,
     )
 
 
+def _grams(text: str, n: int) -> list:
+    """The n-gram rule of the Arrow kernels, ``char_shingles``' rule in
+    Python: ``max(len - n + 1, 1)`` windows of ``n`` code points."""
+    return [text[i:i + n] for i in range(max(len(text) - n + 1, 1))]
+
+
 def _minhash_batches(batches, *, k, c, Ac, Bc):
     """``minhash_signatures`` kernel: (id, text) batches -> (id, sig)."""
     from hashlib import md5
@@ -151,11 +158,9 @@ def _minhash_batches(batches, *, k, c, Ac, Bc):
             if not isinstance(text, str):
                 sigs.append([None] * k)
                 continue
-            ng = max(len(text) - c + 1, 1)
             xs = np.array(
-                [(int.from_bytes(
-                    md5(text[i:i + c].encode("utf-8")).digest()[:8],
-                    "big") >> 4) % p for i in range(ng)],
+                [(int.from_bytes(md5(g.encode("utf-8")).digest()[:8],
+                                 "big") >> 4) % p for g in _grams(text, c)],
                 dtype=np.int64)
             sigs.append(((Ac * xs[None, :] + Bc) % p).min(axis=1).tolist())
         yield pd.DataFrame({"id": ids, "sig": sigs})
@@ -178,12 +183,14 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 5,
 
     Round-7 rewrite rationale (measured, BENCH.md round 7): the former pure-JVM
     explode + 64 parallel min() aggregates was dominated by interpreted
-    per-shingle expression evaluation (the n-gram ``transform`` lambda is a
-    codegen-fallback, which takes the whole Generate/HashAggregate stage
-    off whole-stage codegen): 7.7 s for 50k docs vs 3.9 s for this kernel,
-    and the gap widens under host load.  Zero shuffles either way (the old
-    path's map-side combine already collapsed to one row per doc; this one
-    emits exactly one row per doc).
+    per-shingle expression evaluation (its n-gram explode was then a
+    ``transform`` lambda, a codegen fallback that took the whole
+    Generate/HashAggregate stage off whole-stage codegen): 7.7 s for 50k
+    docs vs 3.9 s for this kernel, and the gap widens under host load.
+    ``char_shingles`` has since lost that lambda; the kernel-vs-codegen
+    A/B has not been re-run.  Zero shuffles either way (the old path's
+    map-side combine already collapsed to one row per doc; this one emits
+    exactly one row per doc).
 
     Precondition (unchanged contract, now structural): one input row per
     ``id_col`` — run ``exact_dedup`` upstream first.  A null/absent text
@@ -459,8 +466,7 @@ def _gram_set(t, present, c):
         return 0, frozenset()
     if not isinstance(t, str):
         return 1, frozenset()
-    ng = max(len(t) - c + 1, 1)
-    s = {t[i:i + c] for i in range(ng)}
+    s = set(_grams(t, c))
     return len(s), s
 
 
@@ -577,14 +583,14 @@ def simhash_bands(sketches: DataFrame, radius: int = 3,
     # the LAST band absorbs the remainder bits (unmasked arithmetic shift
     # reaches through bit 63) so the bands cover all 64 bits even when
     # ``bands`` does not divide 64
+    shifted = F.expr(f"shiftright(simhash, band_idx * {bits})")
     return sketches.select(
-        "id",
-        F.posexplode(F.expr(
-            f"transform(sequence(0, {bands - 1}), "
-            f"b -> CASE WHEN b = {bands - 1} "
-            f"THEN shiftright(simhash, b * {bits}) "
-            f"ELSE (shiftright(simhash, b * {bits}) & {mask}) END)"
-        )).alias("band_idx", "band_val"))
+        "id", "simhash",
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band_idx"),
+    ).select(
+        "id", "band_idx",
+        F.when(F.col("band_idx") == bands - 1, shifted)
+        .otherwise(shifted.bitwiseAND(F.lit(mask))).alias("band_val"))
 
 
 def minhash_jaccard_estimate(signatures: DataFrame,
@@ -616,11 +622,12 @@ def simhash64(docs: DataFrame, n: int = 5, id_col: str = "doc_id",
     sh = char_shingles(docs, n, id_col, text_col).select(
         "id", F.md5("shingle").alias("m"))
     exploded = sh.select(
-        "id", F.posexplode(F.expr(
-            "transform(sequence(0, 63), j -> case when "
-            "(shiftright(cast(conv(substring(m, cast(j / 4 as int) + 1, 1), "
-            "16, 10) as int), j % 4) & 1) = 1 then 1 else -1 end)"
-        )).alias("j", "s"))
+        "id", "m", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("j")
+    ).select(
+        "id", "j", F.expr(
+            "case when (shiftright(cast(conv(substring(m, cast(j / 4 as int)"
+            " + 1, 1), 16, 10) as int), j % 4) & 1) = 1 then 1 else -1 end"
+        ).alias("s"))
     bits = (
         exploded.groupBy("id", "j").agg(F.sum("s").alias("tot"))
         .select("id", F.when(F.col("tot") >= 0,

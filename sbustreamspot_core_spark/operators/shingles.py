@@ -31,46 +31,34 @@ def build_adjacency(edges: DataFrame) -> DataFrame:
     )
 
 
-def shingle_expr(out_col: str = "out", src_type_col: str = "src_type"):
-    """K=1 shingle column expression over an adjacency row."""
-    return F.concat(
-        F.lit(" "),
-        F.col(src_type_col),
-        F.array_join(
-            F.transform(F.col(out_col), lambda x: F.concat(x.e_type, x.dst_type)), ""
-        ),
-    )
-
-
 def build_shingles(adjacency: DataFrame) -> DataFrame:
-    """(gid, src_id, src_type, shingle, n_out)."""
+    """(gid, src_id, src_type, shingle, n_out): the K=1 shingle
+    ' ' + src_type + sum(e_type + dst_type) over the ordered out-edges."""
     return adjacency.select(
         "gid", "src_id", "src_type",
-        shingle_expr().alias("shingle"),
+        F.concat(
+            F.lit(" "),
+            F.col("src_type"),
+            F.array_join(
+                F.transform(F.col("out"), lambda x: F.concat(x.e_type, x.dst_type)), ""
+            ),
+        ).alias("shingle"),
         F.size("out").alias("n_out"),
     )
 
 
-def chunk_expr(shingle_col: str, chunk_length: int):
-    """array<string> of fixed-length chunks of the shingle."""
-    c = int(chunk_length)
-    return F.expr(
-        f"transform(sequence(0, cast(ceil(length({shingle_col}) / {c}) as int) - 1), "
-        f"i -> substring({shingle_col}, i * {c} + 1, {c}))"
-    )
-
-
 def build_chunk_counts(shingles: DataFrame, chunk_length: int) -> DataFrame:
-    """Per-graph chunk frequency table (gid, chunk, cnt).
+    """Per-graph chunk frequency table (gid, chunk, cnt): the one chunk
+    rule, ``ceil(len / chunk_length)`` fixed-length substrings per shingle
+    (the last may be short).
 
     Catalyst handles this as a partial+final hash aggregate (map-side combine
     absorbs per-graph chunk skew before the shuffle).
 
     Round 7: the chunk explode is a plain int-sequence Generate with the
-    substring in the projection — ``chunk_expr``'s transform lambda is a
-    codegen fallback that took the whole Generate/aggregate stage off
-    whole-stage codegen (same pattern measured 2x on the minhash gram
-    path); identical chunks by construction.
+    substring in the projection — a ``transform`` lambda in the Generate is
+    a codegen fallback that takes the whole Generate/aggregate stage off
+    whole-stage codegen (the same pattern measured 2x on ``minhash_bands``).
     """
     c = int(chunk_length)
     return (

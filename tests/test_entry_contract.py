@@ -1,5 +1,5 @@
 """In-suite smoke of the driver contract: entry() + a representative subset
-of queries() vs their DuckDB oracles at sf0.001 (the full 27-query sweep runs
+of queries() vs their DuckDB oracles at sf0.001 (the full 50-query sweep runs
 via tools/validate_entry.py at sf0.01)."""
 
 import math
@@ -14,7 +14,9 @@ SUBSET = [
     "q_scenario_filter", "q_adjacency_shingle", "q_chunk_counts",
     "q_argmin_event", "q_segment_revenue", "q_exact_dedup",
     "q_pagerank3", "q_connected_components", "q_snaptable_timetravel",
-    "q_triangles_per_vertex",
+    "q_triangles_per_vertex", "q_ngram_jaccard", "q_minhash_sigs",
+    "q_simhash64", "q_simhash_cands", "q_exact_jaccard_cands",
+    "q_windowed_sketches",
 ]
 
 

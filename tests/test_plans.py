@@ -181,6 +181,38 @@ def test_shingle_pipeline_is_codegen(spark):
     assert "HashAggregate" in p and "Generate" in p
 
 
+def test_position_explodes_have_no_lambda(spark):
+    """Every position-indexed explode is an int-sequence Generate with the
+    substring/arithmetic in the projection: a lambda inside a Generate is a
+    codegen fallback that takes the whole stage off whole-stage codegen."""
+    from sbustreamspot_core_spark.operators.dedup import (
+        char_shingles, minhash_bands, ngram_jaccard_pairs, simhash64,
+        simhash_bands)
+    docs = spark.createDataFrame(
+        [(1, "abcdefghij"), (2, "abcdefghik")], "doc_id long, text string")
+    sigs = spark.createDataFrame(
+        [(1, list(range(8)))], "id long, sig array<long>")
+    sketches = spark.createDataFrame([(1, 12345)], "id long, simhash long")
+    edges = spark.createDataFrame(
+        [(1, 1, "a", 2, "b", "t", 0)],
+        "gid long, src_id long, src_type string, dst_id long, "
+        "dst_type string, e_type string, seq long")
+    for name, df in (
+            ("char_shingles", char_shingles(docs, 3)),
+            ("ngram_jaccard_pairs", ngram_jaccard_pairs(docs, 3)),
+            ("simhash64", simhash64(docs, 3)),
+            ("simhash_bands", simhash_bands(sketches)),
+            ("minhash_bands", minhash_bands(sigs, bands=4)),
+            ("build_chunk_counts", build_chunk_counts(
+                build_shingles(build_adjacency(edges)), 4))):
+        generates = [n.verboseString(1000) for n in plan_nodes(
+            df._jdf.queryExecution().optimizedPlan())
+            if n.nodeName() == "Generate"]
+        assert generates, name
+        assert not any("lambdafunction" in g for g in generates), \
+            (name, generates)
+
+
 def test_minhash_is_single_pass_arrow(spark):
     """Round-7: minhash signatures are ONE Arrow-batched map pass (guide
     §4.2) — no per-row Python (BatchEvalPython), no grouped-pandas shuffle
@@ -188,8 +220,8 @@ def test_minhash_is_single_pass_arrow(spark):
     emits exactly one row per doc, so the only allowed exchange is the
     adaptive round-robin fan-out for single-split inputs.  The former
     explode + 64-min-aggregate expression path was interpretation-bound
-    (the n-gram transform lambda is a codegen fallback) and measured 2-7x
-    slower; bit-identical math is pinned by
+    (its n-gram explode was then a transform lambda, a codegen fallback)
+    and measured 2-7x slower; bit-identical math is pinned by
     test_training_ops.test_minhash_kernel_matches_expression_path."""
     from sbustreamspot_core_spark.operators.dedup import minhash_signatures
     docs = spark.createDataFrame(

@@ -500,7 +500,7 @@ def _minhash_expression_reference(docs, num_hashes=64, n=5, seed=23,
     from sbustreamspot_core_spark.operators.dedup import (
         MINHASH_MOD, char_shingles, minhash_coeffs)
     A, Bv = minhash_coeffs(num_hashes, seed)
-    sh = char_shingles(docs, n, id_col, text_col, distinct=False).select(
+    sh = char_shingles(docs, n, id_col, text_col).select(
         "id", (fingerprint_expr(F.col("shingle")) % MINHASH_MOD).alias("x"))
     aggs = [
         F.min((F.lit(int(A[i])) * F.col("x") + F.lit(int(Bv[i])))
