@@ -601,38 +601,6 @@ class SnapTable:
         return self._scan(spark, meta["schema"],
                           [os.path.join(self.path, f) for f in files])
 
-    # ---- metadata tables ---------------------------------------------
-    # Iceberg's inspection surface (SELECT * FROM tbl.snapshots / .files)
-    # as DataFrames: operational queries over the table's own history and
-    # layout — commit cadence, rows per snapshot, file-size skew — with
-    # the same engine that queries the data.
-
-    def snapshots_df(self, spark: SparkSession) -> DataFrame:
-        """One row per snapshot: (snapshot_id, parent_id, operation, ts,
-        summary as a JSON string)."""
-        rows = [(s["snapshot_id"], s["parent_id"], s["operation"],
-                 float(s["ts"]), json.dumps(s["summary"], sort_keys=True))
-                for s in self.snapshots()]
-        return local_table(
-            spark, rows, "snapshot_id long, parent_id long, operation string, "
-                         "ts double, summary string")
-
-    def files_df(self, spark: SparkSession,
-                 snapshot_id: int | None = None) -> DataFrame:
-        """One row per data file of a snapshot (current by default):
-        (path, rows, bytes, partition as a JSON string)."""
-        rows = []
-        for f in self._manifest(snapshot_id):
-            full = os.path.join(self.path, f["path"])
-            try:
-                nbytes = os.path.getsize(full)
-            except FileNotFoundError:
-                nbytes = None       # expired by a concurrent vacuum
-            rows.append((f["path"], f["rows"], nbytes,
-                         json.dumps(f.get("partition"), sort_keys=True)))
-        return local_table(
-            spark, rows, "path string, rows long, bytes long, partition string")
-
     # ---- maintenance --------------------------------------------------
 
     def compact(self, spark: SparkSession, target_file_mb: int = 512,

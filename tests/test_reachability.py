@@ -4,9 +4,13 @@ An AST walk, no Spark. The roots are the code the engine ships for: the
 driver-contract queries (``__spark_entry__.py``), the ``jobs/`` CLIs,
 perfbench's non-test modules and the tools that stay. A top-level name of
 the package is reached when a root names it, or when reached package code
-names it (a class brings its whole body; importing a module runs its
-module-level statements). Every public top-level function and class must
-be reached, or be listed in ``ALLOWED`` with the reason it stays.
+names it (importing a module runs its module-level statements). Every
+public top-level function and class must be reached, or be listed in
+``ALLOWED`` with the reason it stays. A reached class brings its
+class-level statements and dunder methods; another method is reached when
+a root or reached package code names it as an attribute (``x.name``).
+Every public method of a reached class must be, or be listed in
+``ALLOWED_METHODS`` with the reason it stays.
 Likewise every field of the config dataclasses must be passed by keyword
 from a root, or be listed in ``ALLOWED_FIELDS`` with the reason it stays.
 """
@@ -20,9 +24,7 @@ PKG_DIR = pathlib.Path(pkg.__file__).parent
 REPO = PKG_DIR.parent
 PKG = PKG_DIR.name
 
-KEPT_TOOLS = ["make_fixtures.py", "validate_entry.py", "scaling.py",
-              "scaling_probe.py", "scaling_hash_probe.py",
-              "scaling_sketch_probe.py", "gen_scaling_graph.py"]
+KEPT_TOOLS = ["make_fixtures.py", "validate_entry.py", "scaling.py"]
 
 # module -> reason; every public name in it is exempt
 ALLOWED_MODULES = {
@@ -48,6 +50,11 @@ ALLOWED = {
     ("streaming.table_dedup", "SnapTableDedupStream"):
         "Structured Streaming shell over the SnapTable dedup step",
     ("sources.iceberg", "write_table"): "write side of the table source",
+}
+# (module, "Class.method") -> reason; public methods no root names
+ALLOWED_METHODS = {
+    ("sources.snaptable", "SnapTable.rollback_to"):
+        "tests/test_table_dedup.py stages source snapshots with it",
 }
 CONFIG_CLASSES = ("GraphParams", "StreamSpotParams")
 # (config class, field) -> reason; fields no root passes
@@ -150,32 +157,69 @@ def _roots():
     return paths
 
 
+def _attrs(node):
+    """Attribute names ``node`` reads or calls (``x.name``)."""
+    return {n.attr for n in ast.walk(node) if isinstance(n, ast.Attribute)}
+
+
+def _methods(cls):
+    return {n.name: n for n in cls.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
+
+
 def reached(extra=()):
-    """(module, name) pairs reached from the roots and from ``extra``."""
+    """(module, name) pairs reached from the roots and from ``extra``; a
+    reached method is (module, "Class.method"). A class in ``extra``
+    brings all its methods."""
     pkg_mods = _package()
     modules = set(pkg_mods)
-    todo = set(extra)
+    todo, attrs = set(extra), set()
     for path in _roots():
         tree = ast.parse(path.read_text())
         todo |= _refs(tree, None, _bindings("", tree, modules), set())
+        attrs |= _attrs(tree)
     seen, loaded = set(), set()
-    while todo:
-        m, name = todo.pop()
-        if m not in pkg_mods or (m, name) in seen:
-            continue
-        seen.add((m, name))
-        tree, bindings, defs = pkg_mods[m]
-        if m not in loaded:
-            # importing a module runs its module-level statements
-            loaded.add(m)
-            top = [n for n in tree.body if not isinstance(
-                n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
-            for n in top:
-                todo |= _refs(n, m, bindings, defs)
-            parent = m.rpartition(".")[0]
-            todo.add((parent, None))
-        if name in defs:
-            todo |= _refs(defs[name], m, bindings, defs)
+    pending = {}        # (module, class) -> {method: node} not yet reached
+
+    def visit(node, m):
+        _, bindings, defs = pkg_mods[m]
+        todo.update(_refs(node, m, bindings, defs))
+        attrs.update(_attrs(node))
+
+    grew = True
+    while grew:
+        while todo:
+            m, name = todo.pop()
+            if m not in pkg_mods or (m, name) in seen:
+                continue
+            seen.add((m, name))
+            tree, _, defs = pkg_mods[m]
+            if m not in loaded:
+                # importing a module runs its module-level statements
+                loaded.add(m)
+                for n in tree.body:
+                    if not isinstance(n, (ast.FunctionDef,
+                                          ast.AsyncFunctionDef, ast.ClassDef)):
+                        visit(n, m)
+                todo.add((m.rpartition(".")[0], None))
+            node = defs.get(name)
+            if not isinstance(node, ast.ClassDef):
+                if node is not None:
+                    visit(node, m)
+                continue
+            methods = _methods(node)
+            for n in node.decorator_list + node.bases + node.keywords + [
+                    n for n in node.body if n not in methods.values()]:
+                visit(n, m)
+            pending[m, name] = methods
+        grew = False
+        for (m, cls), methods in pending.items():
+            whole = (m, cls) in extra
+            for name in [k for k in methods if whole or k in attrs
+                         or (k.startswith("__") and k.endswith("__"))]:
+                seen.add((m, f"{cls}.{name}"))
+                visit(methods.pop(name), m)
+                grew = True
     return seen
 
 
@@ -189,6 +233,18 @@ def _public():
 def _allowed(public):
     return {(m, name) for m, name in public
             if m in ALLOWED_MODULES or (m, name) in ALLOWED}
+
+
+def _public_methods(names):
+    """(module, "Class.method") for the public methods of the classes
+    among ``names``."""
+    pkg_mods, out = _package(), set()
+    for m, name in names:
+        node = pkg_mods[m][2][name]
+        if isinstance(node, ast.ClassDef):
+            out |= {(m, f"{name}.{k}") for k in _methods(node)
+                    if not k.startswith("_")}
+    return out
 
 
 def _config_fields():
@@ -220,6 +276,17 @@ def test_every_public_operator_has_a_consumer():
     assert not unreached, unreached
 
 
+def test_every_public_method_is_named():
+    """A method no root and no reached code names is an API only tests
+    use."""
+    public = _public()
+    allowed = _allowed(public)
+    seen = reached(allowed)
+    unnamed = sorted(f"{m}.{name}" for m, name in _public_methods(
+        public & seen) - seen - set(ALLOWED_METHODS))
+    assert not unnamed, unnamed
+
+
 def test_allowlist_is_current():
     """An allowlist entry names code that exists and no root reaches."""
     public, seen = _public(), reached()
@@ -228,6 +295,10 @@ def test_allowlist_is_current():
         assert key not in seen, f"{key} is reached; drop it from ALLOWED"
     for m in ALLOWED_MODULES:
         assert any(pm == m for pm, _ in public), m
+    methods = _public_methods(public)
+    for key in ALLOWED_METHODS:
+        assert key in methods, key
+        assert key not in seen, f"{key} is named; drop it from ALLOWED_METHODS"
     fields, passed = _config_fields(), _passed_fields()
     for key in ALLOWED_FIELDS:
         assert key in fields, key

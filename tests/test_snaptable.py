@@ -668,24 +668,3 @@ def test_evolved_column_is_nullable_in_schema(spark, tmp_ckpt):
              if f["name"] == "extra"][0]
     assert field["nullable"] is True
     assert {r.extra for r in t.read(spark).collect()} == {None, 10}
-
-
-def test_metadata_tables(spark, tmp_ckpt):
-    """snapshots_df / files_df: the table's own history and layout as
-    DataFrames (Iceberg's metadata-table surface) — commit cadence and
-    per-file rows queryable with the same engine as the data."""
-    path = os.path.join(tmp_ckpt, "t_meta_tables")
-    t = SnapTable.create(path)
-    t.append(_df(spark, 0, 5, "a").coalesce(1), summary={"k": 1})
-    t.append(_df(spark, 5, 8, "b").coalesce(1))
-    snaps = t.snapshots_df(spark)
-    assert [r.operation for r in snaps.orderBy("snapshot_id").collect()] \
-        == ["append", "append"]
-    assert json.loads(
-        snaps.filter("snapshot_id = 1").first().summary) == {"k": 1}
-    files = t.files_df(spark)
-    assert files.count() == 2
-    agg = files.agg({"rows": "sum", "bytes": "sum"}).first()
-    assert agg["sum(rows)"] == 8 and agg["sum(bytes)"] > 0
-    # time travel applies to the files table too
-    assert t.files_df(spark, snapshot_id=1).count() == 1

@@ -310,36 +310,6 @@ def snap_table(spark, tmp_path):
     return t
 
 
-def test_snaptable_snapshots_df_matches_list_path(spark, snap_table):
-    import json
-    df = snap_table.snapshots_df(spark)
-    _assert_local(df)
-    rows = [(s["snapshot_id"], s["parent_id"], s["operation"], float(s["ts"]),
-             json.dumps(s["summary"], sort_keys=True))
-            for s in snap_table.snapshots()]
-    assert rows[0][1] is None               # the first snapshot's parent
-    _same_as_list_path(spark, df, rows,
-                       "snapshot_id long, parent_id long, operation string, "
-                       "ts double, summary string")
-    assert df.collect()[0].parent_id is None
-
-
-def test_snaptable_files_df_null_bytes_matches_list_path(spark, snap_table):
-    import json
-    manifest = snap_table._manifest()
-    os.remove(os.path.join(snap_table.path, manifest[0]["path"]))
-    df = snap_table.files_df(spark)
-    _assert_local(df)
-    rows = [(f["path"], f["rows"],
-             None if i == 0 else os.path.getsize(
-                 os.path.join(snap_table.path, f["path"])),
-             json.dumps(f.get("partition"), sort_keys=True))
-            for i, f in enumerate(manifest)]
-    _same_as_list_path(spark, df, rows,
-                       "path string, rows long, bytes long, partition string")
-    assert df.collect()[0].bytes is None
-
-
 def test_snaptable_empty_scan_matches_list_path(spark, snap_table):
     from pyspark.sql.types import StructType
     df = snap_table.read(spark, where=("id", ">", 10 ** 9))
@@ -347,6 +317,12 @@ def test_snaptable_empty_scan_matches_list_path(spark, snap_table):
     schema = StructType.fromJson(snap_table.metadata()["schema"])
     _same_as_list_path(spark, df, [], schema)
     assert df.schema["xs"].dataType.simpleString() == "array<bigint>"
+    # null longs: a first snapshot's parent id, a vacuumed file's size
+    rows = [(1, None, None), (2, 1, 10)]
+    schema = "snapshot_id long, parent_id long, bytes long"
+    df = local_table(spark, rows, schema)
+    _assert_local(df)
+    _same_as_list_path(spark, df, rows, schema)
 
 
 # --------------------------------------------------------------- heap size
