@@ -7,9 +7,6 @@ so each task hashes each distinct chunk once (the chunk vocabulary is bounded
 by the type-alphabet combinatorics, not by |E|), then takes projection =
 sum(count * chunk_bits), sketch = sign(projection) (streamhash.cpp:36-38) and
 the LSH band values (cluster.cpp:23-42).
-
-SimHash (simhash.cpp:16-32, main.cpp:607-646) is provided for parity; it
-requires the dense global shingle dictionary (graph.cpp:204-209).
 """
 
 from __future__ import annotations
@@ -24,7 +21,7 @@ from pyspark.sql import functions as F
 from ..config import StreamSpotParams
 from ..functions.hashing import hashmulti_batch
 from ..functions.sketches import band_values, pack_sketch
-from ..rng import allocate_random_bits, construct_random_vectors
+from ..rng import allocate_random_bits
 
 SKETCH_SCHEMA = "gid long, projection array<long>, sketch binary, bands array<long>"
 
@@ -37,7 +34,7 @@ _HASH_MEMO_CAP = 1_000_000
 
 def _sketch_row(pdf: pd.DataFrame, projection: np.ndarray,
                 B: int, R: int) -> pd.DataFrame:
-    """One output row of the per-graph sketch kernels."""
+    """The one output row of the per-graph sketch kernel."""
     sketch_bits = (projection >= 0).astype(np.uint8)[None, :]
     return pd.DataFrame({
         "gid": [int(pdf["gid"].iloc[0])],
@@ -81,47 +78,3 @@ def sketch_bands(sketches: DataFrame, params: StreamSpotParams) -> DataFrame:
     return sketches.select(
         "gid", F.posexplode("bands").alias("band_idx", "band_val")
     )
-
-
-def _simhash_group(pdf, *, b_idx, b_rv, B, R):
-    """``build_simhash_sketches`` kernel: one graph's (chunk, cnt) rows ->
-    its sketch row over the broadcast dictionary and random vectors."""
-    idx = b_idx.value
-    sv = np.zeros(len(idx), dtype=np.int64)
-    for chunk, cnt in zip(pdf["chunk"], pdf["cnt"]):
-        sv[idx[chunk]] = cnt
-    return _sketch_row(pdf, b_rv.value.astype(np.int64) @ sv, B, R)
-
-
-def build_simhash_sketches(chunk_counts: DataFrame, params: StreamSpotParams,
-                           max_vocab: int = 100_000) -> DataFrame:
-    """SimHash parity path: dense shingle dictionary + random +/-1 vectors.
-
-    Dictionary ids are assigned by sorted chunk order (deterministic across
-    partitionings); the reference assigns ids by unordered-set iteration order
-    (graph.cpp:204-209), which is equally arbitrary but not portable.
-
-    This path collects the chunk vocabulary to the driver and broadcasts a
-    dense (L x |vocab|) matrix — correct ONLY for bounded type-alphabet
-    vocabularies (StreamSpot's case).  ``max_vocab`` fails fast when pointed
-    at open-text shingles; use ``dedup.simhash64`` (streaming 64-bit SimHash,
-    no dictionary) or ``build_sketches`` (StreamHash) there instead.
-    """
-    L, B, R = params.L, params.B, params.R
-    n_vocab = chunk_counts.select("chunk").distinct().count()
-    if n_vocab > max_vocab:
-        raise ValueError(
-            f"build_simhash_sketches: vocabulary {n_vocab} exceeds max_vocab="
-            f"{max_vocab}; the dense dictionary path is for bounded "
-            "type-alphabet vocabularies only — use dedup.simhash64 or "
-            "sketch.build_sketches for open-text shingles")
-    vocab = [r["chunk"] for r in chunk_counts.select("chunk").distinct().collect()]
-    vocab.sort()
-    vocab_idx = {c: i for i, c in enumerate(vocab)}
-    rv = construct_random_vectors(L, len(vocab), params.seed)  # (L, |S|) +/-1
-    spark = chunk_counts.sparkSession
-    kernel = partial(_simhash_group,
-                     b_idx=spark.sparkContext.broadcast(vocab_idx),
-                     b_rv=spark.sparkContext.broadcast(rv),
-                     B=B, R=R)
-    return chunk_counts.groupBy("gid").applyInPandas(kernel, schema=SKETCH_SCHEMA)

@@ -1,11 +1,10 @@
-"""Deterministic random sources for the StreamHash/SimHash kernels.
+"""Deterministic random source for the StreamHash kernels.
 
 The reference seeds a ``std::mt19937_64`` with SEED=23 (main.cpp:83) and draws
-the universal hash family H (main.cpp:562-582) and SimHash random vectors
-(main.cpp:607-629) from it.  We re-implement the public MT19937-64 algorithm
-(Matsumoto & Nishimura 2000, public reference implementation) in pure Python so
-the hash family is reproducible bit-for-bit from the seed alone, generated once
-on the driver and broadcast to executors.
+the universal hash family H (main.cpp:562-582) from it.  We re-implement the
+public MT19937-64 algorithm (Matsumoto & Nishimura 2000, public reference
+implementation) in pure Python so the hash family is reproducible bit-for-bit
+from the seed alone, generated once on the driver and broadcast to executors.
 
 Note: the reference consumes PRNG draws for ``std::shuffle`` of the replay
 order *before* drawing H (main.cpp:201 vs main.cpp:244), so its H additionally
@@ -67,17 +66,3 @@ def allocate_random_bits(L: int, chunk_length: int, seed: int) -> np.ndarray:
     prng = MT19937_64(seed)
     flat = [prng() for _ in range(L * (chunk_length + 2))]
     return np.array(flat, dtype=np.uint64).reshape(L, chunk_length + 2)
-
-
-def construct_random_vectors(L: int, rvsize: int, seed: int) -> np.ndarray:
-    """SimHash random +/-1 vectors: L rows x rvsize (main.cpp:607-629).
-
-    The reference draws Bernoulli(0.5) from the shared PRNG; we take the low
-    bit of a fresh 64-bit draw, which is an unbiased deterministic equivalent.
-    """
-    prng = MT19937_64(seed)
-    out = np.empty((L, rvsize), dtype=np.int8)
-    for i in range(L):
-        for j in range(rvsize):
-            out[i, j] = 2 * (prng() & 1) - 1
-    return out

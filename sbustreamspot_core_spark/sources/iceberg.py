@@ -1,4 +1,4 @@
-"""Iceberg-style table source with SnapTable / parquet fallbacks.
+"""Iceberg-style table reader with SnapTable / parquet fallbacks.
 
 The north rule's input is an Iceberg table of web pages.  This sandbox
 image has no Iceberg runtime jars, so the loader tries, in order:
@@ -11,6 +11,9 @@ image has no Iceberg runtime jars, so the loader tries, in order:
    travel and incremental scans work WITHOUT any jar);
 3. a plain parquet directory (no snapshot semantics; requesting
    ``snapshot_id`` on one raises).
+
+Only the read side lives here; a SnapTable is written with
+``SnapTable.append``.
 """
 
 from __future__ import annotations
@@ -37,22 +40,3 @@ def read_table(spark: SparkSession, path_or_table: str,
                 "snapshot reads need the Iceberg runtime on the classpath "
                 "or a SnapTable directory")
         return spark.read.parquet(path_or_table)
-
-
-def write_table(df: DataFrame, path_or_table: str, mode: str = "append") -> None:
-    """Write to an Iceberg table; SnapTable commit or plain-parquet
-    fallback (same layout contract the superstep checkpoints rely on:
-    atomic directory commit + _SUCCESS)."""
-    if is_snaptable(path_or_table):
-        t = SnapTable(path_or_table)
-        if mode == "append":
-            t.append(df)
-        elif mode == "overwrite":
-            t.overwrite(df)
-        else:
-            raise ValueError(f"unsupported SnapTable write mode {mode!r}")
-        return
-    try:
-        df.write.format("iceberg").mode(mode).save(path_or_table)
-    except Exception:
-        df.write.mode(mode).parquet(path_or_table)

@@ -26,7 +26,7 @@ file, which lists the manifest files whose concatenation is the snapshot's
 content, and each manifest file (written exactly once, at the commit that
 added its files) holds the per-file entries.  An append therefore writes
 one new manifest (O(batch files)), one new manifest list (O(manifests
-since the last compaction/overwrite) path strings), and rewrites
+since the last compaction) path strings), and rewrites
 metadata.json at O(snapshots) fixed-size entries — per-commit metadata
 cost is FLAT in the table's total file count, instead of the
 O(snapshots x files) full-log rewrite of the v1 inlined format (measured
@@ -100,6 +100,9 @@ class CommitConflict(RuntimeError):
 
 
 _HINT = "version-hint.text"
+# summary keys a compaction's replace snapshot carries forward: the
+# incremental-dedup consumption cursor (streaming/table_dedup.py)
+_INHERITED_SUMMARY_KEYS = ("src_from", "src_to")
 
 
 def _meta_dir(path: str) -> str:
@@ -459,13 +462,6 @@ class SnapTable:
         return self._apply(df, "append", summary, base=base,
                            partition_by=partition_by)
 
-    def overwrite(self, df: DataFrame, summary: dict | None = None,
-                  partition_by: list | None = None) -> int:
-        """Replace the table contents (old files stay on disk for time
-        travel until ``vacuum``)."""
-        return self._apply(df, "overwrite", summary,
-                           partition_by=partition_by)
-
     def rollback_to(self, snapshot_id: int) -> int:
         """New commit whose current snapshot is an OLD one (history kept)."""
         base = self.current_version()
@@ -571,7 +567,8 @@ class SnapTable:
         including ``to_snapshot_id`` (current by default) — the
         append-only changelog scan that lets a consumer (e.g. the
         incremental dedup index) process only new data.  Raises if the
-        range crosses an overwrite, which invalidates append lineage."""
+        range crosses a snapshot that is neither an append nor a
+        compaction's replace."""
         meta = self.metadata()
         to_sid = meta["current_snapshot_id"] if to_snapshot_id is None \
             else to_snapshot_id
@@ -604,10 +601,7 @@ class SnapTable:
     # ---- maintenance --------------------------------------------------
 
     def compact(self, spark: SparkSession, target_file_mb: int = 512,
-                min_files: int = 8,
-                inherit_summary_keys: tuple = ("src_from", "src_to",
-                                               "epoch")
-                ) -> int | None:
+                min_files: int = 8) -> int | None:
         """Rewrite the current snapshot's data files into ~``target_file_mb``
         files (Iceberg's rewrite-data-files / OPTIMIZE).
 
@@ -626,9 +620,9 @@ class SnapTable:
 
         The replace snapshot's logical content equals the replaced
         snapshot's, so content-describing summary keys
-        (``inherit_summary_keys``, by default the incremental-dedup
-        consumption cursor) are carried forward from the nearest ancestor
-        that has them — without this, ``vacuum(keep_snapshots=1)`` right
+        (``_INHERITED_SUMMARY_KEYS``, the incremental-dedup consumption
+        cursor) are carried forward from the nearest ancestor that has
+        them — without this, ``vacuum(keep_snapshots=1)`` right
         after a compaction would erase the cursor and the next dedup step
         would reprocess the entire source (double-appending bands and
         pairs)."""
@@ -644,7 +638,7 @@ class SnapTable:
         walk = sid
         while walk is not None and not inherited:
             s = self._snapshot(meta, walk)
-            inherited = {k: s["summary"][k] for k in inherit_summary_keys
+            inherited = {k: s["summary"][k] for k in _INHERITED_SUMMARY_KEYS
                          if k in s["summary"]}
             walk = s["parent_id"]
         paths = [os.path.join(self.path, f["path"]) for f in manifest]

@@ -28,8 +28,7 @@ asserts in DEBUG builds, graph.cpp:346-363).
 One step: ``MicroBatchReplay.apply_batch`` is the whole per-batch body
 (touched-graph sketch recompute, driver-side cluster updates in seq order,
 checkpoint).  ``run`` slices a pre-seq'd edge table into batches and calls it
-once per batch; ``structured.StructuredStreamSpot`` calls it once per
-Structured Streaming epoch.
+once per batch.
 
 Checkpointing: each batch writes a snapshot parquet (scores + assignments,
 mirroring main.cpp:394-398) plus a driver-state npz and a _COMPLETE marker;
@@ -121,18 +120,15 @@ class MicroBatchReplay:
     def _batch_dir(self, k: int) -> str:
         return os.path.join(self.checkpoint_dir, f"batch={k}")
 
-    def complete_batches(self) -> list[int]:
-        """Batch ids with a ``_COMPLETE`` marker, ascending."""
+    def last_complete_batch(self) -> int | None:
+        """The highest batch id with a ``_COMPLETE`` marker, or None."""
         if not self.checkpoint_dir or not os.path.isdir(self.checkpoint_dir):
-            return []
-        return sorted(
+            return None
+        return max((
             int(name.split("=", 1)[1]) for name in os.listdir(self.checkpoint_dir)
             if name.startswith("batch=") and os.path.exists(
-                os.path.join(self.checkpoint_dir, name, "_COMPLETE")))
-
-    def last_complete_batch(self) -> int | None:
-        done = self.complete_batches()
-        return done[-1] if done else None
+                os.path.join(self.checkpoint_dir, name, "_COMPLETE"))),
+            default=None)
 
     def _resume(self) -> int:
         """Load the last complete batch's state; returns the next batch id."""

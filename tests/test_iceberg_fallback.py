@@ -2,12 +2,12 @@
 
 import os
 
-from sbustreamspot_core_spark.sources.iceberg import read_table, write_table
+from sbustreamspot_core_spark.sources.iceberg import read_table
 
 
 def test_parquet_fallback_roundtrip(spark, tmp_ckpt):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     path = os.path.join(tmp_ckpt, "tbl")
-    write_table(df, path, mode="overwrite")
+    df.write.parquet(path)
     back = read_table(spark, path)
     assert {(r.id, r.v) for r in back.collect()} == {(1, "a"), (2, "b")}

@@ -43,13 +43,6 @@ ALLOWED = {
         "test data: the planted truth of generate_variant_docs",
     ("sources.pages", "expected_link_edges"):
         "test data: the planted truth of generate_pages",
-    ("operators.sketch", "build_simhash_sketches"):
-        "the reference's SimHash sketch mode",
-    ("streaming.structured", "StructuredStreamSpot"):
-        "Structured Streaming shell over MicroBatchReplay",
-    ("streaming.table_dedup", "SnapTableDedupStream"):
-        "Structured Streaming shell over the SnapTable dedup step",
-    ("sources.iceberg", "write_table"): "write side of the table source",
 }
 # (module, "Class.method") -> reason; public methods no root names
 ALLOWED_METHODS = {

@@ -1,17 +1,16 @@
-"""Round-2 scale-fix regression tests: hub-safe CSR blocking, SimHash vocab
-guard, multi-table ANN recall."""
+"""Round-2 scale-fix regression tests: hub-safe CSR blocking, multi-table
+ANN recall."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
+from sbustreamspot_core_spark.config import GraphParams
 from sbustreamspot_core_spark.graph import pagerank as pagerank_mod
 from sbustreamspot_core_spark.graph.pagerank import (
     build_links,
     pagerank,
     prepared_edges,
 )
-from sbustreamspot_core_spark.operators.sketch import build_simhash_sketches
 from sbustreamspot_core_spark.oracles.graph_oracle import pagerank_oracle
 
 
@@ -50,16 +49,3 @@ def test_pagerank_unchanged_with_hub_blocking(spark, monkeypatch):
     got = {r.id: r.rank for r in pagerank(spark, edges, params).ranks.collect()}
     for node, r in expect.items():
         assert got[node] == pytest.approx(r, abs=1e-6)
-
-
-def test_simhash_vocab_guard(spark):
-    cc = spark.range(200).select(
-        F.lit(0).alias("gid"),
-        F.concat(F.lit("c"), F.col("id")).alias("chunk"),
-        F.lit(1).alias("cnt"))
-    params = StreamSpotParams(chunk_length=8, L=100, B=5, R=20)
-    with pytest.raises(ValueError, match="max_vocab"):
-        build_simhash_sketches(cc, params, max_vocab=100)
-    # under the cap it still works
-    out = build_simhash_sketches(cc, params, max_vocab=1000).collect()
-    assert len(out) == 1

@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from sbustreamspot_core_spark.sources.iceberg import read_table, write_table
+from sbustreamspot_core_spark.sources.iceberg import read_table
 from sbustreamspot_core_spark.sources.snaptable import (
     CommitConflict,
     SnapTable,
@@ -49,20 +49,21 @@ def test_create_append_read_and_time_travel(spark, tmp_ckpt):
     assert set(t._manifest_paths(snaps[0])) < set(t._manifest_paths(snaps[1]))
 
 
-def test_overwrite_and_rollback(spark, tmp_ckpt):
+def test_rollback_then_append(spark, tmp_ckpt):
     path = os.path.join(tmp_ckpt, "t2")
     t = SnapTable.create(path)
     t.append(_df(spark, 0, 4, "old"))
-    t.overwrite(_df(spark, 100, 103, "new"))
-    assert _rows(t.read(spark)) == {(i, "new") for i in range(100, 103)}
-    assert _rows(t.read(spark, snapshot_id=1)) == \
-        {(i, "old") for i in range(4)}       # time travel across overwrite
+    t.append(_df(spark, 100, 103, "new"))
+    old = {(i, "old") for i in range(4)}
+    assert _rows(t.read(spark)) == old | {(i, "new") for i in range(100, 103)}
     t.rollback_to(1)
-    assert _rows(t.read(spark)) == {(i, "old") for i in range(4)}
+    assert _rows(t.read(spark)) == old
+    # the rolled-past snapshot stays readable by time travel
+    assert _rows(t.read(spark, snapshot_id=2)) == \
+        old | {(i, "new") for i in range(100, 103)}
     # appends after rollback build on the rolled-back state
     t.append(_df(spark, 4, 6, "post"))
-    assert _rows(t.read(spark)) == {(i, "old") for i in range(4)} \
-        | {(i, "post") for i in range(4, 6)}
+    assert _rows(t.read(spark)) == old | {(i, "post") for i in range(4, 6)}
 
 
 def test_incremental_scan(spark, tmp_ckpt):
@@ -77,9 +78,6 @@ def test_incremental_scan(spark, tmp_ckpt):
     bounded = t.incremental(spark, from_snapshot_id=1, to_snapshot_id=2)
     assert _rows(bounded) == {(i, "s2") for i in range(5, 9)}
     assert t.incremental(spark, from_snapshot_id=3).count() == 0
-    t.overwrite(_df(spark, 0, 2, "ow"))
-    with pytest.raises(SnapTableError):      # range crosses an overwrite
-        t.incremental(spark, from_snapshot_id=1)
     with pytest.raises(SnapTableError):      # not an ancestor
         t.incremental(spark, from_snapshot_id=2, to_snapshot_id=1)
 
@@ -231,26 +229,29 @@ def test_vacuum_expires_time_travel(spark, tmp_ckpt):
     path = os.path.join(tmp_ckpt, "t7")
     t = SnapTable.create(path)
     t.append(_df(spark, 0, 3, "a"))
-    t.overwrite(_df(spark, 10, 13, "b"))
+    t.append(_df(spark, 10, 13, "b"))
+    # the replace snapshot rewrites both appends' files into new ones
+    assert t.compact(spark, min_files=1) is not None
     deleted = t.vacuum(keep_snapshots=1)
-    assert deleted                           # snapshot 1's files are gone
-    assert _rows(t.read(spark)) == {(i, "b") for i in range(10, 13)}
+    assert deleted                           # the appends' files are gone
+    assert _rows(t.read(spark)) == {(i, "a") for i in range(3)} \
+        | {(i, "b") for i in range(10, 13)}
     with pytest.raises(SnapTableError):
         t.read(spark, snapshot_id=1)
 
 
 def test_iceberg_source_routes_to_snaptable(spark, tmp_ckpt):
     path = os.path.join(tmp_ckpt, "t8")
-    SnapTable.create(path)
-    write_table(_df(spark, 0, 4, "x"), path, mode="append")
-    write_table(_df(spark, 4, 6, "y"), path, mode="append")
+    t = SnapTable.create(path)
+    t.append(_df(spark, 0, 4, "x"))
+    t.append(_df(spark, 4, 6, "y"))
     assert _rows(read_table(spark, path)) == {(i, "x") for i in range(4)} \
         | {(i, "y") for i in range(4, 6)}
     assert _rows(read_table(spark, path, snapshot_id=1)) == \
         {(i, "x") for i in range(4)}
     # plain parquet dirs keep the old fallback behavior
     plain = os.path.join(tmp_ckpt, "plain")
-    write_table(_df(spark, 0, 2, "p"), plain, mode="overwrite")
+    _df(spark, 0, 2, "p").write.parquet(plain)
     assert read_table(spark, plain).count() == 2
 
 
@@ -477,9 +478,10 @@ def test_flat_commit_metadata_and_vacuum_cleans_manifests(spark, tmp_ckpt):
     assert max(deltas) <= min(deltas) + 64
     assert t.read(spark).count() == 60
 
-    # overwrite orphans every earlier manifest; vacuum must delete them
-    # (and old metadata versions) while keeping reads exact
-    t.overwrite(_df(spark, 0, 3, "ow"))
+    # a compaction's replace snapshot orphans every earlier manifest;
+    # vacuum must delete them (and old metadata versions) while keeping
+    # reads exact
+    assert t.compact(spark, min_files=1) is not None
     deleted = t.vacuum(keep_snapshots=1, orphan_grace_s=-1.0,
                        keep_metadata_versions=1)
     assert any("manifest-list-" in d for d in deleted)
@@ -492,7 +494,7 @@ def test_flat_commit_metadata_and_vacuum_cleans_manifests(spark, tmp_ckpt):
                 if n.startswith("manifest-")
                 and not n.startswith("manifest-list-")]) == 1
     assert len([n for n in names if n.endswith(".metadata.json")]) == 1
-    assert _rows(t.read(spark)) == {(i, "ow") for i in range(3)}
+    assert _rows(t.read(spark)) == {(i, f"b{i // 10}") for i in range(60)}
 
 
 def test_fixture_table_matches_generation_rule(spark):

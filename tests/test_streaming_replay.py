@@ -141,24 +141,16 @@ def test_replay_checkpoint_resume(spark, replay_inputs, tmp_ckpt):
         assert got["anomaly_scores"][gid] == pytest.approx(s), gid
 
 
-@needs_reference
-def test_replay_kill_between_snapshot_and_complete(spark, replay_inputs,
-                                                   tmp_ckpt):
-    """Fault injection in the commit gap: the process dies AFTER batch k's
+def _assert_kill_then_resume(spark, inputs, params, ckpt):
+    """Fault injection in the commit gap: the process dies AFTER batch 1's
     snapshot/state/lineage are written but BEFORE the _COMPLETE marker.
-    Resume must treat batch k as unfinished, reprocess it, and end in the
+    Resume must treat batch 1 as unfinished, reprocess it, and end in the
     same state as a straight-through run."""
-    import os
-
-    import pytest as _pytest
-
-    boot, train, test_seq = replay_inputs
-    params = StreamSpotParams(chunk_length=10, L=100, B=5, R=20,
-                              cluster_update_interval=2)
+    boot, train, test_seq = inputs
     expect = MicroBatchReplay(spark, params, boot, train,
                               checkpoint_dir=None).run(test_seq, resume=False)
 
-    e1 = MicroBatchReplay(spark, params, boot, train, checkpoint_dir=tmp_ckpt)
+    e1 = MicroBatchReplay(spark, params, boot, train, checkpoint_dir=ckpt)
     orig = e1._save_state
 
     def dying_save(k, snapshot, n_edges):
@@ -168,20 +160,29 @@ def test_replay_kill_between_snapshot_and_complete(spark, replay_inputs,
             raise RuntimeError("injected kill between snapshot and _COMPLETE")
 
     e1._save_state = dying_save
-    with _pytest.raises(RuntimeError, match="injected kill"):
+    with pytest.raises(RuntimeError, match="injected kill"):
         e1.run(test_seq, resume=False)
     # batch=1 dir exists with its snapshot but no _COMPLETE marker
-    assert os.path.isdir(os.path.join(tmp_ckpt, "batch=1", "snapshot"))
-    assert not os.path.exists(os.path.join(tmp_ckpt, "batch=1", "_COMPLETE"))
+    assert os.path.isdir(os.path.join(ckpt, "batch=1", "snapshot"))
+    assert not os.path.exists(os.path.join(ckpt, "batch=1", "_COMPLETE"))
 
-    e2 = MicroBatchReplay(spark, params, boot, train, checkpoint_dir=tmp_ckpt)
+    e2 = MicroBatchReplay(spark, params, boot, train, checkpoint_dir=ckpt)
     assert e2.last_complete_batch() == 0
     got = e2.run(test_seq, resume=True)
     assert got["cluster_map"] == expect["cluster_map"]
     for gid, s in expect["anomaly_scores"].items():
         assert got["anomaly_scores"][gid] == pytest.approx(s), gid
     # the rewritten batch=1 is now complete
-    assert os.path.exists(os.path.join(tmp_ckpt, "batch=1", "_COMPLETE"))
+    assert os.path.exists(os.path.join(ckpt, "batch=1", "_COMPLETE"))
+
+
+@needs_reference
+def test_replay_kill_between_snapshot_and_complete(spark, replay_inputs,
+                                                   tmp_ckpt):
+    _assert_kill_then_resume(
+        spark, replay_inputs,
+        StreamSpotParams(chunk_length=10, L=100, B=5, R=20,
+                         cluster_update_interval=2), tmp_ckpt)
 
 
 # --------------------------------------------------------------------------
@@ -231,6 +232,15 @@ def test_synthetic_replay_checkpoint_resume(spark, synthetic_inputs, tmp_ckpt):
     assert got["cluster_map"] == expect["cluster_map"]
     for gid, s in expect["anomaly_scores"].items():
         assert got["anomaly_scores"][gid] == pytest.approx(s), gid
+
+
+def test_synthetic_replay_kill_between_snapshot_and_complete(
+        spark, synthetic_inputs, tmp_ckpt):
+    _assert_kill_then_resume(
+        spark, synthetic_inputs,
+        StreamSpotParams(chunk_length=4, L=100, B=5, R=20,
+                         cluster_update_interval=3, max_num_edges=5),
+        tmp_ckpt)
 
 
 def test_run_streamspot_cli_writes_engine_state(

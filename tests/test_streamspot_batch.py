@@ -3,7 +3,6 @@ published test graphs (test_edges.txt / test_bootstrap_clusters.txt)."""
 
 import math
 
-import numpy as np
 import pytest
 
 from sbustreamspot_core_spark.config import ANOMALY, StreamSpotParams
@@ -280,51 +279,3 @@ def test_bucket_star_edges_connectivity_equals_full_pairs(spark):
         assert len(star) <= len(rows)          # O(rows), never quadratic
         nodes = set(range(30))
         assert partitions(star, nodes) == partitions(full, nodes), trial
-
-
-def _assert_simhash_matches_oracle(cc, graphs, params):
-    """SimHash over the dense shingle vector with seeded +/-1 random
-    vectors (simhash.cpp:16-27, main.cpp:607-629); dictionary ids by sorted
-    chunk (documented deviation #6).  Returns the sketches by gid."""
-    from sbustreamspot_core_spark.operators.sketch import build_simhash_sketches
-    from sbustreamspot_core_spark.rng import construct_random_vectors
-
-    sk = {r.gid: r for r in build_simhash_sketches(cc, params).collect()}
-    svs = {gid: oracle.shingle_vector(g, params.chunk_length)
-           for gid, g in graphs.items()}
-    assert set(sk) == set(svs)
-    vocab = sorted({c for sv in svs.values() for c in sv})
-    idx = {c: i for i, c in enumerate(vocab)}
-    rv = construct_random_vectors(params.L, len(vocab), params.seed)
-    for gid, sv in svs.items():
-        dense = np.zeros(len(vocab), dtype=np.int64)
-        for c, cnt in sv.items():
-            dense[idx[c]] = cnt
-        proj = rv.astype(np.int64) @ dense
-        assert sk[gid].projection == proj.tolist(), gid
-        bits = sketch_bytes_to_bits([bytes(sk[gid].sketch)], params.L)[0]
-        assert bits.tolist() == [(1 if p >= 0 else 0) for p in proj], gid
-    return sk
-
-
-@needs_reference
-def test_simhash_sketches_match_oracle(spark, edge_df, oracle_graphs):
-    """X7 on the published sample."""
-    cc = build_chunk_counts(
-        build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
-    sk = _assert_simhash_matches_oracle(cc, oracle_graphs, PARAMS)
-    # graphs 1 and 2 have identical shingle vectors -> identical simhash
-    assert bytes(sk[1].sketch) == bytes(sk[2].sketch)
-
-
-def test_simhash_sketches_match_oracle_on_synthetic_sample(
-        spark, synthetic_sample):
-    """X7 on the synthetic sample, where the published one is absent."""
-    edges_path, _ = synthetic_sample
-    cc = build_chunk_counts(
-        build_shingles(build_adjacency(read_streamspot_edges(spark, edges_path))),
-        SYN_PARAMS.chunk_length)
-    graphs = {gid: oracle.build_graph(edges) for gid, edges
-              in load_reference_edge_tuples(edges_path).items()}
-    sk = _assert_simhash_matches_oracle(cc, graphs, SYN_PARAMS)
-    assert len({bytes(r.sketch) for r in sk.values()}) > 1

@@ -1,11 +1,10 @@
 """SnapTable-to-SnapTable incremental dedup: cumulative equivalence with
 the full-corpus pass, up-to-date no-op, and exactly-once crash recovery
-(kill between the index commit and the candidates commit)."""
+(kill on the index commit or on the candidates commit)."""
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.operators.dedup import (
     build_dedup_index,
@@ -121,10 +120,17 @@ def test_index_compaction_between_steps_keeps_cursor(spark, tmp_ckpt):
     assert log.count() == log.distinct().count()
 
 
+@pytest.mark.parametrize("crash_on", ["index", "candidates"])
 def test_crash_between_commits_recovers_exactly_once(spark, tmp_ckpt,
-                                                     monkeypatch):
-    src, idx, cand = _paths(tmp_ckpt, "t3")
-    ref_src, ref_idx, ref_cand = _paths(tmp_ckpt, "ref")
+                                                     monkeypatch, crash_on):
+    """Kill the second batch's step on commit [1] (the index append) or
+    on commit [2] (the candidates append).  A crash on [1] leaves both
+    cursors where they were, so the next step replays the batch as a
+    fresh one; a crash on [2] leaves the index ahead, so the next step
+    recovers the missing pairs only.  Either way the candidate log and
+    the index end exactly-once."""
+    src, idx, cand = _paths(tmp_ckpt, f"t3_{crash_on}")
+    ref_src, ref_idx, ref_cand = _paths(tmp_ckpt, f"ref_{crash_on}")
 
     b1 = _docs(spark, 0, 20)
     b2 = _docs(spark, 20, 40, dup_of=[(100, 1), (101, 21)])
@@ -144,12 +150,13 @@ def test_crash_between_commits_recovers_exactly_once(spark, tmp_ckpt,
     table_dedup_step(spark, src, idx, cand, **PARAMS)
     SnapTable(src).rollback_to(2)
 
-    # batch 2: die after commit [1] (index) and before commit [2]
+    # batch 2: die on the chosen commit
+    dying = {"index": idx, "candidates": cand}[crash_on]
     orig_append = SnapTable.append
 
     def dying_append(self, df, summary=None, base=None):
-        if os.path.abspath(self.path) == os.path.abspath(cand):
-            raise RuntimeError("injected crash before candidates commit")
+        if os.path.abspath(self.path) == os.path.abspath(dying):
+            raise RuntimeError(f"injected crash on the {crash_on} commit")
         return orig_append(self, df, summary=summary, base=base)
 
     monkeypatch.setattr(SnapTable, "append", dying_append)
@@ -157,9 +164,14 @@ def test_crash_between_commits_recovers_exactly_once(spark, tmp_ckpt,
         table_dedup_step(spark, src, idx, cand, **PARAMS)
     monkeypatch.setattr(SnapTable, "append", orig_append)
 
-    # index is ahead of candidates -> next step must recover, not reconsume
     res = table_dedup_step(spark, src, idx, cand, **PARAMS)
-    assert res["status"] == "recovered" and res["recovered"]
+    if crash_on == "index":
+        # neither commit landed: the batch replays fresh
+        assert res["status"] == "ok" and "recovered" not in res
+        assert res["new_docs"] == 22
+    else:
+        # index is ahead of candidates -> recover, not reconsume
+        assert res["status"] == "recovered" and res["recovered"]
     # and then report up to date (nothing double-processed)
     assert table_dedup_step(spark, src, idx, cand, **PARAMS)["status"] == \
         "up_to_date"
@@ -170,6 +182,11 @@ def test_crash_between_commits_recovers_exactly_once(spark, tmp_ckpt,
     # exactly-once: no duplicate pair rows in the candidate log
     log = SnapTable(cand).read(spark)
     assert log.count() == log.distinct().count()
+    # ...and no duplicate bands in the index
+    bands = SnapTable(idx).read(spark)
+    assert bands.count() == (20 + 22) * PARAMS["bands"]
+    assert bands.groupBy("id", "band_idx").count() \
+        .filter("count > 1").count() == 0
 
 
 @pytest.mark.parametrize("maintenance", ["compact", "compact_vacuum"])

@@ -169,7 +169,6 @@ KERNELS = sorted(f"sbustreamspot_core_spark.{k}" for k in [
     "operators.dedup._minhash_batches",
     "operators.multimodal._decode_audio_batches",
     "operators.multimodal._decode_image_batches",
-    "operators.sketch._simhash_group",
     "operators.sketch._sketch_group_inline",
     "sources.pages._page_batches",
 ])
