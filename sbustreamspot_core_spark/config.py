@@ -75,3 +75,4 @@ DATASET_SCENARIOS: dict[str, frozenset[int]] = {
 
 UNSEEN = -2   # cluster.h:19
 ANOMALY = -1  # cluster.h:18
+PI = 3.1415926535897  # param.h:22, truncated as the reference has it

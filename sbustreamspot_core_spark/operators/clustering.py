@@ -22,10 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import ANOMALY, StreamSpotParams
+from ..config import ANOMALY, PI, StreamSpotParams
 from ..functions.sketches import pack_sketch, sketch_similarity_series
-
-PI = 3.1415926535897  # param.h:22
 
 CENTROID_SCHEMA = (
     "cluster_id int, projection array<double>, sketch binary, size long"

@@ -20,10 +20,8 @@ from functools import partial
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import StreamSpotParams
+from ..config import PI, StreamSpotParams
 from ..functions.sketches import sketch_similarity_series
-
-PI = 3.1415926535897  # param.h:22
 
 
 def shingle_cosine_pairs(chunk_counts: DataFrame) -> DataFrame:

@@ -1,5 +1,12 @@
 """StreamHash sketch construction — one Arrow-vectorized pass per graph.
 
+``sketch_table`` is the one edges -> sketches chain: it hash-partitions the
+edges on ``gid`` once, then runs ``build_adjacency`` -> ``build_shingles``
+-> ``build_chunk_counts`` -> ``build_sketches``.  StreamSpot builds all of
+it per graph (graph.cpp:24-37,119-122, streamhash.cpp:28-38), so every
+grouping in the chain includes ``gid`` and that one Exchange serves them all
+(Spark drops it when the input is already hash-partitioned on ``gid``).
+
 ``build_sketches`` groups the (gid, chunk, cnt) table by graph and runs one
 applyInPandas kernel per group: it hashes the group's chunks with all L hash
 functions (numpy batch matmul, streamhash.cpp:28-34) through a per-task memo,
@@ -22,6 +29,7 @@ from ..config import StreamSpotParams
 from ..functions.hashing import hashmulti_batch
 from ..functions.sketches import band_values, pack_sketch
 from ..rng import allocate_random_bits
+from .shingles import build_adjacency, build_chunk_counts, build_shingles
 
 SKETCH_SCHEMA = "gid long, projection array<long>, sketch binary, bands array<long>"
 
@@ -71,6 +79,14 @@ def build_sketches(chunk_counts: DataFrame, params: StreamSpotParams) -> DataFra
     kernel = partial(_sketch_group_inline, H=H, B=params.B, R=params.R,
                      memo={})
     return chunk_counts.groupBy("gid").applyInPandas(kernel, schema=SKETCH_SCHEMA)
+
+
+def sketch_table(edges: DataFrame, params: StreamSpotParams) -> DataFrame:
+    """(gid, projection, sketch, bands) of every graph in a StreamSpot edge
+    table: one shuffle on ``gid``, then the chain above."""
+    shingles = build_shingles(build_adjacency(edges.repartition("gid")))
+    return build_sketches(build_chunk_counts(shingles, params.chunk_length),
+                          params)
 
 
 def sketch_bands(sketches: DataFrame, params: StreamSpotParams) -> DataFrame:

@@ -15,9 +15,8 @@ from .config import GraphParams, StreamSpotParams
 from .functions.text import extract_hrefs_udf, extract_text_udf
 from .graph.components import components_fn
 from .operators.lsh import candidate_pairs, isolated_vs_others, lsh_clusters
-from .operators.shingles import build_adjacency, build_chunk_counts, build_shingles
 from .operators.similarity import all_pairs_sketch_similarity
-from .operators.sketch import build_sketches, sketch_bands
+from .operators.sketch import sketch_bands, sketch_table
 
 # Cap of the similarity prune's bucket self-join.  It is load-bearing at
 # scale: a band bucket holding B near-identical hosts would otherwise force
@@ -128,9 +127,7 @@ def host_anomaly_pipeline(spark: SparkSession, pages: DataFrame,
     star-reduced pair subset."""
     link_edges = extract_link_edges(pages)
     ss_edges = host_subgraph_edges(link_edges).cache()
-    chunk_counts = build_chunk_counts(
-        build_shingles(build_adjacency(ss_edges)), params.chunk_length)
-    sketches = build_sketches(chunk_counts, params).cache()
+    sketches = sketch_table(ss_edges, params).cache()
     bands = sketch_bands(sketches, params).cache()
     clusters = lsh_clusters(bands, components_fn(spark, graph_params))
     anomalies = isolated_vs_others(bands)

@@ -29,8 +29,9 @@ one new manifest (O(batch files)), one new manifest list (O(manifests
 since the last compaction) path strings), and rewrites
 metadata.json at O(snapshots) fixed-size entries — per-commit metadata
 cost is FLAT in the table's total file count, instead of the
-O(snapshots x files) full-log rewrite of the v1 inlined format (measured
-growing past 2 s/commit by 192 appends; see BENCH.md).  Compaction
+O(snapshots x files) full-log rewrite of the round-5 inlined format
+(measured growing past 2 s/commit by 192 appends; see BENCH.md), which
+``metadata()`` refuses as it does any format but ``snaptable/2``.  Compaction
 collapses the manifest list back to one entry and ``vacuum`` bounds the
 snapshot log, so both growth axes have a maintenance story.
 
@@ -100,6 +101,7 @@ class CommitConflict(RuntimeError):
 
 
 _HINT = "version-hint.text"
+_FORMAT = "snaptable/2"
 # summary keys a compaction's replace snapshot carries forward: the
 # incremental-dedup consumption cursor (streaming/table_dedup.py)
 _INHERITED_SUMMARY_KEYS = ("src_from", "src_to")
@@ -200,7 +202,7 @@ class SnapTable:
             raise SnapTableError(f"{path} is already a SnapTable")
         os.makedirs(_meta_dir(path), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        meta = {"format": "snaptable/2", "table_uuid": uuid.uuid4().hex,
+        meta = {"format": _FORMAT, "table_uuid": uuid.uuid4().hex,
                 "schema": None, "current_snapshot_id": None,
                 "snapshots": []}
         try:
@@ -233,7 +235,11 @@ class SnapTable:
         if not os.path.exists(fp):
             raise SnapTableError(f"no metadata version {v}")
         with open(fp) as f:
-            return json.load(f)
+            meta = json.load(f)
+        if meta.get("format") != _FORMAT:
+            raise SnapTableError(
+                f"{fp}: format {meta.get('format')!r}, expected {_FORMAT!r}")
+        return meta
 
     def snapshots(self) -> list[dict]:
         return self.metadata()["snapshots"]
@@ -267,14 +273,10 @@ class SnapTable:
 
     def _manifest_paths(self, snap: dict) -> list[str]:
         """Manifest-file relpaths making up the snapshot's content."""
-        if "manifest" in snap:     # v1 inlined format: no indirection
-            return []
         return self._read_meta_json(snap["manifest_list"])
 
     def _load_manifest(self, snap: dict) -> list[dict]:
         """The snapshot's full per-file entry list ({path, rows, min, max})."""
-        if "manifest" in snap:     # v1 back-compat: entries inlined
-            return snap["manifest"]
         out: list[dict] = []
         for rel in self._manifest_paths(snap):
             out.extend(self._read_meta_json(rel))
@@ -282,8 +284,6 @@ class SnapTable:
 
     def _added_paths(self, snap: dict) -> list[str]:
         """Data-file relpaths ADDED by the snapshot's own commit."""
-        if "added_files" in snap:  # v1 back-compat
-            return snap["added_files"]
         return [f["path"]
                 for f in self._read_meta_json(snap["added_manifest"])]
 
@@ -414,14 +414,7 @@ class SnapTable:
         added_manifest = self._write_meta_json("manifest", base + 1,
                                                new_files)
         if operation == "append" and parent is not None:
-            psnap = self._snapshot(meta, parent)
-            carried = self._manifest_paths(psnap)
-            if not carried and "manifest" in psnap:
-                # upgrading a v1 table in place: materialize the parent's
-                # inlined entries into a manifest file once; subsequent
-                # commits share it by path like any other
-                carried = [self._write_meta_json(
-                    "manifest", base + 1, psnap["manifest"])]
+            carried = self._manifest_paths(self._snapshot(meta, parent))
         else:
             carried = []
         manifest_list = self._write_meta_json(
@@ -699,9 +692,8 @@ class SnapTable:
         live_meta: set = set()
         for s in kept:
             live.update(f["path"] for f in self._load_manifest(s))
-            if "manifest" not in s:
-                live_meta.update((s["manifest_list"], s["added_manifest"]))
-                live_meta.update(self._manifest_paths(s))
+            live_meta.update((s["manifest_list"], s["added_manifest"]))
+            live_meta.update(self._manifest_paths(s))
         # referenced by a dropped snapshot = provably committed garbage
         # once the pruned log lands; everything else unreferenced is an
         # orphan candidate gated by the grace period
@@ -711,10 +703,8 @@ class SnapTable:
             if s["snapshot_id"] in keep_ids:
                 continue
             dropped_refs.update(f["path"] for f in self._load_manifest(s))
-            if "manifest" not in s:
-                dropped_meta.update((s["manifest_list"],
-                                     s["added_manifest"]))
-                dropped_meta.update(self._manifest_paths(s))
+            dropped_meta.update((s["manifest_list"], s["added_manifest"]))
+            dropped_meta.update(self._manifest_paths(s))
         dropped_refs -= live
         dropped_meta -= live_meta
         self._commit(base, meta)        # raises CommitConflict -> no deletes

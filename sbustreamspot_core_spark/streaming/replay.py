@@ -7,8 +7,11 @@ execution model:
   ``cluster_update_interval`` edges (the reference's snapshot cadence,
   param.h:20) — at interval=1 this reproduces the sequential reference
   semantics edge-for-edge (verified against the pure-Python simulator);
-- heavy work (windowed adjacency -> shingles -> chunk counts -> sketches of
-  *touched* graphs) is distributed DataFrame work per batch;
+- heavy work (``sketch_table`` over the window's edges of the *touched*
+  graphs) is distributed DataFrame work per batch: ``assign_replay_seq``'s
+  global ``row_number`` leaves the cached edges in one partition, and
+  ``sketch_table``'s one shuffle spreads each batch's graphs over ``gid``
+  hash partitions;
 - the tiny cluster state (O(#clusters x L) centroid projections + per-graph
   assignment map) is a driver-side numpy state machine applying the
   reference's incremental update equations (cluster.cpp:103-298) in ``seq``
@@ -44,13 +47,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..config import ANOMALY, UNSEEN, StreamSpotParams
-from ..operators.shingles import build_adjacency, build_chunk_counts, build_shingles
-from ..operators.sketch import build_sketches
+from ..config import ANOMALY, PI, UNSEEN, StreamSpotParams
+from ..operators.sketch import sketch_table
 from ..session import local_table
 from ..sources.bootstrap import BootstrapClusters
-
-PI = 3.1415926535897
 
 
 def assign_replay_seq(test_edges: DataFrame) -> DataFrame:
@@ -88,14 +88,9 @@ class MicroBatchReplay:
         self._init_state(train_edges)
 
     # ------------------------------------------------------------ bootstrap
-    def _sketch_table(self, edges: DataFrame) -> DataFrame:
-        cc = build_chunk_counts(
-            build_shingles(build_adjacency(edges)), self.p.chunk_length)
-        return build_sketches(cc, self.p)
-
     def _init_state(self, train_edges: DataFrame) -> None:
         p, boot = self.p, self.bootstrap
-        rows = self._sketch_table(train_edges).collect()
+        rows = sketch_table(train_edges, p).collect()
         self.projections: dict[int, np.ndarray] = {
             r.gid: np.array(r.projection, dtype=np.float64) for r in rows}
         nclusters = len(boot.clusters)
@@ -219,7 +214,8 @@ class MicroBatchReplay:
     def _projections(self, edges: DataFrame, gids: list[int]) -> dict:
         """Projections of ``gids`` over ``edges``; zeros for a graph with no
         edges there (fully evicted)."""
-        rows = self._sketch_table(edges.filter(F.col("gid").isin(gids))).collect()
+        rows = sketch_table(edges.filter(F.col("gid").isin(gids)),
+                            self.p).collect()
         got = {r.gid: np.array(r.projection, dtype=np.float64) for r in rows}
         return {g: got.get(g, np.zeros(self.p.L)) for g in gids}
 

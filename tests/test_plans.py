@@ -234,14 +234,57 @@ def test_minhash_is_single_pass_arrow(spark):
     assert p.count("hashpartitioning") == 0   # no keyed shuffle
 
 
+def shuffles(df) -> int:
+    """Runs ``df``, then counts the shuffles of the plan it ran (AQE's
+    final plan, re-planned once a cached input's partitioning is known);
+    a cached input is a leaf."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "isFinalPlan=true" in plan.toString()
+    count, todo = 0, [plan.executedPlan()]
+    while todo:
+        nodes = plan_nodes(todo.pop())
+        count += [n.nodeName() for n in nodes].count("Exchange")
+        # a query stage is a leaf that wraps the plan it ran
+        todo.extend(n.plan() for n in nodes
+                    if n.nodeName().endswith("QueryStage"))
+    return count
+
+
 def test_adjacency_single_shuffle(spark):
-    """A1 is one groupBy -> exactly one exchange in the plan."""
+    """A1 is one groupBy -> exactly one exchange in the plan; the whole
+    edges -> sketches chain is one shuffle on ``gid`` too."""
+    from sbustreamspot_core_spark.operators.sketch import (
+        build_sketches, sketch_table)
+    from sbustreamspot_core_spark.pipeline import host_subgraph_edges
     edges = spark.createDataFrame(
         [(1, 1, "a", 2, "b", "t", 0)],
         "gid long, src_id long, src_type string, dst_id long, "
         "dst_type string, e_type string, seq long")
     p = plan_str(build_adjacency(edges))
     assert p.count("Exchange") <= 2  # hashpartitioning exchange (+AQE read)
+
+    params = StreamSpotParams(chunk_length=4, L=100, B=5, R=20)
+    edges = spark.createDataFrame(
+        [(g, s, "a", s + 1, "b", "t", s) for g in range(3) for s in range(4)],
+        edges.schema)
+    assert shuffles(sketch_table(edges, params)) == 1
+    # the pieces alone shuffle per grouping: adjacency, chunk counts, sketch
+    assert shuffles(build_sketches(build_chunk_counts(build_shingles(
+        build_adjacency(edges)), params.chunk_length), params)) == 3
+
+    # the web pipeline's cached edges are already hash-partitioned on gid
+    # (host_subgraph_edges' window): once AQE sees the cached partitioning
+    # the chain runs with no Exchange above the cache
+    links = spark.createDataFrame(
+        [(f"http://h{i % 3}/p{i}.html", f"http://h{i % 2}/p0.html", i, 0)
+         for i in range(12)],
+        "src_url string, dst_url string, warc_ts long, link_pos int")
+    cached = host_subgraph_edges(links).cache()
+    try:
+        assert shuffles(sketch_table(cached, params)) == 0
+    finally:
+        cached.unpersist()
 
 
 def test_hash_url_ids_are_shuffle_free(spark):

@@ -24,6 +24,16 @@ def _rows(df):
     return {(r.id, r.tag) for r in df.select("id", "tag").collect()}
 
 
+def _fake_snapshot(t, snapshot_id, parent_id, summary):
+    """A metadata-only snapshot entry in the table's format: its added
+    manifest and its manifest list are empty."""
+    added = t._write_meta_json("manifest", 0, [])
+    return {"snapshot_id": snapshot_id, "parent_id": parent_id,
+            "operation": "append", "ts": 0.0, "added_manifest": added,
+            "manifest_list": t._write_meta_json("manifest-list", 0, []),
+            "summary": summary}
+
+
 def test_create_append_read_and_time_travel(spark, tmp_ckpt):
     path = os.path.join(tmp_ckpt, "t1")
     t = SnapTable.create(path)
@@ -147,15 +157,11 @@ def test_commit_race_loser_cannot_clobber(spark, tmp_ckpt):
     t.append(_df(spark, 0, 3, "a"))
     base = t.current_version()
     meta_w = t.metadata(base)
-    meta_w["snapshots"].append({"snapshot_id": 99, "parent_id": None,
-                                "operation": "append", "ts": 0.0,
-                                "added_files": [], "manifest": [],
-                                "summary": {"who": "winner"}})
+    meta_w["snapshots"].append(
+        _fake_snapshot(t, 99, None, {"who": "winner"}))
     meta_l = t.metadata(base)
-    meta_l["snapshots"].append({"snapshot_id": 77, "parent_id": None,
-                                "operation": "append", "ts": 0.0,
-                                "added_files": [], "manifest": [],
-                                "summary": {"who": "loser"}})
+    meta_l["snapshots"].append(
+        _fake_snapshot(t, 77, None, {"who": "loser"}))
     t._commit(base, meta_w)
     # the loser passed its base check before the winner's commit landed;
     # the exclusive create of the version file must still reject it
@@ -290,15 +296,13 @@ def _stress_writer(path: str, worker: int, n_commits: int, out_q):
     t = SnapTable(path)
     committed = []
     for i in range(n_commits):
+        sid = worker * 1_000_000 + i
+        snap = _fake_snapshot(t, sid, None, {"worker": worker, "i": i})
         while True:
             base = t.current_version()
             meta = t.metadata(base)
-            sid = worker * 1_000_000 + i
             meta["snapshots"].append(
-                {"snapshot_id": sid,
-                 "parent_id": meta["current_snapshot_id"],
-                 "operation": "append", "ts": 0.0, "added_files": [],
-                 "manifest": [], "summary": {"worker": worker, "i": i}})
+                {**snap, "parent_id": meta["current_snapshot_id"]})
             meta["current_snapshot_id"] = sid
             try:
                 committed.append(t._commit(base, meta))
@@ -398,7 +402,7 @@ def test_create_recovers_from_crash_before_hint(tmp_ckpt):
     path = os.path.join(tmp_ckpt, "t_crashed_create")
     os.makedirs(os.path.join(path, "metadata"))
     with open(os.path.join(path, "metadata", "v0.metadata.json"), "w") as f:
-        json.dump({"format": "snaptable/1", "table_uuid": "dead",
+        json.dump({"format": "snaptable/2", "table_uuid": "dead",
                    "schema": None, "current_snapshot_id": None,
                    "snapshots": []}, f)
     assert not is_snaptable(path)            # the crashed state
@@ -514,39 +518,29 @@ def test_fixture_table_matches_generation_rule(spark):
     assert t.snapshots()[-1]["operation"] == "replace"
 
 
-def test_v1_inline_manifest_table_upgrades_in_place(spark, tmp_ckpt):
-    """A table whose snapshots inline their manifests (the round-5 v1
-    format) must keep reading, and the first v2 append must materialize
-    the parent's inlined entries into a shared manifest file and carry
-    them by path — old rows intact, changelog correct."""
+def test_v1_inline_manifest_table_is_refused(spark, tmp_ckpt):
+    """A table in the round-5 v1 format (snapshots inline their manifests)
+    is refused with SnapTableError on every read and write, never half
+    read: only ``snaptable/2`` is a SnapTable format."""
     path = os.path.join(tmp_ckpt, "t_v1")
     t = SnapTable.create(path)
     t.append(_df(spark, 0, 4, "a").coalesce(1))
-    # rewrite the snapshot entry into the v1 inlined shape
+    # rewrite the current version into the v1 inlined shape
     v = t.current_version()
     meta = t.metadata(v)
     snap = meta["snapshots"][-1]
-    manifest = t._load_manifest(snap)
-    added = t._added_paths(snap)
-    snap.pop("manifest_list")
-    snap.pop("added_manifest")
-    snap["manifest"] = manifest
-    snap["added_files"] = added
+    snap["manifest"] = t._load_manifest(snap)
+    snap["added_files"] = t._added_paths(snap)
+    del snap["manifest_list"], snap["added_manifest"]
+    meta["format"] = "snaptable/1"
     with open(os.path.join(path, "metadata",
                            f"v{v}.metadata.json"), "w") as f:
         json.dump(meta, f)
-    # v1 state reads fine
-    assert _rows(t.read(spark)) == {(i, "a") for i in range(4)}
-    # first v2 append on top: carried entries come from the materialized
-    # legacy manifest, not a re-serialization into the log
-    t.append(_df(spark, 4, 6, "b").coalesce(1))
-    assert _rows(t.read(spark)) == {(i, "a") for i in range(4)} \
-        | {(i, "b") for i in range(4, 6)}
-    new_snap = t.snapshots()[-1]
-    assert "manifest" not in new_snap
-    assert len(t._manifest_paths(new_snap)) == 2   # legacy + new batch
-    inc = t.incremental(spark, from_snapshot_id=1)
-    assert _rows(inc) == {(4, "b"), (5, "b")}
+    for op in (t.metadata, t.snapshots, lambda: t.read(spark),
+               lambda: t.append(_df(spark, 4, 6, "b"))):
+        with pytest.raises(SnapTableError, match="snaptable/1"):
+            op()
+    assert t.current_version() == v           # the refused append wrote no version
 
 
 def test_partitioned_append_prunes_exactly(spark, tmp_ckpt):

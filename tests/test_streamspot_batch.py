@@ -27,7 +27,7 @@ from sbustreamspot_core_spark.operators.similarity import (
     all_pairs_sketch_similarity,
     shingle_cosine_pairs,
 )
-from sbustreamspot_core_spark.operators.sketch import build_sketches, sketch_bands
+from sbustreamspot_core_spark.operators.sketch import sketch_bands, sketch_table
 from sbustreamspot_core_spark.oracles import streamspot_oracle as oracle
 from sbustreamspot_core_spark.rng import allocate_random_bits
 from sbustreamspot_core_spark.sources.bootstrap import read_bootstrap_clusters
@@ -94,27 +94,37 @@ def test_chunk_counts_match_oracle(spark, edge_df, oracle_graphs):
         assert got[gid] == dict(sv), gid
 
 
-@needs_reference
-def test_sketches_match_oracle(spark, edge_df, oracle_graphs):
-    cc = build_chunk_counts(
-        build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
-    sk = build_sketches(cc, PARAMS)
-    rows = {r.gid: r for r in sk.collect()}
-    H = allocate_random_bits(PARAMS.L, PARAMS.chunk_length, PARAMS.seed)
+def _assert_sketches_match_oracle(edges, oracle_graphs, params):
+    """``sketch_table``'s projection, sketch bits and bands of every graph
+    equal the oracle's."""
+    rows = {r.gid: r for r in sketch_table(edges, params).collect()}
+    assert set(rows) == set(oracle_graphs)
+    H = allocate_random_bits(params.L, params.chunk_length, params.seed)
     for gid, g in oracle_graphs.items():
-        sv = oracle.shingle_vector(g, PARAMS.chunk_length)
+        sv = oracle.shingle_vector(g, params.chunk_length)
         bits, proj = oracle.construct_sketch(sv, H)
         assert rows[gid].projection == proj, gid
-        got_bits = sketch_bytes_to_bits([bytes(rows[gid].sketch)], PARAMS.L)[0]
+        got_bits = sketch_bytes_to_bits([bytes(rows[gid].sketch)], params.L)[0]
         assert got_bits.tolist() == bits, gid
-        assert rows[gid].bands == oracle.lsh_bands(bits, PARAMS.B, PARAMS.R), gid
+        assert rows[gid].bands == oracle.lsh_bands(bits, params.B, params.R), gid
+
+
+@needs_reference
+def test_sketches_match_oracle(spark, edge_df, oracle_graphs):
+    _assert_sketches_match_oracle(edge_df, oracle_graphs, PARAMS)
+
+
+def test_sketches_match_oracle_on_synthetic_sample(spark, synthetic_sample):
+    edges_path, _ = synthetic_sample
+    graphs = {gid: oracle.build_graph(edges) for gid, edges
+              in load_reference_edge_tuples(edges_path).items()}
+    _assert_sketches_match_oracle(
+        read_streamspot_edges(spark, edges_path), graphs, SYN_PARAMS)
 
 
 @needs_reference
 def test_all_pairs_similarity_matches_oracle(spark, edge_df, oracle_graphs):
-    cc = build_chunk_counts(
-        build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
-    sk = build_sketches(cc, PARAMS)
+    sk = sketch_table(edge_df, PARAMS)
     sims = {
         (r.gid_a, r.gid_b): r.similarity
         for r in all_pairs_sketch_similarity(sk, PARAMS).collect()
@@ -153,9 +163,7 @@ def test_bootstrap_clustering_matches_oracle(spark, edge_df, oracle_graphs):
     assert boot.clusters == [[0], [1]]
     assert boot.global_threshold == pytest.approx(0.6)
 
-    cc = build_chunk_counts(
-        build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
-    sk = build_sketches(cc, PARAMS).cache()
+    sk = sketch_table(edge_df, PARAMS).cache()
     membership = boot.to_df(spark)
     centroids = build_centroids(sk, membership, PARAMS)
     thresholds = membership.select("cluster_id", "threshold").distinct()
@@ -186,9 +194,7 @@ def test_bootstrap_clustering_matches_oracle(spark, edge_df, oracle_graphs):
 
 @needs_reference
 def test_lsh_candidates_and_isolation(spark, edge_df, oracle_graphs):
-    cc = build_chunk_counts(
-        build_shingles(build_adjacency(edge_df)), PARAMS.chunk_length)
-    sk = build_sketches(cc, PARAMS).cache()
+    sk = sketch_table(edge_df, PARAMS).cache()
     bands = sketch_bands(sk, PARAMS).cache()
     pairs = {(r.gid_a, r.gid_b) for r in candidate_pairs(bands).collect()}
     # identical sketches (gids 1,2) must share all buckets
@@ -227,10 +233,9 @@ def _assert_isolation_matches_oracle(bands, obits, params):
 
 def test_isolation_matches_oracle_on_synthetic_sample(spark, synthetic_sample):
     edges_path, _ = synthetic_sample
-    cc = build_chunk_counts(
-        build_shingles(build_adjacency(read_streamspot_edges(spark, edges_path))),
-        SYN_PARAMS.chunk_length)
-    bands = sketch_bands(build_sketches(cc, SYN_PARAMS), SYN_PARAMS)
+    bands = sketch_bands(
+        sketch_table(read_streamspot_edges(spark, edges_path), SYN_PARAMS),
+        SYN_PARAMS)
     H = allocate_random_bits(SYN_PARAMS.L, SYN_PARAMS.chunk_length,
                              SYN_PARAMS.seed)
     obits = {}

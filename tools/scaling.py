@@ -9,8 +9,9 @@ CPUs. All legs read one generated input at one partition count and
 interleave 4N / N for ``ROUNDS`` rounds; T is a family's minimum steady
 time over rounds, its efficiency (T_N / T_4N) / 4. Families: ``pagerank``
 (``jobs/run_pagerank.py --tol 0``, superstep ``step_sec``), ``sketch``
-(adjacency -> shingles -> chunk counts -> ``build_sketches``) and ``hash``
-(``hashmulti_batch`` over cached chunks, no shuffle). Sizes are per-CPU
+(``sketch_table``: one shuffle on ``gid``, then adjacency -> shingles ->
+chunk counts -> ``build_sketches``) and ``hash`` (``hashmulti_batch`` over
+cached chunks, no shuffle). Sizes are per-CPU
 constants times 4N, fixed before any efficiency was seen so that a 1-CPU
 PageRank superstep takes at least 10 s on a 4-vCPU host. Prints one JSON
 line per leg, then the host shape and the efficiencies. spark-submit runs
@@ -149,7 +150,7 @@ def leg(name: str, data: str, n4: int) -> None:
     from sbustreamspot_core_spark.config import StreamSpotParams
     from sbustreamspot_core_spark.operators.shingles import (
         build_adjacency, build_chunk_counts, build_shingles)
-    from sbustreamspot_core_spark.operators.sketch import build_sketches
+    from sbustreamspot_core_spark.operators.sketch import sketch_table
     from sbustreamspot_core_spark.rng import allocate_random_bits
     from sbustreamspot_core_spark.session import get_spark
     spark = get_spark(f"scaling-{name}")
@@ -160,11 +161,11 @@ def leg(name: str, data: str, n4: int) -> None:
     params = StreamSpotParams(chunk_length=CHUNK_LENGTH)
     events = spark.read.parquet(f"{data}/events").cache()
     events.count()
-    cc = build_chunk_counts(build_shingles(build_adjacency(events)),
-                            CHUNK_LENGTH)
     if name == "sketch":
-        run = lambda: build_sketches(cc, params).count()
+        run = lambda: sketch_table(events, params).count()
     else:
+        cc = build_chunk_counts(build_shingles(build_adjacency(events)),
+                                CHUNK_LENGTH)
         cached = cc.select("chunk").repartition(parts).cache()
         cached.count()
         kernel = partial(_hash_kernel, H=allocate_random_bits(
