@@ -177,8 +177,8 @@ def avi_decode(data: bytes):
     return np.stack(frames), fps
 
 
-def avi_encode(frames: np.ndarray, fps: float = 10.0, quality: int = 90,
-               subsample: int = 1) -> bytes:
+def avi_encode(frames: np.ndarray, fps: float = 10.0,
+               quality: int = 90) -> bytes:
     """(n, H, W) or (n, H, W, 3) uint8 -> MJPEG AVI bytes."""
     arr = np.asarray(frames, dtype=np.uint8)
     if arr.ndim == 3:
@@ -189,8 +189,7 @@ def avi_encode(frames: np.ndarray, fps: float = 10.0, quality: int = 90,
         raise ValueError("expected (n, H, W) or (n, H, W, 3) uint8 frames")
     if n == 0 or fps <= 0:
         raise ValueError("need >= 1 frame and fps > 0")
-    payloads = [jpeg_encode(f, quality=quality, subsample=subsample)
-                for f in arr]
+    payloads = [jpeg_encode(f, quality=quality) for f in arr]
     maxbuf = max(len(p) for p in payloads)
     rate, scale = max(1, round(fps * 1000)), 1000
 

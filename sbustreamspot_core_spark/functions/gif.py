@@ -271,15 +271,15 @@ def gif_decode(data: bytes) -> np.ndarray:
 
 # -------------------------------------------------------------- encoder
 
-def gif_encode(frames: np.ndarray, delay_cs: int = 4,
-               interlace: bool = False) -> bytes:
+def gif_encode(frames: np.ndarray, interlace: bool = False) -> bytes:
     """uint8 array (H, W, 3) or (N, H, W, 3) -> GIF89a bytes.
 
     All frames share one global color table built from their distinct
     colors; more than 256 distinct colors raises ValueError (this is a
     fixture/test writer, not a quantizer).  Frames are written full-screen
-    with disposal 1 (keep), so the decoder's composited canvases equal the
-    input frames exactly — GIF is lossless over palettized content."""
+    with disposal 1 (keep) and a 4 cs delay, so the decoder's composited
+    canvases equal the input frames exactly — GIF is lossless over
+    palettized content."""
     a = np.asarray(frames, dtype=np.uint8)
     if a.ndim == 3:
         a = a[None]
@@ -305,7 +305,7 @@ def gif_encode(frames: np.ndarray, delay_cs: int = 4,
     out += table.tobytes()
     for f in range(n):
         out += bytes([0x21, 0xF9, 4, 0x04,   # GCE: disposal 1, no transparency
-                      delay_cs & 0xFF, (delay_cs >> 8) & 0xFF, 0, 0])
+                      4, 0, 0, 0])           # delay 4 cs
         out += bytes([0x2C]) + struct.pack("<HHHH", 0, 0, w, h)
         out += bytes([0x40 if interlace else 0])
         rows = idx[f]

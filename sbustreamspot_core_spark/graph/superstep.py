@@ -19,9 +19,9 @@ count.  A checkpoint costs exactly one Spark job, the write.
 Resume scans for the highest complete superstep and restarts the loop there;
 a run whose last checkpoint converged returns that state without a superstep.
 The snapshot is read with the schema ``lineage.json`` recorded (no
-schema-inference job), and the checkpoint's recorded metrics are the
-resumed loop's ``prev_metrics``, so a resumed superstep sees what the
-straight run's did.
+schema-inference job; a checkpoint that records none is refused), and the
+checkpoint's recorded metrics are the resumed loop's ``prev_metrics``, so
+a resumed superstep sees what the straight run's did.
 Trade-off: a leaf's blocks cannot be recomputed, so a job that loses an
 executor fails; rerun with ``resume=True`` to restart from the last parquet
 checkpoint (superstep 0 without a checkpoint dir).
@@ -250,14 +250,17 @@ class SuperstepDriver:
         last = self.last_complete_superstep() if resume else None
         prev_metrics = None
         if last is not None:
-            with open(os.path.join(self._step_dir(last), "lineage.json")) as f:
+            path = os.path.join(self._step_dir(last), "lineage.json")
+            with open(path) as f:
                 lineage = json.load(f)
+            if "schema" not in lineage:
+                raise ValueError(
+                    f"checkpoint {path} records no schema; resume needs a "
+                    "checkpoint whose lineage.json records its schema")
             prev_metrics = {"superstep": last, **lineage["metrics"]}
-            reader = self.spark.read
-            if "schema" in lineage:   # older checkpoints: inferred
-                reader = reader.schema(
-                    StructType.fromJson(json.loads(lineage["schema"])))
-            initial_state = reader.parquet(
+            initial_state = self.spark.read.schema(
+                StructType.fromJson(json.loads(lineage["schema"]))
+            ).parquet(
                 os.path.join(self._step_dir(last), "data")
             ).repartition(self.num_partitions, "id")
             start_k = last + 1

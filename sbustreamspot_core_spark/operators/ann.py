@@ -6,6 +6,8 @@
 - IVF-style variant: numpy k-means-lite centroids (driver, deterministic),
   route each vector to nearest centroid, search only matching cells.
 - exact embedding-cosine near-duplicate pairs (all-pairs, small corpora).
+
+Every operator reads ids from ``vec_id`` and vectors from ``embedding``.
 """
 
 from __future__ import annotations
@@ -28,17 +30,17 @@ def _cosine_expr(a: str, b: str):
     return dot / (na * nb)
 
 
-def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def brute_force_topk(vectors: DataFrame, queries: DataFrame,
+                     k: int = 5) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank) — exact top-k per query.
 
     ``queries`` is broadcast (small query set x large corpus).  Excludes
     self-matches.  Ties break on neighbor_id for determinism.
     """
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"))
-    v = vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).cast("array<double>").alias("nv"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").cast("array<double>").alias("qv"))
+    v = vectors.select(F.col("vec_id").alias("neighbor_id"),
+                       F.col("embedding").cast("array<double>").alias("nv"))
     target = vectors.sparkSession.sparkContext.defaultParallelism
     if v.rdd.getNumPartitions() < target:
         # single-split corpora otherwise score every (vector, query) pair
@@ -59,18 +61,17 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
-def cosine_neardup_pairs(vectors: DataFrame, threshold: float = 0.9,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+def cosine_neardup_pairs(vectors: DataFrame,
+                         threshold: float = 0.9) -> DataFrame:
     """(id_a < id_b, cosine) — EXACT embedding-cosine near-duplicate pairs.
 
     All-pairs O(n^2), like ``brute_force_topk``: an exact baseline for
     small corpora.
     """
-    a = vectors.select(F.col(id_col).alias("id_a"),
-                       F.col(vec_col).cast("array<double>").alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"),
-                       F.col(vec_col).cast("array<double>").alias("vb"))
+    a = vectors.select(F.col("vec_id").alias("id_a"),
+                       F.col("embedding").cast("array<double>").alias("va"))
+    b = vectors.select(F.col("vec_id").alias("id_b"),
+                       F.col("embedding").cast("array<double>").alias("vb"))
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -97,10 +98,8 @@ def _probe_cells_series(batch, *, centroids, n_probe):
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-             n_cells: int = 8, n_probe: int = 2, seed: int = 23,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             sample_size: int = 2048,
-             corpus_count: int | None = None) -> DataFrame:
+             n_cells: int = 8, n_probe: int = 2,
+             sample_size: int = 2048) -> DataFrame:
     """IVF: coarse-quantize the corpus into ``n_cells`` cells (centroids from
     a deterministic sample, few Lloyd rounds on the driver), search the
     ``n_probe`` nearest cells per query, exact re-rank within.
@@ -108,22 +107,21 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     The centroid sample is a deterministic HASH sample: keep rows with
     ``xxhash64(id) % m == 0`` where m targets ~4x sample_size survivors,
     then order only the tiny filtered set by id — the corpus itself is
-    scanned once with a pushed-down filter and never sorted.  Pass
-    ``corpus_count`` to skip the sizing count(): omitting it costs one
-    extra full corpus scan per call (cheap vs the search, but not free).
+    scanned once with a pushed-down filter and never sorted.  Sizing m
+    costs one count(), one extra full corpus scan per call (cheap vs the
+    search, but not free).  The centroid seeds are drawn with seed 23.
 
     If skewed hash survivors leave the sample short of ``n_cells`` (corpora
     just past the m>=2 boundary), the sample is re-pulled unfiltered (m=1);
     a still-short sample seeds duplicate centroids (choice with
     replacement) — Lloyd leaves an empty cell's centroid in place, so the
     search degrades to fewer effective cells rather than raising."""
-    n = corpus_count if corpus_count is not None else vectors.count()
-    m = max(1, n // (sample_size * 4))
+    m = max(1, vectors.count() // (sample_size * 4))
 
     def _pull(mod: int) -> np.ndarray:
         rows = (vectors
-                .filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
-                .select(vec_col).orderBy(id_col)
+                .filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(mod)) == 0)
+                .select("embedding").orderBy("vec_id")
                 .limit(sample_size).collect())
         return np.array([r[0] for r in rows], dtype=np.float64)
 
@@ -132,7 +130,7 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         sample = _pull(1)
     if len(sample) == 0:
         raise ValueError("ivf_topk: empty corpus")
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(23)
     centroids = sample[rng.choice(len(sample), size=n_cells,
                                   replace=len(sample) < n_cells)]
     for _ in range(5):  # Lloyd
@@ -149,12 +147,12 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
         partial(_probe_cells_series, centroids=centroids, n_probe=n_probe),
         "array<int>")
 
-    v = vectors.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).cast("array<double>").alias("nv"),
-                       cell_udf(F.col(vec_col)).alias("cell"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qv"),
-                       F.explode(probe_udf(F.col(vec_col))).alias("cell"))
+    v = vectors.select(F.col("vec_id").alias("neighbor_id"),
+                       F.col("embedding").cast("array<double>").alias("nv"),
+                       cell_udf(F.col("embedding")).alias("cell"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").cast("array<double>").alias("qv"),
+                       F.explode(probe_udf(F.col("embedding"))).alias("cell"))
     scored = (
         v.join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))

@@ -108,9 +108,7 @@ def char_shingles(docs: DataFrame, n: int = 5, id_col: str = "doc_id",
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 5,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 5) -> DataFrame:
     """(id_a < id_b, jaccard) for every pair sharing >= 1 n-gram (exact).
 
     Sparse set-similarity join: sizes via groupBy, intersections via
@@ -120,7 +118,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 5,
     ubiquitous n-grams blow up quadratically; the banded MinHash path
     (``minhash_lsh_candidates``) is the one for large corpora.
     """
-    sh = char_shingles(docs, n, id_col, text_col)
+    sh = char_shingles(docs, n)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
@@ -167,14 +165,15 @@ def _minhash_batches(batches, *, k, c, Ac, Bc):
 
 
 def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 5,
-                       seed: int = 23, id_col: str = "doc_id",
+                       id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """(id, sig array<long>) — k minhashes over n-gram shingles, one
     Arrow-batched pass (guide §4.2 shape: Spark distributes, the kernel
     hands whole batches to hashlib+numpy).
 
-    h_i(x) = (a_i*(x mod p) + b_i) mod p, p = 2^31-1, over the shingle's
-    portable 60-bit base hash (first 60 bits of md5 — computed here as
+    h_i(x) = (a_i*(x mod p) + b_i) mod p, p = 2^31-1, (a_i, b_i) drawn by
+    ``minhash_coeffs`` with seed 23, over the shingle's portable 60-bit
+    base hash (first 60 bits of md5 — computed here as
     big-endian digest bytes >> 4, bit-identical to the SQL
     conv(substring(md5(s),1,15),16,10) the oracles use; equality is
     pytest-pinned against the expression path).  The k affine mins per doc
@@ -199,7 +198,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 5,
     Single-file inputs are repartitioned up to the default parallelism
     before the kernel (the sf inputs are one parquet split: without this
     the whole hash pass runs on ONE core — guide §2.5 input skew)."""
-    A, Bv = minhash_coeffs(num_hashes, seed)
+    A, Bv = minhash_coeffs(num_hashes, 23)
     kernel = partial(_minhash_batches, k=int(num_hashes), c=int(n),
                      Ac=A.astype(np.int64)[:, None],
                      Bc=Bv.astype(np.int64)[:, None])
@@ -398,24 +397,19 @@ def incremental_lsh_candidates(index_bands: DataFrame | None,
 
 
 def build_dedup_index(docs: DataFrame, num_hashes: int = 64, n: int = 5,
-                      bands: int = 16, seed: int = 23,
-                      id_col: str = "doc_id",
+                      bands: int = 16, id_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
     """The persisted-signature-index table for incremental dedup:
     (id, band_idx, band_key) = ``minhash_bands(minhash_signatures(docs))``.
     One table serves both roles — it IS the banded self-join input for a
     full-corpus pass and the join side for every later incremental batch."""
     return minhash_bands(
-        minhash_signatures(docs, num_hashes=num_hashes, n=n, seed=seed,
+        minhash_signatures(docs, num_hashes=num_hashes, n=n,
                            id_col=id_col, text_col=text_col), bands)
 
 
-def incremental_dedup_batch(spark, index_path: str, new_docs: DataFrame,
-                            num_hashes: int = 64, n: int = 5,
-                            bands: int = 16, seed: int = 23,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            max_bucket_size: int | None = None,
-                            append: bool = True) -> DataFrame:
+def incremental_dedup_batch(spark, index_path: str,
+                            new_docs: DataFrame) -> DataFrame:
     """Append-only dedup: find near-dup candidates of ``new_docs`` against
     the persisted signature index at ``index_path`` WITHOUT recomputing any
     corpus signature, then append the batch's bands to the index.
@@ -436,9 +430,7 @@ def incremental_dedup_batch(spark, index_path: str, new_docs: DataFrame,
     batch's own rows twice.  First call may point at a non-existent path
     (empty index): only new-new candidates are emitted.
     """
-    new_bands = build_dedup_index(new_docs, num_hashes=num_hashes, n=n,
-                                  bands=bands, seed=seed, id_col=id_col,
-                                  text_col=text_col).cache()
+    new_bands = build_dedup_index(new_docs).cache()
     try:
         index_bands = spark.read.parquet(index_path)
     except Exception as e:  # noqa: BLE001 — re-raised unless missing-path
@@ -450,11 +442,9 @@ def incremental_dedup_batch(spark, index_path: str, new_docs: DataFrame,
         if not is_path_not_found(e):
             raise
         index_bands = None
-    cands = incremental_lsh_candidates(
-        index_bands, new_bands, max_bucket_size=max_bucket_size).cache()
+    cands = incremental_lsh_candidates(index_bands, new_bands).cache()
     cands.count()
-    if append:
-        new_bands.write.mode("append").parquet(index_path)
+    new_bands.write.mode("append").parquet(index_path)
     new_bands.unpersist()
     return cands
 

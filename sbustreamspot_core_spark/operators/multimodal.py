@@ -15,12 +15,11 @@ Arrow-batched ``mapInPandas`` kernels over the pure-stdlib/numpy codecs in
 - ``decode_audio``: 16-bit PCM WAV (stdlib ``wave``).
 
 Other formats raise NotImplementedError — no codec libraries ship with
-the package.
+the package.  Both decoders read ids from ``id`` and payloads from
+``payload``.
 """
 
 from __future__ import annotations
-
-from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -57,12 +56,12 @@ DECODE_SCHEMA = ("id long, width int, height int, channels int, "
                  "pixels binary")
 
 
-def _decode_image_batches(batches, *, id_col, bin_col):
+def _decode_image_batches(batches):
     """``decode_image`` kernel."""
     for pdf in batches:
         rows = {"id": [], "width": [], "height": [], "channels": [],
                 "pixels": []}
-        for i, b in zip(pdf[id_col], pdf[bin_col]):
+        for i, b in zip(pdf["id"], pdf["payload"]):
             if sniff_format(b or b"") == "png":
                 px = png_decode(bytes(b))
             elif sniff_format(b or b"") == "jpeg":
@@ -87,8 +86,7 @@ def _decode_image_batches(batches, *, id_col, bin_col):
         yield pd.DataFrame(rows)
 
 
-def decode_image(df: DataFrame, id_col: str = "id",
-                 bin_col: str = "payload") -> DataFrame:
+def decode_image(df: DataFrame) -> DataFrame:
     """Image decode: binary -> (width, height, channels, raw pixels).
 
     REAL for PNG via functions/codecs.py (stdlib zlib + numpy unfilter;
@@ -99,9 +97,8 @@ def decode_image(df: DataFrame, id_col: str = "id",
     Other payloads raise NotImplementedError (no codec libraries ship
     with the package).
     """
-    return df.select(F.col(id_col).alias(id_col), F.col(bin_col)).mapInPandas(
-        partial(_decode_image_batches, id_col=id_col, bin_col=bin_col),
-        schema=DECODE_SCHEMA)
+    return df.select("id", "payload").mapInPandas(
+        _decode_image_batches, schema=DECODE_SCHEMA)
 
 
 AUDIO_SCHEMA = ("id long, sample_rate int, n_frames long, channels int, "
@@ -114,12 +111,12 @@ def _is_wav(b: bytes) -> bool:
     return len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE"
 
 
-def _decode_audio_batches(batches, *, id_col, bin_col):
+def _decode_audio_batches(batches):
     """``decode_audio`` kernel."""
     for pdf in batches:
         rows = {"id": [], "sample_rate": [], "n_frames": [],
                 "channels": [], "pcm": []}
-        for i, b in zip(pdf[id_col], pdf[bin_col]):
+        for i, b in zip(pdf["id"], pdf["payload"]):
             b = bytes(b or b"")
             if not _is_wav(b):
                 raise NotImplementedError(
@@ -134,13 +131,11 @@ def _decode_audio_batches(batches, *, id_col, bin_col):
         yield pd.DataFrame(rows)
 
 
-def decode_audio(df: DataFrame, id_col: str = "id",
-                 bin_col: str = "payload") -> DataFrame:
+def decode_audio(df: DataFrame) -> DataFrame:
     """Audio decode: 16-bit PCM WAV -> (sample_rate, n_frames, channels,
     little-endian int16 pcm).  Stdlib ``wave`` parser (codecs.py).
     Non-WAV payloads raise NotImplementedError (same contract as
     decode_image); a RIFF container that is not WAVE (e.g. WebP/AVI) is
     rejected by the WAVE magic check, not a deep wave.Error."""
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        partial(_decode_audio_batches, id_col=id_col, bin_col=bin_col),
-        schema=AUDIO_SCHEMA)
+    return df.select("id", "payload").mapInPandas(
+        _decode_audio_batches, schema=AUDIO_SCHEMA)

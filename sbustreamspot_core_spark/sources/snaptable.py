@@ -4,8 +4,8 @@ The north rule's input is an Iceberg table and its checkpoint/lineage sink
 is Iceberg, but no Iceberg runtime jar ships in this environment — so this
 module implements the METADATA half of the table-format idea (the concepts
 of the public Apache Iceberg spec: snapshot log, manifest file lists,
-atomic metadata commit, time travel, incremental scan, file-level column
-stats) from scratch in pure Python over immutable parquet data files.
+atomic metadata commit, time travel, incremental scan) from scratch in
+pure Python over immutable parquet data files.
 ``sources/iceberg.py`` routes to it automatically when a path holds a
 SnapTable, so ``read_table(..., snapshot_id=...)`` works without any jar;
 on a real cluster the Iceberg DataSource path is taken instead and this
@@ -35,11 +35,8 @@ O(snapshots x files) full-log rewrite of the round-5 inlined format
 collapses the manifest list back to one entry and ``vacuum`` bounds the
 snapshot log, so both growth axes have a maintenance story.
 
-Per data file the manifest records row count plus min/max column
-stats pulled from the parquet footer — metadata-only reads, no data scan —
-which lets ``read(..., where=...)`` prune whole files before Spark ever
-sees them (Iceberg's scan-planning trick; at 100 TB this is the difference
-between listing 10^6 files and opening the 40 that can match).
+Per data file the manifest records its path and its row count, read
+from the parquet footer (no data scan).
 
 Commit protocol (crash-safe at every step; Iceberg's
 HadoopTableOperations semantics):
@@ -61,20 +58,13 @@ writer advanced the table since the transaction's base version — the
 caller retries on fresh state, as with Iceberg's compare-and-swap on the
 catalog pointer.
 
-Schema and layout evolution (round 6): appends may ADD columns — the
-table schema widens with the commit and every scan passes the current
-schema explicitly, so pre-evolution files read the new columns as null
-(Iceberg add-column semantics; type change and column drop refuse) —
-and ``append(partition_by=[...])`` lays a batch out one file set per
-partition value (identity transform) with tight footer stats, making
-``where=`` pruning an exact partition prune.
-
 Deviations from the real spec, documented not hidden: manifest and
-manifest-list files are JSON (not avro), partition specs support only
-the identity transform and do not evolve, and schema evolution is
-add-column only.  The on-disk data is plain parquet throughout — any
-engine (DuckDB, the driver's oracle, Spark without this module) can
-read a snapshot by listing the manifest files' entries.
+manifest-list files are JSON (not avro); there are no partition specs,
+no column stats and no schema evolution — the first append fixes the
+table's columns and types, and an append whose columns or types differ
+is refused.  The on-disk data is plain parquet throughout — any engine
+(DuckDB, the driver's oracle, Spark without this module) can read a
+snapshot by listing the manifest files' entries.
 """
 
 from __future__ import annotations
@@ -83,11 +73,11 @@ import json
 import os
 import time
 import uuid
-from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..session import local_table
 
@@ -105,6 +95,15 @@ _FORMAT = "snaptable/2"
 # summary keys a compaction's replace snapshot carries forward: the
 # incremental-dedup consumption cursor (streaming/table_dedup.py)
 _INHERITED_SUMMARY_KEYS = ("src_from", "src_to")
+# compact() writes files of about this size
+_TARGET_FILE_MB = 512
+# vacuum() deletes a file no snapshot references only when it is older
+# than this (Iceberg's remove-orphan-files default, 3 days, sized so even
+# a very long concurrent write finishes inside it), and metadata versions
+# only when they are this many versions behind current (Iceberg's
+# previous-versions-max)
+_ORPHAN_GRACE_S = 3 * 24 * 3600.0
+_KEEP_METADATA_VERSIONS = 100
 
 
 def _meta_dir(path: str) -> str:
@@ -148,33 +147,6 @@ def _atomic_create(final_path: str, text: str) -> None:
 
 def is_snaptable(path: str) -> bool:
     return os.path.exists(os.path.join(_meta_dir(path), _HINT))
-
-
-def _file_stats(fpath: str) -> dict:
-    """Row count + per-column min/max from the parquet FOOTER only."""
-    md = pq.ParquetFile(fpath).metadata
-    mins: dict = {}
-    maxs: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            name = col.path_in_schema
-            lo, hi = st.min, st.max
-            # only JSON-representable orderable scalars (timestamps /
-            # binary stats are skipped; affected files just never prune)
-            if not (isinstance(lo, (int, float, str))
-                    and isinstance(hi, (int, float, str))
-                    and not isinstance(lo, bool)):
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-    return {"rows": md.num_rows,
-            "min": {k: v for k, v in mins.items()},
-            "max": {k: v for k, v in maxs.items()}}
 
 
 class SnapTable:
@@ -276,7 +248,7 @@ class SnapTable:
         return self._read_meta_json(snap["manifest_list"])
 
     def _load_manifest(self, snap: dict) -> list[dict]:
-        """The snapshot's full per-file entry list ({path, rows, min, max})."""
+        """The snapshot's full per-file entry list ({path, rows})."""
         out: list[dict] = []
         for rel in self._manifest_paths(snap):
             out.extend(self._read_meta_json(rel))
@@ -304,60 +276,21 @@ class SnapTable:
         _atomic_write(os.path.join(_meta_dir(self.path), _HINT), str(new_v))
         return new_v
 
-    def _write_data(self, df: DataFrame, version: int,
-                    partition_by: list | None = None) -> list[dict]:
+    def _write_data(self, df: DataFrame, version: int) -> list[dict]:
         # unique suffix: a retry after CommitConflict must not collide
         # with the loser attempt's orphan directory
         rel_dir = os.path.join(
             "data", f"snap-{version}-{uuid.uuid4().hex[:8]}")
         out = os.path.join(self.path, rel_dir)
-        if partition_by:
-            # identity partition transform (the Iceberg partition-spec
-            # concept).  The partition column is DUPLICATED into a `_p_`
-            # directory column rather than moved: partitionBy drops its
-            # column from the data files, and a multi-snapshot read can't
-            # recover it via basePath inference (each snapshot has its own
-            # snap dir, Spark accepts only one basePath).  Keeping the
-            # real column in the files costs one duplicated value per row
-            # and buys (a) schema-stable reads from a bare file list and
-            # (b) tight footer stats (min == max per file), which make the
-            # existing `where=` pruning an EXACT partition prune with no
-            # extra machinery.
-            from pyspark.sql import functions as F
-            dup = df
-            pcols = []
-            for c in partition_by:
-                dup = dup.withColumn(f"_p_{c}", F.col(c))
-                pcols.append(f"_p_{c}")
-            dup.write.mode("error").partitionBy(*pcols).parquet(out)
-        else:
-            df.write.mode("error").parquet(out)
-        files = []
-        for dirpath, _, names in os.walk(out):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, name)
-                st = _file_stats(full)
-                entry = {"path": os.path.relpath(full, self.path), **st}
-                parts = {}
-                for comp in os.path.relpath(dirpath, out).split(os.sep):
-                    if comp.startswith("_p_") and "=" in comp:
-                        k, _, v = comp.partition("=")
-                        v = unquote(v)
-                        # Spark writes null/empty partition values under
-                        # the Hive sentinel dir; record a real null, not
-                        # a string that collides with user data
-                        parts[k[3:]] = (None if v ==
-                                        "__HIVE_DEFAULT_PARTITION__" else v)
-                if parts:
-                    entry["partition"] = parts
-                files.append(entry)
-        return sorted(files, key=lambda f: f["path"])
+        df.write.mode("error").parquet(out)
+        return [{"path": os.path.join(rel_dir, name),
+                 "rows": pq.ParquetFile(os.path.join(out, name))
+                 .metadata.num_rows}
+                for name in sorted(os.listdir(out))
+                if name.endswith(".parquet")]
 
     def _apply(self, df: DataFrame, operation: str,
-               summary: dict | None, base: int | None = None,
-               partition_by: list | None = None) -> int:
+               summary: dict | None, base: int | None = None) -> int:
         # callers whose df was DERIVED from table state (compact) pin the
         # base they read from, so a concurrent commit in between conflicts
         # instead of being silently erased by the new snapshot
@@ -368,48 +301,12 @@ class SnapTable:
         if meta["schema"] is not None:
             have = {f["name"]: f["type"] for f in meta["schema"]["fields"]}
             want = {f["name"]: f["type"] for f in schema["fields"]}
-            mismatched = sorted(n for n in have.keys() & want.keys()
-                                if have[n] != want[n])
-            if mismatched:
+            if have != want:
                 raise SnapTableError(
-                    f"schema mismatch: columns {mismatched} change type "
-                    "(type evolution is not supported)")
-            dropped = sorted(set(have) - set(want))
-            if dropped:
-                raise SnapTableError(
-                    f"schema mismatch: write is missing table columns "
-                    f"{dropped} (writes must cover the full schema; "
-                    "column drop is not supported)")
-            # added columns are forced nullable (Iceberg: new columns are
-            # optional) — pre-evolution files read them as null, so a
-            # writer-reported non-null flag would let the planner fold
-            # IsNull on the column to false and return wrong results
-            added = [{**f, "nullable": True}
-                     for f in schema["fields"] if f["name"] not in have]
-            if added:
-                # additive schema evolution (Iceberg add-column): the
-                # table schema widens as part of this commit; files
-                # written before the evolution simply lack the new
-                # columns, and reads fill them with null because every
-                # scan passes the CURRENT table schema explicitly
-                meta["schema"] = {**meta["schema"],
-                                  "fields": meta["schema"]["fields"] + added}
-                schema = meta["schema"]
-        if partition_by:
-            cols = {f["name"] for f in schema["fields"]}
-            missing = [c for c in partition_by if c not in cols]
-            if missing:
-                raise SnapTableError(
-                    f"partition columns {missing} not in the DataFrame")
-            # the directory key duplicates the column under _p_<name>;
-            # an existing column of that name would be silently
-            # clobbered by the rename and dropped from the data files
-            clash = sorted(c for c in partition_by if f"_p_{c}" in cols)
-            if clash:
-                raise SnapTableError(
-                    f"partition columns {clash} collide with existing "
-                    f"_p_-prefixed columns; rename those columns first")
-        new_files = self._write_data(df, base + 1, partition_by=partition_by)
+                    f"schema mismatch: table columns {have}, write columns "
+                    f"{want} (an append must match the table's columns and "
+                    "types)")
+        new_files = self._write_data(df, base + 1)
         parent = meta["current_snapshot_id"]
         added_manifest = self._write_meta_json("manifest", base + 1,
                                                new_files)
@@ -432,8 +329,7 @@ class SnapTable:
         return self._commit(base, meta)
 
     def append(self, df: DataFrame, summary: dict | None = None,
-               base: int | None = None,
-               partition_by: list | None = None) -> int:
+               base: int | None = None) -> int:
         """Add the DataFrame's rows; prior files are carried forward.
         Returns the new metadata version.
 
@@ -444,115 +340,37 @@ class SnapTable:
         overlapping incremental-dedup runs that both read the same cursor
         must not both append the same batch.
 
-        ``partition_by`` lays the batch out one file set per distinct
-        value of the named columns (identity partition transform): the
-        partition column is kept in the data files (see ``_write_data``),
-        so per-file footer stats are tight (min == max) and a
-        ``read(where=(col, '=', v))`` prunes to exactly that partition's
-        files — at warehouse scale this is how a per-language or per-day
-        scan avoids touching the rest of the table.  Each file's
-        partition values are also recorded in its manifest entry."""
-        return self._apply(df, "append", summary, base=base,
-                           partition_by=partition_by)
-
-    def rollback_to(self, snapshot_id: int) -> int:
-        """New commit whose current snapshot is an OLD one (history kept)."""
-        base = self.current_version()
-        meta = self.metadata(base)
-        self._snapshot(meta, snapshot_id)          # must exist
-        meta["current_snapshot_id"] = snapshot_id
-        return self._commit(base, meta)
+        The DataFrame's columns and types must be the table's (the first
+        append fixes them); otherwise it raises ``SnapTableError`` and
+        commits nothing."""
+        return self._apply(df, "append", summary, base=base)
 
     # ---- reads --------------------------------------------------------
 
-    def _manifest(self, snapshot_id: int | None = None,
-                  meta: dict | None = None) -> list[dict]:
-        if meta is None:
-            meta = self.metadata()
-        sid = meta["current_snapshot_id"] if snapshot_id is None \
-            else snapshot_id
-        if sid is None:
-            return []
-        return self._load_manifest(self._snapshot(meta, sid))
-
     def _scan(self, spark: SparkSession, schema: dict,
               paths: list) -> DataFrame:
-        """The one way any scan reads data files: EXPLICIT current table
-        schema (no inference pass; pre-evolution files fill newer columns
-        with null).  Every scan site — read, incremental, compact — must
-        go through here so none can regress to inference."""
-        from pyspark.sql.types import StructType
-        return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+        """The one way any scan reads data files: the EXPLICIT table
+        schema (no inference pass), and a driver-side empty table when
+        there are no files to read.  Every scan site — read, incremental,
+        compact — goes through here."""
+        schema = StructType.fromJson(schema)
+        if not paths:
+            return local_table(spark, [], schema)
+        return spark.read.schema(schema).parquet(*paths)
 
-    @staticmethod
-    def _prune(manifest: list[dict], where) -> list[dict]:
-        if where is None:
-            return manifest
-        col, op, val = where
-        keep = []
-        for f in manifest:
-            lo, hi = f["min"].get(col), f["max"].get(col)
-            if lo is None or hi is None:       # no stats: cannot prune
-                keep.append(f)
-                continue
-            alive = {"=": lambda: lo <= val <= hi,
-                     ">=": lambda: hi >= val,
-                     ">": lambda: hi > val,
-                     "<=": lambda: lo <= val,
-                     "<": lambda: lo < val}.get(op)
-            if alive is None:
-                raise SnapTableError(f"unsupported prune op {op!r}")
-            try:
-                hit = alive()
-            except TypeError:
-                # e.g. a string predicate against int column stats — a
-                # typo'd predicate should fail loudly, not silently scan
-                # the whole table with a filter that matches nothing
-                raise SnapTableError(
-                    f"predicate value {val!r} is not comparable with "
-                    f"column {col!r} stats ({lo!r} .. {hi!r})") from None
-            if hit:
-                keep.append(f)
-        return keep
-
-    def read(self, spark: SparkSession, snapshot_id: int | None = None,
-             where: tuple | None = None) -> DataFrame:
-        """Scan a snapshot (current by default).  ``where=(col, op, val)``
-        prunes files on footer min/max BEFORE Spark plans the scan; the
-        predicate still applies row-level via the returned plan's filter
-        (pruning is an optimization, never a semantic).
-
-        Every scan passes the CURRENT table schema explicitly (Iceberg
-        semantics — old snapshots read under the current schema): no
-        inference pass over the files, and files written before an
-        additive schema evolution fill the newer columns with null."""
+    def read(self, spark: SparkSession,
+             snapshot_id: int | None = None) -> DataFrame:
+        """Scan a snapshot (current by default) under the table schema."""
         meta = self.metadata()        # ONE metadata read: the manifest
         # resolution and the schema must come from the same version
-        manifest = self._prune(self._manifest(snapshot_id, meta=meta), where)
-        schema = meta["schema"]
-        if schema is None:
+        if meta["schema"] is None:
             raise SnapTableError("empty table has no schema yet")
-        if not manifest:
-            from pyspark.sql.types import StructType
-            return local_table(spark, [], StructType.fromJson(schema))
-        df = self._scan(
-            spark, schema,
-            [os.path.join(self.path, f["path"]) for f in manifest])
-        if where is not None:
-            col, op, val = where
-            # Column expressions, not interpolated SQL strings: a string
-            # value holding quotes/backslashes, or a non-SQL literal
-            # (bool, inf), must reach the plan as a literal, never as
-            # parser input
-            from pyspark.sql import functions as F
-            c = F.col(col)
-            cond = {"=": c == F.lit(val), ">=": c >= F.lit(val),
-                    ">": c > F.lit(val), "<=": c <= F.lit(val),
-                    "<": c < F.lit(val)}.get(op)
-            if cond is None:
-                raise SnapTableError(f"unsupported filter op {op!r}")
-            df = df.filter(cond)
-        return df
+        sid = meta["current_snapshot_id"] if snapshot_id is None \
+            else snapshot_id
+        return self._scan(
+            spark, meta["schema"],
+            [os.path.join(self.path, f["path"])
+             for f in self._load_manifest(self._snapshot(meta, sid))])
 
     def incremental(self, spark: SparkSession, from_snapshot_id: int,
                     to_snapshot_id: int | None = None) -> DataFrame:
@@ -586,17 +404,14 @@ class SnapTable:
         if sid != from_snapshot_id:
             raise SnapTableError(
                 f"snapshot {from_snapshot_id} is not an ancestor of {to_sid}")
-        if not files:
-            return self.read(spark, snapshot_id=from_snapshot_id).limit(0)
         return self._scan(spark, meta["schema"],
                           [os.path.join(self.path, f) for f in files])
 
     # ---- maintenance --------------------------------------------------
 
-    def compact(self, spark: SparkSession, target_file_mb: int = 512,
-                min_files: int = 8) -> int | None:
-        """Rewrite the current snapshot's data files into ~``target_file_mb``
-        files (Iceberg's rewrite-data-files / OPTIMIZE).
+    def compact(self, spark: SparkSession, min_files: int = 8) -> int | None:
+        """Rewrite the current snapshot's data files into files of about
+        ``_TARGET_FILE_MB`` (Iceberg's rewrite-data-files / OPTIMIZE).
 
         The small-files problem is the dominant failure mode of append-only
         tables at warehouse scale: a table fed by 10^4 incremental commits
@@ -636,21 +451,14 @@ class SnapTable:
             walk = s["parent_id"]
         paths = [os.path.join(self.path, f["path"]) for f in manifest]
         total_bytes = sum(os.path.getsize(p) for p in paths)
-        n_out = max(1, -(-total_bytes // (target_file_mb << 20)))
-        # explicit schema like every scan: an inference read here picks
-        # whichever file it samples first — on a schema-evolved table
-        # that's a pre-evolution file, the rewritten df would lack the
-        # added columns, and the replace commit would refuse as a
-        # column drop (compaction permanently broken for the table)
+        n_out = max(1, -(-total_bytes // (_TARGET_FILE_MB << 20)))
         df = self._scan(spark, meta["schema"], paths).repartition(n_out)
         return self._apply(df, "replace", {
             **inherited,
             "files_before": len(manifest), "files_after": n_out,
             "bytes_before": total_bytes}, base=base)
 
-    def vacuum(self, keep_snapshots: int = 1,
-               orphan_grace_s: float = 3 * 24 * 3600.0,
-               keep_metadata_versions: int | None = 100) -> list[str]:
+    def vacuum(self, keep_snapshots: int = 1) -> list[str]:
         """Drop all but the last ``keep_snapshots`` snapshots from the log
         (current always kept) and delete data files, manifest files and
         old metadata versions no surviving snapshot references — including
@@ -661,17 +469,14 @@ class SnapTable:
         therefore deletes nothing, instead of leaving committed metadata
         that references already-deleted files.  Files referenced by NO
         snapshot at all are deleted only when older than
-        ``orphan_grace_s`` (default 3 days, Iceberg's remove-orphan-files
-        default, sized so even a very long concurrent write finishes
-        inside it): a file
-        that young may be a concurrent writer's not-yet-committed append,
-        indistinguishable from a crash orphan by name alone.
+        ``_ORPHAN_GRACE_S``: a younger file may be a concurrent writer's
+        not-yet-committed append, indistinguishable from a crash orphan by
+        name alone.
 
-        ``keep_metadata_versions`` (Iceberg's previous-versions-max)
-        additionally deletes ``v<k>.metadata.json`` files more than that
-        many versions behind current, gated by the same grace period so a
-        reader still probing from a very stale hint never loses its
-        ladder; ``None`` keeps all."""
+        ``v<k>.metadata.json`` files more than ``_KEEP_METADATA_VERSIONS``
+        versions behind current are deleted too, gated by the same grace
+        period so a reader still probing from a very stale hint never
+        loses its ladder."""
         if keep_snapshots < 1:
             raise SnapTableError("must keep at least the current snapshot")
         base = self.current_version()
@@ -714,7 +519,7 @@ class SnapTable:
 
         def _aged(full: str) -> bool:
             try:
-                return now - os.path.getmtime(full) > orphan_grace_s
+                return now - os.path.getmtime(full) > _ORPHAN_GRACE_S
             except FileNotFoundError:
                 return False        # a concurrent writer moved/removed it
 
@@ -739,14 +544,13 @@ class SnapTable:
                 if rel in dropped_meta or _aged(full):
                     os.remove(full)
                     deleted.append(rel)
-            elif (keep_metadata_versions is not None
-                    and name.startswith("v")
-                    and name.endswith(".metadata.json")):
+            elif name.startswith("v") and name.endswith(".metadata.json"):
                 try:
                     k = int(name[1:-len(".metadata.json")])
                 except ValueError:
                     continue
-                if k <= new_version - keep_metadata_versions and _aged(full):
+                if k <= new_version - _KEEP_METADATA_VERSIONS \
+                        and _aged(full):
                     os.remove(full)
                     deleted.append(rel)
         return sorted(deleted)

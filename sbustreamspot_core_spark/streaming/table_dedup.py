@@ -88,7 +88,7 @@ def _cursor(table: SnapTable, version: int | None = None):
 
 def table_dedup_step(spark: SparkSession, source_path: str, index_path: str,
                      candidates_path: str, *, num_hashes: int = 64,
-                     n: int = 5, bands: int = 16, seed: int = 23,
+                     n: int = 5, bands: int = 16,
                      id_col: str = "doc_id", text_col: str = "text",
                      max_bucket_size: int | None = None) -> dict:
     """Process every source append since the last call; see module doc.
@@ -131,7 +131,7 @@ def table_dedup_step(spark: SparkSession, source_path: str, index_path: str,
                                       to_snapshot_id=src_to)
     cursor = {"src_from": src_from, "src_to": src_to}
     new_bands = build_dedup_index(
-        new_docs, num_hashes=num_hashes, n=n, bands=bands, seed=seed,
+        new_docs, num_hashes=num_hashes, n=n, bands=bands,
         id_col=id_col, text_col=text_col).cache()
     pairs = None
     try:

@@ -17,6 +17,7 @@ from sbustreamspot_core_spark.config import GraphParams
 from sbustreamspot_core_spark.graph.components import connected_components
 from sbustreamspot_core_spark.graph.labelprop import label_propagation
 from sbustreamspot_core_spark.graph.pagerank import pagerank
+from sbustreamspot_core_spark.graph.superstep import SuperstepDriver
 from sbustreamspot_core_spark.graph.triangles import (
     triangle_count,
     triangle_count_per_vertex,
@@ -345,8 +346,8 @@ def test_pagerank_runs_one_job_per_action(spark, edges, tmp_ckpt):
     """A fresh PageRank of k supersteps and c checkpoints is 2 + k + c
     jobs (heavy-hub broadcast, init action, supersteps, checkpoint
     writes): no dangling-seed action and no lineage job.  A resume adds no
-    schema-inference job, unless the checkpoint predates the recorded
-    schema."""
+    schema-inference job, and refuses, before any job, a checkpoint whose
+    lineage.json records no schema."""
     _, df = edges
     df.count()
     params = GraphParams(num_partitions=8, checkpoint_interval=2,
@@ -361,23 +362,30 @@ def test_pagerank_runs_one_job_per_action(spark, edges, tmp_ckpt):
     expect = {r.id: r.rank for r in full.ranks.collect()}
 
     last = os.path.join(tmp_ckpt, "superstep=3")
+    shutil.rmtree(last)
+    resumed, jobs = jobs_of(spark, lambda: run(True))
+    # supersteps 2 and 3, one checkpoint (superstep=3)
+    assert (resumed.metrics[0]["superstep"], resumed.supersteps) == (2, 4)
+    assert jobs == 2 + 2 + 1
+    got = {r.id: r.rank for r in resumed.ranks.collect()}
+    assert got.keys() == expect.keys()
+    for node, r in expect.items():
+        assert got[node] == pytest.approx(r, abs=1e-12), node
+
     lineage_file = os.path.join(tmp_ckpt, "superstep=1", "lineage.json")
-    for schema_recorded, extra_jobs in ((True, 0), (False, 1)):
-        if not schema_recorded:
-            with open(lineage_file) as f:
-                lineage = json.load(f)
-            del lineage["schema"]
-            with open(lineage_file, "w") as f:
-                json.dump(lineage, f)
-        shutil.rmtree(last)
-        resumed, jobs = jobs_of(spark, lambda: run(True))
-        # supersteps 2 and 3, one checkpoint (superstep=3)
-        assert (resumed.metrics[0]["superstep"], resumed.supersteps) == (2, 4)
-        assert jobs == 2 + 2 + 1 + extra_jobs
-        got = {r.id: r.rank for r in resumed.ranks.collect()}
-        assert got.keys() == expect.keys()
-        for node, r in expect.items():
-            assert got[node] == pytest.approx(r, abs=1e-12), node
+    with open(lineage_file) as f:
+        lineage = json.load(f)
+    del lineage["schema"]
+    with open(lineage_file, "w") as f:
+        json.dump(lineage, f)
+    shutil.rmtree(last)
+
+    def refused():
+        with pytest.raises(ValueError, match="superstep=1.*records no schema"):
+            SuperstepDriver(spark, params, tmp_ckpt).run(
+                full.ranks, None, params.max_iters)
+
+    assert jobs_of(spark, refused)[1] == 0
 
 
 @pytest.mark.parametrize("graph", ["hub", "tiny"])

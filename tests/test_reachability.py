@@ -13,6 +13,11 @@ Every public method of a reached class must be, or be listed in
 ``ALLOWED_METHODS`` with the reason it stays.
 Likewise every field of the config dataclasses must be passed by keyword
 from a root, or be listed in ``ALLOWED_FIELDS`` with the reason it stays.
+And every parameter with a default of a reached public function or method
+(or of a reached class's ``__init__``) must be passed, by keyword or by
+position, by a root or by reached package code, or be listed in
+``ALLOWED_PARAMS`` with the reason it stays. A method call ``x.name(...)``
+counts for every method of that name.
 """
 
 import ast
@@ -45,9 +50,16 @@ ALLOWED = {
         "test data: the planted truth of generate_pages",
 }
 # (module, "Class.method") -> reason; public methods no root names
-ALLOWED_METHODS = {
-    ("sources.snaptable", "SnapTable.rollback_to"):
-        "tests/test_table_dedup.py stages source snapshots with it",
+ALLOWED_METHODS = {}
+# (module, function or "Class.method", parameter) -> reason; defaulted
+# parameters no root and no reached package code passes
+ALLOWED_PARAMS = {
+    ("session", "default_driver_memory", "meminfo"):
+        "test seam: the tests pass a fake meminfo file",
+    ("sources.pages", "generate_pages", "num_partitions"):
+        "test seam: the partition-invariance test varies it",
+    ("functions.jpeg", "jpeg_encode", "interleaved"):
+        "test seam: covers the decoder's non-interleaved input",
 }
 CONFIG_CLASSES = ("GraphParams", "StreamSpotParams")
 # (config class, field) -> reason; fields no root passes
@@ -160,17 +172,21 @@ def _methods(cls):
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
 
 
-def reached(extra=()):
-    """(module, name) pairs reached from the roots and from ``extra``; a
-    reached method is (module, "Class.method"). A class in ``extra``
-    brings all its methods."""
+def _walk(extra=()):
+    """(reached, code): the (module, name) pairs reached from the roots and
+    from ``extra``, a reached method being (module, "Class.method"), and
+    the (node, module, bindings, own names) of every root and every piece
+    of reached package code. A class in ``extra`` brings all its
+    methods."""
     pkg_mods = _package()
     modules = set(pkg_mods)
-    todo, attrs = set(extra), set()
+    todo, attrs, code = set(extra), set(), []
     for path in _roots():
         tree = ast.parse(path.read_text())
-        todo |= _refs(tree, None, _bindings("", tree, modules), set())
+        bindings = _bindings("", tree, modules)
+        todo |= _refs(tree, None, bindings, set())
         attrs |= _attrs(tree)
+        code.append((tree, None, bindings, {}))
     seen, loaded = set(), set()
     pending = {}        # (module, class) -> {method: node} not yet reached
 
@@ -178,6 +194,7 @@ def reached(extra=()):
         _, bindings, defs = pkg_mods[m]
         todo.update(_refs(node, m, bindings, defs))
         attrs.update(_attrs(node))
+        code.append((node, m, bindings, defs))
 
     grew = True
     while grew:
@@ -213,7 +230,12 @@ def reached(extra=()):
                 seen.add((m, f"{cls}.{name}"))
                 visit(methods.pop(name), m)
                 grew = True
-    return seen
+    return seen, code
+
+
+def reached(extra=()):
+    """(module, name) pairs reached from the roots and from ``extra``."""
+    return _walk(extra)[0]
 
 
 def _public():
@@ -260,6 +282,106 @@ def _passed_fields():
     return out
 
 
+def _signature(fn, skip):
+    """The positional parameter names of ``fn`` after the first ``skip``,
+    and the names of its parameters that have a default."""
+    a = fn.args
+    positional = [x.arg for x in a.posonlyargs + a.args]
+    defaulted = positional[len(positional) - len(a.defaults):]
+    defaulted += [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                  if d is not None]
+    return positional[skip:], defaulted
+
+
+def _callables():
+    """(module, name) or (module, "Class.method") -> (node, leading
+    parameters a call does not pass: ``self`` or ``cls``)."""
+    out = {}
+    for m, (_, _, defs) in _package().items():
+        for name, node in defs.items():
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[m, name] = (node, 0)
+            elif isinstance(node, ast.ClassDef):
+                for k, fn in _methods(node).items():
+                    static = any(getattr(d, "id", None) == "staticmethod"
+                                 for d in fn.decorator_list)
+                    out[m, f"{name}.{k}"] = (fn, 0 if static else 1)
+    return out
+
+
+def _callees(func, m, bindings, own, callables):
+    """The callables a call of ``func`` may run. A method call
+    ``x.name(...)`` may run any method of that name; calling a class runs
+    its ``__init__``."""
+    if isinstance(func, ast.Name):
+        b = bindings.get(func.id)
+        if b and b[0] == "def":
+            key = (b[1], b[2])
+        elif func.id in own:
+            key = (m, func.id)
+        else:
+            return []
+    elif isinstance(func, ast.Attribute):
+        b = bindings.get(getattr(func.value, "id", None))
+        if not (b and b[0] == "mod"):
+            return [k for k in callables
+                    if k[1].rpartition(".")[2] == func.attr and "." in k[1]]
+        key = (b[1], func.attr)
+    else:
+        return []
+    init = (key[0], f"{key[1]}.__init__")
+    return [init] if init in callables else [key]
+
+
+def _passed_params(code, callables):
+    """key -> the parameter names the calls in ``code`` pass to that
+    callable, by keyword or by position; None when a call unpacks
+    ``*args`` or ``**kwargs``. ``partial(f, ...)`` passes too."""
+    out = {}
+    for node, m, bindings, own in code:
+        for call in ast.walk(node):
+            if not isinstance(call, ast.Call):
+                continue
+            func, args = call.func, call.args
+            if getattr(func, "id", getattr(func, "attr", None)) == "partial" \
+                    and args:
+                func, args = args[0], args[1:]
+            for key in _callees(func, m, bindings, own, callables):
+                if key not in callables:
+                    continue
+                positional = _signature(*callables[key])[0]
+                if any(isinstance(a, ast.Starred) for a in args) or any(
+                        k.arg is None for k in call.keywords):
+                    out[key] = None
+                elif out.get(key, ()) is not None:
+                    out[key] = out.get(key, set()) | set(
+                        positional[:len(args)]) | {
+                        k.arg for k in call.keywords}
+    return out
+
+
+def _unpassed_params():
+    """(key, parameter) for every defaulted parameter of a reached public
+    function or method, or of a reached class's ``__init__``, that no
+    root and no reached package code passes."""
+    seen, code = _walk()
+    callables = _callables()
+    passed = _passed_params(code, callables)
+    out = set()
+    for (m, name), (node, skip) in callables.items():
+        cls, _, attr = name.rpartition(".")
+        if attr == "__init__":
+            checked = (m, cls) in seen
+        else:
+            checked = (m, name) in seen and not attr.startswith("_")
+        got = passed.get((m, name), set())
+        if m in ALLOWED_MODULES or not checked or got is None:
+            continue
+        out |= {((m, name), p) for p in _signature(node, skip)[1]
+                if p not in got}
+    return out
+
+
 def test_every_public_operator_has_a_consumer():
     """What the allowlisted code uses stays too."""
     public = _public()
@@ -296,6 +418,19 @@ def test_allowlist_is_current():
     for key in ALLOWED_FIELDS:
         assert key in fields, key
         assert key not in passed, f"{key} is passed; drop it from ALLOWED_FIELDS"
+    unpassed = _unpassed_params()
+    for m, name, p in ALLOWED_PARAMS:
+        assert ((m, name), p) in unpassed, \
+            f"{m}.{name}({p}) is gone or passed; drop it from ALLOWED_PARAMS"
+
+
+def test_every_keyword_parameter_is_passed():
+    """A defaulted parameter no caller passes is an option only tests
+    use."""
+    unpassed = sorted(f"{m}.{name}({p})" for (m, name), p in
+                      _unpassed_params()
+                      if (m, name, p) not in ALLOWED_PARAMS)
+    assert not unpassed, unpassed
 
 
 def test_every_config_field_has_a_caller():

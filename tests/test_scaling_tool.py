@@ -1,5 +1,5 @@
 """``tools/scaling.py`` without Spark: the CPUs each leg is pinned to, the
-refusal below 4 CPUs and the efficiency arithmetic."""
+refusal below 4 CPUs and the efficiency and spread arithmetic."""
 
 import importlib.util
 import pathlib
@@ -34,10 +34,18 @@ def test_refuses_below_four_cpus(monkeypatch):
 
 
 def test_efficiency_from_leg_records():
-    legs = [("pagerank", 1, 40.0), ("pagerank", 4, 12.5),
-            ("pagerank", 1, 44.0), ("pagerank", 4, 11.0),
-            ("hash", 4, 2.0), ("hash", 1, 8.0),
-            ("sketch", 1, 30.0), ("sketch", 4, 15.0)]
-    records = [{"family": f, "cpus": c, "sec": s} for f, c, s in legs]
+    legs = [("pagerank", 0, 1, 40.0), ("pagerank", 0, 4, 12.5),
+            ("pagerank", 1, 1, 44.0), ("pagerank", 1, 4, 11.0),
+            ("hash", 0, 4, 2.0), ("hash", 0, 1, 8.0),
+            ("sketch", 0, 1, 30.0), ("sketch", 0, 4, 15.0)]
+    records = [{"family": f, "round": r, "cpus": c, "sec": s}
+               for f, r, c, s in legs]
     assert scaling.efficiency(records) == {
         "pagerank": round(40.0 / 11.0 / 4, 3), "hash": 1.0, "sketch": 0.5}
+    # per round: 40 / 12.5 / 4 = 0.8 and 44 / 11 / 4 = 1.0, while the
+    # min-based figure pairs round 0's T_N with round 1's T_4N
+    assert scaling.spread(records) == {
+        "pagerank": {"rounds": [[40.0, 12.5], [44.0, 11.0]],
+                     "range": [0.8, 1.0]},
+        "hash": {"rounds": [[8.0, 2.0]], "range": [1.0, 1.0]},
+        "sketch": {"rounds": [[30.0, 15.0]], "range": [0.5, 0.5]}}

@@ -409,22 +409,20 @@ def test_incremental_dedup_equals_full_recompute(spark, tmp_ckpt):
     index_path = f"{tmp_ckpt}/sig_index"
     got = []
     for b in batches:
-        cands = incremental_dedup_batch(spark, index_path, b,
-                                        num_hashes=32, bands=8)
+        cands = incremental_dedup_batch(spark, index_path, b)
         got.append({(r.id_a, r.id_b) for r in cands.collect()})
         cands.unpersist()
     cumulative = set().union(*got)
 
     full = {(r.id_a, r.id_b) for r in minhash_lsh_candidates(
-        minhash_signatures(docs, num_hashes=32), bands=8,
-        max_bucket_size=None).collect()}
+        minhash_signatures(docs), max_bucket_size=None).collect()}
     assert cumulative == full
     # batches are disjoint corpora slices: no pair may appear in two batches'
     # outputs (each pair is found exactly when its LATER doc arrives)
     assert sum(len(g) for g in got) == len(cumulative)
-    # the persisted index holds every doc's bands (n_docs * 8 rows)
+    # the persisted index holds every doc's bands (n_docs * 16 rows)
     n_docs = docs.count()
-    assert spark.read.parquet(index_path).count() == n_docs * 8
+    assert spark.read.parquet(index_path).count() == n_docs * 16
     docs.unpersist()
 
 
@@ -618,10 +616,9 @@ def test_incremental_dedup_null_text_never_pairs(spark, tmp_ckpt):
     got = []
     for rows in ([(1, text), (2, None)], [(3, None), (4, text + "!")]):
         b = spark.createDataFrame(rows, "doc_id long, text string")
-        cands = incremental_dedup_batch(spark, index_path, b,
-                                        num_hashes=32, bands=8)
+        cands = incremental_dedup_batch(spark, index_path, b)
         got += [(r.id_a, r.id_b) for r in cands.collect()]
         cands.unpersist()
     assert (2, 3) not in got
     assert not any({2, 3} & set(p) for p in got)
-    assert spark.read.parquet(index_path).count() == 4 * 8
+    assert spark.read.parquet(index_path).count() == 4 * 16

@@ -14,7 +14,9 @@ chunk counts -> ``build_sketches``) and ``hash`` (``hashmulti_batch`` over
 cached chunks, no shuffle). Sizes are per-CPU
 constants times 4N, fixed before any efficiency was seen so that a 1-CPU
 PageRank superstep takes at least 10 s on a 4-vCPU host. Prints one JSON
-line per leg, then the host shape and the efficiencies. spark-submit runs
+line per leg, then the host shape, the efficiencies and, per family, each
+round's T_N and T_4N with the range of the per-round efficiencies (the
+spread a min over rounds hides). spark-submit runs
 this file as the leg script too, with arguments from the parent run.
 """
 
@@ -58,6 +60,22 @@ def efficiency(records) -> dict:
         best[key] = min(r["sec"], best.get(key, r["sec"]))
     return {f: round(best[f, n] / best[f, 4 * n] / 4, 3)
             for f, n in best if (f, 4 * n) in best}
+
+
+def spread(records) -> dict:
+    """family -> {"rounds": [T_N, T_4N] per round, in round order,
+    "range": [lowest, highest] per-round efficiency (T_N / T_4N) / 4}."""
+    sec = {(r["family"], r["round"], r["cpus"]): r["sec"] for r in records}
+    n = min(r["cpus"] for r in records)
+    out = {}
+    for f, rnd, cpus in sorted(sec):
+        if cpus == n and (f, rnd, 4 * n) in sec:
+            out.setdefault(f, {"rounds": []})["rounds"].append(
+                [sec[f, rnd, n], sec[f, rnd, 4 * n]])
+    for v in out.values():
+        effs = [round(t_n / t_4n / 4, 3) for t_n, t_4n in v["rounds"]]
+        v["range"] = [min(effs), max(effs)]
+    return out
 
 
 def _submit(cpus, parts, data, script, *args) -> dict:
@@ -111,7 +129,7 @@ def main() -> None:
         "n": len(small), "4n": n4, "rounds": ROUNDS, "partitions": parts,
         "pagerank_edges": EDGES_PER_CPU * n4, "supersteps": SUPERSTEPS,
         "events": EVENTS_PER_CPU * n4, "events_per_graph": EVENTS_PER_GRAPH,
-        "efficiency": efficiency(records)}))
+        "efficiency": efficiency(records), "per_round": spread(records)}))
 
 
 # ---- legs: run under spark-submit, pinned by the parent ----------------
