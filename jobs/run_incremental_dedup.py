@@ -67,9 +67,8 @@ def main() -> None:
 
     spark = get_spark("incremental-dedup")
     if args.append_docs:
-        t = (SnapTable(args.source) if is_snaptable(args.source)
-             else SnapTable.create(args.source))
-        t.append(spark.read.parquet(args.append_docs))
+        SnapTable.open_or_create(args.source).append(
+            spark.read.parquet(args.append_docs))
 
     while True:
         res = table_dedup_step(

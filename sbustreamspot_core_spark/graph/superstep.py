@@ -202,9 +202,8 @@ class SuperstepDriver:
             f.write("")
 
     def _commit_lineage(self, k: int, metrics: dict, parts: list[dict]) -> None:
-        from ..sources.snaptable import SnapTable, is_snaptable
-        t = (SnapTable(self.lineage_table) if is_snaptable(self.lineage_table)
-             else SnapTable.create(self.lineage_table))
+        from ..sources.snaptable import SnapTable
+        t = SnapTable.open_or_create(self.lineage_table)
         # idempotent under replay: this append lands BEFORE the _COMPLETE
         # marker, so a crash between them re-runs the superstep — every
         # other sink in the checkpoint is an idempotent overwrite, and the

@@ -37,36 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.snaptable import SnapTable
+
 MINHASH_MOD = (1 << 31) - 1  # Mersenne prime 2^31-1
-
-
-def is_path_not_found(e: Exception) -> bool:
-    """True iff ``e`` is Spark's missing-input-path error.
-
-    Checks the STRUCTURED error class first (``getCondition()`` in Spark 4,
-    ``getErrorClass()`` before it) — stable across message-format changes —
-    and falls back to the message substring only when the exception carries
-    no class (e.g. a Py4J-wrapped error surfacing outside the
-    AnalysisException hierarchy).  Misclassifying here is fail-safe in one
-    direction only: a missing path treated as fatal merely aborts the step,
-    while any OTHER failure treated as "no index yet" would silently drop
-    new-vs-corpus candidates — so unknown shapes return False."""
-    try:
-        from pyspark.errors import AnalysisException
-    except ImportError:                       # pragma: no cover - old pyspark
-        AnalysisException = ()                # type: ignore[assignment]
-    if isinstance(e, AnalysisException):
-        for probe in ("getCondition", "getErrorClass"):
-            fn = getattr(e, probe, None)
-            if fn is None:
-                continue
-            try:
-                cond = fn()
-            except Exception:  # noqa: BLE001 — probe only, fall through
-                continue
-            if cond is not None:
-                return cond == "PATH_NOT_FOUND"
-    return "PATH_NOT_FOUND" in str(e)
 
 
 def minhash_coeffs(num_hashes: int, seed: int) -> tuple:
@@ -408,45 +381,65 @@ def build_dedup_index(docs: DataFrame, num_hashes: int = 64, n: int = 5,
                            id_col=id_col, text_col=text_col), bands)
 
 
+def dedup_batch(prior: DataFrame | None, new_docs: DataFrame,
+                index: SnapTable | None, summary: dict, base: int, *,
+                num_hashes: int = 64, n: int = 5, bands: int = 16,
+                id_col: str = "doc_id", text_col: str = "text",
+                max_bucket_size: int | None = None
+                ) -> tuple[DataFrame, dict]:
+    """One incremental near-dup step over a SnapTable signature index.
+
+    Builds the batch's bands (``new_docs`` only: no corpus signature is
+    recomputed), joins them against ``prior``, the index before this batch
+    (None: empty; ``incremental_lsh_candidates``), caches and counts the
+    pairs, then appends the bands to ``index`` as one commit with
+    ``summary`` plus ``band_rows``, pinned to metadata version ``base``.
+    ``index=None`` commits nothing: a recovery whose bands already landed.
+
+    Returns the cached pairs, which the caller unpersists, and their
+    counts: ``pairs``, and ``band_rows`` when the bands were committed.
+    The pairs plan reads the prior snapshot's own files and the commit
+    writes new ones, so the commit leaves the cache valid."""
+    new_bands = build_dedup_index(
+        new_docs, num_hashes=num_hashes, n=n, bands=bands,
+        id_col=id_col, text_col=text_col).cache()
+    pairs = incremental_lsh_candidates(
+        prior, new_bands, max_bucket_size=max_bucket_size).cache()
+    try:
+        counts = {"pairs": pairs.count()}
+        if index is not None:
+            counts["band_rows"] = new_bands.count()
+            index.append(new_bands,
+                         summary={**summary, "band_rows": counts["band_rows"]},
+                         base=base)
+    except BaseException:
+        # e.g. CommitConflict from an overlapping run: the cache must not
+        # outlive a failed step
+        pairs.unpersist()
+        raise
+    finally:
+        new_bands.unpersist()
+    return pairs, counts
+
+
 def incremental_dedup_batch(spark, index_path: str,
                             new_docs: DataFrame) -> DataFrame:
     """Append-only dedup: find near-dup candidates of ``new_docs`` against
-    the persisted signature index at ``index_path`` WITHOUT recomputing any
-    corpus signature, then append the batch's bands to the index.
+    the SnapTable signature index at ``index_path`` (created empty on first
+    use) WITHOUT recomputing any corpus signature, then commit the batch's
+    bands to the index: ``dedup_batch`` at its defaults, the body
+    ``streaming/table_dedup.py:table_dedup_step`` runs too.
 
-    This is the shape a 100-TB training-data pipeline actually runs: the
-    corpus signatures are computed exactly once (when each doc's batch
-    arrived), and an incoming batch costs
-      - signature build over the NEW docs only (the expensive part — the
-        shingle explode + k min-aggregates never touch the corpus), plus
-      - one columnar scan of the index band table for the bucket equi-join
-        (16 small rows/doc; at warehouse scale write the index BUCKETED by
-        (band_idx, band_key) so the join is co-located and the index side
-        never shuffles).
-
-    Returns the candidate pairs (id_a < id_b), MATERIALIZED (cached +
-    counted) before the index append — the candidate plan reads
-    ``index_path``, so appending first would let the lazy plan see the
-    batch's own rows twice.  First call may point at a non-existent path
-    (empty index): only new-new candidates are emitted.
+    An incoming batch costs the signature build over the NEW docs only
+    (the shingle explode + k min-aggregates never touch the corpus) plus
+    one scan of the index band table (16 small rows/doc, read under the
+    table's recorded schema) for the bucket equi-join.  Returns the cached
+    candidate pairs (id_a < id_b); the caller unpersists them.
     """
-    new_bands = build_dedup_index(new_docs).cache()
-    try:
-        index_bands = spark.read.parquet(index_path)
-    except Exception as e:  # noqa: BLE001 — re-raised unless missing-path
-        # ONLY a missing path means "no index yet".  Any other read
-        # failure (transient FS error, permissions, corrupt footer) must
-        # raise: treating it as an empty index would emit only new-new
-        # pairs while still appending the batch to the index, silently and
-        # permanently losing every new-vs-corpus candidate for this batch
-        if not is_path_not_found(e):
-            raise
-        index_bands = None
-    cands = incremental_lsh_candidates(index_bands, new_bands).cache()
-    cands.count()
-    new_bands.write.mode("append").parquet(index_path)
-    new_bands.unpersist()
-    return cands
+    index = SnapTable.open_or_create(index_path)
+    base = index.current_version()
+    prior = None if index.current_snapshot_id() is None else index.read(spark)
+    return dedup_batch(prior, new_docs, index, {}, base)[0]
 
 
 def _gram_set(t, present, c):

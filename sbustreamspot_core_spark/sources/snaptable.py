@@ -185,6 +185,12 @@ class SnapTable:
         _atomic_write(os.path.join(_meta_dir(path), _HINT), "0")
         return SnapTable(path)
 
+    @staticmethod
+    def open_or_create(path: str) -> "SnapTable":
+        """The table at ``path``, created empty if there is none yet."""
+        return (SnapTable(path) if is_snaptable(path)
+                else SnapTable.create(path))
+
     def current_version(self) -> int:
         """The highest committed metadata version.
 

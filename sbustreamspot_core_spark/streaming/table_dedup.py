@@ -10,9 +10,11 @@ signature index and appends candidates, with the consumption cursor
 snapshot summaries.  This is the standard Apache-Iceberg incremental
 consumption pattern (store the last-consumed source snapshot id in the
 sink table's snapshot properties; recover by comparing them), built on
-``sources/snaptable.py`` so it runs with no Iceberg jar.  The one-shot
-full-corpus pass and the parquet-index batch step live in
-``operators/dedup.py``.
+``sources/snaptable.py`` so it runs with no Iceberg jar.  The batch body
+(bands, candidate join, index commit) is ``operators/dedup.py:
+dedup_batch``, which ``incremental_dedup_batch`` runs over DataFrame
+batches; this module adds the source cursor, crash recovery and the
+candidates commit.
 
 Exactly-once protocol (every arrow is one atomic SnapTable commit)::
 
@@ -55,13 +57,10 @@ contract).
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
-from ..operators.dedup import build_dedup_index, incremental_lsh_candidates
-from ..sources.snaptable import SnapTable, is_snaptable
-
-
-def _open_or_create(path: str) -> SnapTable:
-    return SnapTable(path) if is_snaptable(path) else SnapTable.create(path)
+from ..operators.dedup import dedup_batch
+from ..sources.snaptable import SnapTable
 
 
 def _cursor(table: SnapTable, version: int | None = None):
@@ -100,8 +99,8 @@ def table_dedup_step(spark: SparkSession, source_path: str, index_path: str,
     source's lifetime (the incremental-candidates contract).
     """
     source = SnapTable(source_path)
-    index = _open_or_create(index_path)
-    candidates = _open_or_create(candidates_path)
+    index = SnapTable.open_or_create(index_path)
+    candidates = SnapTable.open_or_create(candidates_path)
 
     # pin every commit below to the metadata versions the cursors were
     # READ from: two overlapping step invocations both observe the same
@@ -130,35 +129,27 @@ def table_dedup_step(spark: SparkSession, source_path: str, index_path: str,
         new_docs = source.incremental(spark, from_snapshot_id=src_from,
                                       to_snapshot_id=src_to)
     cursor = {"src_from": src_from, "src_to": src_to}
-    new_bands = build_dedup_index(
-        new_docs, num_hashes=num_hashes, n=n, bands=bands,
-        id_col=id_col, text_col=text_col).cache()
-    pairs = None
-    try:
-        prior = None
-        if src_from is not None:
-            prior = index.read(spark)
-            if recovering:
-                # the index already holds this batch's bands: the prior
-                # index is the current one minus the batch's own ids
-                prior = prior.join(new_bands.select("id").distinct(), "id",
-                                   "left_anti")
-        pairs = incremental_lsh_candidates(
-            prior, new_bands, max_bucket_size=max_bucket_size).cache()
-        summary = {**cursor, "pairs": pairs.count()}  # materialize before [1]
+    prior = None
+    if src_from is not None:
+        prior = index.read(spark)
         if recovering:
-            summary["recovered"] = True
-            candidates.append(pairs, summary=summary, base=cand_base)
-            return {"status": "recovered", **summary}
-        band_rows = new_bands.count()
-        index.append(new_bands, summary={**cursor, "band_rows": band_rows},
-                     base=idx_base)
+            # the index already holds this batch's bands: the prior index
+            # is the current one minus the batch's own ids
+            prior = prior.join(new_docs.select(F.col(id_col).alias("id")),
+                               "id", "left_anti")
+    # commit [1], skipped when recovering: it already landed
+    pairs, counts = dedup_batch(
+        prior, new_docs, None if recovering else index, cursor, idx_base,
+        num_hashes=num_hashes, n=n, bands=bands, id_col=id_col,
+        text_col=text_col, max_bucket_size=max_bucket_size)
+    summary = {**cursor, "pairs": counts["pairs"]}
+    if recovering:
+        summary["recovered"] = True
+    try:
         candidates.append(pairs, summary=summary, base=cand_base)
     finally:
-        # expected exits include CommitConflict from an overlapping run —
-        # the caches must not outlive the step either way
-        new_bands.unpersist()
-        if pairs is not None:
-            pairs.unpersist()
-    return {"status": "ok", **summary, "band_rows": band_rows,
-            "new_docs": band_rows // bands}
+        pairs.unpersist()
+    if recovering:
+        return {"status": "recovered", **summary}
+    return {"status": "ok", **summary, "band_rows": counts["band_rows"],
+            "new_docs": counts["band_rows"] // bands}

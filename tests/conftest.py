@@ -1,6 +1,7 @@
 import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
@@ -21,6 +22,20 @@ def tmp_ckpt():
     d = tempfile.mkdtemp(prefix="ssc_ckpt_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+def jobs_of(spark, fn):
+    """``(fn(), the number of Spark jobs fn ran)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 REFERENCE_EDGES = "/root/reference/test_edges.txt"

@@ -7,7 +7,6 @@ exact; resumable checkpoints; deterministic across parallelism.
 import json
 import os
 import shutil
-import uuid
 
 import numpy as np
 import pytest
@@ -28,6 +27,8 @@ from sbustreamspot_core_spark.oracles.graph_oracle import (
     pagerank_oracle,
     triangle_count_oracle,
 )
+
+from .conftest import jobs_of
 
 # Fixed-iteration configs keep test wall-time sane: with tol=0 both the Spark
 # job and the oracle run exactly max_iters supersteps and must agree to float
@@ -319,20 +320,6 @@ def test_superstep_releases_replaced_states(spark):
     assert final.id() in after
     assert len(after - before) <= 2
     assert str(warnings.toString()) == ""
-
-
-def jobs_of(spark, fn):
-    """``(fn(), the number of Spark jobs fn ran)``, counted by job group."""
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_triangle_count_runs_one_job(spark, edges):

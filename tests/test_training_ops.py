@@ -22,18 +22,25 @@ from sbustreamspot_core_spark.operators.dedup import (
     simhash64,
 )
 from sbustreamspot_core_spark.operators.multimodal import decode_image
+from sbustreamspot_core_spark.sources.snaptable import SnapTable
+
+from .conftest import jobs_of
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def embeddings(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_dedup_matches_python(spark, docs):
@@ -422,7 +429,73 @@ def test_incremental_dedup_equals_full_recompute(spark, tmp_ckpt):
     assert sum(len(g) for g in got) == len(cumulative)
     # the persisted index holds every doc's bands (n_docs * 16 rows)
     n_docs = docs.count()
-    assert spark.read.parquet(index_path).count() == n_docs * 16
+    assert SnapTable(index_path).read(spark).count() == n_docs * 16
+    docs.unpersist()
+
+
+def test_incremental_dedup_result_survives_index_commit(spark, tmp_ckpt):
+    """The pairs ``incremental_dedup_batch`` returns are cached and counted
+    before the batch's bands are committed, and that commit leaves the
+    cache valid: with a non-empty index, the first action on the result
+    runs as many Spark jobs as a second one (no candidate-join rerun)."""
+    from sbustreamspot_core_spark.operators.dedup import (
+        incremental_dedup_batch,
+    )
+    from sbustreamspot_core_spark.sources.docs import generate_variant_docs
+
+    docs = generate_variant_docs(spark, n_bases=20, variants=4,
+                                 tokens_per_doc=40, mutate_tokens=4,
+                                 num_partitions=2).cache()
+    index_path = f"{tmp_ckpt}/sig_index"
+    for k in range(2):
+        cands = incremental_dedup_batch(
+            spark, index_path, docs.filter(f"doc_id % 2 = {k}"))
+        if k == 0:
+            cands.unpersist()
+    first = jobs_of(spark, cands.count)
+    second = jobs_of(spark, cands.count)
+    assert first == second and first[0] > 0
+    cands.unpersist()
+    docs.unpersist()
+
+
+def test_incremental_dedup_entry_points_agree(spark, tmp_ckpt):
+    """``incremental_dedup_batch`` over DataFrame batches and
+    ``table_dedup_step`` over source-SnapTable appends run one batch body:
+    the same three batches give identical per-batch candidate sets and
+    identical index rows."""
+    from sbustreamspot_core_spark.operators.dedup import (
+        incremental_dedup_batch,
+    )
+    from sbustreamspot_core_spark.sources.docs import generate_variant_docs
+    from sbustreamspot_core_spark.streaming.table_dedup import (
+        table_dedup_step,
+    )
+
+    docs = generate_variant_docs(spark, n_bases=20, variants=4,
+                                 tokens_per_doc=40, mutate_tokens=4,
+                                 num_partitions=2).cache()
+    batches = [docs.filter(f"doc_id % 3 = {k}") for k in range(3)]
+    df_index = f"{tmp_ckpt}/df_index"
+    src, idx, cand = (f"{tmp_ckpt}/{t}" for t in ("src", "idx", "cand"))
+    source, log = SnapTable.create(src), SnapTable.create(cand)
+    by_frame, by_table = [], []
+    for b in batches:
+        cands = incremental_dedup_batch(spark, df_index, b)
+        by_frame.append({(r.id_a, r.id_b) for r in cands.collect()})
+        cands.unpersist()
+        source.append(b)
+        prev = log.current_snapshot_id()
+        assert table_dedup_step(spark, src, idx, cand)["status"] == "ok"
+        new = (log.read(spark) if prev is None
+               else log.incremental(spark, from_snapshot_id=prev))
+        by_table.append({(r.id_a, r.id_b) for r in new.collect()})
+    assert by_frame == by_table and all(by_frame[1:])
+
+    def rows(path):
+        return sorted(map(tuple, SnapTable(path).read(spark).collect()),
+                      key=repr)
+    assert rows(df_index) == rows(idx)
     docs.unpersist()
 
 
@@ -621,4 +694,4 @@ def test_incremental_dedup_null_text_never_pairs(spark, tmp_ckpt):
         cands.unpersist()
     assert (2, 3) not in got
     assert not any({2, 3} & set(p) for p in got)
-    assert spark.read.parquet(index_path).count() == 4 * 16
+    assert SnapTable(index_path).read(spark).count() == 4 * 16
